@@ -54,8 +54,7 @@ def streaming_user_totals(spark, sf_dir):
     totals; with a single availableNow batch the final emission equals
     the batch aggregate, which the oracle checks. State accumulates
     integer cents (exact at any key cardinality × magnitude), matching
-    the oracle's DECIMAL sum bit-for-bit — see
-    `running_totals_stream(exact_cents=True)`."""
+    the oracle's DECIMAL sum bit-for-bit — see `running_totals_stream`."""
     ev = replay_table(spark, sf_dir, "events").select("user_id", "value")
     out = running_totals_stream(ev)
     result = run_to_memory(out, output_mode="append")

@@ -7,6 +7,11 @@ Streaming).
   (spills, unlike the reference's in-memory IndexMap) and is
   checkpoint-persisted per microbatch — the reference's ABS snapshot
   (SURVEY §3.3) as engine config.
+- running_totals_stream -> `applyInPandasWithState` over a fixed
+  number of KEY GROUPS (Flink's keyed-state layout), one state object
+  per group holding all of the group's keys, so the Python and
+  state-store overhead is paid once per touched group per microbatch,
+  not once per key.
 - ttl_map -> the same plus GroupStateTimeout, matching the
   epoch-driven eviction of ttl_map.rs:72-83.
 
@@ -83,44 +88,107 @@ def stateful_map_stream(
     )
 
 
+# Key groups of running_totals_stream. A key's group is
+# pmod(xxhash64(key), KEY_GROUPS), so this number is part of the
+# checkpoint's meaning, like Flink's max-parallelism: it is a constant,
+# not read from the session, so a restart under another
+# spark.sql.shuffle.partitions routes every key to the group that holds
+# its state. 128 gives 4 groups per state partition at 32 partitions;
+# each group costs one Python call per microbatch, so it stays small.
+KEY_GROUPS = 128
+# null keys fold in a group of their own: every other group's key
+# column then arrives null-free, as exact int64 (Arrow -> pandas turns
+# an int64 column holding a null into float64)
+_NULL_KEY_GROUP = -1
+# state blob rows: sorted keys, event counts, value cents, non-null values
+_STATE_ROWS = 4
+_BLOB_DTYPE = "<i8"
+
+
 def running_totals_stream(
     sdf: DataFrame,
     key_col: str = "user_id",
     value_col: str = "value",
-    exact_cents: bool = True,
-):
+) -> DataFrame:
     """Per-key running (count, sum) — the streaming twin of the batch
     running-sum parity query (reference stateful_map.rs:126-156).
-    Emits one row per key per microbatch with totals-so-far.
+    Emits one row per touched key per microbatch with totals-so-far:
+    `{key_col} long, n_events long, total_value double`.
 
-    ``exact_cents`` (default) accumulates the 2-decimal value column
-    as INTEGER CENTS in state: exact at any key cardinality ×
-    magnitude (cents stay far below 2^53 for any realistic total,
-    where float64 accumulation drifts after ~1e9 same-key additions
-    of large values). The emitted double is the nearest double to the
-    exact decimal total — bit-identical to a DECIMAL-summing SQL
-    oracle's final DOUBLE cast. Set False for raw float64
-    accumulation of values that are not fixed-2-decimal."""
+    Rows are routed to one of KEY_GROUPS key groups by
+    pmod(xxhash64(key), KEY_GROUPS); null keys go to a group of their
+    own. Each group keeps ONE state value, a binary blob of
+    little-endian int64 rows — the group's keys sorted, then per key
+    the event count, the value sum in integer cents and the number of
+    non-null values — and folds each microbatch into it with one
+    vectorized numpy pass. KEY_GROUPS is a module constant, never
+    session conf, so a checkpoint restarted under another
+    shuffle.partitions finds every key in the group that holds it.
+
+    Semantics match SQL `COUNT(*)` and `SUM(CAST(value AS DECIMAL))`:
+    a null value counts as an event but adds nothing, and a key whose
+    values are all null has a NULL total. Summing cents is exact at
+    any key cardinality × magnitude, so the emitted double is the
+    nearest double to the exact decimal total — bit-identical to a
+    DECIMAL-summing SQL oracle's final DOUBLE cast."""
+    import numpy as np
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    def totals(key, pdfs, state):
-        n, acc = state if state else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            if exact_cents:
-                acc += int((pdf[value_col] * 100).round().astype("int64").sum())
-            else:
-                acc += float(pdf[value_col].sum())
-        total = acc / 100.0 if exact_cents else acc
-        out = pd.DataFrame({key_col: [key[0]], "n_events": [n], "total_value": [total]})
-        return [out], (n, acc)
+    # a closure, not a module-level helper: it is pickled by value, so
+    # Python workers need not import this package
+    def totals(group, pdfs, state):
+        chunks = list(pdfs)
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        null_keys = group[0] == _NULL_KEY_GROUP
+        keys = np.zeros(len(pdf), np.int64) if null_keys else pdf[key_col].to_numpy(np.int64)
+        values = pdf[value_col].to_numpy(np.float64, na_value=np.nan)
+        valued = ~np.isnan(values)
+        cents = np.where(valued, np.round(values * 100), 0).astype(np.int64)
 
+        # per touched key: (events, cents, non-null values) of this batch
+        order = np.argsort(keys, kind="stable")
+        sorted_keys = keys[order]
+        starts = np.flatnonzero(np.r_[True, sorted_keys[1:] != sorted_keys[:-1]])
+        touched = sorted_keys[starts]
+        batch = np.stack([
+            np.diff(np.r_[starts, len(keys)]),
+            np.add.reduceat(cents[order], starts),
+            np.add.reduceat(valued[order].astype(np.int64), starts),
+        ])
+
+        # merge into the group's sorted state
+        if state:
+            old = np.frombuffer(state[0], _BLOB_DTYPE).reshape(_STATE_ROWS, -1)
+        else:
+            old = np.empty((_STATE_ROWS, 0), np.int64)
+        merged_keys = np.union1d(old[0], touched)
+        merged = np.zeros((_STATE_ROWS, len(merged_keys)), np.int64)
+        merged[0] = merged_keys
+        merged[1:, np.searchsorted(merged_keys, old[0])] = old[1:]
+        at = np.searchsorted(merged_keys, touched)
+        merged[1:, at] += batch
+
+        n, total_cents, n_valued = merged[1:, at]
+        out = pd.DataFrame({
+            key_col: pd.array([None], dtype="Int64") if null_keys else touched,
+            "n_events": n,
+            # NaN goes to Spark as NULL: the SUM of no non-null values
+            "total_value": np.where(n_valued > 0, total_cents / 100.0, np.nan),
+        })
+        return [out], (merged.astype(_BLOB_DTYPE, copy=False).tobytes(),)
+
+    key_group = (
+        F.when(F.col(key_col).isNull(), F.lit(_NULL_KEY_GROUP))
+        .otherwise(F.pmod(F.xxhash64(key_col), F.lit(KEY_GROUPS)))
+        .alias("_key_group")
+    )
     return stateful_map_stream(
-        sdf,
-        [key_col],
+        sdf.select(key_group, key_col, value_col),
+        ["_key_group"],
         totals,
         output_schema=f"{key_col} long, n_events long, total_value double",
-        state_schema="n long, cents long" if exact_cents else "n long, total double",
+        state_schema="blob binary",
     )
 
 

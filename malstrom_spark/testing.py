@@ -39,7 +39,7 @@ class OperatorTester:
 
         t = OperatorTester(
             spark, "user_id long, value double",
-            op=lambda sdf: running_totals_stream(sdf, ["user_id"], "value"),
+            op=lambda sdf: running_totals_stream(sdf, "user_id", "value"),
         )
         t.send([(1, 2.0), (2, 3.0)])   # one microbatch
         out = t.step()                  # [[Row(...), ...]] new batches
