@@ -979,24 +979,21 @@ def dedup_groups(
     raise ValueError(f"unknown dedup_groups algorithm: {algorithm!r}")
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
+def _large_star_raw(edges: DataFrame) -> DataFrame:
     """One large-star round over canonical (u > v) edges: for every
     node, connect each strictly-larger neighbor to the minimum of the
     node's closed neighborhood. Output is canonical by construction
     (the new target m <= u < v). One groupBy + one join on the edge
-    list — both shuffles on node ids, map-side-combinable min."""
-    return _large_star_raw(edges).distinct()
+    list — both shuffles on node ids, map-side-combinable min.
 
-
-def _large_star_raw(edges: DataFrame) -> DataFrame:
-    """_large_star WITHOUT the trailing distinct — exact when the
-    output feeds _small_star directly (round 13, guide §2.4 "remove
-    shuffles outright"): _small_star's groupBy(u).min is duplicate-
-    insensitive, its leaf join only multiplies rows that its own final
-    .distinct() removes, and no step in between counts rows. Dropping
-    the intra-round distinct removes one full (u,v) hash-aggregate
-    exchange per CC round; duplicate multiplicity is bounded by one
-    round (every round still ends with _small_star's distinct)."""
+    No trailing distinct — exact because the output feeds _small_star
+    directly (round 13, guide §2.4 "remove shuffles outright"):
+    _small_star's groupBy(u).min is duplicate-insensitive, its leaf
+    join only multiplies rows that its own final .distinct() removes,
+    and no step in between counts rows. Dropping the intra-round
+    distinct removes one full (u,v) hash-aggregate exchange per CC
+    round; duplicate multiplicity is bounded by one round (every round
+    still ends with _small_star's distinct)."""
     bidir = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1041,49 +1038,6 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass  # best-effort: ContextCleaner frees blocks on GC otherwise
 
 
-# How many large*+small* rounds to compose into ONE driver action
-# (checkpoint + fixpoint test). Large-star/small-star strictly shrink
-# a potential function every non-fixpoint round and star edge sets are
-# fixed points of both halves, so testing set equality every k-th
-# composition is still exact (equality after k composed rounds implies
-# the single-round fixpoint); the cost is at most k-1 wasted rounds
-# past convergence. Module-level so the round-12 A/B probe can flip it.
-_CC_ROUNDS_PER_ACTION = 1
-
-# Round 13 (VERDICT r12 #5): ADAPTIVE composition. The round-12 static
-# k=2 A/B won on slow-converging graphs (customer_entity_groups
-# 13.10 -> 9.88 s) but lost on fast-converging ones (dedup_clusters
-# 5.87 -> 10.66 s — the composed extra round past the fixpoint is pure
-# waste), so the static default stayed 1. The adaptive form composes
-# TWO rounds into the next action only while the edge set is still
-# churning fast (fraction of new-edge rows not present in the previous
-# set >= _CC_COMPOSE_MIN_CHURN, measured by the SAME per-round
-# aggregate the fixpoint test already computes — zero extra jobs) and
-# falls back to single rounds near convergence, so the at-most-one
-# wasted round is only ever paid mid-descent, never at the tail.
-# Labels are invariant by the same argument as the static knob: extra
-# rounds past (or toward) the fixpoint cannot change the fixpoint.
-# Only active when the static knob is at its default 1.
-#
-# MEASURED AND REJECTED (round 13, tools/probe_r13_cc_adaptive.py,
-# interleaved F/T/F/T, min-of-2, parity OK everywhere): the target row
-# customer_entity_groups got WORSE at BOTH scales — sf0.1 4.43 -> 6.41 s
-# (jobs 57 -> 64), sf1 21.29 -> 28.35 s (jobs 55 -> 62). Its churn
-# fraction stays above any useful threshold until the fixpoint, so the
-# adaptive form composes nearly every action and pays the extra rounds,
-# while the round-12 lazy-checkpoint fixpoint already cut per-action
-# overhead to 1 job + 1 join — there is nothing left for composition to
-# save. Rows whose graphs converge fast never compose (identical jobs).
-# Default OFF; the knob and probe stay as documentation.
-_CC_ADAPTIVE_COMPOSE = False
-_CC_COMPOSE_MIN_CHURN = 0.10
-
-# Round 13: keep the intra-round distinct between _large_star and
-# _small_star? OFF by default — _large_star_raw's docstring carries the
-# exactness argument, tools/probe_r13_cc_distinct.py the measurements.
-_CC_INTRA_ROUND_DISTINCT = False
-
-
 def _groups_alternating(
     pairs: DataFrame, all_ids: DataFrame, id_col: str, max_iters: int
 ) -> DataFrame:
@@ -1101,17 +1055,8 @@ def _groups_alternating(
         .localCheckpoint(eager=False)  # truncate upstream pipeline lineage
     )
     n_edges = edges.count()
-    steps_static = max(1, int(_CC_ROUNDS_PER_ACTION))
-    adaptive = _CC_ADAPTIVE_COMPOSE and steps_static == 1
-    steps = steps_static
     for _ in range(max_iters):
-        new_edges = edges
-        for _step in range(steps):
-            if _CC_INTRA_ROUND_DISTINCT:  # A/B knob; default off (r13)
-                new_edges = _small_star(_large_star(new_edges))
-            else:
-                new_edges = _small_star(_large_star_raw(new_edges))
-        new_edges = new_edges.localCheckpoint(eager=False)
+        new_edges = _small_star(_large_star_raw(edges)).localCheckpoint(eager=False)
         # Fixpoint test is EXACT (both sides are distinct sets):
         # |new| == |old| AND new ⊆ old <=> set equality — evaluated as
         # ONE aggregate per round whose job also materializes the lazy
@@ -1126,18 +1071,9 @@ def _groups_alternating(
         # prior round's checkpoint blocks are dead — free them now so
         # executor storage stays O(1) in rounds, not O(rounds).
         _free_local_checkpoint(edges)
-        if adaptive:
-            # churn = fraction of the new edge set absent from the old
-            # one (n_new - n_matched over n_new), already computed by
-            # the fixpoint aggregate. Compose 2 rounds into the next
-            # action while churn is high; single rounds near the tail.
-            churn = (n_new - n_matched) / n_new if n_new else 0.0
-            steps = 2 if churn >= _CC_COMPOSE_MIN_CHURN else 1
-        n_edges = n_new
+        n_edges, edges = n_new, new_edges
         if converged:
-            edges = new_edges
             break
-        edges = new_edges
     else:
         raise RuntimeError(
             f"dedup_groups(alternating) did not converge in {max_iters} rounds; "

@@ -17,8 +17,8 @@ record, in arrival order. In batch Spark the same semantics are
    ~100x slower than tier 1; exists for parity with the reference's
    arbitrary-closure semantics.
 
-Streaming versions (transformWithStateInPandas) live in
-`malstrom_spark.streaming.stateful`.
+Streaming versions live in `malstrom_spark.streaming.stateful`, on the
+keyed kernel `malstrom_spark.streaming.stateful_op.stateful_op_stream`.
 
 Scale notes: both tiers shuffle once on the key. Tier 1 additionally
 gets partial aggregation where the frame allows. Skewed keys: tier 2

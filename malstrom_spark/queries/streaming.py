@@ -884,7 +884,7 @@ def streaming_heavy_tokens(spark, sf_dir):
     stream_toks = docs.select(tok).where(F.col("token") != "")
     emitted = run_to_memory(
         heavy_hitter_candidates_stream(stream_toks, "token", k=67),
-        output_mode="update",
+        output_mode="append",
     )
     static_toks = (
         table(spark, sf_dir, "documents")

@@ -59,14 +59,13 @@ def simhash_dup_flags_stream(
     check on the bucket's last-update time — engine timeouts alone
     can't expire a bucket that is receiving the very record being
     judged; per-hash timestamps would refine this to exact per-record
-    horizons at 2x state width), and fully idle buckets
-    are garbage-collected by a processing-time timeout (the `ttl_map`
-    mechanism), bounding state by active buckets x cap instead of
-    all-time uniques — the standard production setting for unbounded
-    ingestion."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    horizons at 2x state width), and fully idle buckets are
+    garbage-collected by a processing-time timer, bounding state by
+    active buckets x cap instead of all-time uniques — the standard
+    production setting for unbounded ingestion. Both read the batch
+    processing time, the clock the timer is armed against."""
     from ..functions.dedup import simhash_df
+    from .stateful_op import stateful_op_stream
 
     chunk_bits, n_chunks = 16, 4
     chunk_mask = (1 << chunk_bits) - 1
@@ -100,28 +99,19 @@ def simhash_dup_flags_stream(
         ]
     )
 
-    def judge(key, pdfs, state: GroupState):
+    def judge(key, pdfs, state, timer_values):
+        import numpy as np
         import pandas as pd
 
-        import time as _time
-
-        if state.hasTimedOut:
-            # TTL horizon passed with no traffic: forget this bucket
-            state.remove()
-            yield pd.DataFrame(
-                {id_col: [], "chunk_id": [], "dup_of": []}
-            ).astype({id_col: "int64", "chunk_id": "int64", "dup_of": "float64"})
-            return
-        now_ms = int(_time.time() * 1000)
-        if state.exists:
-            ids, shs, stored_ms = list(state.get[0]), list(state.get[1]), state.get[2]
+        now_ms = timer_values.getCurrentProcessingTimeInMs()
+        if state:
+            ids, shs, stored_ms = list(state[0]), list(state[1]), state[2]
             if state_ttl_sec is not None and now_ms - stored_ms > state_ttl_sec * 1000:
                 ids, shs = [], []  # stored hashes aged out of the horizon
         else:
             ids, shs = [], []
         out_ids, out_chunks, out_dups = [], [], []
         chunk_id = int(key[0])
-        import numpy as np
 
         def first_match(dsh):
             # vectorized popcount over the whole stored set (C-speed
@@ -145,24 +135,24 @@ def simhash_dup_flags_stream(
                 out_ids.append(did)
                 out_chunks.append(chunk_id)
                 out_dups.append(dup_of)
-        state.update((ids, shs, now_ms))
-        if state_ttl_sec is not None:
-            state.setTimeoutDuration(int(state_ttl_sec * 1000))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {id_col: out_ids, "chunk_id": out_chunks, "dup_of": out_dups}
         ).astype({id_col: "int64", "chunk_id": "int64", "dup_of": "float64"})
+        timers = [] if state_ttl_sec is None else [now_ms + int(state_ttl_sec * 1000)]
+        return [out], (ids, shs, now_ms), timers
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_sec is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return chunks.groupBy("chunk_id", "chunk").applyInPandasWithState(
+    def forget(key, fired_at_ms, state):
+        # TTL horizon passed with no traffic: forget this bucket
+        return [], None, []
+
+    return stateful_op_stream(
+        chunks,
+        ["chunk_id", "chunk"],
         judge,
-        outputStructType=out_schema,
-        stateStructType="ids array<long>, shs array<long>, stored_ms long",
-        outputMode="append",
-        timeoutConf=timeout,
+        None if state_ttl_sec is None else forget,
+        out_schema,
+        "ids array<long>, shs array<long>, stored_ms long",
+        time_mode="processingTime",
     )
 
 

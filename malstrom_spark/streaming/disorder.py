@@ -26,8 +26,8 @@ stateful machinery:
   operator, so the late branch can route to its own sink while the
   on-time branch feeds the fold;
 - a single pending timer per key re-arms at the earliest remaining
-  buffered event (the apws engine holds one timer; the TWS engine
-  would fire per-timer and re-arm through the same code path).
+  buffered event (the kernel holds one timer per key; a multi-timer
+  engine would fire per-timer and re-arm through the same code path).
 
 Correctness argument: Spark's watermark guarantees W is computed from
 data already SEEN, and this operator folds strictly below W while
@@ -79,12 +79,12 @@ def make_disorder_handlers(
     buf_types: dict | None = None,
 ):
     """Build the (on_data, on_timer) pair implementing the buffered
-    watermark-finalized fold — module-level factory so the
-    engine-divergence property tests can drive the SAME handlers
-    through fake TWS and apws engines without Spark (the TWS path
-    needs protobuf at runtime; tests/test_disorder.py pins the two
-    engines output-identical on this logic the same way
-    tests/test_engine_divergence.py pins the generic wrappers)."""
+    watermark-finalized fold — module-level factory so the property
+    tests can drive the SAME handlers through the kernel's wrapper and
+    a plain-Python multi-timer reference without Spark
+    (tests/test_disorder.py pins the two output-identical on this
+    logic the same way tests/test_engine_divergence.py pins the
+    kernel)."""
     import numpy as np
     import pandas as pd
 
@@ -179,9 +179,9 @@ def make_disorder_handlers(
         return _advance(key, new_pdf, wm_ms, state)
 
     def on_timer(key, fired_at_ms, state):
-        # apws hands the current watermark, TWS the timer expiry —
-        # either way "the frontier passed this point": fold below it
-        # and re-arm for the remainder
+        # the kernel hands the current watermark, a multi-timer engine
+        # the timer expiry — either way "the frontier passed this
+        # point": fold below it and re-arm for the remainder
         return _advance(key, None, fired_at_ms, state)
 
     return on_data, on_timer

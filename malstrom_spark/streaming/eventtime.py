@@ -59,8 +59,9 @@ def generate_epochs(
     surface; bounded-disorder watermarks (`limit_out_of_orderness`)
     stay on the native `withWatermark` path.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType
+
+    from .stateful_op import stateful_op_stream
 
     in_fields = list(sdf.schema.fields)
     out_schema = StructType(
@@ -69,10 +70,11 @@ def generate_epochs(
     )
     in_cols = [f.name for f in in_fields]
 
-    def judge(key, pdfs, state: GroupState):
+    def judge(key, pdfs, state, _timer_values):
         import pandas as pd
 
-        epoch = state.get[0] if state.exists else None
+        epoch = state[0] if state else None
+        outs = []
         for pdf in pdfs:
             ts_us = (pdf[ts_col].astype("datetime64[us]").astype("int64")).to_list()
             late, epochs = [], []
@@ -86,19 +88,14 @@ def generate_epochs(
             out = pdf[in_cols].copy()
             out["epoch"] = pd.Series(epochs, index=pdf.index, dtype="int64")
             out["is_late"] = pd.Series(late, index=pdf.index, dtype="bool")
-            yield out
-        if epoch is not None:
-            state.update((epoch,))
+            outs.append(out)
+        return outs, (None if epoch is None else (epoch,)), []
 
     sharded = sdf.withColumn(
         _SHARD, F.pmod(F.xxhash64(*[F.col(c) for c in in_cols]), F.lit(n_shards))
     )
-    flagged = sharded.groupBy(_SHARD).applyInPandasWithState(
-        judge,
-        outputStructType=out_schema,
-        stateStructType="epoch_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    flagged = stateful_op_stream(
+        sharded, [_SHARD], judge, None, out_schema, "epoch_us long"
     )
     return flagged.select(*in_cols, "epoch", "is_late")
 
@@ -201,16 +198,15 @@ def flag_late_stream(
     to the batch twin `split_late`, so the same record is judged
     against the same shard's frontier in both paths when the
     parameters match."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from .stateful_op import stateful_op_stream
 
     in_fields = list(sdf.schema.fields)
     out_schema = StructType(in_fields + [StructField("is_late", BooleanType())])
     in_cols = [f.name for f in in_fields]
 
-    def judge(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        frontier_us = state.get[0] if state.exists else None
+    def judge(key, pdfs, state, _timer_values):
+        frontier_us = state[0] if state else None
+        outs = []
         for pdf in pdfs:
             ts_us = (pdf[ts_col].astype("datetime64[us]").astype("int64")).to_numpy()
             if frontier_us is None:
@@ -222,19 +218,14 @@ def flag_late_stream(
             if len(ts_us):
                 batch_max = int(ts_us.max())
                 frontier_us = batch_max if frontier_us is None else max(frontier_us, batch_max)
-            yield out
-        if frontier_us is not None:
-            state.update((frontier_us,))
+            outs.append(out)
+        return outs, (None if frontier_us is None else (frontier_us,)), []
 
     hash_cols = shard_cols if shard_cols else in_cols
     sharded = sdf.withColumn(
         _SHARD, F.pmod(F.xxhash64(*[F.col(c) for c in hash_cols]), F.lit(n_shards))
     )
-    flagged = sharded.groupBy(_SHARD).applyInPandasWithState(
-        judge,
-        outputStructType=out_schema,
-        stateStructType="frontier_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    flagged = stateful_op_stream(
+        sharded, [_SHARD], judge, None, out_schema, "frontier_us long"
     )
     return flagged.select(*in_cols, "is_late")

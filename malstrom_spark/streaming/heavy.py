@@ -27,7 +27,7 @@ GROUP BY/HAVING.
 
 Scale: state is n_shards * k (item, weight) pairs — constant in
 stream length; per-batch work is one value_counts + dict fold per
-shard. Update-mode emission is <= n_shards * k rows per microbatch.
+shard. Emission is <= n_shards * k appended rows per microbatch.
 """
 
 from __future__ import annotations
@@ -45,20 +45,20 @@ def heavy_hitter_candidates_stream(
     n_shards: int = 16,
     item_type: str = "string",
 ) -> DataFrame:
-    """(shard, seq, item, w) update stream: each shard's current
+    """(shard, seq, item, w) append stream: each shard's current
     Misra-Gries counter set, re-emitted whenever the shard sees data
     (`seq` increments per emission — filter to each shard's max seq
     for the final candidate set, `final_candidates`)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from .stateful_op import stateful_op_stream
 
     shards = sdf.select(
         F.pmod(F.xxhash64(F.col(item_col)), F.lit(n_shards)).cast("int").alias("shard"),
         F.col(item_col).alias("item"),
     ).where(F.col("item").isNotNull())
 
-    def fold(key, pdfs, state):
-        if state.exists:
-            items, weights, seq = state.get
+    def fold(key, pdfs, state, _timer_values):
+        if state:
+            items, weights, seq = state
             counters = dict(zip(items, weights))
         else:
             counters, seq = {}, 0
@@ -71,27 +71,24 @@ def heavy_hitter_candidates_stream(
                 d = sorted(counters.values(), reverse=True)[k]
                 counters = {i: w - d for i, w in counters.items() if w > d}
         seq += 1
-        state.update((list(counters), [int(w) for w in counters.values()], seq))
-        yield pd.DataFrame(
-            {
-                "shard": key[0],
-                "seq": seq,
-                "item": list(counters),
-                "w": [int(w) for w in counters.values()],
-            }
+        weights = [int(w) for w in counters.values()]
+        out = pd.DataFrame(
+            {"shard": key[0], "seq": seq, "item": list(counters), "w": weights}
         )
+        return [out], (list(counters), weights, seq), []
 
-    return shards.groupBy("shard").applyInPandasWithState(
+    return stateful_op_stream(
+        shards,
+        ["shard"],
         fold,
+        None,
         f"shard int, seq long, item {item_type}, w long",
         f"items array<{item_type}>, weights array<long>, seq long",
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
 
 
 def final_candidates(emitted: DataFrame) -> DataFrame:
-    """Batch post-pass over the drained update stream: each shard's
+    """Batch post-pass over the drained stream: each shard's
     last (max-seq) summary -> distinct candidate items."""
     from pyspark.sql import Window
 

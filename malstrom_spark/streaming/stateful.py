@@ -1,19 +1,18 @@
 """Streaming stateful operators (reference SURVEY §2.3 on Structured
-Streaming).
+Streaming), all on the keyed kernel `stateful_op.stateful_op_stream`.
 
-- stateful_map / stateful_op -> `applyInPandasWithState` with one
-  state object per key (reference operators/stateful_map.rs:60-110,
-  stateful_op.rs:14-103). State lives in the RocksDB state store
-  (spills, unlike the reference's in-memory IndexMap) and is
-  checkpoint-persisted per microbatch — the reference's ABS snapshot
-  (SURVEY §3.3) as engine config.
-- running_totals_stream -> `applyInPandasWithState` over a fixed
-  number of KEY GROUPS (Flink's keyed-state layout), one state object
-  per group holding all of the group's keys, so the Python and
-  state-store overhead is paid once per touched group per microbatch,
-  not once per key.
-- ttl_map -> the same plus GroupStateTimeout, matching the
-  epoch-driven eviction of ttl_map.rs:72-83.
+- stateful_map -> the kernel without timers, one state object per key
+  (reference operators/stateful_map.rs:60-110). State lives in the
+  RocksDB state store (spills, unlike the reference's in-memory
+  IndexMap) and is checkpoint-persisted per microbatch — the
+  reference's ABS snapshot (SURVEY §3.3) as engine config.
+- running_totals_stream -> stateful_map over a fixed number of KEY
+  GROUPS (Flink's keyed-state layout), one state object per group
+  holding all of the group's keys, so the Python and state-store
+  overhead is paid once per touched group per microbatch, not once
+  per key.
+- ttl_map_event_stream -> the kernel with an event-time timer per key,
+  matching the epoch-driven eviction of ttl_map.rs:72-83.
 
 The user contract mirrors the reference's `StatefulLogic`:
 `fn(key, value_batch, state) -> (rows_out, new_state | None)` with
@@ -25,7 +24,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful_op import stateful_op_stream
 
 
 # zone ids whose wall clock equals UTC at every instant — a session
@@ -59,7 +59,6 @@ def stateful_map_stream(
     fn: Callable,
     output_schema,
     state_schema,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Keyed stateful transform over a streaming DataFrame.
 
@@ -69,23 +68,11 @@ def stateful_map_stream(
     ~100x over row-at-a-time comes from (Arrow transfer).
     """
 
-    def wrapped(key, pdfs, state: GroupState):
-        existing = state.get if state.exists else None
-        outs, new_state = fn(key, pdfs, existing)
-        if new_state is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update(new_state)
-        yield from outs
+    def on_data(key, pdfs, state, _timer_values):
+        outs, new_state = fn(key, pdfs, state)
+        return outs, new_state, []
 
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        wrapped,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    return stateful_op_stream(sdf, key_cols, on_data, None, output_schema, state_schema)
 
 
 # Key groups of running_totals_stream. A key's group is
@@ -192,41 +179,6 @@ def running_totals_stream(
     )
 
 
-def ttl_map_stream(
-    sdf: DataFrame,
-    key_cols: list[str],
-    fn: Callable,
-    output_schema,
-    state_schema,
-    ttl_ms: int,
-) -> DataFrame:
-    """stateful_map with processing-time state TTL (reference
-    ttl_map.rs:16-100): keys idle for ttl_ms are evicted by the
-    engine; `fn` sees state=None afterwards."""
-
-    def wrapped(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return iter(())
-        existing = state.get if state.exists else None
-        outs, new_state = fn(key, pdfs, existing)
-        if new_state is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update(new_state)
-            state.setTimeoutDuration(ttl_ms)
-        return iter(outs)
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        wrapped,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
 def ttl_map_event_stream(
     sdf: DataFrame,
     key_cols: list[str],
@@ -235,13 +187,12 @@ def ttl_map_event_stream(
     state_schema,
     ttl_ms: int,
 ) -> DataFrame:
-    """EVENT-time TTL variant: keys whose last-seen event time trails
-    the watermark by ttl_ms are evicted when the watermark passes
+    """stateful_map with EVENT-time state TTL (reference
+    ttl_map.rs:16-100): keys whose last-seen event time trails the
+    watermark by ttl_ms are evicted when the watermark passes
     (epoch-driven expiry like batch-oriented TTL eviction on epoch
-    arrival, vs the processing-time wall clock of `ttl_map_stream`).
-    Same user contract: fn(key, pdfs, state) -> (rows_out, new_state).
-    Requires withWatermark upstream."""
-    from .stateful_op import stateful_op_stream
+    arrival). Same user contract: fn(key, pdfs, state) -> (rows_out,
+    new_state). Requires withWatermark upstream."""
 
     def on_data(key, pdfs, state, _timers):
         inner = state[0] if state else None

@@ -1,42 +1,34 @@
-"""General stateful operator with event-time timers — fire-on-
-watermark semantics for custom per-key logic:
+"""The keyed stateful kernel: every keyed streaming operator in this
+package runs on `stateful_op_stream`, and this module is the only
+code that touches Spark's keyed state (`applyInPandasWithState`,
+`GroupState`). It is the reference's general `stateful_op` primitive
+(operators/stateful_op.rs:14-160) on one engine path:
 
-- `on_data(key, batch, state, timers) -> (outputs, new_state, set_timers)`
-  runs when records arrive (state update + optional output);
-- `on_timer(key, fired_at_ms, state) -> (outputs, new_state, set_timers)`
-  runs when the WATERMARK passes a registered event-time timer —
-  logic reacting to time passing rather than data arriving,
-  including the emit-then-evict pattern (return state=None to drop
-  the key). Returned `set_timers` RE-ARM the key (e.g. fire again at
-  the next window end); both engine paths arm them.
+- `on_data(key, pdfs, state, timer_values) -> (outputs, new_state,
+  timers)` runs when records arrive for a key (state update +
+  optional output);
+- `on_timer(key, fired_at_ms, state) -> (outputs, new_state, timers)`
+  runs when the key's timer fires — logic reacting to time passing
+  rather than data arriving, including the emit-then-evict pattern
+  (return state=None to drop the key). Returned timers RE-ARM the key.
 
-Contract invariant (enforced, both paths): requesting timers while
-returning new_state=None is an error — a key with no state cannot
-hold a pending event-time timer in the applyInPandasWithState
-engine, and silently diverging between engines is worse than
-failing. Evict-now-fire-later must keep a (possibly empty) state.
+Timers are absolute milliseconds. The timeout mode follows from the
+arguments: `on_timer=None` is `NoTimeout` (returning timers raises),
+`time_mode="eventTime"` fires when the WATERMARK passes a timer, and
+`time_mode="processingTime"` fires when the batch processing time
+passes it. `fired_at_ms` is the current watermark or batch processing
+time respectively — "the frontier has passed this point": close
+everything <= fired_at_ms, not just the timer that fired.
 
-Two engine paths, chosen by capability:
-- `transformWithStateInPandas` (Spark 4 StatefulProcessor): multiple
-  named timers per key, RocksDB ValueState. Its state protocol needs
-  the `protobuf` package — import-gated since this environment lacks
-  it (do not install; the TWS path activates wherever protobuf
-  exists).
-- `applyInPandasWithState` + EventTimeTimeout fallback: ONE pending
-  timer per key (`setTimeoutTimestamp`); when several timers are
-  requested the earliest wins and `on_timer` may re-arm. This is the
-  path exercised by tests in this environment.
+The engine holds ONE pending timer per key: when several timers are
+requested the earliest is armed and `on_timer` re-arms the rest.
+tests/test_engine_divergence.py pins this against a plain-Python
+multi-timer reference that fires every armed timer in expiry order.
 
-Engine equivalence is pinned by tests/test_engine_divergence.py:
-fake-engine harnesses drive both wrappers through arbitrary
-multi-timer schedules asserting identical cumulative output + state.
-`on_timer`'s `fired_at_ms` means "the frontier has passed this point"
-(close everything <= fired_at) on both paths: apws hands the current
-WATERMARK; the TWS wrapper hands max(timer expiry, current watermark)
-so a deep buffer finalizes in the firing microbatch instead of
-draining through re-armed timers across batches (when `timer_values`
-is unavailable — fake-engine harnesses — it degrades to the bare
-expiry, which the cascade still drains correctly).
+Contract invariant (enforced): requesting timers while returning
+new_state=None is an error — a key with no state cannot hold a
+pending timer. Evict-now-fire-later must keep a (possibly empty)
+state.
 
 Scale: state lives in the RocksDB state store (spills, incremental
 checkpoints); timers are engine-managed per key — no scan-all-keys
@@ -49,189 +41,109 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+_TIME_MODES = ("eventTime", "processingTime")
 
 
 def stateful_op_stream(
     sdf: DataFrame,
     key_cols: list[str],
     on_data: Callable,
-    on_timer: Callable,
+    on_timer: Callable | None,
     output_schema,
     state_schema,
     time_mode: str = "eventTime",
 ) -> DataFrame:
-    """Keyed stateful operator with event-time timers.
+    """Keyed stateful operator with optional timers (module docstring).
 
     `on_data(key: tuple, pdfs: iter[pd.DataFrame], state: tuple|None,
     timer_values) -> (iter[pd.DataFrame], new_state: tuple|None,
-    timers_ms: list[int])`; state None drops the key. Each timestamp
-    in timers_ms arms an event-time timer; when the watermark passes
-    it, `on_timer(key, fired_at_ms, state) -> (iter[pd.DataFrame],
-    new_state, timers_ms)` runs for that key and may re-arm new
-    timers. Returning timers together with new_state=None raises.
+    timers_ms: list[int])`; state None drops the key. `timer_values`
+    exposes `getCurrentWatermarkInMs()` and
+    `getCurrentProcessingTimeInMs()` (the batch processing time timers
+    are armed against). `on_timer(key, fired_at_ms, state) ->
+    (iter[pd.DataFrame], new_state, timers_ms)`, or None for an
+    operator without timers.
 
-    With `time_mode="eventTime"` the input must carry a watermark
-    (`withWatermark`) — timers are meaningless without a frontier.
+    With `time_mode="eventTime"` and an `on_timer`, the input must
+    carry a watermark (`withWatermark`) — event-time timers are
+    meaningless without a frontier.
     """
-    if _has_protobuf():
-        return _via_transform_with_state(
-            sdf, key_cols, on_data, on_timer, output_schema, state_schema, time_mode
-        )
-    return _via_apply_with_state(
-        sdf, key_cols, on_data, on_timer, output_schema, state_schema
-    )
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-
-def make_tws_processor(on_data, on_timer, state_schema):
-    """The transformWithStateInPandas wrapper class, module-level so
-    the engine-divergence property test can drive its logic against a
-    fake handle without Spark (the real path needs protobuf at
-    runtime; the class itself imports without it)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Op(StatefulProcessor):
-        def init(self, handle):
-            self._handle = handle
-            self._state = handle.getValueState("op_state", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._state.get() if self._state.exists() else None
-            outs, new_state, timers = on_data(key, rows, cur, timer_values)
-            if new_state is None:
-                if timers:
-                    raise ValueError(
-                        "on_data returned timers with new_state=None; "
-                        "keep a state to hold a pending timer"
-                    )
-                self._state.clear()
-            else:
-                self._state.update(new_state)
-                for t_ms in timers:
-                    self._handle.registerTimer(int(t_ms))
-            yield from outs
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            cur = self._state.get() if self._state.exists() else None
-            fired = int(expired_timer_info.getExpiryTimeInMs())
-            # Fold below the actual frontier, not just this timer's
-            # expiry: the watermark is >= expiry whenever a timer
-            # fires, and on a real TWS runtime a re-armed
-            # already-expired timer may not fire again until a later
-            # microbatch — draining a deep buffer through cascading
-            # timers would defer finalization of its tail. Same
-            # "frontier passed this point" contract, tighter bound.
-            if timer_values is not None:
-                fired = max(fired, int(timer_values.getCurrentWatermarkInMs()))
-            outs, new_state, timers = on_timer(key, fired, cur)
-            if new_state is None:
-                if timers:
-                    raise ValueError(
-                        "on_timer returned timers with new_state=None; "
-                        "keep a state to hold a pending timer"
-                    )
-                self._state.clear()
-            else:
-                self._state.update(new_state)
-                for t_ms in timers:
-                    self._handle.registerTimer(int(t_ms))
-            yield from outs
-
-        def close(self):
-            pass
-
-    return _Op
-
-
-def _via_transform_with_state(
-    sdf, key_cols, on_data, on_timer, output_schema, state_schema, time_mode
-):
-    op_cls = make_tws_processor(on_data, on_timer, state_schema)
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=op_cls(),
+    if time_mode not in _TIME_MODES:
+        raise ValueError(f"time_mode must be one of {_TIME_MODES}, got {time_mode!r}")
+    if on_timer is None:
+        timeout = GroupStateTimeout.NoTimeout
+    elif time_mode == "eventTime":
+        timeout = GroupStateTimeout.EventTimeTimeout
+    else:
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    return sdf.groupBy(*key_cols).applyInPandasWithState(
+        make_apws_wrapped(on_data, on_timer, time_mode),
         outputStructType=output_schema,
-        outputMode="Append",
-        timeMode=time_mode,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
     )
 
 
-class _ApwsTimerValues:
-    """Parity shim for the TWS path's `timer_values` argument: exposes
-    the current watermark to `on_data` on the apws path too, so logic
-    like the disorder-horizon fold (streaming/disorder.py) can run ripe
-    folds and clamp timer arms identically on both engines."""
-
-    def __init__(self, state):
-        self._state = state
-
-    def getCurrentWatermarkInMs(self) -> int:
-        return max(int(self._state.getCurrentWatermarkMs()), 0)
-
-    def getCurrentProcessingTimeInMs(self) -> int:
-        import time
-
-        return int(time.time() * 1000)
-
-
-def make_apws_wrapped(on_data, on_timer):
+def make_apws_wrapped(on_data, on_timer, time_mode: str = "eventTime"):
     """The applyInPandasWithState wrapper function, module-level so the
-    engine-divergence property test can drive it against a fake
-    GroupState without Spark."""
+    engine-divergence tests can drive it against a fake GroupState
+    without Spark. It refers to no module global, so it pickles by
+    value and Python workers need not import this package."""
+    processing_time = time_mode == "processingTime"
 
-    def wrapped(key, pdfs, state):
-        if state.hasTimedOut:
-            cur = state.get if state.exists else None
-            outs, new_state, timers = on_timer(key, state.getCurrentWatermarkMs(), cur)
-            if new_state is None:
-                if timers:
-                    raise ValueError(
-                        "on_timer returned timers with new_state=None; "
-                        "keep a state to hold a pending timer"
-                    )
-                if state.exists:
-                    state.remove()
-            else:
-                state.update(new_state)
-                if timers:
-                    # single pending timer per key in this API: the
-                    # earliest wins; on_timer re-arms for the rest
-                    state.setTimeoutTimestamp(int(min(timers)))
-            yield from outs
-            return
-        cur = state.get if state.exists else None
-        outs, new_state, timers = on_data(key, pdfs, cur, _ApwsTimerValues(state))
+    class TimerValues:
+        """`on_data`'s timer_values: the key's current watermark and
+        the batch processing time timers are armed against."""
+
+        def __init__(self, state):
+            self._state = state
+
+        def getCurrentWatermarkInMs(self) -> int:
+            return max(int(self._state.getCurrentWatermarkMs()), 0)
+
+        def getCurrentProcessingTimeInMs(self) -> int:
+            return int(self._state.getCurrentProcessingTimeMs())
+
+    def commit(state, new_state, timers, hook):
         if new_state is None:
             if timers:
                 raise ValueError(
-                    "on_data returned timers with new_state=None; "
+                    f"{hook} returned timers with new_state=None; "
                     "keep a state to hold a pending timer"
                 )
             if state.exists:
                 state.remove()
+            return
+        state.update(new_state)
+        if not timers:
+            return
+        if on_timer is None:
+            raise ValueError(f"{hook} returned timers but the operator has no on_timer")
+        # single pending timer per key in this API: the earliest wins;
+        # on_timer re-arms for the rest
+        t_ms = int(min(timers))
+        if processing_time:
+            now_ms = int(state.getCurrentProcessingTimeMs())
+            state.setTimeoutDuration(max(1, t_ms - now_ms))
         else:
-            state.update(new_state)
-            if timers:
-                # single pending timer per key in this API: earliest wins
-                state.setTimeoutTimestamp(int(min(timers)))
+            state.setTimeoutTimestamp(t_ms)
+
+    def wrapped(key, pdfs, state):
+        cur = state.get if state.exists else None
+        if state.hasTimedOut:
+            fired_at_ms = (
+                state.getCurrentProcessingTimeMs()
+                if processing_time
+                else state.getCurrentWatermarkMs()
+            )
+            outs, new_state, timers = on_timer(key, fired_at_ms, cur)
+            commit(state, new_state, timers, "on_timer")
+        else:
+            outs, new_state, timers = on_data(key, pdfs, cur, TimerValues(state))
+            commit(state, new_state, timers, "on_data")
         yield from outs
 
     return wrapped
-
-
-def _via_apply_with_state(sdf, key_cols, on_data, on_timer, output_schema, state_schema):
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        make_apws_wrapped(on_data, on_timer),
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -309,29 +309,23 @@ def test_stateful_map_ordered_running_balance(spark):
     assert got == want
 
 
-# ------------------------------------- TWS/apws engine equivalence (no Spark)
-# The TWS path cannot run here (protobuf absent); like
-# test_engine_divergence.py for the generic wrappers, these fakes
-# drive the SAME disorder handlers through both engine semantics —
-# TWS fires each due timer individually at its expiry, apws holds one
-# timeout and hands the current watermark — and pin identical outputs
-# and state, plus agreement with a plain-Python ordered-fold oracle.
-
-from types import SimpleNamespace  # noqa: E402
+# ------------------------------- kernel vs multi-timer reference (no Spark)
+# Like test_engine_divergence.py for the kernel itself, these drive the
+# SAME disorder handlers through the kernel's wrapper (one timeout per
+# key, handed the current watermark) and through the plain-Python
+# multi-timer reference (each due timer fires individually at its
+# expiry), and pin identical outputs and state, plus agreement with a
+# plain-Python ordered-fold oracle.
 
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 from malstrom_spark.streaming.disorder import make_disorder_handlers  # noqa: E402
-from malstrom_spark.streaming.stateful_op import (  # noqa: E402
-    make_apws_wrapped,
-    make_tws_processor,
-)
+from malstrom_spark.streaming.stateful_op import make_apws_wrapped  # noqa: E402
+from tests.test_engine_divergence import ReferenceEngine, _FakeGroupState  # noqa: E402
 
 
 def _handlers():
-    import pandas as pd
-
     def fold(key, ripe, inner):
         n, total = inner if inner is not None else (0, 0)
         rows = []
@@ -349,49 +343,6 @@ def _pdf(batch):
     return pd.DataFrame({"e": [e for e, _ in batch], "v": [v for _, v in batch]})
 
 
-class _WmShim:
-    def __init__(self, wm):
-        self.wm = wm
-
-    def getCurrentWatermarkInMs(self):
-        return self.wm
-
-
-class _TwsDisorder:
-    """TWS semantics: all returned timers registered; each due timer
-    fires individually at its expiry, in order, re-arms drain again."""
-
-    def __init__(self):
-        on_data, on_timer = _handlers()
-        from tests.test_engine_divergence import _FakeHandle
-
-        self.handle = _FakeHandle()
-        self.op = make_tws_processor(on_data, on_timer, state_schema=None)()
-        self.op.init(self.handle)
-        self.wm = 0
-
-    def data(self, key, batch):
-        return list(self.op.handleInputRows(key, iter([_pdf(batch)]), _WmShim(self.wm)))
-
-    def advance(self, key, wm):
-        self.wm = max(self.wm, wm)
-        outs = []
-        while True:
-            due = sorted(t for t in self.handle.timers if t <= self.wm)
-            if not due:
-                return outs
-            t = due[0]
-            self.handle.timers.discard(t)
-            info = SimpleNamespace(getExpiryTimeInMs=lambda t=t: t)
-            # real TWS always hands timer_values; the wrapper folds
-            # below max(expiry, watermark) so deep buffers finalize in
-            # the firing batch rather than via cascaded timers
-            outs += list(self.op.handleExpiredTimer(key, _WmShim(self.wm), info))
-
-    def state(self):
-        return self.handle.state.get()
-
-
 class _ApwsDisorder:
     """apws semantics: ONE pending timeout; on_timer sees the CURRENT
     watermark; setTimeoutTimestamp at-or-below it raises (the real
@@ -400,8 +351,6 @@ class _ApwsDisorder:
     def __init__(self):
         on_data, on_timer = _handlers()
         self.wrapped = make_apws_wrapped(on_data, on_timer)
-        from tests.test_engine_divergence import _FakeGroupState
-
         self.gs = _FakeGroupState()
         orig = self.gs.setTimeoutTimestamp
 
@@ -458,26 +407,26 @@ _STEP = st.one_of(
 @given(steps=st.lists(_STEP, min_size=1, max_size=12))
 def test_disorder_handlers_engine_equivalence(steps):
     key = ("k",)
-    tws, apws = _TwsDisorder(), _ApwsDisorder()
-    out_t, out_a = [], []
+    ref, apws = ReferenceEngine(*_handlers()), _ApwsDisorder()
+    out_r, out_a = [], []
     wm = 0
     accepted = []  # plain-Python oracle: events surviving the drop rule
     for kind, payload in steps:
         if kind == "data":
             accepted += [(e, v) for e, v in payload if e >= wm * 1000]
-            out_t += tws.data(key, payload)
+            out_r += ref.data(key, _pdf(payload))
             out_a += apws.data(key, payload)
         else:
             wm = max(wm, payload)
-            out_t += tws.advance(key, wm)
+            out_r += ref.advance(key, wm)
             out_a += apws.advance(key, wm)
-        assert out_t == out_a, f"divergence after {kind}({payload})"
-        assert _canon(tws.state()) == _canon(apws.state())
+        assert out_r == out_a, f"divergence after {kind}({payload})"
+        assert _canon(ref.state()) == _canon(apws.state())
     # final flush: everything accepted becomes ripe
     final_wm = 10_000
-    out_t += tws.advance(key, final_wm)
+    out_r += ref.advance(key, final_wm)
     out_a += apws.advance(key, final_wm)
-    assert out_t == out_a
+    assert out_r == out_a
     # ordered-fold oracle: running totals over accepted events in
     # (event-time, arrival) order — mergesort stability gives arrival
     # order within equal timestamps in both engines and here
@@ -485,7 +434,7 @@ def test_disorder_handlers_engine_equivalence(steps):
     for e, v in sorted(accepted, key=lambda ev: ev[0]):
         total += v
         want.append(("k", e, total))
-    assert out_t == want
+    assert out_r == want
 
 
 def test_scd2_disorder_nullable_int_attr(spark):

@@ -1,36 +1,29 @@
-"""Engine-divergence pinning for `stateful_op_stream`'s two paths
-(SURVEY §2.3 hard part #1; reference ordering spec stateful_op.rs:
-14-103,154-157).
+"""Kernel pinning for `stateful_op_stream` (SURVEY §2.3 hard part #1;
+reference ordering spec stateful_op.rs:14-103,154-157).
 
-The TWS path (`transformWithStateInPandas`) arms EVERY timer the
-logic returns; the apws fallback (`applyInPandasWithState`) can hold
-only ONE pending timer per key, so it arms the earliest and relies on
-`on_timer` re-arming the rest. These tests drive both wrappers'
-pure-Python logic (module-level `make_tws_processor` /
-`make_apws_wrapped`) with fake handles — no Spark session, no
-protobuf runtime — and assert the two engines produce IDENTICAL
-cumulative outputs and state for arbitrary multi-timer schedules.
+The kernel (`applyInPandasWithState`) holds only ONE pending timer per
+key, so it arms the earliest and relies on `on_timer` re-arming the
+rest. These tests drive its wrapper (`make_apws_wrapped`) against a
+fake GroupState — no Spark session — and compare it with
+`ReferenceEngine`, a plain-Python model that keeps EVERY armed timer
+and fires each one individually in expiry order: the two must produce
+IDENTICAL cumulative outputs and state for arbitrary multi-timer
+schedules.
 
-Known, documented divergence NOT asserted away: `on_timer`'s
-`fired_at_ms` is the timer's expiry in TWS but the current watermark
-in apws — logic must treat it as "the frontier has passed this
-point" (all shipped operators do); outputs derived from it pin
-equality of the SET of closed work, not of the raw argument.
+`on_timer`'s `fired_at_ms` is the timer's expiry in the reference but
+the current watermark in the kernel — logic must treat it as "the
+frontier has passed this point" (all shipped operators do); outputs
+derived from it pin equality of the SET of closed work, not of the
+raw argument.
 """
 
 from __future__ import annotations
-
-from types import SimpleNamespace
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from malstrom_spark.streaming.stateful_op import (
-    _has_protobuf,
-    make_apws_wrapped,
-    make_tws_processor,
-)
+from malstrom_spark.streaming.stateful_op import make_apws_wrapped, stateful_op_stream
 
 WIN = 100  # window length for the test logic (logical ms)
 
@@ -67,71 +60,51 @@ def on_timer(key, fired_at_ms, state):
     return outs, kept, sorted(kept[0])
 
 
-# ------------------------------------------------------ fake engines
-class _FakeValueState:
-    def __init__(self):
-        self._v, self._exists = None, False
+# ------------------------------------------------------------ engines
+class ReferenceEngine:
+    """Multi-timer reference for one key: every timer the logic returns
+    stays armed; on watermark advance each due timer fires individually,
+    in expiry order, with fired_at = its expiry (timers armed while
+    firing that are already due fire in the same drain). Evicting the
+    state drops the key's pending timers. The engine is also the
+    `timer_values` handed to `on_data`."""
 
-    def exists(self):
-        return self._exists
+    def __init__(self, on_data, on_timer):
+        self.on_data, self.on_timer = on_data, on_timer
+        self._state, self.timers, self.wm = None, set(), 0
 
-    def get(self):
-        return self._v
+    def getCurrentWatermarkInMs(self):
+        return self.wm
 
-    def update(self, v):
-        self._v, self._exists = tuple(v), True
-
-    def clear(self):
-        self._v, self._exists = None, False
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers: set[int] = set()
-
-    def getValueState(self, name, schema):
-        return self.state
-
-    def registerTimer(self, t_ms):
-        self.timers.add(int(t_ms))
-
-
-class TwsEngine:
-    """transformWithStateInPandas semantics: a set of pending timers
-    per key; on watermark advance, each due timer fires individually
-    in expiry order (timers registered during firing that are already
-    due fire in the same drain)."""
-
-    def __init__(self):
-        self.handle = _FakeHandle()
-        self.op = make_tws_processor(on_data, on_timer, state_schema=None)()
-        self.op.init(self.handle)
+    def _apply(self, result):
+        outs, self._state, timers = result
+        self.timers = self.timers | set(timers) if self._state is not None else set()
+        return list(outs)
 
     def data(self, key, batch):
-        return list(self.op.handleInputRows(key, iter([batch]), None))
+        return self._apply(self.on_data(key, iter([batch]), self._state, self))
 
     def advance(self, key, wm):
+        self.wm = max(self.wm, wm)
         outs = []
-        while True:
-            due = sorted(t for t in self.handle.timers if t <= wm)
-            if not due:
-                return outs
-            t = due[0]
-            self.handle.timers.discard(t)
-            info = SimpleNamespace(getExpiryTimeInMs=lambda t=t: t)
-            outs += list(self.op.handleExpiredTimer(key, None, info))
+        while self.timers and min(self.timers) <= self.wm:
+            t = min(self.timers)
+            self.timers.discard(t)
+            outs += self._apply(self.on_timer(key, t, self._state))
+        return outs
 
     def state(self):
-        return self.handle.state.get()
+        return self._state
 
 
 class _FakeGroupState:
     def __init__(self):
         self._v, self._exists = None, False
         self.timeout = None
+        self.duration = None
         self.hasTimedOut = False
         self.wm = 0
+        self.now = 0
 
     @property
     def exists(self):
@@ -150,8 +123,14 @@ class _FakeGroupState:
     def setTimeoutTimestamp(self, t_ms):
         self.timeout = int(t_ms)
 
+    def setTimeoutDuration(self, d_ms):
+        self.duration = int(d_ms)
+
     def getCurrentWatermarkMs(self):
         return self.wm
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now
 
 
 class ApwsEngine:
@@ -193,29 +172,29 @@ def _canon_state(s):
 
 
 def _run_both(steps):
-    """Drive both engines through (kind, payload) steps; compare
-    cumulative outputs and canonical state after EVERY step."""
+    """Drive the reference and the kernel through (kind, payload) steps;
+    compare cumulative outputs and canonical state after EVERY step."""
     key = ("k",)
-    tws, apws = TwsEngine(), ApwsEngine()
-    out_t, out_a = [], []
+    ref, apws = ReferenceEngine(on_data, on_timer), ApwsEngine()
+    out_r, out_a = [], []
     wm = 0
     for kind, payload in steps:
         if kind == "data":
-            out_t += tws.data(key, payload)
+            out_r += ref.data(key, payload)
             out_a += apws.data(key, payload)
         else:
             wm = max(wm, payload)
-            out_t += tws.advance(key, wm)
+            out_r += ref.advance(key, wm)
             out_a += apws.advance(key, wm)
-        assert out_t == out_a, f"output divergence after {kind}({payload})"
-        assert _canon_state(tws.state()) == _canon_state(apws.state())
-    return out_t
+        assert out_r == out_a, f"output divergence after {kind}({payload})"
+        assert _canon_state(ref.state()) == _canon_state(apws.state())
+    return out_r
 
 
 def test_multi_timer_schedule_deterministic():
     """Three windows opened in one batch; watermark passes them across
     three advances — the 2nd/3rd emissions happen only via re-armed
-    timers on the apws path (the key never sees data again)."""
+    timers in the kernel (the key never sees data again)."""
     outs = _run_both(
         [
             ("data", [10, 110, 250, 15]),  # windows 100, 200, 300
@@ -229,28 +208,34 @@ def test_multi_timer_schedule_deterministic():
 
 
 def test_single_advance_closes_all_due_windows():
-    """One big watermark jump: TWS fires 3 separate expiries, apws
-    fires once at the watermark — identical cumulative output."""
+    """One big watermark jump: the reference fires 3 separate expiries,
+    the kernel fires once at the watermark — identical cumulative
+    output."""
     outs = _run_both([("data", [10, 110, 250]), ("wm", 1000)])
     assert outs == [(("k",), 100, 1), (("k",), 200, 1), (("k",), 300, 1)]
 
 
 def test_timers_with_none_state_raise_on_both_paths():
-    """Contract invariant (module docstring): requesting timers while
-    returning new_state=None must raise identically on both engines."""
+    """Contract invariant (stateful_op module docstring): requesting
+    timers while returning new_state=None must raise, whether on_data
+    or on_timer asks."""
 
     def bad_on_data(key, batches, state, timer_values):
         return [], None, [123]
 
     wrapped = make_apws_wrapped(bad_on_data, on_timer)
-    gs = _FakeGroupState()
-    with pytest.raises(ValueError, match="new_state=None"):
-        list(wrapped(("k",), iter([[1]]), gs))
+    with pytest.raises(ValueError, match="on_data returned timers with new_state=None"):
+        list(wrapped(("k",), iter([[1]]), _FakeGroupState()))
 
-    op = make_tws_processor(bad_on_data, on_timer, state_schema=None)()
-    op.init(_FakeHandle())
-    with pytest.raises(ValueError, match="new_state=None"):
-        list(op.handleInputRows(("k",), iter([[1]]), None))
+    def bad_on_timer(key, fired_at_ms, state):
+        return [], None, [456]
+
+    wrapped = make_apws_wrapped(on_data, bad_on_timer)
+    gs = _FakeGroupState()
+    gs.update(([100], [1]))
+    gs.hasTimedOut = True
+    with pytest.raises(ValueError, match="on_timer returned timers with new_state=None"):
+        list(wrapped(("k",), iter([]), gs))
 
 
 @settings(max_examples=200, deadline=None)
@@ -269,69 +254,79 @@ def test_timers_with_none_state_raise_on_both_paths():
 )
 def test_property_multi_timer_divergence(steps):
     """Arbitrary interleavings of data batches and (monotone-clamped)
-    watermark advances: both engine paths must agree on cumulative
-    output AND state after every step."""
+    watermark advances: the kernel must agree with the multi-timer
+    reference on cumulative output AND state after every step."""
     _run_both(steps)
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs the protobuf package at "
-    "runtime (state-server protocol); absent in this environment — "
-    "the TWS wrapper logic is pinned by the fake-engine tests above",
-)
-def test_tws_integration_monthly_balance(spark, tmp_path):
-    """Real transformWithStateInPandas run (auto-activates wherever
-    protobuf exists): same monthly-balance program as the apws test in
-    test_stateful_op_timers.py, forced down the TWS path."""
-    from datetime import datetime
+# ------------------------------------------------- timeout modes
+def test_no_timer_mode_evicts_and_rejects_timers():
+    """on_timer=None (NoTimeout): a None state removes the key, and an
+    on_data that asks for timers raises instead of arming one."""
 
-    import pandas as pd
+    def counting(key, batches, state, timer_values):
+        n = (state[0] if state else 0) + sum(len(b) for b in batches)
+        return [(key, n)], (None if n >= 3 else (n,)), []
 
-    from malstrom_spark.streaming.stateful_op import _via_transform_with_state
+    wrapped = make_apws_wrapped(counting, None)
+    gs = _FakeGroupState()
+    assert list(wrapped(("k",), iter([[1, 2]]), gs)) == [(("k",), 2)]
+    assert gs.exists and gs.get == (2,)
+    assert list(wrapped(("k",), iter([[3]]), gs)) == [(("k",), 3)]
+    assert not gs.exists and gs.timeout is None and gs.duration is None
 
-    def on_data_mb(key, pdfs, state, timer_values):
-        total = state[1] if state else 0.0
-        month, end_ms = (state[0] if state else None), None
-        for pdf in pdfs:
-            ts = pdf["ts"].iloc[0]
-            nxt = (ts.to_period("M") + 1).to_timestamp()
-            month = month or ts.strftime("%Y-%m")
-            end_ms = int(nxt.timestamp() * 1000)
-            total += float(pdf["amount"].sum())
-        return [], (month, total), ([end_ms] if end_ms else [])
+    def timed(key, batches, state, timer_values):
+        return [], (1,), [500]
 
-    def on_timer_mb(key, fired_at_ms, state):
-        if state is None:
-            return [], None, []
-        month, total = state
-        out = pd.DataFrame({"account": [key[0]], "month": [month], "balance": [total]})
-        return [out], None, []
+    with pytest.raises(ValueError, match="no on_timer"):
+        list(make_apws_wrapped(timed, None)(("k",), iter([[1]]), _FakeGroupState()))
 
-    staging = tmp_path / "in"
-    staging.mkdir()
-    schema = "account string, ts timestamp, amount double"
-    spark.createDataFrame(
-        [("a", datetime(2024, 1, 5), 10.0)], schema
-    ).coalesce(1).write.parquet(str(staging / "b0"))
-    spark.createDataFrame(
-        [("z", datetime(2024, 3, 10), 1.0)], schema
-    ).coalesce(1).write.parquet(str(staging / "b1"))
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(staging) + "/b*")
-        .withWatermark("ts", "0 seconds")
+
+def test_processing_time_mode_arms_durations_and_fires():
+    """time_mode="processingTime": absolute timers arm
+    setTimeoutDuration(t - now), clamped to at least 1 ms, against the
+    batch processing time that timer_values also reports; hasTimedOut
+    routes to on_timer with that time, and a None result removes the
+    state."""
+    ttl = 250
+    fired = []
+
+    def touch(key, batches, state, timer_values):
+        now = timer_values.getCurrentProcessingTimeInMs()
+        return [], (now,), [now + ttl, now + 10 * ttl]
+
+    def expire(key, fired_at_ms, state):
+        fired.append((fired_at_ms, state))
+        if fired_at_ms - state[0] < ttl:
+            return [], state, [state[0] + ttl]
+        return [("expired", key)], None, []
+
+    wrapped = make_apws_wrapped(touch, expire, time_mode="processingTime")
+    gs = _FakeGroupState()
+    gs.now = 1_000
+    assert list(wrapped(("k",), iter([[1]]), gs)) == []
+    assert gs.get == (1_000,) and gs.duration == ttl  # earliest timer wins
+    assert gs.timeout is None  # no event-time timestamp armed
+
+    # on_timer re-arms an absolute timer: duration is measured from now
+    gs.hasTimedOut, gs.now = True, 1_100
+    assert list(wrapped(("k",), iter([]), gs)) == []
+    assert fired == [(1_100, (1_000,))] and gs.duration == 150
+
+    # a timer already due at arm time is clamped to 1 ms
+    gs.now = 1_500
+    rearm_past = make_apws_wrapped(
+        touch, lambda key, t, state: ([], state, [t - 5]), time_mode="processingTime"
     )
-    out = _via_transform_with_state(
-        sdf, ["account"], on_data_mb, on_timer_mb,
-        "account string, month string, balance double",
-        "month string, total double", "eventTime",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("tws_monthly")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = {(r.account, r.month): r.balance for r in spark.table("tws_monthly").collect()}
-    assert rows[("a", "2024-01")] == pytest.approx(10.0)
+    assert list(rearm_past(("k",), iter([]), gs)) == []
+    assert gs.duration == 1
+
+    assert list(wrapped(("k",), iter([]), gs)) == [("expired", ("k",))]
+    assert fired[-1] == (1_500, (1_000,))
+    assert not gs.exists
+
+
+def test_unknown_time_mode_rejected():
+    with pytest.raises(ValueError, match="time_mode"):
+        stateful_op_stream(None, ["k"], on_data, on_timer, "k string", "n long",
+                           time_mode="wallClock")

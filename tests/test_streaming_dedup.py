@@ -122,7 +122,7 @@ def test_streaming_dup_bucket_cap_bounds_state(spark, tmp_path):
 def test_streaming_dup_state_ttl_expires(spark, tmp_path):
     """Windowed dedup: with a short TTL and a long pause between runs,
     the bucket state expires and a later exact copy is NOT flagged —
-    'duplicate' means within-horizon only (ttl_map mechanism)."""
+    'duplicate' means within-horizon only (processing-time timer)."""
     import time
 
     bus, ck, out = str(tmp_path / "bus"), str(tmp_path / "ck"), str(tmp_path / "out")

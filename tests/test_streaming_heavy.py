@@ -49,7 +49,7 @@ def test_cross_batch_survival_and_exact_recount(spark, tmp_path):
     sdf = _stage_batches(spark, tmp_path, batches)
     emitted = run_to_memory(
         heavy_hitter_candidates_stream(sdf, "token", k=4, n_shards=2),
-        output_mode="update",
+        output_mode="append",
     )
     # every batch re-emits its touched shards with increasing seq
     assert emitted.groupBy("shard").agg(F.max("seq")).collect()
@@ -76,7 +76,7 @@ def test_final_candidates_takes_last_summary(spark, tmp_path):
     sdf = _stage_batches(spark, tmp_path, batches)
     emitted = run_to_memory(
         heavy_hitter_candidates_stream(sdf, "token", k=3, n_shards=1),
-        output_mode="update",
+        output_mode="append",
     )
     hist = {r.item for r in emitted.collect()}
     last = {r.item for r in final_candidates(emitted).collect()}

@@ -144,7 +144,7 @@ def main():
                 sdf.select(F.col("user_id").cast("string").alias("item")),
                 "item", k=30,
             )
-            .writeStream.format("noop").outputMode("update")
+            .writeStream.format("noop").outputMode("append")
         )
 
     def dedup_sink(sdf):
