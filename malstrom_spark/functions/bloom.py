@@ -245,7 +245,8 @@ def bloom_contaminated_ids(
     IDENTICAL to the exact pass (FPs die in the verify; the filter
     has no false negatives), so the registry oracle is the exact
     decontamination SQL unchanged."""
-    from .dedup import ensure_parallelism, shingle_hash_sets
+    from ..scale import ensure_parallelism
+    from .dedup import shingle_hash_sets
 
     docs = ensure_parallelism(docs, id_col)
     doc_grams = shingle_hash_sets(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import collapse_exact_groups, ensure_parallelism
 from .text import normalize_text, tokens
 
 # Deterministic MinHash parameters (Mersenne prime scheme). 2^31-1 so
@@ -117,103 +118,6 @@ def _shingles_from_tokens(t: Column, n: int) -> Column:
     )
 
 
-def _estimate_scan_partitions(df: DataFrame) -> int | None:
-    """Estimate the file scan's partition count from driver-side file
-    metadata — replaces the old `df.rdd.getNumPartitions()` probe,
-    which converted the whole plan to an RDD on every pipeline
-    construction. Mirrors Spark's FilePartition packing: each file
-    contributes ceil(size / maxPartitionBytes) splits, and small files
-    bin-pack at (size + openCostInBytes) per file. Returns None when
-    the plan has no file scan (in-memory/stream input) — callers leave
-    those untouched."""
-    import math
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
-        return None
-    spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    as_bytes = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-    max_bytes = as_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    open_cost = as_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4MB"))
-    splits, packed_bytes = 0, 0
-    hconf = None
-    for f in files:
-        parsed = urlparse(f)
-        if parsed.scheme in ("file", ""):
-            try:
-                size = os.path.getsize(unquote(parsed.path or f))
-            except OSError:
-                size = max_bytes
-        else:
-            if hconf is None:
-                hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            jpath = jvm.org.apache.hadoop.fs.Path(f)
-            size = jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
-        if size > max_bytes:
-            splits += math.ceil(size / max_bytes)
-        else:
-            packed_bytes += size + open_cost
-    return splits + max(1, math.ceil(packed_bytes / max_bytes)) if packed_bytes else max(1, splits)
-
-
-def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Repartition CPU-heavy per-row pipelines up to the session's
-    parallelism when the input arrives under-partitioned (one small
-    parquet file = one unsplittable row-group = one core doing all
-    the hashing). At cluster scale the input already has >= cores
-    partitions and this is a no-op — the shuffle only ever happens
-    when the source was too small for it to matter. Partition count is
-    estimated from file metadata (no DataFrame->RDD plan conversion)."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    est = _estimate_scan_partitions(df)
-    if est is None or est >= min(target, int(spark.conf.get("spark.sql.shuffle.partitions"))):
-        return df
-    return df.repartition(target, *[F.col(c) for c in key_cols]) if key_cols else df.repartition(target)
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the plan (bytes) — file-size-based
-    for scans/projections, a huge default for opaque lineage (so a
-    size GATE fails open to the conservative path). None on any
-    introspection error."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
-
-
-def _collapse_probe_min_bytes() -> int:
-    # Round 13: floor lowered 256 MiB -> 1 MiB. The round-12 floor
-    # assumed "below it even a maximally dup-heavy input cannot repay
-    # the probe job" — MEASURED FALSE at sf1: the 10x replica's name
-    # clusters put customer_fuzzy_pairs at 117.8 s with the probe
-    # skipped (member-level variant buckets go quadratic in copy
-    # depth) vs 22.4 s with it on, entity_groups 22.4 -> 6.5 s,
-    # containment 28.1 -> 10.2 s, while the probe costs one ~0.3 s
-    # job. 1 MiB keeps every round-12 bench-scale win (the largest
-    # sf0.1 dedup input, embeddings, estimates 799 KiB — all sf0.1
-    # probes stay skipped, jobs unchanged) and restores the probe from
-    # sf1 up (smallest probing input estimates 1.04 MiB; anything
-    # bigger clears the floor further). Worst-case regret below the
-    # floor is bounded: <=1 MiB of collapsed rows whose candidate
-    # blow-up the levenshtein/band verify chews through in seconds.
-    # Opaque lineage still fails OPEN to the probe.
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_COLLAPSE_PROBE_MIN_BYTES",
-            str(1024 * 1024),
-        )
-    )
-
-
 def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: float = 0.05):
     """Exact-duplicate collapse: group byte-identical texts on
     md5(text) and elect min(id) as the group representative.
@@ -237,37 +141,22 @@ def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: fl
     benchmark trick. Cost: one narrow (id, fp) shuffle plus a semi-join
     of the corpus against the (smaller) rep-id set.
 
-    ``members`` feeds three downstream joins, so it is EAGERLY
-    localCheckpoint'ed (computed once, lineage truncated). Lazy
-    (eager=False) checkpoints are a trap here: branches of the single
-    final action race to materialize them and each recomputes the
-    full plan (measured 39 s one-shot vs 12.5 s with eager
-    checkpoints at sf0.1). Callers checkpoint their own narrow
-    signature tables the same way. This is the local-mode stand-in
-    for the materialized stage table a 100 TB deployment writes
-    between the exact and near-dup passes."""
-    # The probe itself is one Spark job. Below an input-size floor
-    # (round-12 session 4, same rationale as queries.spread) even a
-    # maximally dup-heavy input cannot repay that job — candidate
-    # blow-up is already bounded by the hot-bucket caps at such sizes
-    # — so skip probe AND collapse outright; output is identical
-    # either way. Opaque lineage estimates default to huge, so an
-    # unknown size fails open to the probe.
-    size = _plan_size_bytes(df)
-    if size is not None and size < _collapse_probe_min_bytes():
-        return df, None
-    fps = df.select(F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp"))
-    total, distinct = fps.agg(
-        F.count(F.lit(1)), F.approx_count_distinct("__fp", 0.02)
-    ).first()
-    if total == 0 or (total - distinct) / total < min_dup_ratio:
-        return df, None
-    reps = fps.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    members = (
-        fps.join(reps, "__fp")
-        .select(F.col(id_col), F.col("__rep"))
-        .localCheckpoint(eager=True)
+    The size floor, the probe and the eagerly checkpointed ``members``
+    table are `scale.collapse_exact_groups`, shared with semdedup.
+    Callers checkpoint their own narrow signature tables the same way.
+    This is the local-mode stand-in for the materialized stage table a
+    100 TB deployment writes between the exact and near-dup passes."""
+    groups = collapse_exact_groups(
+        df,
+        lambda: df.select(
+            F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp")
+        ),
+        id_col,
+        min_dup_ratio,
     )
+    if groups is None:
+        return df, None
+    reps, members = groups
     rep_docs = df.join(
         reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
     )

@@ -31,6 +31,8 @@ import pandas as pd  # module-level: pandas_udf type hints ('pd.Series'
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scale import collapse_exact_groups
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product in double — deterministic
@@ -1937,47 +1939,28 @@ def semdedup(
 
     members = None
     if collapse_exact is not False and threshold <= 1.0:
-        fps = assigned.where(
-            F.col("__v").isNotNull()
-            # zero-norm vectors have NULL cosine with everything (the
-            # try_divide -> coalesce(-2) path), so the plain pair join
-            # never links them; keep them out of the collapse too or
-            # byte-identical zero vectors would be star-edged into a
-            # group the uncollapsed path provably never produces
-            & F.exists("__v", lambda x: x != F.lit(0))
-        ).select(
-            F.col(id_col), F.md5(F.col("__v").cast("string")).alias("__fp")
-        )
-        if collapse_exact is None:
-            # size-gate the probe job (round-12 session 4, the
-            # dedup._collapse_exact discipline): below the input-size
-            # floor even a maximally dup-heavy input cannot repay the
-            # probe — run uncollapsed, output identical either way
-            from .dedup import _collapse_probe_min_bytes, _plan_size_bytes
-
-            # gate on the SOURCE frame, not the checkpointed
-            # assignment: a localCheckpoint is a LogicalRDD whose size
-            # estimate is not scan-derived, so it lands on the wrong
-            # side of a file-size floor; `df`'s lineage is the scan
-            # (round 13 — restores the round-12 skip at bench scale
-            # after the floor drop to 1 MiB)
-            size = _plan_size_bytes(df)
-            if size is not None and size < _collapse_probe_min_bytes():
-                collapse_exact = False
-            else:
-                total, distinct = fps.agg(
-                    F.count(F.lit(1)), F.approx_count_distinct("__fp", 0.02)
-                ).first()
-                collapse_exact = (
-                    total > 0 and (total - distinct) / total >= 0.05
-                )
-        if collapse_exact:
-            reps = fps.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-            members = (
-                fps.join(reps, "__fp")
-                .select(F.col(id_col), F.col("__rep"))
-                .localCheckpoint(eager=True)
+        def fingerprints():
+            return assigned.where(
+                F.col("__v").isNotNull()
+                # zero-norm vectors have NULL cosine with everything (the
+                # try_divide -> coalesce(-2) path), so the plain pair join
+                # never links them; keep them out of the collapse too or
+                # byte-identical zero vectors would be star-edged into a
+                # group the uncollapsed path provably never produces
+                & F.exists("__v", lambda x: x != F.lit(0))
+            ).select(
+                F.col(id_col), F.md5(F.col("__v").cast("string")).alias("__fp")
             )
+
+        # gate on the SOURCE frame, not the checkpointed assignment: a
+        # localCheckpoint is a LogicalRDD whose size estimate is not
+        # scan-derived, so it lands on the wrong side of a file-size
+        # floor; `df`'s lineage is the scan
+        groups = collapse_exact_groups(
+            df, fingerprints, id_col, probe=collapse_exact is None
+        )
+        if groups is not None:
+            members = groups[1]
     pair_src = assigned
     if members is not None:
         pair_src = assigned.join(

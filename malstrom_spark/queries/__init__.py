@@ -291,57 +291,6 @@ def _ensure_conf(spark: SparkSession) -> None:
             pass  # static conf in this session; session.py already set it
 
 
-#: spread() fires only when the combined input files are under this
-#: many bytes (env-overridable). Production-scale inputs are far past
-#: it, so the extra exchange never happens off the test rig.
-_SPREAD_MAX_INPUT_BYTES = None  # resolved lazily so env changes apply
-
-
-def _spread_max_bytes() -> int:
-    import os
-
-    global _SPREAD_MAX_INPUT_BYTES
-    if _SPREAD_MAX_INPUT_BYTES is None:
-        _SPREAD_MAX_INPUT_BYTES = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_MAX_INPUT_BYTES", str(256 * 1024 * 1024)
-            )
-        )
-    return _SPREAD_MAX_INPUT_BYTES
-
-
-def spread(
-    spark: SparkSession, df: DataFrame, sf_dir: str, *table_names: str
-) -> DataFrame:
-    """Parallelism floor for heavy compute fused onto a tiny scan.
-
-    A single-row-group parquet file (every local testdata table is
-    one) is read by ONE task no matter how the byte ranges split, so
-    all per-row work fused before the first exchange — shingle
-    hashing, tokenize+explode, Python kernels — runs serially on one
-    core. When the named input files are small, round-robin the rows
-    across the session's default parallelism first (a few-hundred-KB
-    shuffle buys a cores-wide stage). When they are big — production
-    scale — scans parallelize natively and the exchange would be pure
-    cost, so this is a no-op; the threshold is derived from input
-    size, not from the core count (SPARK_GRAFT_SPREAD_MAX_INPUT_BYTES
-    to override). Use ONLY on integer-exact dataflows: repartitioning
-    reorders floating-point partial aggregation, which the oracle's
-    exact-equality contract would catch."""
-    import os
-
-    try:
-        total = sum(
-            os.path.getsize(os.path.join(sf_dir, f"{n}.parquet"))
-            for n in table_names
-        )
-    except OSError:
-        return df
-    if total > _spread_max_bytes():
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 # Parquet SCHEMA memo keyed by (path, mtime, size) — metadata only,
 # never data or results: a footer-schema inference costs ~76 ms of
 # driver py4j wall per spark.read.parquet() and the bench's

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from ..functions import bpe as _bpe
 from ..functions import corpus, dedup, multimodal, similarity, text
-from . import REGISTRY, register, spread, table
+from ..scale import ensure_parallelism, ivf_salt
+from . import REGISTRY, register, table
 from ._oracle_sql import (
     H60 as _H60,
 )
@@ -2191,7 +2192,7 @@ def doc_repeated_span_removal(spark, sf_dir):
     re-emitted. Portable md5 window hashes; the oracle replays the
     interval union and the cut with index lambdas, so every surviving
     token of every document is hash-exact."""
-    docs = spread(spark, table(spark, sf_dir, "documents"), sf_dir, "documents")
+    docs = ensure_parallelism(table(spark, sf_dir, "documents"))
     return dedup.remove_repeated_spans(
         docs, "doc_id", window=8, min_docs=2, portable=True
     )
@@ -2210,7 +2211,7 @@ def doc_exact_substring_dedup(spark, sf_dir):
     md5 window hashes; the oracle replays the canonical min-(id,pos)
     struct selection and the cut, so every surviving token is
     hash-exact."""
-    docs = spread(spark, table(spark, sf_dir, "documents"), sf_dir, "documents")
+    docs = ensure_parallelism(table(spark, sf_dir, "documents"))
     return dedup.exact_substring_dedup(
         docs, "doc_id", min_len=8, keep_first=True, portable=True
     )
@@ -2805,7 +2806,7 @@ def doc_bm25_search(spark, sf_dir):
     df counted for query terms only, one-row stats broadcast, and the
     top-k reduction two-stage skew-safe (no mega-query single-task
     sort)."""
-    docs = spread(spark, table(spark, sf_dir, "documents"), sf_dir, "documents")
+    docs = ensure_parallelism(table(spark, sf_dir, "documents"))
     queries = spark.createDataFrame(_BM25_QUERIES, "query_id long, query string")
     return _search.bm25_topk(docs, queries, "doc_id", k=10)
 
@@ -3007,7 +3008,7 @@ def doc_dsir_selected(spark, sf_dir):
     for the fit, one broadcast of the <= 8192-row weight table, one
     (doc, partial-sum) shuffle for scoring, skew-safe two-stage
     top-k."""
-    docs = spread(spark, table(spark, sf_dir, "documents"), sf_dir, "documents")
+    docs = ensure_parallelism(table(spark, sf_dir, "documents"))
     target = docs.where((F.col("lang") == "en") & (F.col("doc_id") % 3 == 0))
     w = corpus.dsir_fit(target, docs, n_buckets=8192, portable=True)
     sel = corpus.dsir_resample(
@@ -3079,14 +3080,12 @@ def image_phash_near_dup(spark, sf_dir):
     # The probe set survives in ONE scan partition (documents.parquet
     # is a single small file), so without an exchange the whole
     # encode+decode+DCT chain runs serially in one task (~4.2 s of
-    # kernel CPU at sf0.1). spread() round-robins the bounded id list
-    # across the cores first (size-guarded, scale-adaptive).
-    docs = spread(
-        spark,
+    # kernel CPU at sf0.1). ensure_parallelism round-robins the
+    # bounded id list across the cores first (scan-size-adaptive).
+    docs = ensure_parallelism(
         table(spark, sf_dir, "documents").select("doc_id").where(
             F.col("doc_id") < 400
-        ),
-        sf_dir, "documents",
+        )
     )
     schema = StructType([
         StructField("doc_id", LongType()), StructField("payload", BinaryType()),
@@ -3151,9 +3150,9 @@ def audio_fingerprint_pairs(spark, sf_dir):
 
     from ..functions import multimodal as mm
 
-    # No spread() here, unlike the sibling multimodal rows: the WAV+
-    # STFT chain is only ~0.3 s of serial kernel CPU at sf0.1 and the
-    # interleaved A/B measured the extra exchange as a net LOSS
+    # No ensure_parallelism here, unlike the sibling multimodal rows:
+    # the WAV+STFT chain is only ~0.3 s of serial kernel CPU at sf0.1
+    # and the interleaved A/B measured the extra exchange as a net LOSS
     # (1.76 -> 1.96 s); the landmark-join shuffle already parallelizes
     # the heavy part.
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
@@ -3223,16 +3222,16 @@ def video_frame_phash(spark, sf_dir):
 
     from ..functions import multimodal as mm
 
-    # Round 13 (VERDICT r12 #3): spread() REMOVED from this row. It was
-    # added when the MJPEG encode+decode chain was ~6.5 s of kernel CPU;
+    # Round 13 (VERDICT r12 #3): no ensure_parallelism on this row. It
+    # was added when the MJPEG encode+decode chain was ~6.5 s of kernel CPU;
     # after the round-12 kernel work (batched DCT/IDCT, LUT Huffman,
     # inlined bit reader — sha256-identical output) the whole chain is
     # ~2 s serial, and in a churned 109-query session the 32-way
     # round-robin exchange + python-worker fan-out costs MORE than it
     # buys: interleaved F/T/F/T A/B after a 40-query bench prefix
-    # (tools/probe_r13_vfp.py) measured spread_off 1.70/1.92/2.13 s vs
-    # spread_on 3.21/3.70/3.82 s. The driver bench read 4.91 s (r12)
-    # and 7.48 s (r13 baseline) for this row with spread on.
+    # (OPTIMIZATION_r13.md) measured floor off 1.70/1.92/2.13 s vs
+    # floor on 3.21/3.70/3.82 s. The driver bench read 4.91 s (r12)
+    # and 7.48 s (r13 baseline) for this row with the floor on.
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
@@ -3873,15 +3872,14 @@ def doc_host_reputation(spark, sf_dir):
         F.lit('<a href="/local.html">same host, dropped</a>'),
         F.lit('<a href="https://hub.example.org/index.html">hub</a>'),
     )
-    # Round 13: spread() the doc scan — the stdlib HTML link parse
-    # (Arrow mapInPandas) and the classifier features fuse onto the
-    # scan, which is ONE task for any local-sized file (byte-range
-    # splits, not row groups, set scan parallelism: even sf1's 5.4 MB
-    # file is a single 128 MB split). sf1 c8/c32 ratio was 1.05 —
+    # Round 13: parallelism floor on the doc scan — the stdlib HTML
+    # link parse (Arrow mapInPandas) and the classifier features fuse
+    # onto the scan, which is ONE task for any local-sized file (see
+    # ensure_parallelism: even sf1's 5.4 MB file is one 128 MB split). sf1 c8/c32 ratio was 1.05 —
     # the corpus-sized Python work ran serially at any core count.
     # Integer-exact dataflow throughout (BIGINT ranks/quality sums).
     docs = (
-        spread(spark, table(spark, sf_dir, "documents"), sf_dir, "documents")
+        ensure_parallelism(table(spark, sf_dir, "documents"))
         .where(F.col("text").isNotNull())
         .select("doc_id", "text", url.alias("url"), page.alias("page"))
     )
@@ -4512,14 +4510,11 @@ def embedding_bitext_ivf(spark, sf_dir):
     # by declaration, so the cell-keyed scoring join runs on at most 8
     # tasks while the rest of the cluster idles — and the candidate
     # set is quadratic in cell occupancy, the dominant cost at sf1+
-    # (114.7 s at sf1/c32, 8-core ratio ~1). Salt = cores/n_cells
-    # parallelizes the scoring with an IDENTICAL pair set (see
-    # _ivf_score_assigned); at production n_lists >= cores the factor
-    # is 1 and the salting vanishes by construction.
-    salt_n = max(1, (2 * spark.sparkContext.defaultParallelism) // 8)
+    # (114.7 s at sf1/c32, 8-core ratio ~1). Salting parallelizes the
+    # scoring with an IDENTICAL pair set (see _ivf_score_assigned).
     return mine_bitext_ivf(
         side_a, side_b, centroids, k=_BITEXT_K, n_probe=3, threshold=1.0,
-        salt_n=salt_n,
+        salt_n=ivf_salt(spark, 8),
     )
 
 

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from . import register, spread, table
+from ..scale import ensure_parallelism
+from . import register, table
 from .relational import dsum
 
 
@@ -512,14 +513,12 @@ def lineitem_stats_by_flag(spark, sf_dir):
     from EXACT decimal moments in one pass — not stddev()/corr(),
     whose float accumulation order differs per engine/partitioning.
     Same single-shuffle cost as a plain sum; bit-identical results."""
-    # spread(): the map-side decimal moment aggregation otherwise runs
-    # in the single-row-group scan's one task (exact sums, order-free)
-    li = spread(
-        spark,
+    # ensure_parallelism: the map-side decimal moment aggregation
+    # otherwise runs in the small scan's one task (exact sums, order-free)
+    li = ensure_parallelism(
         table(spark, sf_dir, "lineitem").select(
             "l_returnflag", "l_quantity", "l_extendedprice"
-        ),
-        sf_dir, "lineitem",
+        )
     )
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
@@ -1178,10 +1177,8 @@ def customer_fuzzy_pairs(spark, sf_dir):
     variant equi-join, never an all-pairs product."""
     from ..functions import linkage
 
-    cust = spread(
-        spark,
-        table(spark, sf_dir, "customer").where(F.col("c_custkey") % 5 == 0),
-        sf_dir, "customer",
+    cust = ensure_parallelism(
+        table(spark, sf_dir, "customer").where(F.col("c_custkey") % 5 == 0)
     )
     return linkage.fuzzy_self_pairs(
         cust.select(F.col("c_custkey").alias("id"), "c_name"),

@@ -1,0 +1,173 @@
+"""Scale policy: every decision that depends on input size or core count.
+
+The reference runtime has one scale input, the worker count
+(malstrom-core/src/runtime/threaded/multi.rs:44-120), and no size
+heuristics. Where this package overrides Spark's own planning (the
+parallelism floor, the exact-collapse probe, IVF join salting) it asks
+this module: the core count is read here only, and every size floor is
+a constant here.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+#: Input-size floor of the exact-collapse probe (Catalyst's estimate
+#: of the source plan). Below it the probe job and the collapse are
+#: both skipped: even a maximally dup-heavy input cannot repay the
+#: probe there, and candidate blow-up is already bounded by the
+#: hot-bucket caps. Measured at sf1 (10x replica name clusters):
+#: customer_fuzzy_pairs 117.8 s with the probe skipped vs 22.4 s with
+#: it on, entity_groups 22.4 -> 6.5 s, containment 28.1 -> 10.2 s,
+#: while the probe costs one ~0.3 s job. 1 MiB keeps every sf0.1 probe
+#: skipped (the largest sf0.1 dedup input, embeddings, estimates
+#: 799 KiB) and runs it from sf1 up (smallest probing input estimates
+#: 1.04 MiB). Opaque lineage estimates default to huge, so an unknown
+#: size fails open to the probe.
+COLLAPSE_PROBE_MIN_BYTES = 1 << 20
+
+
+def _estimate_scan_partitions(df: DataFrame) -> int | None:
+    """Estimate the file scan's partition count from driver-side file
+    metadata — replaces the old `df.rdd.getNumPartitions()` probe,
+    which converted the whole plan to an RDD on every pipeline
+    construction. Mirrors Spark's FilePartition packing: each file
+    contributes ceil(size / maxPartitionBytes) splits, and small files
+    bin-pack at (size + openCostInBytes) per file. Returns None when
+    the plan has no file scan (in-memory/stream input) — callers leave
+    those untouched."""
+    import math
+    import os
+    from urllib.parse import unquote, urlparse
+
+    files = df.inputFiles()
+    if not files:
+        return None
+    spark = df.sparkSession
+    jvm = spark.sparkContext._jvm
+    as_bytes = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    max_bytes = as_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
+    open_cost = as_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4MB"))
+    splits, packed_bytes = 0, 0
+    hconf = None
+    for f in files:
+        parsed = urlparse(f)
+        if parsed.scheme in ("file", ""):
+            try:
+                size = os.path.getsize(unquote(parsed.path or f))
+            except OSError:
+                size = max_bytes
+        else:
+            if hconf is None:
+                hconf = spark.sparkContext._jsc.hadoopConfiguration()
+            jpath = jvm.org.apache.hadoop.fs.Path(f)
+            size = jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
+        if size > max_bytes:
+            splits += math.ceil(size / max_bytes)
+        else:
+            packed_bytes += size + open_cost
+    return splits + max(1, math.ceil(packed_bytes / max_bytes)) if packed_bytes else max(1, splits)
+
+
+def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Parallelism floor for CPU-heavy per-row work fused onto a scan
+    (shingle hashing, tokenize+explode, Python kernels).
+
+    The scan's task count is estimated from file sizes with Spark's
+    FilePartition packing: byte-range splits of ``maxPartitionBytes``,
+    small files bin-packed at ``openCostInBytes`` each; row groups are
+    not counted. One local-sized file estimates one task. Spark may
+    plan a few more byte-range splits for it (it shrinks the split size
+    toward bytes-per-core), but a row group is read only by the split
+    holding its midpoint, so a single-row-group file (every table in
+    this repo, sf1's 5.4 MB documents included) is read by one task
+    either way, and every row fused before the first exchange runs on
+    one core. When the estimate is under min(defaultParallelism,
+    shuffle.partitions), repartition to the session's parallelism
+    (round-robin, or hashed on ``key_cols``): a small shuffle buys a
+    cores-wide stage. At cluster scale the scan already has >= cores
+    partitions and this is a no-op. In-memory and streaming inputs
+    (no file scan) are left untouched. Round-robin reorders rows, so
+    use it only on dataflows whose result is order-free (integer or
+    decimal aggregation, per-row kernels)."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    est = _estimate_scan_partitions(df)
+    if est is None or est >= min(target, int(spark.conf.get("spark.sql.shuffle.partitions"))):
+        return df
+    return df.repartition(target, *[F.col(c) for c in key_cols]) if key_cols else df.repartition(target)
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for the plan (bytes) — file-size-based
+    for scans/projections, a huge default for opaque lineage (so a
+    size GATE fails open to the conservative path). None on any
+    introspection error."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:
+        return None
+
+
+def collapse_exact_groups(
+    source: DataFrame,
+    fingerprints: Callable[[], DataFrame],
+    id_col: str,
+    min_dup_ratio: float = 0.05,
+    probe: bool = True,
+) -> tuple[DataFrame, DataFrame] | None:
+    """Group exact duplicates by fingerprint and elect min(id) as each
+    group's representative.
+
+    ``fingerprints()`` builds a frame of ``id_col`` and ``__fp`` (a
+    byte-exact fingerprint: md5 of the text or of the vector); it is
+    not called when the size floor skips the collapse. With ``probe``
+    the collapse is adaptive: skipped outright when ``source`` (the
+    frame whose lineage is the scan) estimates under
+    `COLLAPSE_PROBE_MIN_BYTES`, else one narrow job counts
+    fingerprints and the collapse is skipped when fewer than
+    ``min_dup_ratio`` of the rows are duplicates. Callers' output is
+    identical either way; only the cost differs.
+
+    Returns None when skipped, else ``(reps, members)``: ``reps`` maps
+    each fingerprint to its representative (``__fp``, ``__rep``), and
+    ``members`` maps every id to its representative (``id_col``,
+    ``__rep``). ``members`` feeds several downstream joins, so it is
+    EAGERLY localCheckpoint'ed (computed once, lineage truncated).
+    Lazy checkpoints are a trap here: branches of the single final
+    action race to materialize them and each recomputes the full plan
+    (measured 39 s one-shot vs 12.5 s with eager checkpoints at
+    sf0.1)."""
+    if probe:
+        size = _plan_size_bytes(source)
+        if size is not None and size < COLLAPSE_PROBE_MIN_BYTES:
+            return None
+    fps = fingerprints()
+    if probe:
+        total, distinct = fps.agg(
+            F.count(F.lit(1)), F.approx_count_distinct("__fp", 0.02)
+        ).first()
+        if total == 0 or (total - distinct) / total < min_dup_ratio:
+            return None
+    reps = fps.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
+    members = (
+        fps.join(reps, "__fp")
+        .select(F.col(id_col), F.col("__rep"))
+        .localCheckpoint(eager=True)
+    )
+    return reps, members
+
+
+def ivf_salt(spark: SparkSession, n_cells: int) -> int:
+    """Salt factor for an IVF cell join over ``n_cells`` quantizer
+    cells: about two join tasks per core. A cell-keyed join runs on at
+    most ``n_cells`` tasks, and its candidate set is quadratic in cell
+    occupancy; salting spreads it over the cores with an identical
+    pair set. Once ``n_cells`` reaches twice the core count
+    (production quantizers) the factor is 1 and salting vanishes."""
+    return max(1, (2 * spark.sparkContext.defaultParallelism) // n_cells)

@@ -22,8 +22,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def _ensure_driver_memory() -> None:
     """In local mode the driver JVM hosts every executor thread, and
@@ -47,11 +45,13 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or fetch) a SparkSession with engine defaults applied."""
+    """Create (or fetch) a SparkSession with engine defaults applied.
+    ``SPARK_GRAFT_CPUS`` (default 32) sizes both ``local[N]`` and the
+    default shuffle partition count; it is read once, here."""
     _ensure_driver_memory()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    n_shuffle = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.master(master)
@@ -71,9 +71,8 @@ def build_session(
         # any cluster, and AQE skew-split keeps partitions bounded;
         # sort-merge remains the fallback whenever the conditions
         # fail. (Guide §3.1/§9 baseline.)
-        # Round 13 (VERDICT r12 #7): the threshold is env-overridable.
-        # The adversarial case, measured at sf1 (tools/
-        # probe_r13_shj_skew.py): when the STREAM side of a join is
+        # Round 13 (VERDICT r12 #7): the adversarial case, measured at
+        # sf1 (tools/probe_r13_shj_skew.py): when the STREAM side of a join is
         # skewed enough for AQE's skew split, the SMJ->SHJ rewrite
         # still fires (its size gate checks the BUILD side only) and
         # every stream split re-builds the per-partition hash map —
@@ -82,12 +81,11 @@ def build_session(
         # construction); SMJ remains the fallback wherever a build
         # partition exceeds the threshold (plans show SortMergeJoin in
         # the initial plan and SHJ only where the gate passed). Jobs
-        # with a known skewed stream side should set the env to 0.
+        # with a known skewed stream side should set
+        # spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold to 0
+        # (extra_conf here, or spark.conf.set at run time).
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -83,9 +83,11 @@ def test_threshold_filters(spark):
         assert r.margin >= 1.2
 
 
-def test_ivf_bitext_with_full_probe_equals_exact(spark):
+@pytest.mark.parametrize("salt_n", [1, 3])
+def test_ivf_bitext_with_full_probe_equals_exact(spark, salt_n):
     # n_probe = n_cells => every query probes every cell => candidate
-    # set is all pairs => IVF mining must reproduce the exact kernel.
+    # set is all pairs => IVF mining must reproduce the exact kernel,
+    # with or without the salted cell join (each pair meets at one salt).
     from pyspark.sql import functions as F
 
     from malstrom_spark.functions.bitext import mine_bitext_ivf
@@ -98,7 +100,9 @@ def test_ivf_bitext_with_full_probe_equals_exact(spark):
     a = emb.filter(F.col("vec_id") % 2 == 0)
     b = emb.filter(F.col("vec_id") % 2 == 1)
     exact = mine_bitext_exact(a, b, k=3, threshold=1.0)
-    ivf_full = mine_bitext_ivf(a, b, cents, k=3, n_probe=4, threshold=1.0)
+    ivf_full = mine_bitext_ivf(
+        a, b, cents, k=3, n_probe=4, threshold=1.0, salt_n=salt_n
+    )
     e = {(r.x_id, r.y_id, r.sim_q) for r in exact.collect()}
     i = {(r.x_id, r.y_id, r.sim_q) for r in ivf_full.collect()}
     assert e == i and len(e) > 0

@@ -103,28 +103,73 @@ def test_collapse_probe_skips_on_distinct_corpus(spark):
 
 
 def test_collapse_probe_size_gate(spark, tmp_path, monkeypatch):
-    """Round-12 session 4: for FILE-backed inputs below the size floor
-    the probe job and the collapse are both skipped (the probe cannot
-    repay itself there) — even on a maximally dup-heavy corpus — and
-    the env floor restores the probe, which then collapses. In-memory
-    inputs have no size estimate and always fail open to the probe
-    (pinned by test_collapse_probe_skips_on_distinct_corpus)."""
+    """For FILE-backed inputs below the size floor
+    (`scale.COLLAPSE_PROBE_MIN_BYTES`, 1 MiB) the probe job and the
+    collapse are both skipped (the probe cannot repay itself there) —
+    even on a maximally dup-heavy corpus — and a floor of 0 restores
+    the probe, which then collapses. In-memory inputs have no size
+    estimate and always fail open to the probe (pinned by
+    test_collapse_probe_skips_on_distinct_corpus)."""
+    from malstrom_spark import scale
+
     p = str(tmp_path / "dups.parquet")
     spark.createDataFrame(
         [(i, BASE) for i in range(6)] + [(6, "other")],
         "doc_id long, text string",
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    # default floor (256 MB): tiny scan -> no probe, uncollapsed
+    # default floor: tiny scan -> no probe, uncollapsed
     _, members = dedup._collapse_exact(docs, "doc_id", "text")
     assert members is None
     # floor 0: probe runs and the dup-heavy corpus collapses
-    monkeypatch.setenv("SPARK_GRAFT_COLLAPSE_PROBE_MIN_BYTES", "0")
+    monkeypatch.setattr(scale, "COLLAPSE_PROBE_MIN_BYTES", 0)
     _, members = dedup._collapse_exact(docs, "doc_id", "text")
     assert members is not None
     assert {(r[0], r[1]) for r in members.collect()} == {
         (i, 0) for i in range(6)
     } | {(6, 6)}
+
+
+def test_semdedup_collapse_floor_output_identical(spark, tmp_path, monkeypatch):
+    """semdedup shares the collapse helper: on a file-backed, dup-heavy
+    input its output is identical with the size floor at its default
+    (collapse skipped) and at 0 (probe runs and collapses)."""
+    import numpy as np
+
+    from malstrom_spark import scale
+    from malstrom_spark.functions import similarity as sim
+
+    rng = np.random.RandomState(11)
+    base = [[float(x) for x in np.round(rng.normal(0, 1, 8), 6)] for _ in range(5)]
+    p = str(tmp_path / "vecs.parquet")
+    spark.createDataFrame(
+        [(i, base[i % 5]) for i in range(40)] + [(99, None)],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(p)
+    df = spark.read.parquet(p)
+    cents = sim.semdedup_head_centroids(df, "vec_id", "embedding", 3)
+
+    decisions = []
+
+    def spy(*args, **kwargs):
+        groups = scale.collapse_exact_groups(*args, **kwargs)
+        decisions.append(groups is not None)
+        return groups
+
+    monkeypatch.setattr(sim, "collapse_exact_groups", spy)
+
+    def run():
+        return sorted(
+            tuple(r) for r in sim.semdedup(df, "vec_id", "embedding", cents).collect()
+        )
+
+    default = run()
+    monkeypatch.setattr(scale, "COLLAPSE_PROBE_MIN_BYTES", 0)
+    floor0 = run()
+    assert decisions == [False, True]
+    assert default == floor0
+    by_id = {t[0]: t for t in default}
+    assert by_id[0][3] == by_id[5][3] == by_id[35][3]  # copies share a group
 
 
 def test_decontaminate_flags_ngram_overlap(spark):

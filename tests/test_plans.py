@@ -174,10 +174,31 @@ def test_no_unpartitioned_windows_in_package():
     assert not bad, f"empty Window.partitionBy() in: {bad}"
 
 
+def test_scale_inputs_read_in_one_place():
+    """The core count is read only by the scale policy
+    (malstrom_spark/scale.py) and the environment only by the session
+    factory (malstrom_spark/session.py): every gate that depends on
+    cores or input size asks scale.py, and no env var changes a code
+    path. (Source lint, textual like the Window guard above.)"""
+    import pathlib
+
+    import malstrom_spark
+
+    pkg = pathlib.Path(malstrom_spark.__file__).parent
+    for needle, home in (
+        ("defaultParallelism", "scale.py"),
+        ("os.environ", "session.py"),
+    ):
+        found = sorted(
+            str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if needle in p.read_text()
+        )
+        assert found == [home], f"{needle} read outside {home}: {found}"
+
+
 def test_no_rdd_access_in_package():
     """No `.rdd` DataFrame property anywhere in malstrom_spark/: it
     converts the whole plan to an RDD on the driver (the round-3
-    `ensure_parallelism` watch-item, now fixed via file-metadata
+    `scale.ensure_parallelism` watch-item, now fixed via file-metadata
     estimation). AST-based so docstrings/comments don't false-positive;
     the py4j `...analyzed().rdd()` JVM *field read* in
     `_free_local_checkpoint` is a Call, not a bare Attribute load, and
