@@ -73,14 +73,6 @@ def md5_prefix_hash(*cols: Column) -> Column:
     )
 
 
-def md5_prefix_hash_sql(expr: str) -> str:
-    """The DuckDB-side twin of `md5_prefix_hash` for oracle strings.
-    Mirrors the Python side's NULL->0 coalesce so the two twins stay
-    bit-identical BY CONSTRUCTION (not by caller discipline) even if a
-    null string ever reaches the hash (ADVICE r02)."""
-    return f"COALESCE(('0x' || substr(md5({expr}), 1, 15))::BIGINT, 0)"
-
-
 def _perm_params(n_hashes: int) -> list[tuple[int, int]]:
     """Fixed, reproducible (a, b) permutation params derived from a
     simple LCG — no runtime randomness, identical across runs/sessions."""

@@ -1078,18 +1078,6 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # pad with 1s
 
 
-def _mag_bits(v: int) -> tuple[int, int]:
-    """(category, low-order bits) for a DC diff / AC level per T.81
-    F.1.2.1 — negative values are encoded as v - 1 in `category`
-    bits."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    cat = a.bit_length()
-    bits = v if v > 0 else v + (1 << cat) - 1
-    return cat, bits
-
-
 def make_jpeg(
     pixels,
     quality: int = 90,

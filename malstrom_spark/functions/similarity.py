@@ -360,18 +360,6 @@ def _rademacher_signs(dim: int, n_planes: int) -> list[list[int]]:
     return planes
 
 
-def lsh_bucket_quantized(vec: Column, dim: int, n_planes: int = 8) -> Column:
-    """Portable LSH bucket id: bit p = [sum_i s_pi * q_i > 0] over the
-    quantized vector — exact integer arithmetic, DuckDB-identical.
-
-    NOTE: as a bare Column this embeds quantize_vec's transform 8×
-    (once per plane dot) and HOFs run interpreted with no
-    subexpression elimination — for DataFrame-level work use
-    `with_lsh_bucket`, which materializes the quantized vector as a
-    column first (measured 4-6 s -> sub-second on 2.5k vectors)."""
-    return _bucket_from_quantized(quantize_vec(vec), dim, n_planes)
-
-
 def _bucket_from_quantized(q: Column, dim: int, n_planes: int) -> Column:
     """Per-plane zip_with/aggregate fold over the (materialized)
     quantized vector. Measured alternatives at dim=64 × 8 planes:
@@ -518,12 +506,6 @@ def with_probe_buckets_portable(
         ),
     )
     return ddf.withColumn(out_col, F.explode(buckets)).drop("__q", "__dots", "__base")
-
-
-def rademacher_signs_sql(dim: int, n_planes: int) -> list[str]:
-    """DuckDB literal list per plane, e.g. '[1,-1,...]' — oracle twin
-    of `lsh_bucket_quantized`'s plane matrix."""
-    return ["[" + ",".join(str(s) for s in p) + "]" for p in _rademacher_signs(dim, n_planes)]
 
 
 def lsh_topk_portable(

@@ -11,7 +11,7 @@ whichever directional pick is closer in time, exact ties preferring
 backward (pandas merge_asof convention). Every strategy implements
 every direction with identical results (tests/test_asof.py).
 
-Three physical strategies:
+Two physical strategies:
 - 'window': union both sides tagged with a side marker, ONE shuffle
   on key, then `last(right_payload, ignorenulls)` over the
   (ts, side, tiebreak)-ordered window. No row expansion, no Python —
@@ -24,9 +24,6 @@ Three physical strategies:
   (dimension snapshots). NOTE: on a large non-broadcast right side
   this left join expands each left row by every earlier right row
   for its key — a scale hazard; only offered with broadcast_right.
-- 'pandas': co-grouped `pd.merge_asof` per key. One shuffle per side,
-  then per-key sorted merge in Arrow batches. Kept for parity with
-  pandas semantics; 'window' beats it (no Arrow transfer).
 
 Default selection (strategy=None): 'join' when broadcast_right=True
 (dimension-snapshot shape), else 'window'.
@@ -76,10 +73,6 @@ def as_of_join(
         return _asof_via_join(
             left, right, keys, left_ts, right_ts, list(right_cols), tiebreak,
             broadcast_right, direction,
-        )
-    if strategy == "pandas":
-        return _asof_via_pandas(
-            left, right, keys, left_ts, right_ts, list(right_cols), tiebreak, direction
         )
     raise ValueError(f"unknown strategy {strategy!r}")
 
@@ -253,46 +246,3 @@ def _asof_via_join(
     )
     proj = [F.col(c) for c in left.columns] + [F.col(f"__best.{c}").alias(c) for c in right_cols]
     return out.select(*proj)
-
-
-def _asof_via_pandas(
-    left, right, keys, left_ts, right_ts, right_cols, tiebreak=None, direction="backward"
-):
-    import pandas as pd
-
-    out_fields = list(left.schema.fields) + [
-        f for f in right.schema.fields if f.name in right_cols and f.name not in left.columns
-    ]
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(out_fields)
-    extra = [f.name for f in out_fields[len(left.schema.fields):]]
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            for c in extra:
-                out[c] = None
-            return out
-        # backward: merge_asof picks the LAST right row among equal
-        # right_ts in sort order -> [ts, tiebreak] ascending breaks
-        # ties by the LARGEST tiebreak; forward picks the FIRST ->
-        # the same sort breaks ties by the SMALLEST tiebreak. Both
-        # match the join/window strategies' contracts (without a
-        # tiebreak, equal-ts winners follow input order).
-        sort_keys = [right_ts, tiebreak] if tiebreak else [right_ts]
-        keep = [right_ts, *[c for c in extra if c != right_ts]]
-        r_sorted = r_pdf.sort_values(sort_keys, kind="mergesort")[keep]
-        merged = pd.merge_asof(
-            l_sorted, r_sorted, left_on=left_ts, right_on=right_ts, direction=direction
-        )
-        return merged[[f.name for f in out_fields]]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
-    )

@@ -34,13 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _state_cols(values: Sequence[str]) -> list[str]:
-    cols = ["n_rows"]
-    for v in values:
-        cols += [f"{v}_n", f"{v}_sum", f"{v}_min", f"{v}_max"]
-    return cols
-
-
 def aggregate_state(
     df: DataFrame, keys: Sequence[str], values: Sequence[str]
 ) -> DataFrame:

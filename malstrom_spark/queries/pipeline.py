@@ -416,16 +416,6 @@ def similarity_ann_lsh_arrow(spark, sf_dir):
 
 
 # ------------------------------------------------- multimodal plumbing
-def multimodal_image_meta(spark, sf_dir):
-    """Multimodal column plumbing (functions/multimodal.py): documents'
-    text bytes stand in for image payloads; metadata extraction runs
-    through the real mapInPandas/Arrow path (decode kernel is the
-    documented stub). Driver-verified via `multimodal_pipeline`."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    with_payload = multimodal.attach_binary_column(docs, "text").drop("text")
-    return multimodal.extract_image_meta(with_payload).orderBy("doc_id")
-
-
 MULTIMODAL_ORACLE = """
 WITH d AS (
   SELECT doc_id, octet_length(encode(text)) AS len
@@ -935,29 +925,6 @@ def dedup_groups_probe(spark, sf_dir):
     )
     edges = dedup.ngram_jaccard(all_pairs, docs, "doc_id").filter(F.col("jaccard") >= 0.5)
     return dedup.dedup_groups(edges, ids, "doc_id")
-
-
-def multimodal_frame_sample(spark, sf_dir):
-    """Video frame-sampling plumbing (functions/multimodal.py
-    frame_sample): the 1->N mapInPandas explode shape a real ffmpeg
-    sampler produces, on a bounded probe set; decode kernel is the
-    documented stub."""
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50).select("doc_id", "text")
-    with_payload = multimodal.attach_binary_column(docs, "text").drop("text")
-    return (
-        multimodal.frame_sample(with_payload, every_n=16)
-        .select("doc_id", "frame_idx", F.length("frame").alias("frame_bytes"))
-        .orderBy("doc_id", "frame_idx")
-    )
-
-
-def multimodal_audio_features(spark, sf_dir):
-    """Audio feature-extraction plumbing (functions/multimodal.py
-    audio_features): schema/batch contract through mapInPandas with
-    the deterministic stub kernel."""
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50).select("doc_id", "text")
-    with_payload = multimodal.attach_binary_column(docs, "text").drop("text")
-    return multimodal.audio_features(with_payload).orderBy("doc_id")
 
 
 # ------------------------------------------------- PII scrub
@@ -3167,10 +3134,11 @@ def audio_fingerprint_pairs(spark, sf_dir):
     # count, both self-join sides), and this row's fingerprints are
     # an expensive synthesized lineage (WAV gen + STFT) that Spark
     # would otherwise recompute per consumer — the r11 +49% bench
-    # move, attributed by interleaved A/B (tools/probe_r12_audio.py:
-    # lazy 2.65 s, collapse-off 1.78 s, checkpointed 1.18 s at
-    # sf0.1). Production fingerprint TABLES (parquet-backed) don't
-    # need this; it belongs to the lineage, not the operator.
+    # move, attributed by interleaved A/B (BASELINE.md, Round-12
+    # "audio_fingerprint_pairs 2.44 -> 3.63 s": lazy 2.65 s,
+    # collapse-off 1.78 s, checkpointed 1.18 s at sf0.1). Production
+    # fingerprint TABLES (parquet-backed) don't need this; it belongs
+    # to the lineage, not the operator.
     fps = mm.audio_fingerprints(clips, "payload").localCheckpoint(eager=True)
     return mm.audio_match_pairs(fps, "doc_id", min_matches=8)
 

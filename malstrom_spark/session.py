@@ -72,8 +72,9 @@ def build_session(
         # sort-merge remains the fallback whenever the conditions
         # fail. (Guide §3.1/§9 baseline.)
         # Round 13 (VERDICT r12 #7): the adversarial case, measured at
-        # sf1 (tools/probe_r13_shj_skew.py): when the STREAM side of a join is
-        # skewed enough for AQE's skew split, the SMJ->SHJ rewrite
+        # sf1 (OPTIMIZATION_r13.md, "SHJ skew story at sf1"): when the
+        # STREAM side of a join is skewed enough for AQE's skew
+        # split, the SMJ->SHJ rewrite
         # still fires (its size gate checks the BUILD side only) and
         # every stream split re-builds the per-partition hash map —
         # 12.9 s (SMJ control) vs 34.0 s at default split granularity,

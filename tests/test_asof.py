@@ -70,28 +70,6 @@ def test_asof_window_mixed_ts_types(spark):
     assert got == {1: 101, 2: 100}
 
 
-def test_asof_pandas_strategy(sides):
-    left, right = sides
-    out = as_of_join(left, right, "key", "lts", "rts", ["rid"], strategy="pandas")
-    got = {r.lid: r.rid for r in out.collect()}
-    assert got == GOLDEN
-
-
-def test_asof_pandas_tiebreak(spark):
-    """Equal right_ts ties must break by the largest tiebreak on the
-    pandas path too (regression: merge_asof used input order)."""
-    left = spark.createDataFrame([("a", 10, 1)], "key string, lts long, lid long")
-    # two right rows tie at rts=10; larger rid must win regardless of
-    # input order
-    right = spark.createDataFrame(
-        [("a", 10, 202), ("a", 10, 201)], "key string, rts long, rid long"
-    )
-    out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", strategy="pandas"
-    )
-    assert out.collect()[0].rid == 202
-
-
 def test_asof_default_strategy_plans(sides):
     """Default strategy must be the union+window shape (one shuffle,
     no row-expanding left join, no Python) unless the right side is
@@ -110,6 +88,12 @@ def test_asof_default_strategy_plans(sides):
     assert "FlatMapCoGroupsInPandas" not in plan_bcast
 
 
+def test_asof_unknown_strategy_rejected(sides):
+    left, right = sides
+    with pytest.raises(ValueError, match="unknown strategy"):
+        as_of_join(left, right, "key", "lts", "rts", ["rid"], strategy="pandas")
+
+
 # ------------------------------------------------- directions (r4)
 # forward golden for the shared fixture: smallest rts >= lts per key
 #   lid 1 (a,10): rts 10 -> 101 (inclusive); lid 2 (a,20): none
@@ -120,7 +104,7 @@ GOLDEN_FWD = {1: 101, 2: None, 3: 103, 4: None}
 GOLDEN_NEAR = {1: 101, 2: 102, 3: 103, 4: None}
 
 
-@pytest.mark.parametrize("strategy", ["join", "window", "pandas"])
+@pytest.mark.parametrize("strategy", ["join", "window"])
 def test_asof_forward_all_strategies(sides, strategy):
     left, right = sides
     out = as_of_join(
@@ -148,7 +132,7 @@ def test_asof_forward_tiebreak(spark):
     right = spark.createDataFrame(
         [("a", 12, 200), ("a", 12, 201)], "key string, rts long, rid long"
     )
-    for strategy in ("join", "window", "pandas"):
+    for strategy in ("join", "window"):
         out = as_of_join(
             left, right, "key", "lts", "rts", ["rid"], tiebreak="rid",
             strategy=strategy, direction="forward",

@@ -195,6 +195,59 @@ def test_scale_inputs_read_in_one_place():
         assert found == [home], f"{needle} read outside {home}: {found}"
 
 
+def test_every_package_module_is_imported():
+    """Every module under malstrom_spark/ (other than package
+    `__init__`s) is imported by some other file of the package, the
+    tests, the examples, perfbench/, bench.py or __spark_entry__.py: a
+    module nothing imports is dead code. (Source lint over import
+    statements, relative imports resolved against their package.)"""
+    import ast
+    import pathlib
+
+    import malstrom_spark
+
+    pkg = pathlib.Path(malstrom_spark.__file__).parent
+    root = pkg.parent
+    sources = [
+        *pkg.rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "examples").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+
+    def dotted(p):
+        parts = p.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    imported = {}  # module name -> files importing it
+    for p in sources:
+        here = dotted(p)
+        package = here if p.name == "__init__.py" else here.rpartition(".")[0]
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module
+                if node.level:
+                    base = package.rsplit(".", node.level - 1)[0]
+                    mod = f"{base}.{mod}" if mod else base
+                # `from pkg import name` may name a submodule
+                names = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            for n in names:
+                imported.setdefault(n, set()).add(p)
+
+    orphans = sorted(
+        str(p.relative_to(root))
+        for p in pkg.rglob("*.py")
+        if p.name != "__init__.py" and not imported.get(dotted(p), set()) - {p}
+    )
+    assert orphans == [], f"modules nothing imports: {orphans}"
+
+
 def test_no_rdd_access_in_package():
     """No `.rdd` DataFrame property anywhere in malstrom_spark/: it
     converts the whole plan to an RDD on the driver (the round-3
