@@ -74,13 +74,12 @@ HEADLINE = [
     "dedup_simhash_scale",
     "similarity_topk_cosine",
     "embedding_near_dup_cosine",
-    # round-3 addition: Arrow bucketing twin (bit-identical to the
-    # gate's similarity_ann_lsh, numpy-matmul corpus bucketing).
-    # dedup_clusters_scale is deliberately NOT here: at sf0.1 its cost
+    # round-3 addition: LSH ANN with multi-probe (numpy-matmul
+    # bucketing). dedup_clusters_scale is deliberately NOT here: at sf0.1 its cost
     # is all fixed-size CC driver actions (6.5 s for 5k docs vs 11.7 s
     # for 500k at sf10, BASELINE.md) — the sf10 probe table is its
     # evidence; timing it at toy scale would only add noise.
-    "similarity_ann_lsh_arrow",
+    "similarity_ann_lsh",
     # Arrow/BLAS brute-force scorer twin: the scale path for the
     # dominant sf1 cost (HOF cosine 3.3 s vs 0.4 s, BASELINE.md)
     "similarity_topk_cosine_arrow",
@@ -125,11 +124,8 @@ HEADLINE = [
     "doc_text_chunks",
     "doc_unicode_normalize",
     # round-8 batch 1: repeated-span removal transform, full-PSL
-    # eTLD+1 and the trained char-bigram language ID. Round 11: the
-    # headline times the ARROW production path (pinned bit-identical,
-    # same oracle, ~5x faster) — doc_lang_id_trained's portable fold
-    # stays the gate/oracle row but its 5.9 s was fit+literal-map
-    # cost users never pay (VERDICT r10 "headline honesty")
+    # eTLD+1 and the trained char-bigram language ID (Arrow scorer;
+    # its literal-map Column fold was ~4x slower at sf0.1 and is gone)
     "doc_repeated_span_removal",
     "doc_url_psl",
     "doc_lang_id_arrow",
@@ -206,15 +202,12 @@ HEADLINE = [
     # the margin core is ANN-agnostic), positional multi-phrase
     # search (one term-broadcast join, any phrase length), and fuzzy
     # benchmark decontamination (MinHash bands vs the eval set)
-    # bitext rows: the headline times the ARROW production twins —
-    # pinned BIT-IDENTICAL (sequential-fold numpy kernel, same oracle,
-    # 6x/2.5x faster); the Column forms stay the gate rows
-    "embedding_bitext_arrow",
-    # the corpus-scale twin: cell-keyed shuffle joins, no broadcast of
+    # (sequential-fold numpy kernel over a broadcast side A)
+    "embedding_bitext_mining",
+    # the corpus-scale form: cell-keyed shuffle joins, no broadcast of
     # either side (the shape that survives two billion-sentence sides).
-    # The HOF form, not the Arrow pair-scorer: per-pair vector
-    # transfer makes the Arrow twin LOSE at sf10 (227 vs 179 s) —
-    # measured crossover, see BASELINE.md round-11
+    # An Arrow pair-scorer for it lost at sf10 (227 vs 179 s, per-pair
+    # vector transfer; BASELINE.md round-11) and is deleted
     "embedding_bitext_ivf",
     "doc_phrase_search",
     "doc_decontaminate_fuzzy",
@@ -309,7 +302,6 @@ DUCKDB_COMPARE_EXTRA = [
     "dedup_simhash",
     "dedup_clusters",
     "training_data_pipeline",
-    "similarity_ann_lsh",
     # round-7: incremental (daily-batch vs history store) dedup
     "dedup_incremental",
     # round-7: exact-substring (token-window) repetition stats

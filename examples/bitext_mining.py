@@ -1,15 +1,14 @@
 """Margin-based bitext mining end to end (functions/bitext.py —
 Artetxe & Schwenk 2019, the CCMatrix/NLLB alignment stage): split the
 embeddings table into two "languages", mine mutual-best pairs by
-ratio margin, and show the three kNN producers the SAME margin core
+ratio margin, and show the two kNN producers the SAME margin core
 accepts:
 
-1. the exact kernel (one side broadcast — validation / small sides),
-2. its bit-identical Arrow twin (the fast path while compute
-   dominates transfer),
-3. the IVF form (cell-keyed shuffle joins, neither side broadcast —
-   the corpus-scale shape; see BASELINE.md round-11 for the measured
-   Arrow-vs-JVM crossover).
+1. the exact kernel (one side broadcast, scored by a sequential-fold
+   numpy kernel — validation / small sides),
+2. the IVF form (cell-keyed shuffle joins, neither side broadcast —
+   the corpus-scale shape). With every cell probed it mines exactly
+   the exact kernel's pairs.
 
 No reference analog (the reference is a dataflow kernel; alignment is
 LLM-pipeline surface like the ANN family it builds on).
@@ -19,7 +18,6 @@ from pyspark.sql import functions as F
 
 from malstrom_spark.functions.bitext import (
     mine_bitext_exact,
-    mine_bitext_exact_arrow,
     mine_bitext_ivf,
 )
 from malstrom_spark.queries import table
@@ -31,19 +29,20 @@ def main(spark, sf_dir="/root/testdata/sf0.001"):
     side_b = emb.filter(F.col("vec_id") % 2 == 1)
 
     exact = mine_bitext_exact(side_a, side_b, k=4, threshold=1.0)
-    arrow = mine_bitext_exact_arrow(side_a, side_b, k=4, threshold=1.0)
 
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
     )
     ivf = mine_bitext_ivf(side_a, side_b, cents, k=4, n_probe=3, threshold=1.0)
+    ivf_all = mine_bitext_ivf(side_a, side_b, cents, k=4, n_probe=8, threshold=1.0)
 
     e = {tuple(r) for r in exact.collect()}
-    a = {tuple(r) for r in arrow.collect()}
     i = {tuple(r) for r in ivf.collect()}
-    assert a == e, "Arrow twin must match the exact kernel bitwise"
+    assert {tuple(r) for r in ivf_all.collect()} == e, (
+        "IVF probing every cell must mine the exact kernel's pairs"
+    )
     assert len(e) > 0 and len(i) > 0
-    print(f"exact/arrow pairs: {len(e)}  ivf pairs: {len(i)}")
+    print(f"exact pairs: {len(e)}  ivf pairs: {len(i)}")
     for r in sorted(e)[:5]:
         print(r)
     return {"exact_pairs": len(e), "ivf_pairs": len(i)}

@@ -21,9 +21,11 @@ published form. Spark-first decomposition:
   At 100 TB the edges come from the ANN family
   (`similarity.ivf_topk_partitioned` — partition-pruned IVF serving);
   for verification and small sides `mine_bitext_exact` produces them
-  with the broadcast brute-force `cosine_topk` kernel.
+  with a brute-force numpy kernel (`bitext_edges_pandas`) over a
+  broadcast side A.
 - Engine portability (hash-exact oracle): cosines are deterministic
-  sequential-fold doubles (similarity.dot), quantized to integer
+  sequential-fold doubles (the `similarity.dot` order in both the
+  Column and the numpy kernels), quantized to integer
   micro-sims (FLOOR(sim * 1e6), the BM25/PMI discipline) BEFORE any
   aggregation. The margin denominator is then an exact BIGINT sum of
   k micro-sims per side and the margin itself ONE division of exact
@@ -38,8 +40,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .similarity import dot, norm
 
 #: micro-sim quantization: FLOOR(cos * SIM_SCALE) as BIGINT
 SIM_SCALE = 1_000_000
@@ -160,41 +160,15 @@ def mine_bitext_exact(
 ) -> DataFrame:
     """Exact-kNN bitext mining — the validation kernel (swap in ANN
     edges via `mine_bitext_from_knn` when both sides are
-    corpus-sized).
-
-    The pair matrix is scored ONCE and BOTH directional top-k ranks
-    ride on it as stacked windows — running `cosine_topk` twice would
-    evaluate every pair's cosine fold twice. Norms are projected once
-    per VECTOR before the join (cosine = dot / (norm_x * norm_y), the
-    same IEEE ops in a cheaper place — bit-identical sims, 3x fewer
-    folds per pair). The <= 2k(|A|+|B|)-row ranked edge set is
-    eagerly localCheckpoint'ed so the three downstream consumers
-    (both sums + candidates) do not re-run the quadratic scoring —
-    the dedup-family eager-construction contract."""
-    _guard_exact_side_a(side_a, max_side_a_rows)
-    a = side_a.select(
-        F.col(id_col).alias("x_id"), F.col(vec_col).alias("x_vec")
-    ).withColumn("__xn", norm(F.col("x_vec")))
-    b = side_b.select(
-        F.col(id_col).alias("y_id"), F.col(vec_col).alias("y_vec")
-    ).withColumn("__yn", norm(F.col("y_vec")))
-    pairs = b.crossJoin(F.broadcast(a)).select(
-        "x_id", "y_id",
-        F.try_divide(
-            dot(F.col("x_vec"), F.col("y_vec")), F.col("__xn") * F.col("__yn")
-        ).alias("sim"),
+    corpus-sized). The pair matrix is scored once by the
+    sequential-fold numpy kernel in `bitext_edges_pandas`, so every
+    sim is bit-identical to the `similarity.dot` fold order. A Column
+    (zip_with/aggregate) form of the same kernel made the gate row
+    take 3.25 s vs 1.67 s at sf0.01 and 25.65 s vs 1.62 s at sf0.1;
+    it is deleted."""
+    fwd, bwd = bitext_edges_pandas(
+        side_a, side_b, k, id_col, vec_col, max_side_a_rows=max_side_a_rows
     )
-    pairs = pairs.filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-    wx = Window.partitionBy("x_id").orderBy(F.desc("sim"), F.asc("y_id"))
-    wy = Window.partitionBy("y_id").orderBy(F.desc("sim"), F.asc("x_id"))
-    ranked = (
-        pairs.withColumn("__rx", F.row_number().over(wx))
-        .withColumn("__ry", F.row_number().over(wy))
-        .where((F.col("__rx") <= k) | (F.col("__ry") <= k))
-        .localCheckpoint(eager=True)
-    )
-    fwd = ranked.where(F.col("__rx") <= k).select("x_id", "y_id", "sim")
-    bwd = ranked.where(F.col("__ry") <= k).select("x_id", "y_id", "sim")
     return mine_bitext_from_knn(fwd, bwd, threshold=threshold, mutual=mutual)
 
 
@@ -288,22 +262,24 @@ def bitext_edges_pandas(
     max_side_a_rows: int = MAX_EXACT_SIDE_A_ROWS,
 ) -> tuple[DataFrame, DataFrame]:
     """(fwd, bwd) directed kNN edge sets for bitext mining, scored by
-    an Arrow/numpy kernel that is BIT-IDENTICAL to the HOF-fold
-    kernel — not merely rank-identical like `cosine_topk_pandas`:
-    products are elementwise IEEE doubles and the reduction is
-    ``np.add.accumulate`` (defined sequential left-to-right, exactly
-    the `similarity.dot` fold order), so every sim — and hence every
-    floor-quantized micro-sim downstream — matches the Column form
-    bitwise (pytest-pinned). BLAS matmul would be ~2x faster again
-    but sums pairwise, breaking the oracle contract; this kernel is
-    the honest fastest path that keeps hash-exactness.
+    an Arrow/numpy kernel whose sims are BIT-IDENTICAL to the
+    `similarity.dot` fold — not merely rank-identical like
+    `cosine_topk_pandas`: products are elementwise IEEE doubles and
+    the reduction is a strict left-to-right axpy fold, so every sim —
+    and hence every floor-quantized micro-sim downstream — is
+    reproducible (the row's DuckDB oracle pins it). BLAS matmul would
+    be ~2x faster again but sums pairwise, breaking the oracle
+    contract. NULL vectors are dropped (their cosine is undefined),
+    as are non-finite sims (zero-norm sides).
 
     One pass over B's partitions scores BOTH directions: each
     partition holds complete rows of the pair matrix, so per-y top-k
     (bwd) is exact locally, and per-x candidates reduce to k per
     partition before one global window merge (the cosine_topk_pandas
     merge shape). Side A is collected and broadcast (the exact-kernel
-    contract; corpus-x-corpus sides belong on `mine_bitext_ivf`)."""
+    contract; corpus-x-corpus sides belong on `mine_bitext_ivf`); the
+    broadcast is destroyed once the edge set is checkpointed, so no
+    call pins |A| x dim doubles for the rest of the session."""
     import numpy as np
 
     def _fold_norms(m: "np.ndarray") -> "np.ndarray":
@@ -325,6 +301,8 @@ def bitext_edges_pandas(
         return acc
 
     _guard_exact_side_a(side_a, max_side_a_rows)
+    side_a = side_a.where(F.col(vec_col).isNotNull())
+    side_b = side_b.where(F.col(vec_col).isNotNull())
     a_rows = side_a.select(id_col, vec_col).collect()
     spark = side_b.sparkSession
     if not a_rows:
@@ -405,6 +383,7 @@ def bitext_edges_pandas(
 
     edges = side_b.select(id_col, vec_col).mapInPandas(score, out_schema)
     edges = edges.localCheckpoint(eager=True)
+    bx.destroy()
     wx = Window.partitionBy("x_id").orderBy(F.desc("sim"), F.asc("y_id"))
     fwd = (
         edges.where(F.col("direction") == "f")
@@ -414,128 +393,3 @@ def bitext_edges_pandas(
     )
     bwd = edges.where(F.col("direction") == "b").select("x_id", "y_id", "sim")
     return fwd, bwd
-
-
-def mine_bitext_exact_arrow(
-    side_a: DataFrame,
-    side_b: DataFrame,
-    k: int = 4,
-    threshold: float = 1.0,
-    mutual: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_side_a_rows: int = MAX_EXACT_SIDE_A_ROWS,
-) -> DataFrame:
-    """`mine_bitext_exact` with the bit-identical Arrow kernel
-    (`bitext_edges_pandas`) — same output, bitwise (pytest-pinned;
-    the production path when the pair matrix is the bottleneck)."""
-    fwd, bwd = bitext_edges_pandas(
-        side_a, side_b, k, id_col, vec_col, max_side_a_rows=max_side_a_rows
-    )
-    return mine_bitext_from_knn(fwd, bwd, threshold=threshold, mutual=mutual)
-
-
-def _score_pairs_arrow(
-    joined: DataFrame,
-    x_id: str,
-    y_id: str,
-    x_vec: str,
-    y_vec: str,
-    xn: str,
-    yn: str,
-) -> DataFrame:
-    """(x_id, y_id, sim) from a pre-joined candidate-pair frame, the
-    dot computed by the exact left-fold axpy kernel (bit-identical to
-    `similarity.dot`, see bitext_edges_pandas). Non-finite sims
-    (zero-norm sides — try_divide-NULL in the Column form) are
-    dropped, matching the Column pipelines' NULL-drop."""
-    import numpy as np
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[x_vec]])
-            y = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[y_vec]])
-            acc = x[:, 0] * y[:, 0]
-            for t in range(1, x.shape[1]):
-                acc = acc + x[:, t] * y[:, t]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = acc / (pdf[xn].to_numpy() * pdf[yn].to_numpy())
-            keep = np.isfinite(sim)
-            out = pd.DataFrame(
-                {
-                    "x_id": pdf[x_id].to_numpy()[keep],
-                    "y_id": pdf[y_id].to_numpy()[keep],
-                    "sim": sim[keep],
-                }
-            )
-            if len(out):
-                yield out
-
-    return joined.mapInPandas(score, "x_id long, y_id long, sim double")
-
-
-def mine_bitext_ivf_arrow(
-    side_a: DataFrame,
-    side_b: DataFrame,
-    centroids: DataFrame,
-    k: int = 4,
-    n_probe: int = 3,
-    threshold: float = 1.0,
-    mutual: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """`mine_bitext_ivf` with the candidate pairs scored by the
-    bit-identical Arrow fold kernel instead of the interpreted HOF
-    fold — same cells, same candidates, same sims bitwise
-    (pytest-pinned). CROSSOVER CAVEAT (measured, BASELINE.md r11):
-    this twin ships BOTH vectors of every candidate pair through
-    Arrow, so it wins only while compute dominates transfer (2.6x at
-    sf0.1) and LOSES at sf10 (227 vs 179 s) — prefer the Column form
-    for corpus-scale runs; the exact kernel's Arrow twin has no such
-    cliff (its transfer is one broadcast + one corpus scan)."""
-    from .similarity import ivf_assign
-
-    a = side_a.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
-    b = side_b.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
-    # assign each side ONCE with ranks kept: the single-cell (corpus)
-    # role is just the rank-1 slice of the n_probe assignment — four
-    # separate ivf_assign calls would run the centroid-distance scan
-    # twice per billion-row side
-    ap = ivf_assign(
-        a, centroids, n_probe, "a_vec", "a_id", rank_col="__rk"
-    ).withColumn("__an", norm(F.col("a_vec")))
-    bp = ivf_assign(
-        b, centroids, n_probe, "b_vec", "b_id", rank_col="__rk"
-    ).withColumn("__bn", norm(F.col("b_vec")))
-    ac = ap.where(F.col("__rk") == 1).drop("__rk")
-    bc = bp.where(F.col("__rk") == 1).drop("__rk")
-    ap = ap.drop("__rk")
-    bp = bp.drop("__rk")
-    fwd_pairs = ap.join(bc, "cell").select(
-        F.col("a_id").alias("x_id"), F.col("b_id").alias("y_id"),
-        F.col("a_vec").alias("xv"), F.col("b_vec").alias("yv"),
-        "__an", "__bn",
-    )
-    bwd_pairs = ac.join(bp, "cell").select(
-        F.col("a_id").alias("x_id"), F.col("b_id").alias("y_id"),
-        F.col("a_vec").alias("xv"), F.col("b_vec").alias("yv"),
-        "__an", "__bn",
-    )
-    fs = _score_pairs_arrow(fwd_pairs, "x_id", "y_id", "xv", "yv", "__an", "__bn")
-    bs = _score_pairs_arrow(bwd_pairs, "x_id", "y_id", "xv", "yv", "__an", "__bn")
-    wx = Window.partitionBy("x_id").orderBy(F.desc("sim"), F.asc("y_id"))
-    wy = Window.partitionBy("y_id").orderBy(F.desc("sim"), F.asc("x_id"))
-    fwd = (
-        fs.withColumn("__r", F.row_number().over(wx))
-        .where(F.col("__r") <= k).select("x_id", "y_id", "sim")
-    )
-    bwd = (
-        bs.withColumn("__r", F.row_number().over(wy))
-        .where(F.col("__r") <= k).select("x_id", "y_id", "sim")
-    )
-    return mine_bitext_from_knn(fwd, bwd, threshold=threshold, mutual=mutual)

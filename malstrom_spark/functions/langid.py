@@ -4,9 +4,9 @@
 pipelines run a TRAINED model (CCNet/cld3/fastText-style). This is
 the Spark-first equivalent at 100 TB: a multinomial naive-Bayes
 model over character n-grams whose log-probabilities are quantized
-to INTEGERS at fit time, so inference is pure int64 Column
-arithmetic — bit-identical on every engine (no float drift at all,
-a strictly stronger portability trick than the quality classifier's
+to INTEGERS at fit time, so inference is pure int64 arithmetic —
+bit-identical on every engine (no float drift at all, a strictly
+stronger portability trick than the quality classifier's
 ordered-double sums) and therefore oracle-exact.
 
 Fit (distributed): one groupBy over (lang, gram) counts of the
@@ -21,12 +21,14 @@ bpe_fit / k-means), then pure-Python weight derivation:
 with V = |global gram vocabulary| (add-one smoothing). The floats
 exist only on the driver during fit; the MODEL is integers.
 
-Apply (zero shuffle, zero Python): per language,
-score = prior + fold over the doc's gram positions of
-coalesce(literal_map[gram], oov); argmax with a fixed language-order
-tie-break. Gram extraction is transform(sequence) + substring —
-scoring by POSITION makes per-gram counting unnecessary (sum of
-weights over positions == sum of count*weight over distinct grams).
+Apply (zero shuffle): `lang_id_arrow`, one Arrow-batched pandas_udf.
+Per language, score = prior + sum over the doc's gram positions of
+weight[gram] (oov for unseen grams), looked up in a broadcast
+gram -> weight-vector dict; argmax with a fixed language-order
+tie-break. Scoring by POSITION makes per-gram counting unnecessary
+(sum of weights over positions == sum of count*weight over distinct
+grams). The DuckDB rendering of the same model (`lang_id_sql_values`,
+`lang_id_sql_consts`) is the oracle.
 
 The reference has no language ID (SURVEY §2.8 — absent scalar
 library); north-star capability like functions/text.py.
@@ -132,126 +134,22 @@ def fit_ngram_lang_id(
     return fit_from_counts({(r.lang, r.gram): r.cnt for r in rows}, n)
 
 
-def _lit_map(d: dict[str, int]) -> Column:
-    # ONE foldable literal via from_json (round-12 session 4: even
-    # F.lit(list) pays one py4j round-trip per element — see
-    # functions/litutil.py; Catalyst constant-folds this to the same
-    # map literal).
-    from .litutil import json_lit_map
-
-    return json_lit_map({k: int(v) for k, v in d.items()}, "bigint")
-
-
-def lang_scores(col: Column, model: LangIdModel) -> dict[str, Column]:
-    """Per-language int64 score Columns (prior + per-position gram
-    weights, OOV for unseen grams). Pure HOF fold — zero shuffle."""
-    s = _normalize(col)
-    grams = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.length(s) - model.n + 1, F.lit(0))
-        ),
-        lambda i: F.substring(s, i, model.n),
-    )
-    out: dict[str, Column] = {}
-    for lang in model.langs:
-        m = _lit_map(model.weights[lang])
-        oov = F.lit(model.oov[lang]).cast("long")
-        out[lang] = F.aggregate(
-            grams,
-            F.lit(model.prior[lang]).cast("long"),
-            lambda acc, g: acc + F.coalesce(m[g].cast("long"), oov),
-        )
-    return out
-
-
-def lang_id(col: Column, model: LangIdModel) -> Column:
-    """argmax language; ties break to the earlier entry in
-    model.langs; NULL/empty text -> 'und'.
-
-    PERF (round 10): the naive form — per-language lang_scores folds,
-    greatest(), then a when-chain re-referencing each fold — repeats
-    the whole scoring expression per reference (the functions/dedup
-    hot-path rule) AND scans one literal map per language per gram
-    position. This form evaluates scoring ONCE per row: a single
-    gram -> weight-VECTOR map (one O(vocab) lookup per position
-    instead of n_langs of them), one vector fold from the prior
-    vector, and a single-pass argmax via array_max over
-    (score, -index) structs (struct ordering ties to the earlier
-    language), with the winning index dereferenced through ONE
-    element_at — the fold appears exactly once in the plan. Measured
-    on the gate row (6 langs x 128 grams, sf0.1 docs, noop-write,
-    warm): 43.8 s -> 6.3 s. Values bit-identical (same weights, same
-    oov fallback, same tie-break), so the SQL oracle is untouched;
-    lang_id_arrow below is the hash-lookup production twin."""
-    s = _normalize(col)
-    langs = model.langs
-    grams = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.length(s) - model.n + 1, F.lit(0))
-        ),
-        lambda i: F.substring(s, i, model.n),
-    )
-    vocab = sorted(set().union(*(model.weights[l] for l in langs)))
-    # ONE foldable literal for the whole gram -> weight-vector map
-    # (round-12 session 4: the nested-list F.lit form still paid one
-    # py4j round-trip per ELEMENT — vocab x langs of them, ~6.5 s of
-    # driver time; see functions/litutil.py)
-    from .litutil import json_lit_map
-
-    wmap = json_lit_map(
-        {
-            g: [int(model.weights[l].get(g, model.oov[l])) for l in langs]
-            for g in vocab
-        },
-        "array<bigint>",
-    )
-    import numpy as np
-
-    oov_vec = F.lit(
-        np.asarray([int(model.oov[l]) for l in langs], dtype=np.int64)
-    ).cast("array<bigint>")
-    prior_vec = F.lit(
-        np.asarray([int(model.prior[l]) for l in langs], dtype=np.int64)
-    ).cast("array<bigint>")
-    totals = F.aggregate(
-        grams,
-        prior_vec,
-        lambda acc, g: F.zip_with(
-            acc, F.coalesce(wmap[g], oov_vec), lambda a, b: a + b
-        ),
-    )
-    idx = F.sequence(F.lit(0), F.lit(len(langs) - 1))
-    best = F.array_max(
-        F.zip_with(
-            totals, idx,
-            lambda sc, i: F.struct(sc.alias("s"), (-i).alias("ni")),
-        )
-    )
-    guess = F.element_at(
-        F.lit(list(langs)).cast("array<string>"),
-        (F.lit(1) - best["ni"]).cast("int"),
-    )
-    return F.when(
-        col.isNull() | (F.length(_normalize(col)) < model.n), F.lit("und")
-    ).otherwise(guess)
-
-
 def lang_id_arrow(
     df: DataFrame,
     text_col: str,
     model: LangIdModel,
     out_col: str = "lang_pred",
 ) -> DataFrame:
-    """The production-scale twin of `lang_id`: one Arrow-batched
-    pandas_udf scoring against a BROADCAST {gram -> weight-vector}
-    dict — O(1) hash lookups per gram position, where the literal-map
-    Column form pays a linear scan of the vocabulary per position
-    (the Bloom/IVF literal-vs-broadcast dispatch argument applied to
-    language ID; the Column form remains the zero-Python oracle
-    path). Integer arithmetic end to end, so predictions are
-    BIT-IDENTICAL to lang_id — pinned by test on the gate model.
-    Same normalization (lower, whitespace runs to one space, trim)
-    and the same earlier-language tie-break."""
+    """Predicted language per row: one Arrow-batched pandas_udf
+    scoring against a BROADCAST {gram -> weight-vector} dict — O(1)
+    hash lookups per gram position. (A Column form that folded over a
+    literal gram map paid a linear scan of the vocabulary per
+    position: 6.42 s vs 1.72 s on the sf0.1 gate row; it is deleted.)
+    Integer arithmetic end to end, so predictions equal the DuckDB
+    rendering of the model (`lang_id_sql_values`) bit for bit.
+    Normalization is lower, whitespace runs to one space, trim;
+    ties break to the earlier entry in model.langs; NULL text and
+    text shorter than n after normalization -> 'und'."""
     import re as _re
 
     import numpy as np
@@ -289,7 +187,7 @@ def lang_id_arrow(
             tot = priorv.copy()
             for i in range(len(s) - nn + 1):
                 tot += Wd.get(s[i:i + nn], oovv)
-            # first-max = earlier-language tie-break, same as lang_id
+            # first-max = earlier-language tie-break
             out.append(ls[int(np.argmax(tot))])
         return pd.Series(out)
 

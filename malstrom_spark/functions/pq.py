@@ -256,8 +256,8 @@ def pq_encode(
         # per codebook entry), so CollapseProject keeps them — the
         # quantize transform and slicing run once per row, not m*k
         # times, and the plan tree stays O(m*k*dsub) instead of
-        # O(m*k*dim) (see with_lsh_bucket's docstring; inlining
-        # measured 30 s -> sub-second on the gate row)
+        # O(m*k*dim) (inlining measured 30 s -> sub-second on the
+        # gate row)
         qdf = df.withColumn("__pq_v", v)
         subs = []
         for s in range(m):

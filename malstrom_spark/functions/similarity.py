@@ -17,6 +17,12 @@ Two tiers:
 Embedding near-dup (cosine >= threshold pairs) composes `lsh_buckets`
 with a verified pair join, mirroring the MinHash pipeline shape in
 `functions.dedup`.
+
+The oracle-portable forms (`lsh_topk_portable`,
+`embedding_near_dups_portable`, the IVF `_portable` family) quantize
+vectors to integers and make every bucketing decision in exact int64
+arithmetic, so a DuckDB oracle reproduces them row for row. Their LSH
+buckets come from `with_lsh_bucket`, one numpy matmul per Arrow batch.
 """
 
 from __future__ import annotations
@@ -215,9 +221,9 @@ def with_probe_buckets(
     multi-probe LSH, VLDB'07). Probing lifts recall without shrinking
     n_planes (which would grow every bucket for everyone).
 
-    Per-plane dots are materialized as one array column (referenced by
-    both the base bucket and the flip ordering — the HOF re-eval rule,
-    see _bucket_from_quantized)."""
+    Per-plane dots are materialized as one array column, referenced by
+    both the base bucket and the flip ordering, so each dot fold runs
+    once per row."""
     planes = _hyperplanes(dim, n_planes)
     dots = F.array(
         *[dot(F.col(vec_col), F.lit(list(p)).cast("array<double>")) for p in planes]
@@ -360,91 +366,46 @@ def _rademacher_signs(dim: int, n_planes: int) -> list[list[int]]:
     return planes
 
 
-def _bucket_from_quantized(q: Column, dim: int, n_planes: int) -> Column:
-    """Per-plane zip_with/aggregate fold over the (materialized)
-    quantized vector. Measured alternatives at dim=64 × 8 planes:
-    a flat ±element_at sum (512-term scalar tree) is ~60% SLOWER —
-    the giant expression overruns codegen method budgets and falls
-    back to interpreted without the fold's cache locality. The HOF
-    fold is the keeper; with_lsh_bucket ensures quantization runs
-    once per row, not once per plane."""
-    planes = _rademacher_signs(dim, n_planes)
-    sig = F.lit(0).cast("long")
-    for p, signs in enumerate(planes):
-        lit_signs = F.lit(list(signs)).cast("array<bigint>")
-        d = F.aggregate(
-            F.zip_with(q, lit_signs, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 def with_lsh_bucket(
     df: DataFrame, vec_col: str, dim: int, n_planes: int, out_col: str = "bucket"
 ) -> DataFrame:
-    """df + engine-exact bucket column. The quantized vector is
-    materialized as its own column: it is referenced by all n_planes
-    dot products, so CollapseProject keeps it materialized (multi-
-    referenced non-cheap expression) and quantization runs once per
-    row instead of once per plane."""
-    qdf = df.withColumn("__q", quantize_vec(F.col(vec_col)))
-    return qdf.withColumn(
-        out_col, _bucket_from_quantized(F.col("__q"), dim, n_planes)
-    ).drop("__q")
-
-
-def with_lsh_bucket_pandas(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int, out_col: str = "bucket"
-) -> DataFrame:
-    """Arrow/numpy twin of `with_lsh_bucket`: per Arrow batch, one
-    (batch × dim) @ (dim × n_planes) int64 matmul against the literal
+    """df + engine-exact bucket column: per Arrow batch, one
+    (batch x dim) @ (dim x n_planes) int64 matmul against the literal
     Rademacher plane matrix decides every sign bit at once.
-    BIT-IDENTICAL to the HOF fold by construction: quantization uses
-    HALF_UP rounding (numpy's .round() is banker's — round-half-even —
-    which differs from Spark's F.round on exact .5 ties, so the twin
-    rounds via floor(|x|*s + 0.5)*sign), and all products stay in
-    exact int64. Equality is pinned by tests/test_similarity.py on the
-    testdata embeddings.
-
-    When to use which (BASELINE.md round-3 measurement, dim=64 ×
-    8 planes, min-of-2): the matmul wins at EVERY measured size — 0.44
-    vs 1.87 s at 2k vectors, 0.43 vs 1.63 s at 40k (the per-plane
-    zip_with/aggregate fold runs interpreted, and the Arrow copy is
-    cheaper than interpretation even at small n) — so this is the
-    recommended bucketing for batch corpus runs; the HOF fold remains
-    the zero-Python-dependency default inside the oracle-gated
-    pipelines. Both are zero-shuffle maps."""
-    import pandas as pd
-
+    Quantization is HALF_UP like Spark's F.round and DuckDB's round
+    (numpy's .round() is round-half-even, so this rounds via
+    floor(|x|*s + 0.5)*sign), and every product stays in exact int64,
+    so the oracle's integer dots reproduce each bucket bit for bit.
+    A NULL vector, a NULL element or a length other than `dim` gives
+    bucket 0 (no plane's dot is defined). A per-plane zip_with/
+    aggregate Column fold computed the same buckets 3.7-4.3x slower
+    at 2k-40k vectors (BASELINE.md round 3) and is deleted. Zero
+    shuffle: one mapInPandas."""
     signs = np.array(_rademacher_signs(dim, n_planes), dtype=np.int64).T  # dim×planes
     masks = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-    other = [c for c in df.columns]
+    if out_col in df.columns:
+        raise ValueError(f"{out_col} already present")
 
     def bucketize(batches):
         for pdf in batches:
-            if pdf.empty:
-                out = pdf.copy()
-                out[out_col] = pd.Series([], dtype="int64")
-                yield out
-                continue
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+            v = np.zeros((len(pdf), dim), dtype=np.float64)
+            ok = np.zeros(len(pdf), dtype=bool)
+            for i, x in enumerate(pdf[vec_col]):
+                if x is not None and len(x) == dim:
+                    v[i] = np.asarray(x, dtype=np.float64)
+                    ok[i] = True
+            ok &= ~np.isnan(v).any(axis=1)
             # HALF_UP quantization matching F.round(x * 2^20)
-            scaled = v * QUANT_SCALE
+            scaled = np.where(ok[:, None], v, 0.0) * QUANT_SCALE
             q = (np.floor(np.abs(scaled) + 0.5) * np.sign(scaled)).astype(np.int64)
-            dots = q @ signs
-            bucket = ((dots > 0) * masks).sum(axis=1, dtype=np.int64)
+            bucket = ((q @ signs > 0) * masks).sum(axis=1, dtype=np.int64)
             out = pdf.copy()
-            out[out_col] = bucket
+            out[out_col] = np.where(ok, bucket, 0)
             yield out
 
     schema_str = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", `{out_col}` bigint"
-    assert out_col not in other, f"{out_col} already present"
     return df.mapInPandas(bucketize, schema=schema_str)
 
 
@@ -518,20 +479,15 @@ def lsh_topk_portable(
     c_id: str = "c_id",
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
-    bucketing: str = "hof",
     n_probe: int = 1,
 ) -> DataFrame:
     """`lsh_topk` with engine-exact bucketing: same single bucket
     equi-join scale shape (no cross product), emitted sim is float
-    cosine of the original vectors. ``bucketing="arrow"`` buckets the
-    corpus side with the numpy matmul twin (bit-identical, ~4× faster
-    per the with_lsh_bucket_pandas measurement) — same oracle.
-    ``n_probe`` probes extra buckets behind each query's closest
+    cosine of the original vectors. ``n_probe`` probes extra buckets behind each query's closest
     hyperplanes via integer-exact flip ordering
     (`with_probe_buckets_portable`) — oracle-reproducible recall lift,
     cost on the query side only."""
-    bucket_fn = with_lsh_bucket_pandas if bucketing == "arrow" else with_lsh_bucket
-    cb = bucket_fn(corpus, c_vec, dim, n_planes)
+    cb = with_lsh_bucket(corpus, c_vec, dim, n_planes)
     if n_probe <= 1:
         qb = with_lsh_bucket(queries, q_vec, dim, n_planes)
     else:

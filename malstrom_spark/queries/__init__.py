@@ -69,7 +69,7 @@ _PRIORITY = [
     # gate-hashed there and individually oracle-checked via
     # full_registry)
     "doc_quality_classifier",  # r7: trained linear quality filter
-    "doc_lang_id_trained",     # r8: trained char-bigram language ID
+    "doc_lang_id_arrow",       # r8: trained char-bigram language ID
                                # (integer-exact NB; supersedes the
                                # doc_lang_guess heuristic in the gate)
     "doc_bpe_tokens",          # r8: distributed BPE fit + Arrow encode,

@@ -247,7 +247,7 @@ _SPECS_P: list[tuple[str, list[str], list[str]]] = [
     # hitters, skew-safe cap) and the four new r8 operators (BPE,
     # span removal, PSL eTLD+1, trained lang-ID) get priority slots.
     # Capability stays gate-visible: lang ID through the TRAINED
-    # doc_lang_id_trained row (doc_lang_guess is its heuristic
+    # doc_lang_id_arrow row (doc_lang_guess is its heuristic
     # predecessor), fingerprinting through the dedup family, n-gram
     # stats through corpus_heavy_tokens, text stats through the
     # quality classifier + doc_quality_scores (already here), PII and

@@ -395,26 +395,6 @@ def similarity_ann_lsh(spark, sf_dir):
     )
 
 
-@register("similarity_ann_lsh_arrow", oracle=ann_lsh_oracle(n_probe=2))
-def similarity_ann_lsh_arrow(spark, sf_dir):
-    """`similarity_ann_lsh` with the Arrow/numpy bucketing twin on the
-    corpus side (functions/similarity.py with_lsh_bucket_pandas) —
-    bit-identical buckets (HALF_UP quantization + integer matmul), so
-    it shares the HOF variant's oracle; measured ~4× faster bucketing
-    at every size (BASELINE.md round 3). Outside the 50-row gate
-    (redundant with similarity_ann_lsh there); timed by bench.py."""
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    return similarity.lsh_topk_portable(
-        queries, corpus, dim=64, k=5, n_planes=8, bucketing="arrow", n_probe=2
-    ).select(
-        "q_id", "c_id", F.round("sim", 6).alias("sim"), F.col("rank").cast("long").alias("rank")
-    )
-
-
 # ------------------------------------------------- multimodal plumbing
 MULTIMODAL_ORACLE = """
 WITH d AS (
@@ -2427,9 +2407,7 @@ def _langid_case_sql(col_expr: str, which: int) -> str:
     return f"CASE {col_expr} % 16{arms} END"
 
 
-# shared by the portable-fold gate row AND the Arrow production row:
-# lang_id_arrow is pinned bit-identical to lang_id (test_langid), so
-# one oracle serves both
+# the DuckDB replay of the integer model: gram-count join + argmax
 _LANGID_ORACLE = rf"""
     WITH w(lang, gram, wt) AS (
       VALUES {_langid.lang_id_sql_values(_LANGID_MODEL)}
@@ -2477,58 +2455,20 @@ _LANGID_ORACLE = rf"""
     """
 
 
-@register("doc_lang_id_trained", oracle=_LANGID_ORACLE)
-def doc_lang_id_trained(spark, sf_dir):
-    """TRAINED char-bigram language identifier (functions/langid.py,
-    round 8) replacing guesswork with a model: naive-Bayes weights
-    quantized to integers at fit time, so scoring is pure int64
-    Column folds — bit-identical across engines. The query runs the
-    DISTRIBUTED fit (one (lang, gram) count shuffle + per-language
-    top-grams cap + bounded collect) over the seeded multilingual
-    corpus and classifies 16 deterministic two-sentence test docs
-    cycled over the documents table; the oracle re-derives the SAME
-    integer model via the pure-Python twin and replays the scoring as
-    a gram-count join + argmax — hash-exact. Agreement vs the
-    stopword heuristic is booked in BASELINE.md round-8."""
-    rows = [
-        (lang, s)
-        for lang, sents in sorted(_LANGID_SENTENCES.items())
-        for s in sents
-    ]
-    seed = spark.createDataFrame(rows, "lang string, text string")
-    model = _langid.fit_ngram_lang_id(
-        seed, "text", "lang", n=2, top_grams=_LANGID_TOP_GRAMS
-    )
-    d = F.col("doc_id")
-    lang_true = F.lit(None).cast("string")
-    txt = F.lit(None).cast("string")
-    for k, (lang, t) in enumerate(_LANGID_CASES):
-        lang_true = F.when(d % 16 == k, F.lit(lang)).otherwise(lang_true)
-        txt = F.when(d % 16 == k, F.lit(t)).otherwise(txt)
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", lang_true.alias("lang_true"), txt.alias("txt")
-    )
-    pred = _langid.lang_id(F.col("txt"), model)
-    return docs.select(
-        "doc_id",
-        "lang_true",
-        pred.alias("lang_pred"),
-        (F.col("lang_true") == pred).alias("correct"),
-    )
-
-
 @register("doc_lang_id_arrow", oracle=_LANGID_ORACLE)
 def doc_lang_id_arrow(spark, sf_dir):
-    """The PRODUCTION language-ID path (functions/langid.py
-    lang_id_arrow, round 11 headline-honesty promotion): one
-    Arrow-batched pandas_udf scoring against a broadcast
-    gram -> weight-vector dict — O(1) hash lookups per position where
-    the portable Column fold in doc_lang_id_trained pays a linear
-    literal-map scan. Integer arithmetic end to end, pinned
-    bit-identical to lang_id by test, so it runs the SAME oracle and
-    is hash-exact, at the cost users actually pay (~5x faster than
-    the portable fold at sf0.1). Same distributed fit as the gate
-    row."""
+    """TRAINED char-bigram language identifier (functions/langid.py,
+    round 8): naive-Bayes weights quantized to integers at fit time,
+    scored by one Arrow-batched pandas_udf against a broadcast
+    gram -> weight-vector dict, so predictions are bit-identical
+    across engines. The query runs the DISTRIBUTED fit (one
+    (lang, gram) count shuffle + per-language top-grams cap + bounded
+    collect) over the seeded multilingual corpus and classifies 16
+    deterministic two-sentence test docs cycled over the documents
+    table; the oracle re-derives the SAME integer model via the
+    pure-Python twin and replays the scoring as a gram-count join +
+    argmax — hash-exact. Agreement vs the stopword heuristic is
+    booked in BASELINE.md round-8."""
     rows = [
         (lang, s)
         for lang, sents in sorted(_LANGID_SENTENCES.items())
@@ -5005,42 +4945,4 @@ def doc_meta_robots_filter(spark, sf_dir):
         F.col("r.noindex").alias("noindex"),
         F.col("r.nofollow").alias("nofollow"),
         (~F.col("r.noindex")).alias("indexable"),
-    )
-
-
-@register("embedding_bitext_arrow", oracle=_bitext_oracle())
-def embedding_bitext_arrow(spark, sf_dir):
-    """Arrow production twin of embedding_bitext_mining (functions/
-    bitext.py mine_bitext_exact_arrow): the pair matrix scored by a
-    numpy kernel whose reduction is np.add.accumulate — SEQUENTIAL
-    left-to-right, exactly the HOF fold's order — so sims are
-    bit-identical (not merely rank-identical) and the row runs the
-    SAME oracle as the Column form. One pass over B scores both
-    directions (per-y top-k exact locally; per-x candidates merge in
-    one window)."""
-    from ..functions.bitext import mine_bitext_exact_arrow
-
-    emb = table(spark, sf_dir, "embeddings")
-    side_a = emb.filter(F.col("vec_id") % 2 == 0)
-    side_b = emb.filter(F.col("vec_id") % 2 == 1)
-    return mine_bitext_exact_arrow(side_a, side_b, k=_BITEXT_K, threshold=1.0)
-
-
-@register("embedding_bitext_ivf_arrow", oracle=_bitext_ivf_oracle())
-def embedding_bitext_ivf_arrow(spark, sf_dir):
-    """Arrow production twin of embedding_bitext_ivf (functions/
-    bitext.py mine_bitext_ivf_arrow): same integer-exact cells, same
-    candidates, the pair cosines computed by the sequential-fold
-    numpy kernel — bit-identical sims, SAME oracle. Joins stay
-    cell-keyed shuffles; neither side is broadcast."""
-    from ..functions.bitext import mine_bitext_ivf_arrow
-
-    emb = table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    side_a = emb.filter(F.col("vec_id") % 2 == 0)
-    side_b = emb.filter(F.col("vec_id") % 2 == 1)
-    return mine_bitext_ivf_arrow(
-        side_a, side_b, centroids, k=_BITEXT_K, n_probe=3, threshold=1.0
     )

@@ -1,8 +1,11 @@
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, ahead of any installed copy
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from malstrom_spark.session import build_session  # noqa: E402
 

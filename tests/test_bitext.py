@@ -132,24 +132,65 @@ def test_ivf_bitext_partial_probe_subset_recall(spark):
             assert sims[(r.x_id, r.y_id)] == r.sim_q
 
 
-def test_arrow_twins_bitwise_identical(spark):
-    # The Arrow kernels must reproduce the Column kernels BITWISE
-    # (sequential-fold numpy; pairwise/BLAS summation would break the
-    # oracle contract) — sets compared on every column incl. the
-    # float margin.
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize(
+    "row", ["embedding_bitext_mining", "embedding_bitext_ivf"]
+)
+def test_bitext_rows_equal_duckdb_oracle(spark, sf_dir, row):
+    # The numpy kernel (exact row) and the Column fold (IVF row) must
+    # reproduce the oracle's sims BITWISE (sequential fold; pairwise
+    # or BLAS summation would break the contract) — every column
+    # compared exactly, the float margin included.
+    import duckdb
 
     from malstrom_spark.queries import full_registry
 
-    fr = full_registry()
-    sf = "/root/testdata/sf0.001"
-    for col_row, arrow_row in (
-        ("embedding_bitext_mining", "embedding_bitext_arrow"),
-        ("embedding_bitext_ivf", "embedding_bitext_ivf_arrow"),
-    ):
-        a = {tuple(r) for r in fr[col_row].fn(spark, sf).collect()}
-        b = {tuple(r) for r in fr[arrow_row].fn(spark, sf).collect()}
-        assert a == b and len(a) > 0, (col_row, len(a), len(b))
+    spec = full_registry()[row]
+    got = {
+        tuple(sorted(r.asDict().items())) for r in spec.fn(spark, sf_dir).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    cur = con.execute(spec.oracle)
+    names = [d[0] for d in cur.description]
+    want = {tuple(sorted(zip(names, r))) for r in cur.fetchall()}
+    assert got == want and len(got) > 0, (row, len(got), len(want))
+
+
+def test_exact_kernel_releases_side_a_broadcast(spark, monkeypatch):
+    # side A is broadcast once per call; once the edge set is
+    # checkpointed nothing re-reads it, so the call must not leave
+    # |A| x dim doubles pinned on the driver and executors
+    from pyspark import SparkContext
+
+    made = []
+    real = SparkContext.broadcast
+
+    def spy(self, value):
+        bc = real(self, value)
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    a = _emb(spark, [(0, [1, 0, 0]), (2, [0, 1, 0])])
+    b = _emb(spark, [(1, [1, 0, 0]), (3, [0.6, 0.8, 0])])
+    got = mine_bitext_exact(a, b, k=2, threshold=0.0).collect()
+    assert len(got) > 0 and len(made) == 1
+    assert not made[0]._jbroadcast.isValid()
+
+
+def test_null_vectors_dropped(spark):
+    # a NULL embedding has no cosine: it is dropped on either side
+    # (as zero-norm vectors are), never a kernel crash
+    a = spark.createDataFrame(
+        [(0, None), (2, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    b = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (3, None)], "vec_id long, embedding array<float>"
+    )
+    got = mine_bitext_exact(a, b, k=1, threshold=0.0).collect()
+    assert {(r.x_id, r.y_id) for r in got} == {(2, 1)}
 
 
 def test_margin_uses_actual_neighbor_counts(spark):
@@ -181,19 +222,16 @@ def test_margin_uses_actual_neighbor_counts(spark):
 
 
 def test_exact_kernel_refuses_oversized_side_a(spark):
-    # the exact kernels collect/broadcast side A by contract; above
-    # the cap they must fail loudly with a pointer to mine_bitext_ivf
+    # the exact kernel collects/broadcasts side A by contract; above
+    # the cap it must fail loudly with a pointer to mine_bitext_ivf
     # instead of OOMing the driver
-    from malstrom_spark.functions.bitext import mine_bitext_exact_arrow
-
     a = _emb(spark, [(i, [1, 0, 0]) for i in range(5)])
     b = _emb(spark, [(9, [1, 0, 0])])
-    for kernel in (mine_bitext_exact, mine_bitext_exact_arrow):
-        with pytest.raises(ValueError, match="mine_bitext_ivf"):
-            kernel(a, b, k=2, max_side_a_rows=3)
-        # at/below the cap the same input mines fine
-        got = kernel(a, b, k=2, threshold=0.0, max_side_a_rows=5).collect()
-        assert len(got) > 0
+    with pytest.raises(ValueError, match="mine_bitext_ivf"):
+        mine_bitext_exact(a, b, k=2, max_side_a_rows=3)
+    # at/below the cap the same input mines fine
+    got = mine_bitext_exact(a, b, k=2, threshold=0.0, max_side_a_rows=5).collect()
+    assert len(got) > 0
 
 
 def test_from_knn_drops_null_and_nan_sims(spark):

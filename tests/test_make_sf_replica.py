@@ -60,3 +60,21 @@ def test_replica_join_grows_linearly(sf_dir, replica):
     src = joined(sf_dir)
     assert src > 0
     assert joined(replica) == N * src
+
+
+def test_replica_foreign_keys_follow_their_parent(sf_dir, replica):
+    # a foreign key is offset by its parent key's span, so replica r's
+    # events attach to replica r's customers (user_id = o_custkey) and
+    # lineitems to replica r's orders, parts and suppliers
+    joins = {
+        "events_orders": "'{d}/events.parquet' e JOIN '{d}/orders.parquet' o "
+                         "ON e.user_id = o.o_custkey",
+        "lineitem_parents": "'{d}/lineitem.parquet' l "
+                            "JOIN '{d}/orders.parquet' o ON l.l_orderkey = o.o_orderkey "
+                            "JOIN '{d}/part.parquet' p ON l.l_partkey = p.p_partkey "
+                            "JOIN '{d}/supplier.parquet' s ON l.l_suppkey = s.s_suppkey",
+    }
+    for name, sql in joins.items():
+        src = _one(f"SELECT count(*) FROM {sql.format(d=sf_dir)}")
+        assert src > 0, name
+        assert _one(f"SELECT count(*) FROM {sql.format(d=replica)}") == N * src, name

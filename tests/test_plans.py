@@ -248,6 +248,52 @@ def test_every_package_module_is_imported():
     assert orphans == [], f"modules nothing imports: {orphans}"
 
 
+def test_suite_imports_its_own_checkout():
+    """The package under test is the one in this test file's checkout,
+    not whatever copy sits at some fixed path or in site-packages."""
+    import pathlib
+
+    import malstrom_spark
+
+    here = pathlib.Path(__file__).resolve().parent.parent
+    assert pathlib.Path(malstrom_spark.__file__).resolve().is_relative_to(here)
+
+
+def test_benchmark_rows_resolve_in_registry():
+    """Every row name bench.py and perfbench/ time is a registry entry
+    (a deleted or renamed row fails here, not mid-benchmark), and
+    bench.py times each row once."""
+    import ast
+    import pathlib
+
+    import bench
+    from malstrom_spark.queries import full_registry
+
+    reg = full_registry()
+    headline, extra = bench.HEADLINE, bench.DUCKDB_COMPARE_EXTRA
+    assert len(set(headline)) == len(headline)
+    assert len(set(extra)) == len(extra)
+    assert not set(headline) & set(extra)
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    perf = []
+    for script, names in (
+        ("run.py", {"LLM_PIPELINE", "GOLDEN_ROWS"}),
+        ("selftest.py", {"QUERIES", "ARROW_ROW"}),
+    ):
+        tree = ast.parse((root / "perfbench" / script).read_text())
+        found = {
+            t.id: ast.literal_eval(node.value)
+            for node in tree.body if isinstance(node, ast.Assign)
+            for t in node.targets if isinstance(t, ast.Name) and t.id in names
+        }
+        assert set(found) == names, (script, found)
+        for v in found.values():
+            perf += [v] if isinstance(v, str) else list(v)
+    missing = [n for n in [*headline, *extra, *perf] if n not in reg]
+    assert missing == [], f"timed rows not in full_registry(): {missing}"
+
+
 def test_no_rdd_access_in_package():
     """No `.rdd` DataFrame property anywhere in malstrom_spark/: it
     converts the whole plan to an RDD on the driver (the round-3

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 INCARNATION = """
 import sys
-sys.path.insert(0, "/root/repo")
 from malstrom_spark.session import build_session
 from malstrom_spark.streaming.stateful import running_totals_stream
 
@@ -67,6 +66,7 @@ spark.stop()
 def _run_incarnation(master, nshuf, stage, in_dir, out_dir, ckpt):
     proc = subprocess.run(
         [sys.executable, "-c", INCARNATION, master, str(nshuf), stage, in_dir, out_dir, ckpt],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,  # `-c` imports from cwd
         capture_output=True,
         text=True,
         timeout=600,

@@ -154,18 +154,37 @@ def test_cosine_topk_degenerate_inputs(spark, queries, corpus):
     assert similarity.cosine_topk_pandas(zq, both, k=3).count() == 0
 
 
-def test_lsh_bucket_pandas_matches_hof(spark, sf_dir):
-    """The Arrow/numpy bucketing twin must be BIT-identical to the
-    HOF fold on every testdata embedding (HALF_UP quantization +
-    integer matmul)."""
+@pytest.mark.parametrize("n_planes", [6, 8])
+def test_lsh_bucket_matches_portable_probe_bucket(spark, sf_dir, n_planes):
+    """The numpy-matmul `with_lsh_bucket` equals the n_probe=1 base
+    bucket of `with_probe_buckets_portable`, an independent Column
+    computation of the same integer dots (the one the ann_lsh oracle
+    replays), on every testdata embedding — and on the rows where no
+    dot is defined (NULL vector, NULL element, wrong length: bucket 0)
+    and on quantization ties at exactly .5 (HALF_UP, not half-even)."""
     from malstrom_spark.queries import table
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    hof = similarity.with_lsh_bucket(emb, "embedding", dim=64, n_planes=8)
-    arrow = similarity.with_lsh_bucket_pandas(emb, "embedding", dim=64, n_planes=8)
-    a = {r.vec_id: r.bucket for r in hof.collect()}
-    b = {r.vec_id: r.bucket for r in arrow.collect()}
+    half = 0.5 / (1 << 20)
+    odd = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, [1.0] + [None] * 63),
+            (-3, [1.0, -1.0]),
+            (-4, [half * (1 if i % 3 else -3) for i in range(64)]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    both = emb.unionByName(odd)
+    plain = similarity.with_lsh_bucket(both, "embedding", dim=64, n_planes=n_planes)
+    probed1 = similarity.with_probe_buckets_portable(
+        both, "embedding", dim=64, n_planes=n_planes, n_probe=1
+    )
+    a = {r.vec_id: r.bucket for r in plain.collect()}
+    b = {r.vec_id: r.bucket for r in probed1.collect()}
     assert a == b
+    assert a[-1] == a[-2] == a[-3] == 0
+    assert len(set(a.values())) > n_planes
 
 
 def test_lsh_multi_probe_lifts_recall(spark, sf_dir):
@@ -204,7 +223,8 @@ def test_lsh_multi_probe_lifts_recall(spark, sf_dir):
 def test_portable_multi_probe_lifts_recall(spark, sf_dir):
     """Integer-exact multi-probe (with_probe_buckets_portable): probed
     sets are supersets, recall monotone and strictly lifted on the
-    testdata; n_probe=1 degenerates to the plain portable bucketing."""
+    testdata (n_probe=1 equals the plain bucketing, pinned by
+    test_lsh_bucket_matches_portable_probe_bucket)."""
     from malstrom_spark.queries import table
 
     emb = table(spark, sf_dir, "embeddings")
@@ -228,16 +248,6 @@ def test_portable_multi_probe_lifts_recall(spark, sf_dir):
 
     r1, r4 = recall(1), recall(4)
     assert r4 > r1, f"portable multi-probe added nothing: {r1:.3f} -> {r4:.3f}"
-    # n_probe=1 path and plain bucketing agree exactly
-    plain = similarity.with_lsh_bucket(
-        emb.select("vec_id", "embedding"), "embedding", dim=64, n_planes=6
-    )
-    probed1 = similarity.with_probe_buckets_portable(
-        emb.select("vec_id", "embedding"), "embedding", dim=64, n_planes=6, n_probe=1
-    )
-    a = {r.vec_id: r.bucket for r in plain.collect()}
-    b = {r.vec_id: r.bucket for r in probed1.collect()}
-    assert a == b
 
 
 def test_ivf_multi_probe_recall_sweep(spark, sf_dir):

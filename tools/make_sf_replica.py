@@ -9,10 +9,16 @@ would inflate joins quadratically).
   orders                 : o_orderkey/o_custkey offset
   lineitem               : l_orderkey/l_partkey/l_suppkey offset
   events                 : event_id/user_id offset (ts kept: same time range,
-                           N× denser — how event streams actually grow)
+                           N× denser — how event streams actually grow;
+                           user_id is a customer key)
   documents              : doc_id offset, text copied (dup clusters
                            grow N×, the adversarial case for dedup)
   embeddings             : vec_id offset, vectors copied
+
+A foreign key is offset by the span of the key it references, not by its
+own column's: replica r's orders, lineitems and events then point at
+replica r's customers, orders, parts and suppliers, so every join grows
+exactly N-fold.
 
 Every table is written with ROW_GROUP_SIZE chosen for >=32 row groups
 (min 2,048 rows per group): DuckDB's default 122,880-row groups left
@@ -43,6 +49,14 @@ TABLES = {
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
 }
+# foreign key -> the (table, key) it references
+REFERENCES = {
+    "o_custkey": ("customer", "c_custkey"),
+    "user_id": ("customer", "c_custkey"),
+    "l_orderkey": ("orders", "o_orderkey"),
+    "l_partkey": ("part", "p_partkey"),
+    "l_suppkey": ("supplier", "s_suppkey"),
+}
 
 
 def main():
@@ -51,6 +65,17 @@ def main():
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
+
+    def span(t, k):
+        # one past the largest value of the key and of every foreign
+        # key that references it, so no replica's values overlap
+        cols = [(t, k)] + [(ft, fk) for ft, keys in TABLES.items()
+                           for fk in keys or [] if REFERENCES.get(fk) == (t, k)]
+        return 1 + max(
+            con.execute(f"SELECT max({c}) FROM '{src}/{tab}.parquet'").fetchone()[0]
+            for tab, c in cols
+        )
+
     for t, keys in TABLES.items():
         src_file = f"{src}/{t}.parquet"
         dst = f"{out}/{t}.parquet"
@@ -64,10 +89,7 @@ def main():
             continue
         rg = max(2048, (src_rows * n) // 32)
         cols = [r[0] for r in con.execute(f"DESCRIBE SELECT * FROM '{src_file}'").fetchall()]
-        offsets = {
-            k: con.execute(f"SELECT max({k}) + 1 FROM '{src_file}'").fetchone()[0]
-            for k in keys
-        }
+        offsets = {k: span(*REFERENCES.get(k, (t, k))) for k in keys}
         sel = ", ".join(
             f"{c} + rep * {offsets[c]} AS {c}" if c in offsets else c for c in cols
         )
