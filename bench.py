@@ -112,11 +112,12 @@ HEADLINE = [
     "doc_shuffle_shard",
     # round-7 batch 2: trained linear quality classifier (pure
     # codegen'd projection), Misra-Gries + exact-recount heavy
-    # hitters, and the Arrow/LUT product-quantization ADC engine
-    # (gate-verified bit-identical to the portable PQ row)
+    # hitters, and the product-quantization ADC gate row (Arrow
+    # encode + LUT scorer over pre-quantized vectors, exact below
+    # 2^53; its literal-expression twin row is deleted)
     "doc_quality_classifier",
     "corpus_heavy_tokens",
-    "similarity_ann_pq_arrow",
+    "similarity_ann_pq",
     # round-7 batch 3: URL analysis kit, context-window chunking
     # (both zero-shuffle projections) and unicode NFC hygiene (the
     # one Python hop in the text path — Arrow-batched)

@@ -153,7 +153,6 @@ def mine_bitext_exact(
     side_b: DataFrame,
     k: int = 4,
     threshold: float = 1.0,
-    mutual: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_side_a_rows: int = MAX_EXACT_SIDE_A_ROWS,
@@ -169,7 +168,7 @@ def mine_bitext_exact(
     fwd, bwd = bitext_edges_pandas(
         side_a, side_b, k, id_col, vec_col, max_side_a_rows=max_side_a_rows
     )
-    return mine_bitext_from_knn(fwd, bwd, threshold=threshold, mutual=mutual)
+    return mine_bitext_from_knn(fwd, bwd, threshold=threshold)
 
 
 def mine_bitext_ivf(
@@ -179,7 +178,6 @@ def mine_bitext_ivf(
     k: int = 4,
     n_probe: int = 3,
     threshold: float = 1.0,
-    mutual: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     super_centroids: DataFrame | None = None,
@@ -249,7 +247,7 @@ def mine_bitext_ivf(
         k, "q_id", "c_id", "q_vec", "c_vec", broadcast_queries=False,
         salt_n=salt_n,
     ).select(F.col("c_id").alias("x_id"), F.col("q_id").alias("y_id"), "sim")
-    return mine_bitext_from_knn(fwd, bwd, threshold=threshold, mutual=mutual)
+    return mine_bitext_from_knn(fwd, bwd, threshold=threshold)
 
 
 def bitext_edges_pandas(

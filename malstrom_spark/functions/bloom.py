@@ -101,8 +101,9 @@ def bloom_merge(*filters: DataFrame) -> DataFrame:
 
 # Above this many bits the densified filter stops being a sane plan
 # literal and probing dispatches to a broadcast-variable numpy array +
-# Arrow-batched pandas_udf instead — the same size-thresholded escape
-# hatch as IVF_LITERAL_MAX_NODES (similarity.py). The threshold is
+# Arrow-batched pandas_udf instead. Unlike the ANN kernels, whose
+# literal engines lost at every size and are deleted, the literal
+# probe wins below the crossover, so the gate stays. The threshold is
 # MEASURED, not guessed (BASELINE.md round-9): on a 6M-row prune the
 # literal probe costs 1.7-1.9 s at 2^14-2^16 bits but 3.3 s at 2^18
 # and 9.5 s at 2^20 (a large array literal is a heavy per-row plan

@@ -8,7 +8,7 @@ one-call forms replace it:
 
 - numeric arrays: ``F.lit(<1-D numpy array>)`` crosses py4j as ONE
   call (PySpark special-cases ``np.ndarray``);
-- maps and nested arrays: ``from_json`` over ONE string literal —
+- maps: ``from_json`` over ONE string literal (`json_lit_map`) —
   ``JsonToStructs`` of a foldable input is constant-folded by
   Catalyst, so the optimized plan holds the IDENTICAL map literal the
   ``map_from_arrays`` form produced (verified by comparing folded
@@ -26,18 +26,6 @@ import json
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def json_lit_array(vals: list, element_type: str) -> Column:
-    """A foldable ``array<{element_type}>`` literal (nested lists
-    allowed) in ONE py4j call. Values must be JSON-exact for the
-    target type (ints, or finite floats — json round-trips IEEE
-    doubles via repr)."""
-    try:
-        payload = json.dumps(vals)
-    except (TypeError, ValueError):
-        return F.lit(vals).cast(f"array<{element_type}>")
-    return F.from_json(F.lit(payload), f"array<{element_type}>")
 
 
 def json_lit_map(d: dict, value_type: str) -> Column:

@@ -808,7 +808,6 @@ def update_phash_index(
     phash_col: str = "phash",
     chunk_bits: int = 16,
     deleted_ids: DataFrame | None = None,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Delete-and-replace maintenance for the banded pHash index —
     the search.update_index discipline applied to images: every id
@@ -826,19 +825,18 @@ def update_phash_index(
     fresh IMAGES (id, phash), not pre-built band rows: a band
     relation would silently drop null-phash tombstones.
 
-    100 TB shape: with `broadcast_touched` (a daily re-crawl is small
-    next to the accumulated index) the anti-join is a broadcast hash
-    join — a map-side filter that preserves the persisted index's
-    chunk-bucketed layout with no exchange; fresh rows stay
-    unbucketed until the next persist_stage compaction, like any
-    LSM delta."""
+    100 TB shape: the touched-id set is broadcast (a daily re-crawl
+    is small next to the accumulated index), so the anti-join is a
+    broadcast hash join — a map-side filter that preserves the
+    persisted index's chunk-bucketed layout with no exchange; fresh
+    rows stay unbucketed until the next persist_stage compaction,
+    like any LSM delta."""
     touched = fresh_images.select(id_col).distinct()
     if deleted_ids is not None:
         touched = touched.unionByName(
             deleted_ids.select(id_col)
         ).distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(touched)
     fresh_rows = phash_band_index(
         fresh_images, id_col, phash_col, chunk_bits
     )

@@ -10,19 +10,24 @@ is 16 bytes — a 32x compression that turns a 100 TB vector corpus
 into ~3 TB of codes that fit the executors' page cache, while
 asymmetric-distance (ADC) scoring stays a table lookup per subspace.
 
-Three tiers, mirroring `functions.similarity`'s design:
+One engine per kernel: encode (`pq_encode`) and ADC (`pq_adc_topk`)
+are Arrow-batched pandas kernels against a BROADCAST codebook tensor
+— O(1) plan size, one vectorized matmul/gather per batch. Codebooks
+come in two kinds:
 
-- portable (integer-exact, oracle-checkable): codebooks are QUANTIZED
-  subvectors (round(x * 2^20) as int64), encode/ADC run in exact
-  integer arithmetic as native Column expressions — a DuckDB oracle
-  reproduces code assignments, ADC distances, and ranks bit-for-bit.
-- learned (production): per-subspace k-means codebooks fit
-  distributedly (one `applyInPandas` group per subspace over a seeded
-  Bernoulli sample), float64 encode/ADC.
-- arrow (production scale): encode and ADC as Arrow-batched pandas
-  UDFs against a BROADCAST codebook tensor — O(1) plan size, one
-  vectorized gather/matmul per batch; rank-identical to the literal
-  path on the same codebooks (pytest-pinned).
+- learned (production): per-subspace k-means fit distributedly
+  (`pq_fit_codebooks`, one `applyInPandas` group per subspace over a
+  seeded Bernoulli sample).
+- portable (`pq_head_codebooks`): QUANTIZED head-row subvectors
+  (round(x * 2^20) as int64). The gate row `similarity_ann_pq` feeds
+  them as floats, with pre-quantized vectors, to the same kernels.
+  Every input is then an integer and every float64 sum stays below
+  2^53, so codes, ADC distances and ranks are exact and a DuckDB
+  oracle reproduces them bit-for-bit.
+
+Literal-expression engines and an `integer=` int64 tier computed the
+same rows slower (the gate row took 1.31 s vs 0.73 s at sf0.01 and
+2.81 s vs 0.83 s at sf0.1; 4 vCPU, 2 Spark cores) and are deleted.
 
 Scale shape (100 TB): fitting reads a bounded sample; encoding is a
 pure per-row projection (zero shuffle — the codes column appends to
@@ -32,26 +37,20 @@ so the only shuffle is the final k*|Q|-row global top-k merge.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import quantize_vec
+from .similarity import _stack, _well_formed, content_keyed_broadcast, quantize_vec
 
-# Same plan-size ceiling as IVF: above this many literal nodes
-# (m * k * dsub), dispatch to the Arrow engine.
-PQ_LITERAL_MAX_NODES = 64 * 1024
 
 def _codebook_bc(spark, codebooks):
     """One broadcast per distinct codebook tensor per SparkContext —
     shares similarity.content_keyed_broadcast's lifetime discipline
     (content-keyed, FIFO-bounded, unpersist on eviction). Value:
     (tensor (m, k, dsub), ||c||^2 (m, k))."""
-    import numpy as np
-
-    from .similarity import content_keyed_broadcast
-
     C = np.asarray(codebooks, dtype=np.float64)
     return content_keyed_broadcast(
         spark, "pq-codebooks", C, lambda C: (C, (C * C).sum(axis=2))
@@ -146,8 +145,6 @@ def pq_fit_codebooks(
     )
 
     def lloyd(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         s = int(pdf["sub"].iloc[0])
         X = np.stack(pdf["sv"].to_numpy())  # (n, dsub) float64
         order = np.lexsort(
@@ -184,133 +181,39 @@ def pq_fit_codebooks(
 
 # ----------------------------------------------------------- encoding
 
-def _sq_l2_int(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 between two int arrays (long fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _codebook_lits(book, cast: str, to_num) -> tuple[Column, Column]:
-    """One subspace codebook as two literals: the k x dsub entry
-    matrix and the k-vector of ||c||^2 — ONE py4j call each via the
-    constant-folded from_json form (round-12 session 4: nested-list
-    F.lit still paid one round-trip per ELEMENT; see
-    functions/litutil.py), cast wide so int products can't overflow."""
-    from .litutil import json_lit_array
-
-    entries = [[to_num(x) for x in e] for e in book]
-    n2 = [sum(x * x for x in e) for e in entries]
-    cb2d = json_lit_array(entries, f"array<{cast}>")
-    c2s = json_lit_array(n2, cast)
-    return cb2d, c2s
-
-
 def pq_encode(
     df: DataFrame,
     vec_col: str,
     codebooks,
     dim: int,
     out_col: str = "codes",
-    use_arrow: bool | None = None,
-    integer: bool = False,
 ) -> DataFrame:
     """Append the PQ code (array<int>, length m): per subspace, the
     index of the nearest codebook entry (squared L2, first-min
-    tie-break). Two rank-identical engines (pytest-pinned):
-
-    - literal (m * k * dsub <= PQ_LITERAL_MAX_NODES): pure native
-      projection — -2<s,c> + ||c||^2 per entry over the sliced
-      subvector, argmin via array_position(array_min). Zero Python,
-      zero shuffle; fuses into the scan.
-    - arrow: pandas_udf against the broadcast codebook tensor; one
-      batched matmul per subspace. O(1) plan size.
-
-    ``integer=True`` switches the literal path to exact int64
-    arithmetic over `quantize_vec` vectors with INTEGER codebooks
-    (`pq_head_codebooks`) — the oracle-checkable portable tier. Null
-    vectors encode NULL on every path.
-    """
+    tie-break). A pandas_udf against the broadcast codebook tensor,
+    one batched matmul per subspace — a pure projection, zero
+    shuffle. NULL and malformed vectors (`similarity._well_formed`)
+    encode NULL; a NaN distance ranks last."""
     m, k, dsub = _check_geometry(dim, codebooks)
-    if integer and use_arrow:
-        # the arrow engine scores vec_col AS-IS; with integer=True the
-        # caller expects in-operator quantization, which it would
-        # silently skip — pre-quantize explicitly (the pq_arrow gate
-        # row's pattern) and pass integer=False instead
-        raise ValueError("integer=True requires the literal engine "
-                         "(pre-quantize the column for the arrow path)")
-    if use_arrow is None:
-        use_arrow = (not integer) and m * k * dsub > PQ_LITERAL_MAX_NODES
-
-    if not use_arrow:
-        if integer:
-            v = quantize_vec(F.col(vec_col))
-            cast, to_num = "long", int
-        else:
-            v = F.col(vec_col).cast("array<double>")
-            cast, to_num = "double", float
-        # materialize the (quantized) vector and each subvector slice
-        # as their own columns: each slice is referenced k times (once
-        # per codebook entry), so CollapseProject keeps them — the
-        # quantize transform and slicing run once per row, not m*k
-        # times, and the plan tree stays O(m*k*dsub) instead of
-        # O(m*k*dim) (inlining measured 30 s -> sub-second on the
-        # gate row)
-        qdf = df.withColumn("__pq_v", v)
-        subs = []
-        for s in range(m):
-            sc = f"__pq_s{s}"
-            qdf = qdf.withColumn(sc, F.slice(F.col("__pq_v"), s * dsub + 1, dsub))
-            subs.append(sc)
-        codes = []
-        for s in range(m):
-            sub = F.col(subs[s])
-            # whole codebook as ONE nested literal + one zip_with:
-            # d_j = -2<s, c_j> + ||c_j||^2 (||s||^2 constant-dropped).
-            # One py4j call per subspace instead of one per entry —
-            # query CONSTRUCTION time is real at m*k scale.
-            cb2d, c2s = _codebook_lits(codebooks[s], cast, to_num)
-            darr = F.zip_with(
-                cb2d,
-                c2s,
-                lambda c, n2: F.lit(to_num(-2))
-                * F.aggregate(
-                    F.zip_with(sub, c, lambda x, y: x * y),
-                    F.lit(to_num(0)).cast(cast),
-                    lambda acc, x: acc + x,
-                )
-                + n2,
-            )
-            codes.append((F.array_position(darr, F.array_min(darr)) - 1).cast("int"))
-        return qdf.withColumn(
-            out_col,
-            F.when(F.col(vec_col).isNotNull(), F.array(*codes)),
-        ).drop("__pq_v", *subs)
-
-    import numpy as np
-
     bc = _codebook_bc(df.sparkSession, codebooks)
 
     @F.pandas_udf("array<int>")
     def enc(v: pd.Series) -> pd.Series:
         C, n2 = bc.value  # (m, k, dsub), (m, k)
         res: list = [None] * len(v)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            X = np.stack([np.asarray(x, dtype=np.float64) for x in v[mask]])
+        rows, X = _stack(v)
+        if X is not None:
             Xs = X.reshape(len(X), m, dsub)
             codes = np.empty((len(X), m), dtype=np.int32)
             for s in range(m):
                 d = -2.0 * (Xs[:, s, :] @ C[s].T) + n2[s][None, :]
                 d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
                 codes[:, s] = np.argmin(d, axis=1)
-            for pos, row in zip(np.nonzero(mask)[0], codes):
+            for pos, row in zip(rows, codes):
                 res[pos] = [int(x) for x in row]
         return pd.Series(res)
 
-    return df.withColumn(out_col, enc(F.col(vec_col)))
+    return df.withColumn(out_col, enc(_well_formed(F.col(vec_col), dim)))
 
 
 # ------------------------------------------------------- ADC scoring
@@ -325,22 +228,17 @@ def pq_adc_topk(
     q_vec: str = "q_vec",
     c_id: str = "c_id",
     codes_col: str = "codes",
-    use_arrow: bool | None = None,
-    integer: bool = False,
 ) -> DataFrame:
     """Asymmetric-distance top-k: the query stays a full vector, the
     corpus is its codes; approx distance = sum_s ||q_s - cb[s][code_s]||^2.
     Output (q_id, c_id, d2, rank) with rank by (d2 asc, c_id asc).
 
-    - literal engine: broadcast the (small) query set against the
-      codes relation; per subspace the chosen centroid is
-      element_at(literal 2D array, code+1) and the distance a native
-      fold. `integer=True` = exact int64 tier (oracle row).
-    - arrow engine: the FAISS shape — per batch, one LUT gather.
-      All queries' LUTs (|Q| x m x k) are computed ONCE per batch
-      from the broadcast codebook; scoring is LUT[q, s, code] summed
-      over s, with a per-batch local top-k so only k rows per (query,
-      batch) reach the final global top-k window.
+    The FAISS shape: per batch, one LUT gather. All queries' LUTs
+    (|Q| x m x k) are computed ONCE per task from the broadcast
+    codebook; scoring is LUT[q, s, code] summed over s, with a
+    per-batch local top-k so only k rows per (query, batch) reach the
+    final global top-k window. NULL and malformed query vectors
+    (`similarity._well_formed`) are dropped.
 
     Scale: corpus-side work is map-only over the codes column; the
     single shuffle is the k*|Q|-row top-k merge. Queries must be
@@ -348,52 +246,14 @@ def pq_adc_topk(
     belong to the near-dup pipelines instead.
     """
     m, kk, dsub = _check_geometry(dim, codebooks)
-    if integer and use_arrow:
-        raise ValueError("integer=True requires the literal engine "
-                         "(pre-quantize the column for the arrow path)")
-    if use_arrow is None:
-        use_arrow = (not integer) and m * kk * dsub > PQ_LITERAL_MAX_NODES
     w = Window.partitionBy(q_id).orderBy(F.asc("d2"), F.asc(c_id))
-
-    if not use_arrow:
-        if integer:
-            qv = quantize_vec(F.col(q_vec))
-            cast, to_num = "long", int
-        else:
-            qv = F.col(q_vec).cast("array<double>")
-            cast, to_num = "double", float
-        q = queries.select(F.col(q_id), qv.alias("_qq"))
-        joined = codes_df.select(F.col(c_id), F.col(codes_col)).crossJoin(
-            F.broadcast(q)
-        )
-        total = F.lit(to_num(0)).cast(cast)
-        for s in range(m):
-            cb_s, _ = _codebook_lits(codebooks[s], cast, to_num)
-            chosen = F.element_at(cb_s, F.element_at(F.col(codes_col), s + 1) + 1)
-            sub_q = F.slice(F.col("_qq"), s * dsub + 1, dsub)
-            if integer:
-                total = total + _sq_l2_int(sub_q, chosen)
-            else:
-                total = total + F.aggregate(
-                    F.zip_with(sub_q, chosen, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-        scored = joined.select(q_id, c_id, total.alias("d2")).where(
-            F.col("d2").isNotNull()
-        )
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-
-    import numpy as np
-
     spark = queries.sparkSession
     bc = _codebook_bc(spark, codebooks)
-    # broadcast-small query set; NULL query vectors drop here, exactly
-    # as the literal engine's null d2 filter drops them (engine parity)
+    # broadcast-small query set; NULL and malformed vectors drop here
     qrows = [
-        r for r in queries.select(q_id, q_vec).collect() if r[1] is not None
+        r
+        for r in queries.select(q_id, _well_formed(F.col(q_vec), dim)).collect()
+        if r[1] is not None
     ]
     id_field = codes_df.schema[c_id].dataType.simpleString()
     qid_field = queries.schema[q_id].dataType.simpleString()
@@ -464,7 +324,6 @@ def ivf_pq_topk(
     c_vec: str = "c_vec",
     centroids=None,
     codebooks=None,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """FAISS-IVFADC composition: coarse IVF cells bound the candidate
     set, PQ-ADC scores candidates in the compressed domain, and an
@@ -479,18 +338,16 @@ def ivf_pq_topk(
     equi-join against the broadcast probed queries; re-rank joins
     only |Q| * refine candidate ids back to the corpus — broadcast-
     small by construction. Pass precomputed `centroids`/`codebooks`
-    for the two-job serving pattern (fit offline, serve repeatedly).
+    for the two-job serving pattern (fit offline — on a sample via the
+    fit functions' `sample_fraction` at corpus scale — and serve
+    repeatedly).
     """
     from .similarity import ivf_build_centroids, with_nearest_list
 
     if centroids is None:
-        centroids = ivf_build_centroids(
-            corpus, c_vec, n_lists=n_lists, sample_fraction=sample_fraction
-        )
+        centroids = ivf_build_centroids(corpus, c_vec, n_lists=n_lists)
     if codebooks is None:
-        codebooks = pq_fit_codebooks(
-            corpus, c_vec, dim, m=m, k=k_codes, sample_fraction=sample_fraction
-        )
+        codebooks = pq_fit_codebooks(corpus, c_vec, dim, m=m, k=k_codes)
 
     cb = with_nearest_list(corpus.select(c_id, c_vec), c_vec, centroids, "cell")
     cb = pq_encode(cb, c_vec, codebooks, dim).select(c_id, "cell", "codes")
@@ -530,8 +387,6 @@ def ivf_pq_topk_encoded(
     qb = with_probe_lists(queries.select(q_id, q_vec), q_vec, centroids, n_probe, "cell")
     cand = corpus_codes.join(F.broadcast(qb), "cell")
     m_, kk, dsub = _check_geometry(dim, codebooks)
-    import numpy as np
-
     bc = _codebook_bc(queries.sparkSession, codebooks)
 
     @F.pandas_udf("double")

@@ -122,7 +122,6 @@ def update_index(
     id_col: str,
     text_col: str = "text",
     deleted_ids: DataFrame | None = None,
-    broadcast_touched: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Delete-and-replace index maintenance for RE-CRAWLED docs —
     the update path `merge_index` cannot take (its batches must be
@@ -142,21 +141,19 @@ def update_index(
     postings: the touched set must be the re-crawled ID set,
     which a postings relation would silently drop empty docs from.
 
-    100 TB shape: with `broadcast_touched` (default — a daily recrawl
-    batch is small next to the accumulated index) the anti-joins are
-    broadcast hash joins, i.e. a map-side filter that preserves the
-    persisted postings' term-bucketed layout with NO exchange; the
-    union'd fresh rows are not term-bucketed until the next
+    100 TB shape: the touched-id set is broadcast (a daily recrawl
+    batch is small next to the accumulated index), so the anti-joins
+    are broadcast hash joins, i.e. a map-side filter that preserves
+    the persisted postings' term-bucketed layout with NO exchange;
+    the union'd fresh rows are not term-bucketed until the next
     compaction (persist_stage rewrite), exactly like any LSM-shaped
-    delta. Pass broadcast_touched=False for bulk re-crawls where the
-    touched set rivals the index."""
+    delta."""
     touched = fresh_docs.select(id_col).distinct()
     if deleted_ids is not None:
         touched = touched.unionByName(
             deleted_ids.select(id_col)
         ).distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(touched)
     fresh_p = inverted_index(fresh_docs, id_col, text_col)
     fresh_s = doc_stats_from_postings(fresh_p, id_col)
     # USING joins move the key column to the front — restore the

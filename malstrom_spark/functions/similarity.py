@@ -1,33 +1,39 @@
 """Similarity search over embedding columns (array<float>).
 
 North-star operator set (absent from the reference, SURVEY §2.8).
-Two tiers:
+Three search shapes:
 
 - `cosine_topk`: exact brute force — broadcast the (small) query set
   against the corpus, dot/norm as native array expressions
   (zip_with + aggregate, JVM-side), per-query top-k via window.
   Scale: O(|Q| * |corpus|) but embarrassingly parallel; right answer
-  for |Q| small (retrieval eval, dedup probes).
-- `lsh_topk`: approximate — random-hyperplane LSH buckets the corpus
-  once (signature = sign-bit string over H fixed hyperplanes), probes
-  only matching buckets. Scale path for corpus x corpus joins: the
-  bucket join replaces the full cross product; recall tunable via
-  bands/hyperplanes.
+  for |Q| small (retrieval eval, dedup probes). `cosine_topk_pandas`
+  scores the same pairs with one numpy matmul per Arrow batch.
+- `lsh_topk_portable`: approximate — random-hyperplane LSH buckets
+  the corpus once (signature = sign bits over fixed Rademacher
+  hyperplanes) and probes only matching buckets. Scale path for
+  corpus x corpus joins: the bucket join replaces the full cross
+  product; recall tunable via hyperplanes and multi-probe.
+- IVF (`ivf_topk`, the `_portable` and hierarchical families):
+  vectors fall into k-means Voronoi cells and queries probe their
+  nearest cells.
 
-Embedding near-dup (cosine >= threshold pairs) composes `lsh_buckets`
-with a verified pair join, mirroring the MinHash pipeline shape in
+Embedding near-dup (cosine >= threshold pairs,
+`embedding_near_dups_portable`) composes `with_lsh_bucket` with a
+verified pair join, mirroring the MinHash pipeline shape in
 `functions.dedup`.
 
-The oracle-portable forms (`lsh_topk_portable`,
-`embedding_near_dups_portable`, the IVF `_portable` family) quantize
-vectors to integers and make every bucketing decision in exact int64
-arithmetic, so a DuckDB oracle reproduces them row for row. Their LSH
-buckets come from `with_lsh_bucket`, one numpy matmul per Arrow batch.
+LSH buckets are integer-exact: vectors are quantized to integers and
+every bucketing decision is made in int64 arithmetic, so a DuckDB
+oracle reproduces them row for row. Each nearest-centroid kernel
+(`with_nearest_list`, `with_probe_lists`, their hierarchical forms
+and SemDeDup's integer argmin) has one engine: an Arrow pandas_udf
+against a broadcast numpy matrix. Each treats a vector with a NULL
+element or the wrong length like a NULL vector (`_well_formed`).
 """
 
 from __future__ import annotations
 
-import math
 from typing import NamedTuple
 
 import numpy as np  # module-level: one-call ndarray literals (litutil)
@@ -94,43 +100,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
-    """Fixed pseudo-random unit hyperplanes (Box-Muller over an LCG) —
-    reproducible across sessions, no runtime RNG state."""
-    x = 0x2545F4914F6CDD1D
-    planes = []
-    for _ in range(n_planes):
-        vals = []
-        while len(vals) < dim:
-            x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            u1 = ((x >> 11) + 1) / (1 << 53)
-            x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            u2 = (x >> 11) / (1 << 53)
-            r = math.sqrt(-2.0 * math.log(u1))
-            vals.append(r * math.cos(2 * math.pi * u2))
-            if len(vals) < dim:
-                vals.append(r * math.sin(2 * math.pi * u2))
-        planes.append(vals[:dim])
-    return planes
-
-
-def lsh_bucket(vec: Column, dim: int, n_planes: int = 16) -> Column:
-    """Random-hyperplane signature: bigint whose bit i = sign(vec . h_i).
-    Evaluated as native expressions over a literal plane matrix."""
-    planes = _hyperplanes(dim, n_planes)
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        # one-call literal array (round-12: per-element F.lit cost one
-        # py4j round-trip each — plan construction, not execution)
-        lit_plane = F.lit(list(plane)).cast("array<double>")
-        d = dot(vec, lit_plane)
-        bit = F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig.bitwiseOR(bit)
-    return sig
 
 
 def cosine_topk_pandas(
@@ -203,134 +172,6 @@ def cosine_topk_pandas(
     local = corpus.select(c_id, c_vec).mapInPandas(score, schema=out_schema)
     w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
     return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def with_probe_buckets(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    n_probe: int,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Query-directed multi-probe expansion: each row explodes into
-    `n_probe` rows — its own LSH bucket plus the (n_probe-1) buckets
-    reached by flipping the sign bits of the planes the vector lies
-    CLOSEST to (smallest |dot|), which are exactly the bits most
-    likely to have split true neighbors across buckets (Lv et al.,
-    multi-probe LSH, VLDB'07). Probing lifts recall without shrinking
-    n_planes (which would grow every bucket for everyone).
-
-    Per-plane dots are materialized as one array column, referenced by
-    both the base bucket and the flip ordering, so each dot fold runs
-    once per row."""
-    planes = _hyperplanes(dim, n_planes)
-    dots = F.array(
-        *[dot(F.col(vec_col), F.lit(list(p)).cast("array<double>")) for p in planes]
-    )
-    ddf = df.withColumn("__dots", dots)
-    base = F.lit(0).cast("long")
-    for i in range(n_planes):
-        base = base.bitwiseOR(
-            F.when(
-                F.element_at("__dots", i + 1) > 0, F.lit(1 << i).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    ddf = ddf.withColumn("__base", base)
-    if n_probe <= 1:
-        return ddf.withColumn(out_col, F.col("__base")).drop("__dots", "__base")
-    idx = F.lit(np.arange(n_planes, dtype=np.int32)).cast("array<int>")
-    masks = F.lit((np.int64(1) << np.arange(n_planes, dtype=np.int64))).cast("array<bigint>")
-    by_closeness = F.transform(
-        F.array_sort(
-            F.zip_with(
-                F.col("__dots"), idx, lambda d, i: F.struct(F.abs(d).alias("a"), i.alias("i"))
-            )
-        ),
-        lambda s: s["i"],
-    )
-    flips = F.slice(by_closeness, 1, min(n_probe - 1, n_planes))
-    buckets = F.concat(
-        F.array(F.col("__base")),
-        F.transform(
-            flips, lambda i: F.col("__base").bitwiseXOR(F.element_at(masks, i + 1))
-        ),
-    )
-    return (
-        ddf.withColumn(out_col, F.explode(buckets))
-        .drop("__dots", "__base")
-    )
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 12,
-    n_probe: int = 1,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "c_vec",
-) -> DataFrame:
-    """Approximate top-k: only corpus vectors in the query's probed
-    LSH bucket(s) are scored. Single equi-join on the bucket id — at
-    100 TB this is a hash join on a uniform key instead of a cross
-    product. Recall levers: fewer `n_planes` (bigger buckets for
-    EVERY vector) or higher `n_probe` (each query additionally probes
-    the buckets behind its closest hyperplanes — cost scales with the
-    query side only, the right trade at corpus scale). Measured on the
-    sf0.001 embeddings (64-dim, 6 planes): recall@5 0.225 at n_probe=1
-    -> 0.338 at 4 -> 0.362 at 8 (tests/test_similarity.py pins the
-    lift; absolute recall is capped by the near-uniform synthetic
-    vectors). The corpus is bucketed ONCE either way."""
-    cb = corpus.withColumn("bucket", lsh_bucket(F.col(c_vec), dim, n_planes))
-    if n_probe <= 1:
-        qb = queries.withColumn("bucket", lsh_bucket(F.col(q_vec), dim, n_planes))
-    else:
-        qb = with_probe_buckets(queries, q_vec, dim, n_planes, n_probe)
-    cand = cb.join(F.broadcast(qb), "bucket")
-    if n_probe > 1:
-        # a corpus vector can fall in several probed buckets of the
-        # same query; dedup BEFORE scoring so cosine runs once per pair
-        cand = cand.dropDuplicates([q_id, c_id])
-    scored = cand.select(
-        F.col(q_id), F.col(c_id), cosine(F.col(q_vec), F.col(c_vec)).alias("sim")
-    )
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 12,
-) -> DataFrame:
-    """Corpus x corpus near-duplicate pairs by cosine >= threshold,
-    LSH-bucketed so the self-join never materializes all pairs."""
-    b = df.select(
-        F.col(id_col), F.col(vec_col), lsh_bucket(F.col(vec_col), dim, n_planes).alias("bucket")
-    )
-    l, r = b.alias("l"), b.alias("r")
-    pairs = l.join(
-        r,
-        (F.col("l.bucket") == F.col("r.bucket")) & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        # coalesce -> non-nullable: the >= threshold filter otherwise
-        # infers isnotnull(sim) and pushdown inlines the norm fold
-        # into each scan (see dedup.md5_prefix_hash docstring); null
-        # vectors score the -2 sentinel and never pass the threshold
-        F.coalesce(
-            cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), F.lit(-2.0)
-        ).alias("sim"),
-    )
-    return pairs.filter(F.col("sim") >= threshold)
 
 
 # --------------------------------------------- oracle-portable ANN
@@ -417,13 +258,18 @@ def with_probe_buckets_portable(
     n_probe: int,
     out_col: str = "bucket",
 ) -> DataFrame:
-    """Engine-exact multi-probe twin of `with_probe_buckets`: per-plane
-    INTEGER dots over the quantized vector decide both the base bucket
-    and the flip order, so a SQL oracle reproduces the probed bucket
-    set bit-for-bit. Flip order is encoded portably as
-    ``|dot| * n_planes + plane`` (|dot| <= dim * 2^20, so the key fits
-    a 64-bit integer exactly in any engine) — ascending sort = closest
-    hyperplane first, plane index as the deterministic tiebreak."""
+    """Query-directed multi-probe expansion: each row explodes into
+    `n_probe` rows — its own LSH bucket plus the (n_probe-1) buckets
+    reached by flipping the sign bits of the planes the vector lies
+    CLOSEST to (smallest |dot|), the bits most likely to have split
+    true neighbors across buckets (Lv et al., multi-probe LSH,
+    VLDB'07). Per-plane INTEGER dots over the quantized vector decide
+    both the base bucket and the flip order, so a SQL oracle
+    reproduces the probed bucket set bit-for-bit. Flip order is
+    encoded portably as ``|dot| * n_planes + plane`` (|dot| <= dim *
+    2^20, so the key fits a 64-bit integer exactly in any engine) —
+    ascending sort = closest hyperplane first, plane index as the
+    deterministic tiebreak."""
     qdf = df.withColumn("__q", quantize_vec(F.col(vec_col)))
     planes = _rademacher_signs(dim, n_planes)
     dots = F.array(
@@ -481,12 +327,15 @@ def lsh_topk_portable(
     c_vec: str = "c_vec",
     n_probe: int = 1,
 ) -> DataFrame:
-    """`lsh_topk` with engine-exact bucketing: same single bucket
-    equi-join scale shape (no cross product), emitted sim is float
-    cosine of the original vectors. ``n_probe`` probes extra buckets behind each query's closest
-    hyperplanes via integer-exact flip ordering
-    (`with_probe_buckets_portable`) — oracle-reproducible recall lift,
-    cost on the query side only."""
+    """Approximate top-k: only corpus vectors in the query's probed
+    LSH bucket(s) are scored. Single equi-join on the bucket id — at
+    100 TB a hash join on a uniform key instead of a cross product;
+    the emitted sim is float cosine of the original vectors. Recall
+    levers: fewer `n_planes` (bigger buckets for EVERY vector) or a
+    higher `n_probe` (each query also probes the buckets behind its
+    closest hyperplanes via integer-exact flip ordering,
+    `with_probe_buckets_portable` — cost on the query side only). The
+    corpus is bucketed once either way."""
     cb = with_lsh_bucket(corpus, c_vec, dim, n_planes)
     if n_probe <= 1:
         qb = with_lsh_bucket(queries, q_vec, dim, n_planes)
@@ -552,23 +401,21 @@ def ivf_topk_portable(
     c_id: str = "c_id",
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF top-k against an externally supplied centroid table:
     corpus -> 1 cell each, queries probe `n_probe` cells, bucket
-    equi-join, exact cosine, window top-k. Every bucketing decision is
-    integer-exact, so a DuckDB oracle reproduces the identical result
-    set; `ivf_topk` (k-means fit) remains the self-contained variant.
-    ``broadcast_queries=False`` drops the broadcast hint for workloads
-    where the query side is itself corpus-sized (bitext mining) — the
-    cell join becomes a plain shuffle equi-join on the cell key."""
+    equi-join against the broadcast queries, exact cosine, window
+    top-k. Every bucketing decision is integer-exact, so a DuckDB
+    oracle reproduces the identical result set; `ivf_topk` (k-means
+    fit) remains the self-contained variant. Corpus-sized query sides
+    (bitext mining) enter `_ivf_score_assigned` without the
+    broadcast."""
     # norms projected once per VECTOR, not once per candidate pair —
     # cosine = dot / (norm_q * norm_c) is the same IEEE ops in a
     # cheaper place (bit-identical sims, 3x fewer folds per pair)
     cb = ivf_assign(corpus, centroids, 1, c_vec, c_id)
     return _ivf_score_cells(
-        cb, queries, centroids, k, n_probe, q_id, c_id, q_vec, c_vec,
-        broadcast_queries,
+        cb, queries, centroids, k, n_probe, q_id, c_id, q_vec, c_vec
     )
 
 
@@ -582,14 +429,14 @@ def _ivf_score_cells(
     c_id: str,
     q_vec: str,
     c_vec: str,
-    broadcast_queries: bool,
 ) -> DataFrame:
     """Shared IVF serve tail: probe-assign the queries, cell
     equi-join against an already-assigned corpus `cb` (columns
-    c_id, c_vec, cell), exact cosine, window top-k."""
+    c_id, c_vec, cell) with the queries broadcast, exact cosine,
+    window top-k."""
     qb = ivf_assign(queries, centroids, n_probe, q_vec, q_id)
     return _ivf_score_assigned(
-        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries
+        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries=True
     )
 
 
@@ -660,10 +507,8 @@ def update_ivf_assignments(
     c_id: str = "c_id",
     c_vec: str = "c_vec",
     deleted_ids: DataFrame | None = None,
-    broadcast_touched: bool = True,
     cent_id: str = "cent_id",
     cent_vec: str = "cent_vec",
-    cell_col: str | None = None,
 ) -> DataFrame:
     """Delete-and-replace maintenance for an IVF cell-assignment
     table against a FROZEN coarse quantizer — the
@@ -685,12 +530,12 @@ def update_ivf_assignments(
     moves); this maintains assignments under the standing quantizer,
     which is how production IVF serves between refits.
 
-    100 TB shape: with `broadcast_touched` (a daily re-embed batch is
-    small next to the accumulated index) the anti-join is a broadcast
-    hash join — a map-side filter that preserves the persisted
-    index's list_id-partitioned layout with no exchange; fresh rows
-    stay unpartitioned until the next ivf_write_assignments
-    compaction, like any LSM delta.
+    100 TB shape: the touched-id set is broadcast (a daily re-embed
+    batch is small next to the accumulated index), so the anti-join
+    is a broadcast hash join — a map-side filter that preserves the
+    persisted index's list_id-partitioned layout with no exchange;
+    fresh rows stay unpartitioned until the next
+    ivf_write_assignments compaction, like any LSM delta.
 
     Works with ALL quantizer representations, matching whichever
     built the index (mixing them would corrupt cell membership):
@@ -698,22 +543,18 @@ def update_ivf_assignments(
     `ivf_assign` (cell column ``cell``), a list-of-lists quantizer
     via `with_nearest_list`, and a `HierQuantizer` via
     `with_nearest_list_hier` — the float engines behind
-    `ivf_write_assignments` (cell column ``list_id``). Override
-    ``cell_col`` if the index used a custom name."""
+    `ivf_write_assignments` (cell column ``list_id``)."""
     touched = fresh_vectors.select(c_id).distinct()
     if deleted_ids is not None:
         touched = touched.unionByName(deleted_ids.select(c_id)).distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(touched)
     live = fresh_vectors.where(F.col(c_vec).isNotNull()).select(c_id, c_vec)
     if isinstance(centroids, DataFrame):
         fresh_rows = ivf_assign(live, centroids, 1, c_vec, c_id, cent_id, cent_vec)
-        if cell_col and cell_col != "cell":
-            fresh_rows = fresh_rows.withColumnRenamed("cell", cell_col)
     elif isinstance(centroids, HierQuantizer):
-        fresh_rows = with_nearest_list_hier(live, c_vec, centroids, cell_col or "list_id")
+        fresh_rows = with_nearest_list_hier(live, c_vec, centroids)
     else:
-        fresh_rows = with_nearest_list(live, c_vec, centroids, cell_col or "list_id")
+        fresh_rows = with_nearest_list(live, c_vec, centroids)
     return (
         assignments.join(touched, c_id, "left_anti")
         .select(*assignments.columns)
@@ -731,7 +572,6 @@ def ivf_topk_from_assignments(
     c_id: str = "c_id",
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF top-k served FROM a maintained assignment table (columns
     c_id, c_vec, cell — `ivf_assign(corpus, cents, 1, ...)` output,
@@ -740,8 +580,7 @@ def ivf_topk_from_assignments(
     verbatim, so ranks equal a full rebuild over the same vector set
     with the same centroids."""
     return _ivf_score_cells(
-        assignments, queries, centroids, k, n_probe, q_id, c_id, q_vec,
-        c_vec, broadcast_queries,
+        assignments, queries, centroids, k, n_probe, q_id, c_id, q_vec, c_vec
     )
 
 
@@ -753,12 +592,17 @@ def embedding_near_dups_portable(
     threshold: float = 0.35,
     n_planes: int = 8,
 ) -> DataFrame:
-    """`embedding_near_dups` with engine-exact LSH bucketing — the
-    oracle recomputes the same buckets, so the emitted (id_a, id_b,
-    sim) pairs hash-match instead of being rows-only."""
+    """Corpus x corpus near-duplicate pairs by cosine >= threshold,
+    LSH-bucketed so the self-join never materializes all pairs.
+    Bucketing is engine-exact (`with_lsh_bucket`): the oracle
+    recomputes the same buckets, so the emitted (id_a, id_b, sim)
+    pairs hash-match instead of being rows-only. Each vector is
+    bucketed once: both join sides read one bucket-keyed shuffle of
+    the bucketed frame, which the planner reuses (ReusedExchange);
+    without it each side runs its own `bucketize` Python pass."""
     b = with_lsh_bucket(
         df.select(F.col(id_col), F.col(vec_col)), vec_col, dim, n_planes
-    )
+    ).repartition("bucket")
     l, r = b.alias("l"), b.alias("r")
     pairs = l.join(
         r,
@@ -838,43 +682,6 @@ def ivf_build_centroids(
     return centroids
 
 
-def _nearest_list(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmin_l ||vec - c_l||^2 as a native expression: squared L2 to
-    each literal centroid, position of the minimum. ||v||^2 is common
-    to all lists and dropped, so each distance is -2<v,c> + ||c||^2."""
-    dists = []
-    for c in centroids:
-        lit_c = F.lit(np.asarray(c, dtype=np.float64)).cast("array<double>")
-        c_norm2 = sum(x * x for x in c)
-        dists.append(F.lit(-2.0) * dot(vec, lit_c) + F.lit(float(c_norm2)))
-    darr = F.array(*dists)
-    return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-
-
-def _nearest_lists(vec: Column, centroids: list[list[float]], n_probe: int) -> Column:
-    """The n_probe nearest list ids, via argsort on the distance array."""
-    dists = []
-    for c in centroids:
-        lit_c = F.lit(np.asarray(c, dtype=np.float64)).cast("array<double>")
-        c_norm2 = sum(x * x for x in c)
-        dists.append(F.lit(-2.0) * dot(vec, lit_c) + F.lit(float(c_norm2)))
-    darr = F.array(*dists)
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    pairs = F.zip_with(darr, idx, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-    ranked = F.slice(F.transform(F.array_sort(pairs), lambda p: p["i"]), 1, n_probe)
-    # a null vector has all-null distances; without this guard the
-    # struct sort would still yield list ids, probing arbitrary cells
-    return F.when(vec.isNotNull(), ranked)
-
-
-# Above this many literal nodes (n_lists * dim) the inlined-centroid
-# expression itself becomes the bottleneck — analysis/codegen cost
-# grows with plan size, and a production quantizer (4096 lists x 768
-# dims ~ 3M nodes) would never finish planning. The Arrow scorer
-# carries ONE udf node regardless of quantizer size.
-IVF_LITERAL_MAX_NODES = 64 * 1024
-
-
 # One broadcast per distinct centroid MATRIX per SparkContext, not per
 # call: ivf_build_centroids assigns once per Lloyd round and serving
 # calls with_nearest_list/with_probe_lists repeatedly with the same
@@ -924,59 +731,63 @@ def _centroid_bc(spark, centroids: list[list[float]]):
     )
 
 
+def _well_formed(vec: Column, dim: int) -> Column:
+    """`vec` if it has exactly `dim` elements and none is NULL, else
+    NULL. Arrow hands a NULL element to pandas as NaN and a ragged
+    batch cannot be stacked, so every Arrow nearest-centroid kernel
+    scores this guarded column: a malformed vector is treated like a
+    NULL one (NULL cell, no probe rows) while a real NaN keeps the
+    NaN-ranks-last convention."""
+    return F.when(
+        (F.size(vec) == dim) & ~F.exists(vec, lambda x: x.isNull()), vec
+    )
+
+
+def _stack(v: pd.Series, dtype=np.float64):
+    """(positions, matrix) of the non-NULL vectors of an Arrow batch."""
+    rows = np.nonzero(v.notna().to_numpy())[0]
+    if not len(rows):
+        return rows, None
+    return rows, np.stack([np.asarray(x, dtype=dtype) for x in v.iloc[rows]])
+
+
 def with_nearest_list(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
     out_col: str = "list_id",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment (squared-L2 argmin, first-min
-    tie-break) with two rank-identical engines, auto-dispatched on
-    quantizer size (tests pin identity on the testdata):
-
-    - literal (small quantizers): the centroid matrix inlined as a
-      native Column expression — whole-stage codegen, zero Python.
-      Plan size is O(n_lists * dim) literal nodes.
-    - arrow (production ANN scale, n_lists * dim > IVF_LITERAL_MAX_NODES):
-      a pandas_udf scoring -2 v@C^T + ||c||^2 against a BROADCAST
-      numpy centroid matrix; plan size is O(1), per-batch cost is one
-      BLAS matmul. Null vectors assign NULL, matching the literal
-      path's null propagation; NaN distances are masked to +inf so
-      both engines rank them last (Spark's NaN ordering). Residual
-      caveat: a vector whose distances mix genuine +inf with NaN ties
-      them in the arrow path where Spark orders inf before NaN —
-      reachable only via overflowing inputs."""
-    if use_arrow is None:
-        use_arrow = len(centroids) * len(centroids[0]) > IVF_LITERAL_MAX_NODES
-    if not use_arrow:
-        return df.withColumn(out_col, _nearest_list(F.col(vec_col), centroids))
-
-    import pandas as pd
-
+    """Nearest-centroid assignment: squared-L2 argmin, first-min
+    tie-break (the lower list id wins). A pandas_udf scores
+    -2 v@C^T + ||c||^2 against a BROADCAST numpy centroid matrix, so
+    plan size is O(1) in the quantizer and per-batch cost is one BLAS
+    matmul. A NULL or malformed vector (`_well_formed`) assigns NULL.
+    NaN distances are masked to +inf, so a NaN-poisoned cell ranks
+    last (Spark's NaN ordering) and an all-NaN vector takes cell 0.
+    Residual caveat: a vector whose distances mix genuine +inf with
+    NaN ties them, where Spark orders inf before NaN — reachable only
+    via overflowing inputs. A literal-expression engine (the centroid
+    matrix inlined as Column folds) lost at every measured size —
+    ivf_topk at n_lists=16 took 2.90 s vs 1.61 s at sf0.01, at
+    n_lists=256 34.7 s vs 2.35 s (4 vCPU, 2 Spark cores) — and is
+    deleted."""
     bc = _centroid_bc(df.sparkSession, centroids)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
         C, n2 = bc.value
         res: list = [None] * len(v)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            M = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in v[mask]]
-            )
+        rows, M = _stack(v)
+        if M is not None:
             d = -2.0 * (M @ C.T) + n2[None, :]
-            # Spark orders NaN greater-than-everything (a NaN distance
-            # LOSES the argmin); np.argmin would propagate it first.
-            # Mask to +inf so both engines rank NaN-poisoned cells
-            # last (ties then break by index, = array_sort on (d, i)).
-            d[np.isnan(d)] = np.inf
-            ids = np.argmin(d, axis=1)  # first-min, same as array_position
-            for pos, lid in zip(np.nonzero(mask)[0], ids):
+            d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
+            for pos, lid in zip(rows, np.argmin(d, axis=1)):  # first-min
                 res[pos] = int(lid)
         return pd.Series(res, dtype="Int32")
 
-    return df.withColumn(out_col, assign(F.col(vec_col)))
+    return df.withColumn(
+        out_col, assign(_well_formed(F.col(vec_col), len(centroids[0])))
+    )
 
 
 def with_probe_lists(
@@ -985,40 +796,31 @@ def with_probe_lists(
     centroids: list[list[float]],
     n_probe: int,
     out_col: str = "list_id",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Explode each row into its `n_probe` nearest cells — the query
-    side of IVF probing. Same literal/arrow dispatch and tie-break
-    (distance asc, then list id asc: np.argsort(kind='stable') ==
-    array_sort on (d, i) structs) as `with_nearest_list`."""
-    if use_arrow is None:
-        use_arrow = len(centroids) * len(centroids[0]) > IVF_LITERAL_MAX_NODES
-    if not use_arrow:
-        return df.withColumn(
-            out_col, F.explode(_nearest_lists(F.col(vec_col), centroids, n_probe))
-        )
-
-    import pandas as pd
-
+    side of IVF probing. Same broadcast engine, NULL/malformed-vector
+    handling (no probe rows) and NaN masking as `with_nearest_list`;
+    ties break by distance asc, then list id asc
+    (np.argsort(kind='stable'))."""
     bc = _centroid_bc(df.sparkSession, centroids)
 
     @F.pandas_udf("array<int>")
     def probes(v: pd.Series) -> pd.Series:
         C, n2 = bc.value
         res: list = [None] * len(v)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            M = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in v[mask]]
-            )
+        rows, M = _stack(v)
+        if M is not None:
             d = -2.0 * (M @ C.T) + n2[None, :]
-            d[np.isnan(d)] = np.inf  # match Spark's NaN-last ordering
+            d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
             order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            for pos, row in zip(np.nonzero(mask)[0], order):
+            for pos, row in zip(rows, order):
                 res[pos] = [int(i) for i in row]
         return pd.Series(res)
 
-    return df.withColumn(out_col, F.explode(probes(F.col(vec_col))))
+    return df.withColumn(
+        out_col,
+        F.explode(probes(_well_formed(F.col(vec_col), len(centroids[0])))),
+    )
 
 
 def ivf_topk(
@@ -1033,7 +835,6 @@ def ivf_topk(
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
     centroids: list[list[float]] | None = None,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed into
     `n_lists` Voronoi cells once; each query probes its `n_probe`
@@ -1041,12 +842,9 @@ def ivf_topk(
     is ~n_probe/n_lists of brute force, and recall rises with n_probe
     (n_probe = n_lists degrades gracefully to exact brute force).
     Pass precomputed `centroids` to amortize the fit across queries
-    (at scale: persist assignments as a bucketed table);
-    `sample_fraction` bounds the k-means fit cost at corpus scale
-    (see ivf_build_centroids)."""
-    cents = centroids or ivf_build_centroids(
-        corpus, c_vec, n_lists, n_iters, sample_fraction=sample_fraction
-    )
+    (at scale: persist assignments as a bucketed table, and bound the
+    fit cost with `ivf_build_centroids(sample_fraction=...)`)."""
+    cents = centroids or ivf_build_centroids(corpus, c_vec, n_lists, n_iters)
     cb = with_nearest_list(corpus, c_vec, cents)
     qb = with_probe_lists(queries, q_vec, cents, n_probe)
     scored = cb.join(F.broadcast(qb), "list_id").select(
@@ -1063,21 +861,22 @@ def embedding_dedup_clusters(
     dim: int,
     threshold: float = 0.95,
     n_planes: int = 12,
-    portable: bool = False,
     max_iters: int = 10,
 ) -> DataFrame:
     """Cluster-output embedding near-dup dedup — the `dedup_clusters`
-    of the vector family: LSH-bucketed cosine pairs contract to one
-    (id, group_id, is_keeper) row per vector via large-star/small-star
-    connected components (functions/dedup.dedup_groups), so output is
-    LINEAR in corpus size where the pair form is quadratic in
-    duplicate-cluster depth. group_id = minimum id of the cluster;
-    singletons keep their own id. ``portable=True`` uses the
-    integer-quantized bucketing an SQL oracle reproduces exactly."""
+    of the vector family: LSH-bucketed cosine pairs
+    (`embedding_near_dups_portable`, integer-exact buckets an SQL
+    oracle reproduces) contract to one (id, group_id, is_keeper) row
+    per vector via large-star/small-star connected components
+    (functions/dedup.dedup_groups), so output is LINEAR in corpus
+    size where the pair form is quadratic in duplicate-cluster depth.
+    group_id = minimum id of the cluster; singletons keep their own
+    id."""
     from .dedup import dedup_groups
 
-    pair_fn = embedding_near_dups_portable if portable else embedding_near_dups
-    pairs = pair_fn(df, id_col, vec_col, dim, threshold, n_planes)
+    pairs = embedding_near_dups_portable(
+        df, id_col, vec_col, dim, threshold, n_planes
+    )
     labels = dedup_groups(
         pairs.select("id_a", "id_b"), df.select(id_col), id_col, max_iters=max_iters
     )
@@ -1266,7 +1065,6 @@ def ivf_topk_hier_portable(
     c_id: str = "c_id",
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """`ivf_topk_portable` served through the two-level quantizer:
     corpus descends to 1 leaf cell, queries probe `n_probe` leaves
@@ -1283,7 +1081,7 @@ def ivf_topk_hier_portable(
         n_probe_super=n_probe_super,
     )
     return _ivf_score_assigned(
-        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries
+        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries=True
     )
 
 
@@ -1429,25 +1227,22 @@ def _with_leaf_in_super(
 ) -> DataFrame:
     """Nearest leaf WITHIN an already-chosen super-cell (the Lloyd
     re-assignment inner step): batched per-super BLAS, one matmul per
-    distinct super id in the batch."""
-    import pandas as pd
-
+    distinct super id in the batch. A NULL super id or a NULL or
+    malformed vector (`_well_formed`) assigns NULL."""
     bc = _hier_bc(df.sparkSession, hq)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series, sup: pd.Series) -> pd.Series:
         _, _, L, Ln2, by_super = bc.value
         res: list = [None] * len(v)
-        mask = (v.notna() & sup.notna()).to_numpy()
-        if mask.any():
-            M = np.stack([np.asarray(x, dtype=np.float64) for x in v[mask]])
-            sp = sup[mask].to_numpy(dtype=np.int64)
-            _leaf_argmin_scatter(
-                M, sp, np.nonzero(mask)[0], res, L, Ln2, by_super
-            )
+        rows, M = _stack(v.where(sup.notna()))
+        if M is not None:
+            sp = sup.iloc[rows].to_numpy(dtype=np.int64)
+            _leaf_argmin_scatter(M, sp, rows, res, L, Ln2, by_super)
         return pd.Series(res, dtype="Int32")
 
-    return df.withColumn(out_col, assign(F.col(vec_col), F.col(super_col)))
+    vec = _well_formed(F.col(vec_col), len(hq.leaves[0]))
+    return df.withColumn(out_col, assign(vec, F.col(super_col)))
 
 
 def with_nearest_list_hier(
@@ -1459,28 +1254,26 @@ def with_nearest_list_hier(
     leaves_per_super)) where the flat assigner is O(batch x n_lists).
     Output cell ids are GLOBAL leaf ids, so persisted layouts
     (`ivf_write_assignments`-style partitionBy) and the maintenance
-    path compose unchanged. Null vectors assign NULL; NaN distances
-    rank last (the flat engines' convention)."""
-    import pandas as pd
-
+    path compose unchanged. NULL and malformed vectors
+    (`_well_formed`) assign NULL; NaN distances rank last (the flat
+    engines' convention)."""
     bc = _hier_bc(df.sparkSession, hq)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
         S, Sn2, L, Ln2, by_super = bc.value
         res: list = [None] * len(v)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            M = np.stack([np.asarray(x, dtype=np.float64) for x in v[mask]])
+        rows, M = _stack(v)
+        if M is not None:
             ds = -2.0 * (M @ S.T) + Sn2[None, :]
             ds[np.isnan(ds)] = np.inf
             sp = np.argmin(ds, axis=1)
-            _leaf_argmin_scatter(
-                M, sp, np.nonzero(mask)[0], res, L, Ln2, by_super
-            )
+            _leaf_argmin_scatter(M, sp, rows, res, L, Ln2, by_super)
         return pd.Series(res, dtype="Int32")
 
-    return df.withColumn(out_col, assign(F.col(vec_col)))
+    return df.withColumn(
+        out_col, assign(_well_formed(F.col(vec_col), len(hq.leaves[0])))
+    )
 
 
 def with_probe_lists_hier(
@@ -1498,9 +1291,8 @@ def with_probe_lists_hier(
     n_super the probe set equals the flat probe set over the same
     leaves (pytest-pinned). Rows are batched by identical super-tuple
     (np.unique on the ranked prefix), one candidate matmul per
-    distinct tuple per batch."""
-    import pandas as pd
-
+    distinct tuple per batch. NULL and malformed vectors
+    (`_well_formed`) emit no probe rows."""
     bc = _hier_bc(df.sparkSession, hq)
 
     @F.pandas_udf("array<int>")
@@ -1508,13 +1300,11 @@ def with_probe_lists_hier(
         S, Sn2, L, Ln2, by_super = bc.value
         k_sup = min(n_probe_super, len(S))
         res: list = [None] * len(v)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            M = np.stack([np.asarray(x, dtype=np.float64) for x in v[mask]])
+        rows, M = _stack(v)
+        if M is not None:
             ds = -2.0 * (M @ S.T) + Sn2[None, :]
             ds[np.isnan(ds)] = np.inf
             order = np.argsort(ds, axis=1, kind="stable")[:, :k_sup]
-            rows = np.nonzero(mask)[0]
             tuples, inverse = np.unique(order, axis=0, return_inverse=True)
             inverse = np.asarray(inverse).reshape(-1)  # numpy 2.0 axis quirk
             for t in range(len(tuples)):
@@ -1530,7 +1320,8 @@ def with_probe_lists_hier(
                     res[pos] = [int(idx[i]) for i in row]
         return pd.Series(res)
 
-    return df.withColumn(out_col, F.explode(probes(F.col(vec_col))))
+    vec = _well_formed(F.col(vec_col), len(hq.leaves[0]))
+    return df.withColumn(out_col, F.explode(probes(vec)))
 
 
 def ivf_topk_hier(
@@ -1546,17 +1337,14 @@ def ivf_topk_hier(
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
     hq: HierQuantizer | None = None,
-    sample_fraction: float | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """`ivf_topk` with the two-level quantizer — the configuration for
     corpus-scaled n_lists where the flat assignment scan is the
-    quadratic term. Same serve tail (cell equi-join, exact cosine,
-    window top-k); `broadcast_queries=False` for corpus-sized query
-    sides (the bitext shape)."""
-    hq = hq or ivf_build_hier_centroids(
-        corpus, c_vec, n_lists, n_iters, sample_fraction=sample_fraction
-    )
+    quadratic term. Same serve tail (cell equi-join against the
+    broadcast queries, exact cosine, window top-k). Pass a
+    precomputed `hq` to amortize the fit (`ivf_build_hier_centroids`,
+    whose `sample_fraction` bounds its cost)."""
+    hq = hq or ivf_build_hier_centroids(corpus, c_vec, n_lists, n_iters)
     cb = with_nearest_list_hier(corpus, c_vec, hq, "cell").select(
         F.col(c_id), F.col(c_vec), "cell"
     )
@@ -1564,7 +1352,7 @@ def ivf_topk_hier(
         F.col(q_id), F.col(q_vec), "cell"
     )
     return _ivf_score_assigned(
-        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries
+        cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries=True
     )
 
 
@@ -1609,59 +1397,38 @@ def semdedup_learned_centroids(
     return [[int(round(x * QUANT_SCALE)) for x in c] for c in book]
 
 
+def _with_cells_int(df, id_col, vec_col, dim, assign) -> DataFrame:
+    """(id, __v float vector, cluster, dist2): `assign` is a
+    struct<cluster, dist2> pandas_udf over the JVM-QUANTIZED vector,
+    so quantization is engine-identical by construction. A NULL or
+    malformed vector (`_well_formed`) assigns NULL cluster/dist2."""
+    qv = quantize_vec(_well_formed(F.col(vec_col), dim))
+    return (
+        df.select(F.col(id_col), F.col(vec_col).alias("__v"), qv.alias("__q"))
+        .withColumn("__a", assign(F.col("__q")))
+        .select(id_col, "__v",
+                F.col("__a.cluster").alias("cluster"),
+                F.col("__a.dist2").alias("dist2"))
+    )
+
+
 def _assign_cells_int(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     centroids: list[list[int]],
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Exact-INTEGER nearest-centroid assignment with zero shuffle:
     (id, __v float vector, cluster, dist2) where cluster is the
     argmin of squared L2 between the QUANTIZED vector and the integer
     centroids (first-min tie-break = smaller cell index) and dist2 is
-    that minimum. Same two-engine dispatch as with_nearest_list —
-    literal expressions inside whole-stage codegen for small
-    quantizers, one Arrow pandas_udf against a broadcast int64 matrix
-    above IVF_LITERAL_MAX_NODES. The Arrow path scores the
-    JVM-QUANTIZED array (not the raw floats), so quantization is
-    engine-identical by construction and int64 math is exact
-    ((q-c)^2 <= 2^42 per dim at QUANT_SCALE for unit-range inputs —
-    no overflow headroom issue at any realistic dim). A null vector
-    assigns null cluster/dist2 on both paths."""
-    k, dim = len(centroids), len(centroids[0])
-    q = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
-    )
-    if use_arrow is None:
-        use_arrow = k * dim > IVF_LITERAL_MAX_NODES
-    if not use_arrow:
-        dists = []
-        for c in centroids:
-            lit_c = F.lit(np.asarray(c, dtype=np.int64)).cast("array<bigint>")
-            dists.append(
-                F.aggregate(
-                    F.zip_with("__q", lit_c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                )
-            )
-        darr = F.array(*dists)
-        return (
-            q.withColumn("__d", darr)
-            .select(
-                id_col,
-                "__v",
-                (F.array_position("__d", F.array_min("__d")) - 1)
-                .cast("long").alias("cluster"),
-                F.array_min("__d").alias("dist2"),
-            )
-        )
-
-    import pandas as pd
-
+    that minimum. One Arrow pandas_udf against a broadcast int64
+    matrix: ||q||^2 - 2 q.C^T + ||c||^2 == sum((q-c)^2) in exact
+    int64 ((q-c)^2 <= 2^42 per dim at QUANT_SCALE for unit-range
+    inputs — no overflow at any realistic dim). A literal-expression
+    engine computed the same rows and lost (embedding_semdedup 1.79 s
+    vs 1.73 s at sf0.01, 2.48 s vs 2.21 s at sf0.1); it is
+    deleted."""
     C = np.asarray(centroids, dtype=np.int64)
     bc = content_keyed_broadcast(
         df.sparkSession, "semdedup-centroids", C,
@@ -1671,31 +1438,17 @@ def _assign_cells_int(
     @F.pandas_udf("struct<cluster:long,dist2:long>")
     def assign(qv: pd.Series) -> pd.DataFrame:
         Cm, cn2 = bc.value
-        # ||q||^2 - 2 q.C^T + ||c||^2 == sum((q-c)^2), exact int64;
-        # np.argmin is first-min, matching array_position's tie-break
-        cell: list = [None] * len(qv)
-        d2: list = [None] * len(qv)
-        mask = qv.notna().to_numpy()
-        if mask.any():
-            Q = np.stack([np.asarray(x, dtype=np.int64) for x in qv[mask]])
-            d = ((Q * Q).sum(axis=1)[:, None]
-                 - 2 * (Q @ Cm.T) + cn2[None, :])
-            ids = np.argmin(d, axis=1)
-            mins = d[np.arange(len(ids)), ids]
-            for pos, lid, dv in zip(np.nonzero(mask)[0], ids, mins):
-                cell[pos] = int(lid)
-                d2[pos] = int(dv)
-        return pd.DataFrame(
-            {"cluster": pd.array(cell, dtype="Int64"),
-             "dist2": pd.array(d2, dtype="Int64")}
-        )
+        cell = pd.array([None] * len(qv), dtype="Int64")
+        d2 = pd.array([None] * len(qv), dtype="Int64")
+        rows, Q = _stack(qv, np.int64)
+        if Q is not None:
+            d = (Q * Q).sum(axis=1)[:, None] - 2 * (Q @ Cm.T) + cn2[None, :]
+            ids = np.argmin(d, axis=1)  # first-min
+            cell[rows] = ids
+            d2[rows] = d[np.arange(len(ids)), ids]
+        return pd.DataFrame({"cluster": cell, "dist2": d2})
 
-    return (
-        q.withColumn("__a", assign(F.col("__q")))
-        .select(id_col, "__v",
-                F.col("__a.cluster").alias("cluster"),
-                F.col("__a.dist2").alias("dist2"))
-    )
+    return _with_cells_int(df, id_col, vec_col, C.shape[1], assign)
 
 
 def _assign_cells_int_hier(
@@ -1721,8 +1474,6 @@ def _assign_cells_int_hier(
     and the dedup semantics downstream are unchanged. A super with no
     leaves gets a +2^62 distance penalty (exact-int analog of the
     float engines' +inf mask) so it can never capture a vector."""
-    import pandas as pd
-
     C = np.asarray(centroids, dtype=np.int64)
     S = np.asarray(super_centroids, dtype=np.int64)
     dls = (C * C).sum(1)[:, None] - 2 * (C @ S.T) + (S * S).sum(1)[None, :]
@@ -1737,24 +1488,17 @@ def _assign_cells_int_hier(
         return (S, sn2, C, (C * C).sum(axis=1), by_super)
 
     bc = content_keyed_broadcast(df.sparkSession, "semdedup-hier", packed, build)
-    q = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
-    )
 
     @F.pandas_udf("struct<cluster:long,dist2:long>")
     def assign(qv: pd.Series) -> pd.DataFrame:
         Sm, sn2, Cm, cn2, by_super = bc.value
-        cell: list = [None] * len(qv)
-        d2: list = [None] * len(qv)
-        mask = qv.notna().to_numpy()
-        if mask.any():
-            Q = np.stack([np.asarray(x, dtype=np.int64) for x in qv[mask]])
+        cell = pd.array([None] * len(qv), dtype="Int64")
+        d2 = pd.array([None] * len(qv), dtype="Int64")
+        rows, Q = _stack(qv, np.int64)
+        if Q is not None:
             qn2 = (Q * Q).sum(axis=1)
             dsup = qn2[:, None] - 2 * (Q @ Sm.T) + sn2[None, :]
             sp = np.argmin(dsup, axis=1)
-            rows = np.nonzero(mask)[0]
             for s in np.unique(sp):
                 idx = by_super[s]
                 if len(idx) == 0:
@@ -1763,21 +1507,11 @@ def _assign_cells_int_hier(
                 d = (qn2[sel][:, None] - 2 * (Q[sel] @ Cm[idx].T)
                      + cn2[idx][None, :])
                 loc = np.argmin(d, axis=1)
-                mins = d[np.arange(len(loc)), loc]
-                for pos, li, dv in zip(rows[sel], idx[loc], mins):
-                    cell[pos] = int(li)
-                    d2[pos] = int(dv)
-        return pd.DataFrame(
-            {"cluster": pd.array(cell, dtype="Int64"),
-             "dist2": pd.array(d2, dtype="Int64")}
-        )
+                cell[rows[sel]] = idx[loc]
+                d2[rows[sel]] = d[np.arange(len(loc)), loc]
+        return pd.DataFrame({"cluster": cell, "dist2": d2})
 
-    return (
-        q.withColumn("__a", assign(F.col("__q")))
-        .select(id_col, "__v",
-                F.col("__a.cluster").alias("cluster"),
-                F.col("__a.dist2").alias("dist2"))
-    )
+    return _with_cells_int(df, id_col, vec_col, C.shape[1], assign)
 
 
 def semdedup_hier_centroids(
@@ -1832,10 +1566,9 @@ def semdedup(
     the similarity itself stays true float cosine.
 
     100 TB shape: assignment is a SHUFFLE-FREE projection over the
-    corpus (the centroid matrix is inlined as literal expressions for
-    small quantizers, one Arrow pandas_udf against a broadcast numpy
-    matrix above IVF_LITERAL_MAX_NODES — the with_nearest_list
-    dispatch, exact-integer on both engines); candidate pairs come
+    corpus (one Arrow pandas_udf against a broadcast int64 centroid
+    matrix, `_assign_cells_int`; a NULL or malformed vector gets NULL
+    cluster/dist2 and pairs with nothing); candidate pairs come
     from a self-join ON CLUSTER ONLY (the paper's point — choose k so
     the mean cluster is constant-sized and pair work stays linear);
     CC is the same alternating-star contraction every dedup family

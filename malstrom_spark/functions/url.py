@@ -233,8 +233,7 @@ def public_suffix_len(host: Column, rules: list[str] | None = None) -> Column:
     match -> the implicit `*` rule (last label). Lookups are literal
     maps over the last-k-label candidate strings — zero shuffle, zero
     Python, fuses into the scan; the complete PSL is ~9k rules ≈ 18k
-    literal nodes, well under the 64k literal-plan discipline
-    (functions/similarity.py IVF_LITERAL_MAX_NODES)."""
+    literal nodes, a plan size that stays small next to the scan."""
     exact, wild, exc = _compile_psl(rules or DEFAULT_PSL_RULES)
     parts = F.split(host, r"\.")
     n = F.size(parts)

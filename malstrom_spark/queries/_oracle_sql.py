@@ -367,10 +367,10 @@ def ann_pq_oracle(
     dim: int = 64, m: int = 8, k_cb: int = 16, k: int = 5, n_queries: int = 8
 ) -> str:
     """PQ asymmetric-distance top-k over integer-quantized vectors
-    with head-row codebooks — mirrors functions/pq.py's portable tier
-    (pq_head_codebooks + pq_encode(integer=True) + pq_adc_topk
-    (integer=True)) in exact int64 arithmetic: code assignments, ADC
-    distances, and ranks are engine-identical."""
+    with head-row codebooks — replays the similarity_ann_pq row
+    (pq_head_codebooks, then pq_encode and pq_adc_topk over
+    pre-quantized vectors, exact below 2^53) in int64 arithmetic:
+    code assignments, ADC distances, and ranks are engine-identical."""
     dsub = dim // m
     d2 = (
         f"list_sum(list_transform(range(1, {dsub + 1}),"

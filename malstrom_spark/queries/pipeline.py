@@ -806,40 +806,16 @@ def similarity_ann_pq(spark, sf_dir):
     compress to m=8 one-byte codes (64x smaller than the float
     vectors — the compressed serving tier a 100 TB embedding store
     keeps hot), queries score them by asymmetric distance (per-
-    subspace codebook lookup). This gated row runs the PORTABLE tier:
-    integer-quantized arithmetic with head-row codebooks, so encode,
-    ADC distances, and ranks are reproduced bit-for-bit by the DuckDB
-    oracle; the learned k-means codebooks + Arrow LUT engines
-    (`pq_fit_codebooks`, use_arrow=True) are pytest-pinned
-    rank-identical and carry production. Encode is a zero-shuffle
-    projection; ADC is map-side with the top-k window as the only
-    exchange."""
-    from ..functions import pq
-
-    emb = table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
-    cbs = pq.pq_head_codebooks(emb, "embedding", "vec_id", 64, m=8, k=16)
-    codes = pq.pq_encode(
-        emb.select(F.col("vec_id").alias("c_id"), "embedding"),
-        "embedding", cbs, 64, integer=True,
-    ).select("c_id", "codes")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return pq.pq_adc_topk(queries, codes, cbs, 64, k=5, integer=True).select(
-        "q_id", "c_id", "d2", F.col("rank").cast("long").alias("rank")
-    )
-
-
-@register("similarity_ann_pq_arrow", oracle=ann_pq_oracle())
-def similarity_ann_pq_arrow(spark, sf_dir):
-    """Arrow/LUT engine twin of `similarity_ann_pq`: same head-row
-    quantized codebooks, but encode runs as the broadcast-tensor
-    pandas_udf and ADC as the mapInPandas LUT scorer with per-batch
-    local top-k (functions/pq.py use_arrow=True) — the production
-    engines. BIT-IDENTICAL to the portable row by construction: the
-    quantized inputs are integers, every float64 product/sum stays
-    below 2^53 (exact), and the local top-k lexsorts on (d2, c_id),
-    so the same oracle hashes both."""
+    subspace codebook lookup). Encode is the broadcast-tensor
+    pandas_udf (a zero-shuffle projection) and ADC the mapInPandas
+    LUT scorer with per-batch local top-k (the top-k window is the
+    only exchange). Codebooks are the head rows' QUANTIZED
+    subvectors and both sides are pre-quantized, so every input is an
+    integer: for embeddings with |x| < 1, |q - c| < 2^21 per element,
+    a squared difference is below 2^42 and a sum over the 64 dims
+    below 2^48 — every float64 product and sum stays below 2^53 and
+    is exact. The local top-k lexsorts on (d2, c_id), so codes, d2
+    and ranks equal the DuckDB oracle's int64 replay bit for bit."""
     from ..functions import pq
 
     emb = table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
@@ -849,12 +825,12 @@ def similarity_ann_pq_arrow(spark, sf_dir):
         F.col("vec_id").alias("c_id"),
         similarity.quantize_vec(F.col("embedding")).cast("array<double>").alias("qv"),
     )
-    codes = pq.pq_encode(qcorpus, "qv", fbs, 64, use_arrow=True).select("c_id", "codes")
+    codes = pq.pq_encode(qcorpus, "qv", fbs, 64).select("c_id", "codes")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"),
         similarity.quantize_vec(F.col("embedding")).cast("array<double>").alias("q_vec"),
     )
-    return pq.pq_adc_topk(queries, codes, fbs, 64, k=5, use_arrow=True).select(
+    return pq.pq_adc_topk(queries, codes, fbs, 64, k=5).select(
         "q_id", "c_id", F.col("d2").cast("long").alias("d2"),
         F.col("rank").cast("long").alias("rank"),
     )
@@ -1474,7 +1450,7 @@ def embedding_dedup_clusters(spark, sf_dir):
     dedup_clusters; pinned against recursive-CTE reachability."""
     emb = table(spark, sf_dir, "embeddings")
     return similarity.embedding_dedup_clusters(
-        emb, "vec_id", "embedding", dim=64, threshold=0.35, n_planes=8, portable=True
+        emb, "vec_id", "embedding", dim=64, threshold=0.35, n_planes=8
     )
 
 

@@ -126,7 +126,7 @@ def test_hier_probe_arrow_matches_flat_all_supers(spark, sf_dir):
     flat = {
         (r.q_id, r.list_id)
         for r in similarity.with_probe_lists(
-            queries, "q_vec", leaves, 4, use_arrow=True
+            queries, "q_vec", leaves, 4
         ).select("q_id", "list_id").collect()
     }
     hier = {
@@ -148,7 +148,7 @@ def test_hier_nearest_single_super_matches_flat(spark, sf_dir):
     flat = {
         (r.c_id, r.list_id)
         for r in similarity.with_nearest_list(
-            corpus, "c_vec", leaves, use_arrow=True
+            corpus, "c_vec", leaves
         ).select("c_id", "list_id").collect()
     }
     hier = {
@@ -178,6 +178,58 @@ def test_hier_nearest_null_vector(spark):
     assert got == {0: 0, 1: None}
     probed = similarity.with_probe_lists_hier(emb, "c_vec", hq, 2, 1).collect()
     assert {r.c_id for r in probed} == {0}
+
+
+# 2-dim vectors: (id, vector) with a NULL element, the wrong length
+# (1 and 3 elements) and NULL, next to two well-formed rows
+_MALFORMED = [
+    (0, [1.0, 0.0]), (1, [1.0, None]), (2, [1.0]), (3, [0.0, 1.0, 0.0]),
+    (4, None), (5, [0.0, 1.0]),
+]
+
+
+def test_malformed_vectors_assign_null(spark):
+    """Every Arrow nearest-centroid kernel treats a vector with a NULL
+    element or a length other than the centroids' like a NULL vector:
+    NULL cell (or cluster/dist2), no probe rows. Arrow hands a NULL
+    element over as NaN, which would take a real cell, and a ragged
+    batch would fail the whole job in np.stack."""
+    df = spark.createDataFrame(_MALFORMED, "c_id long, c_vec array<double>")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    hq = similarity.HierQuantizer(
+        [[1.0, 0.0], [0.0, 1.0]],
+        [[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.1, 0.9]],
+        [0, 0, 1, 1],
+    )
+    want = {0: 0, 1: None, 2: None, 3: None, 4: None, 5: 1}
+    want_hier = {0: 0, 1: None, 2: None, 3: None, 4: None, 5: 2}
+
+    def cells(out):
+        return {r.c_id: r.list_id for r in out.collect()}
+
+    def probed(out):
+        return {r.c_id for r in out.collect()}
+
+    assert cells(similarity.with_nearest_list(df, "c_vec", cents)) == want
+    assert probed(similarity.with_probe_lists(df, "c_vec", cents, 2)) == {0, 5}
+    assert cells(similarity.with_nearest_list_hier(df, "c_vec", hq)) == want_hier
+    assert probed(similarity.with_probe_lists_hier(df, "c_vec", hq, 2, 1)) == {0, 5}
+    in_super = similarity._with_leaf_in_super(
+        df.withColumn("super_id", F.lit(1)), "c_vec", "super_id", hq
+    )
+    assert {r.c_id: r.leaf_id for r in in_super.collect()} == {
+        0: 3, 1: None, 2: None, 3: None, 4: None, 5: 2
+    }
+
+    icents = [[1 << 20, 0], [0, 1 << 20]]
+    flat = similarity._assign_cells_int(df, "c_id", "c_vec", icents)
+    hier = similarity._assign_cells_int_hier(
+        df, "c_id", "c_vec", icents, [icents[0]]
+    )
+    for out in (flat, hier):
+        got = {r.c_id: (r.cluster, r.dist2) for r in out.collect()}
+        assert got == {0: (0, 0), 1: (None, None), 2: (None, None),
+                       3: (None, None), 4: (None, None), 5: (1, 0)}
 
 
 @pytest.mark.slow

@@ -90,6 +90,22 @@ def test_simhash_zero_shuffle(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+def test_lsh_near_dups_bucket_each_vector_once(spark, sf_dir):
+    """The LSH self-join buckets each vector once: both join sides
+    read one bucket-keyed exchange (the second is a ReusedExchange),
+    so the executed plan holds a single `bucketize` pass."""
+    from malstrom_spark.functions import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    pairs = similarity.embedding_near_dups_portable(
+        emb, "vec_id", "embedding", dim=64
+    )
+    pairs.collect()
+    plan = plan_simple(pairs)
+    assert plan.count("MapInPandas bucketize") == 1, plan
+    assert "ReusedExchange" in plan, plan
+
+
 def test_cosine_topk_broadcasts_queries(spark, sf_dir, reg):
     plan = plan_of(reg["similarity_topk_cosine"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan

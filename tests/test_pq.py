@@ -1,11 +1,13 @@
-"""Product quantization: encode/ADC engine identity, codebook fit
-determinism, IVF-PQ composition, recall floor, and plan shape."""
+"""Product quantization: encode/ADC against numpy references,
+malformed-vector handling, codebook fit determinism, IVF-PQ
+composition, recall floor, and plan shape."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from malstrom_spark.functions import pq
-from malstrom_spark.functions.similarity import cosine_topk
+from malstrom_spark.functions.similarity import cosine_topk, quantize_vec
 from malstrom_spark.queries import table
 
 
@@ -19,19 +21,28 @@ def learned_books(emb):
     return pq.pq_fit_codebooks(emb, "embedding", 64, m=8, k=16, n_iters=3)
 
 
+def _quantized(vec_col, out_col):
+    """The gate row's pre-quantized input: round(x * 2^20) as doubles."""
+    return quantize_vec(F.col(vec_col)).cast("array<double>").alias(out_col)
+
+
 def test_head_codebooks_self_encode(spark, emb):
     """Head vectors ARE codebook entries, so each must encode to its
-    own index in every subspace and ADC-score itself at distance 0."""
+    own index in every subspace and ADC-score itself at distance 0
+    (the similarity_ann_pq form: pre-quantized vectors, the integer
+    head codebooks as floats)."""
     cbs = pq.pq_head_codebooks(emb, "embedding", "vec_id", 64, m=8, k=16)
     assert len(cbs) == 8 and len(cbs[0]) == 16 and len(cbs[0][0]) == 8
-    enc = pq.pq_encode(emb, "embedding", cbs, 64, integer=True)
+    fbs = [[[float(x) for x in e] for e in b] for b in cbs]
+    qemb = emb.select("vec_id", _quantized("embedding", "qv"))
+    enc = pq.pq_encode(qemb, "qv", fbs, 64)
     head = {r.vec_id: list(r.codes) for r in enc.where(F.col("vec_id") < 16).collect()}
     assert head == {i: [i] * 8 for i in range(16)}
-    q = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    q = qemb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("q_id"), F.col("qv").alias("q_vec")
     )
     codes = enc.select(F.col("vec_id").alias("c_id"), "codes")
-    top = pq.pq_adc_topk(q, codes, cbs, 64, k=1, integer=True).collect()
+    top = pq.pq_adc_topk(q, codes, fbs, 64, k=1).collect()
     assert {(r.q_id, r.c_id, r.d2) for r in top} == {(i, i, 0) for i in range(4)}
 
 
@@ -44,49 +55,94 @@ def test_fit_deterministic_and_geometry(emb, learned_books):
         pq.pq_fit_codebooks(emb, "embedding", 64, m=7)
 
 
-def test_encode_literal_arrow_identical(emb, learned_books):
-    lit = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=False)
-    arw = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=True)
-    lmap = {r.vec_id: list(r.codes) for r in lit.collect()}
-    amap = {r.vec_id: list(r.codes) for r in arw.collect()}
-    assert lmap == amap
+def _np_encode(vec, books):
+    """Driver-side reference code: per subspace the first-min argmin
+    of the full squared L2 to each codebook entry."""
+    x = np.asarray(vec, dtype=np.float64)
+    C = np.asarray(books, dtype=np.float64)
+    m, _, dsub = C.shape
+    return [
+        int(np.argmin(((x[s * dsub:(s + 1) * dsub] - C[s]) ** 2).sum(axis=1)))
+        for s in range(m)
+    ]
+
+
+def test_encode_matches_numpy_reference(emb, learned_books):
+    rows = emb.collect()
+    got = {
+        r.vec_id: list(r.codes)
+        for r in pq.pq_encode(emb, "embedding", learned_books, 64).collect()
+    }
+    want = {r.vec_id: _np_encode(r.embedding, learned_books) for r in rows}
+    assert got == want and len(got) == len(rows)
 
 
 def test_encode_null_vector_encodes_null(spark, learned_books):
     df = spark.createDataFrame(
         [(1, [0.0] * 64), (2, None)], "id long, embedding array<float>"
     )
-    for arrow in (False, True):
-        got = {
-            r.id: r.codes
-            for r in pq.pq_encode(
-                df, "embedding", learned_books, 64, use_arrow=arrow
-            ).collect()
-        }
-        assert got[2] is None and got[1] is not None
+    got = {
+        r.id: r.codes
+        for r in pq.pq_encode(df, "embedding", learned_books, 64).collect()
+    }
+    assert got[2] is None and got[1] is not None
 
 
-def test_adc_literal_arrow_identical(emb, learned_books):
-    enc = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=False)
+def test_malformed_vectors_encode_null_and_queries_drop(spark, learned_books):
+    """A vector with a NULL element or a length other than `dim` is
+    treated like a NULL vector: it encodes NULL (not code 0 from a
+    NaN-masked argmin) and, as a query, is dropped — and a ragged
+    batch no longer fails the whole job."""
+    df = spark.createDataFrame(
+        [(1, [0.1] * 64), (2, [0.1] * 63 + [None]), (3, [0.1] * 63),
+         (4, [0.1] * 65), (5, None)],
+        "id long, embedding array<float>",
+    )
+    got = {
+        r.id: r.codes
+        for r in pq.pq_encode(df, "embedding", learned_books, 64).collect()
+    }
+    assert got == {1: _np_encode([0.1] * 64, learned_books),
+                   2: None, 3: None, 4: None, 5: None}
+    codes = spark.createDataFrame([(7, got[1])], "c_id long, codes array<int>")
+    queries = df.select(F.col("id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    top = pq.pq_adc_topk(queries, codes, learned_books, 64, k=1).collect()
+    assert {r.q_id for r in top} == {1}
+
+
+def test_adc_matches_numpy_reference(emb, learned_books):
+    """ADC distances and ranks equal a driver-side LUT-free reference:
+    d2 = sum_s ||q_s - cb[s][code_s]||^2, ranked by (d2, c_id)."""
+    enc = pq.pq_encode(emb, "embedding", learned_books, 64)
     q = emb.where(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     codes = enc.select(F.col("vec_id").alias("c_id"), "codes")
-    lit = pq.pq_adc_topk(q, codes, learned_books, 64, k=5, use_arrow=False).collect()
-    arw = pq.pq_adc_topk(q, codes, learned_books, 64, k=5, use_arrow=True).collect()
-    key = lambda r: (r.q_id, r.rank)  # noqa: E731
-    lit, arw = sorted(lit, key=key), sorted(arw, key=key)
-    assert [(r.q_id, r.c_id, r.rank) for r in lit] == [
-        (r.q_id, r.c_id, r.rank) for r in arw
-    ]
-    assert all(abs(a.d2 - b.d2) < 1e-9 for a, b in zip(lit, arw))
+    got = sorted(
+        (r.q_id, r.rank, r.c_id, r.d2)
+        for r in pq.pq_adc_topk(q, codes, learned_books, 64, k=5).collect()
+    )
+    C = np.asarray(learned_books, dtype=np.float64)
+    m, _, dsub = C.shape
+    corpus = [(r.c_id, r.codes) for r in codes.collect()]
+    want = []
+    for qr in q.collect():
+        x = np.asarray(qr.q_vec, dtype=np.float64).reshape(m, dsub)
+        scored = sorted(
+            (float(sum(((x[s] - C[s][cd[s]]) ** 2).sum() for s in range(m))), cid)
+            for cid, cd in corpus
+        )
+        want += [(qr.q_id, rk + 1, cid, d2) for rk, (d2, cid) in enumerate(scored[:5])]
+    want.sort()
+    assert [t[:3] for t in got] == [t[:3] for t in want]
+    assert all(abs(a[3] - b[3]) < 1e-9 for a, b in zip(got, want))
 
 
 def test_adc_recall_vs_exact(emb, learned_books):
     """PQ is lossy; assert recall@10 of ADC against exact cosine
     top-10 clears a floor on the near-uniform synthetic embeddings
     (weak structure -> modest bar, same rationale as the LSH tests)."""
-    enc = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=False)
+    enc = pq.pq_encode(emb, "embedding", learned_books, 64)
     q = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
@@ -128,26 +184,25 @@ def test_ivf_pq_topk_smoke_and_refine(emb, learned_books):
 
 
 def test_encode_is_shuffle_free_projection(emb, learned_books):
-    """Encode must fuse into the scan: no Exchange in the plan for
-    either engine (the 100 TB contract — codes append map-side)."""
-    for arrow in (False, True):
-        plan = (
-            pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=arrow)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan, plan
+    """Encode must fuse into the scan: no Exchange in the plan (the
+    100 TB contract — codes append map-side)."""
+    plan = (
+        pq.pq_encode(emb, "embedding", learned_books, 64)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Exchange" not in plan, plan
 
 
 def test_adc_arrow_shuffles_only_topk(emb, learned_books):
-    """Arrow ADC: corpus scoring is map-side (local top-k), the only
+    """ADC: corpus scoring is map-side (local top-k), the only
     exchange is the k*|Q|-row global top-k window."""
-    enc = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=False)
+    enc = pq.pq_encode(emb, "embedding", learned_books, 64)
     q = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     codes = enc.select(F.col("vec_id").alias("c_id"), "codes")
     plan = (
-        pq.pq_adc_topk(q, codes, learned_books, 64, k=5, use_arrow=True)
+        pq.pq_adc_topk(q, codes, learned_books, 64, k=5)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1, plan
@@ -159,27 +214,11 @@ def test_geometry_validation(spark, emb):
         pq.pq_encode(emb, "embedding", bad, 64)
 
 
-def test_integer_arrow_combination_rejected(spark, emb):
-    """integer=True + use_arrow=True would silently skip quantization
-    in the arrow engine — must refuse, not mis-score."""
-    cbs = pq.pq_head_codebooks(emb, "embedding", "vec_id", 64, m=8, k=16)
-    with pytest.raises(ValueError, match="literal engine"):
-        pq.pq_encode(emb, "embedding", cbs, 64, integer=True, use_arrow=True)
-    q = emb.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    codes = pq.pq_encode(emb, "embedding", cbs, 64, integer=True).select(
-        F.col("vec_id").alias("c_id"), "codes"
-    )
-    with pytest.raises(ValueError, match="literal engine"):
-        pq.pq_adc_topk(q, codes, cbs, 64, integer=True, use_arrow=True)
-
-
 def test_adc_arrow_null_and_empty_queries(spark, emb, learned_books):
-    """Engine parity on degenerate query sets: NULL query vectors drop
-    (as the literal engine's null-d2 filter does) and an all-null /
-    empty query set returns an empty result, not a crash."""
-    enc = pq.pq_encode(emb, "embedding", learned_books, 64, use_arrow=False)
+    """Degenerate query sets: NULL query vectors drop and an
+    all-null / empty query set returns an empty result, not a
+    crash."""
+    enc = pq.pq_encode(emb, "embedding", learned_books, 64)
     codes = enc.select(F.col("vec_id").alias("c_id"), "codes")
     one_null = spark.createDataFrame(
         [(0, None)], "q_id long, q_vec array<float>"
@@ -188,9 +227,7 @@ def test_adc_arrow_null_and_empty_queries(spark, emb, learned_books):
             "vec_id as q_id", "cast(embedding as array<float>) as q_vec"
         )
     )
-    for arrow in (False, True):
-        got = pq.pq_adc_topk(one_null, codes, learned_books, 64, k=3,
-                             use_arrow=arrow).collect()
-        assert {r.q_id for r in got} == {1}, (arrow, got)
+    got = pq.pq_adc_topk(one_null, codes, learned_books, 64, k=3).collect()
+    assert {r.q_id for r in got} == {1}, got
     all_null = spark.createDataFrame([(0, None)], "q_id long, q_vec array<float>")
-    assert pq.pq_adc_topk(all_null, codes, learned_books, 64, use_arrow=True).count() == 0
+    assert pq.pq_adc_topk(all_null, codes, learned_books, 64).count() == 0

@@ -270,7 +270,7 @@ def test_update_index_delete_then_reinsert(spark):
 
 
 def test_update_index_antijoin_is_broadcast_no_exchange(spark, tmp_path):
-    """The 100 TB claim: with broadcast_touched (default), the
+    """The 100 TB claim: with the touched-id set broadcast, the
     delete-and-replace anti-join is a broadcast hash join — the
     persisted index side is filtered map-side, never shuffled."""
     from malstrom_spark.functions import search as s

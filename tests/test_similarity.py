@@ -38,24 +38,28 @@ def test_cosine_topk_golden(queries, corpus):
     assert abs(sims[1] - math.cos(0.1)) < 1e-6
 
 
-def test_lsh_topk_recall(queries, corpus):
+def test_lsh_topk_portable_recall(queries, corpus):
     exact = {r.c_id for r in similarity.cosine_topk(queries, corpus, k=5).collect()}
     approx = {
         r.c_id
-        for r in similarity.lsh_topk(queries, corpus, dim=8, k=5, n_planes=4).collect()
+        for r in similarity.lsh_topk_portable(
+            queries, corpus, dim=8, k=5, n_planes=4
+        ).collect()
     }
     # low plane count -> big buckets -> should recover most of exact top-5
     assert len(exact & approx) >= 3
 
 
-def test_embedding_near_dups(spark):
+def test_embedding_near_dups_portable(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.999, 0.001, 0.0, 0.0]),  # near-dup of 0
         (2, [0.0, 1.0, 0.0, 0.0]),  # orthogonal
     ]
     df = spark.createDataFrame(rows, "vid long, vec array<float>")
-    pairs = similarity.embedding_near_dups(df, "vid", "vec", dim=4, threshold=0.99, n_planes=2)
+    pairs = similarity.embedding_near_dups_portable(
+        df, "vid", "vec", dim=4, threshold=0.99, n_planes=2
+    )
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 1) in got
     assert all(2 not in p for p in got)
@@ -185,39 +189,6 @@ def test_lsh_bucket_matches_portable_probe_bucket(spark, sf_dir, n_planes):
     assert a == b
     assert a[-1] == a[-2] == a[-3] == 0
     assert len(set(a.values())) > n_planes
-
-
-def test_lsh_multi_probe_lifts_recall(spark, sf_dir):
-    """Query-directed multi-probe: probed bucket sets are supersets by
-    construction, so recall is monotone in n_probe; pin a STRICT and
-    material lift on the testdata (measured 0.225 -> 0.362 recall@5 at
-    6 planes going 1 -> 8 probes; absolute recall is capped by the
-    near-uniform synthetic embeddings, which is why the assertion is
-    relative, not an absolute floor)."""
-    from malstrom_spark.queries import table
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    exact = {
-        (r.q_id, r.c_id)
-        for r in similarity.cosine_topk(queries, corpus, k=5).collect()
-    }
-
-    def recall(n_probe):
-        got = {
-            (r.q_id, r.c_id)
-            for r in similarity.lsh_topk(
-                queries, corpus, dim=64, k=5, n_planes=6, n_probe=n_probe
-            ).collect()
-        }
-        return len(exact & got) / len(exact)
-
-    r1, r4, r8 = recall(1), recall(4), recall(8)
-    assert r1 <= r4 <= r8, f"recall not monotone in n_probe: {r1} {r4} {r8}"
-    assert r8 >= 1.3 * r1, f"multi-probe lift too small: {r1:.3f} -> {r8:.3f}"
 
 
 def test_portable_multi_probe_lifts_recall(spark, sf_dir):
@@ -355,8 +326,7 @@ def test_embedding_dedup_clusters_matches_union_find(spark, sf_dir):
     got = {
         r.vec_id: (r.group_id, r.is_keeper)
         for r in similarity.embedding_dedup_clusters(
-            emb, "vec_id", "embedding", dim=64, threshold=0.35, n_planes=8,
-            portable=True,
+            emb, "vec_id", "embedding", dim=64, threshold=0.35, n_planes=8
         ).collect()
     }
     assert {k: v[0] for k, v in got.items()} == want
@@ -402,11 +372,29 @@ def test_ivf_partitioned_serving_prunes_cells(spark, sf_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_ivf_arrow_assign_matches_literal(spark, sf_dir):
-    """The broadcast-centroid Arrow scorer (the production path for
-    big quantizers, VERDICT r5 item #2) must produce IDENTICAL cell
-    assignments and probe lists to the literal-expression path —
-    same squared-L2 math, same first-min / stable-sort tie-breaks."""
+def _np_ivf(vecs, cents, n_probe):
+    """Driver-side reference for with_nearest_list / with_probe_lists:
+    per vector the distances -2<v,c> + ||c||^2, NaN ranked last, cell
+    = first-min, probes = the n_probe smallest by (distance, list id)."""
+    import numpy as np
+
+    C = np.asarray(cents, dtype=np.float64)
+    n2 = (C * C).sum(axis=1)
+    nearest, probes = {}, {}
+    for i, v in vecs.items():
+        d = -2.0 * (C @ np.asarray(v, dtype=np.float64)) + n2
+        key = [(1, 0.0, j) if np.isnan(x) else (0, float(x), j)
+               for j, x in enumerate(d)]
+        order = [j for _, _, j in sorted(key)]
+        nearest[i] = order[0]
+        probes[i] = set(order[:n_probe])
+    return nearest, probes
+
+
+def test_ivf_assign_matches_numpy_reference(spark, sf_dir):
+    """with_nearest_list and with_probe_lists (the broadcast-centroid
+    Arrow scorer) match a row-at-a-time numpy reference with the same
+    first-min / stable-sort tie-breaks on every testdata embedding."""
     from malstrom_spark.functions import similarity
     from malstrom_spark.queries import table
 
@@ -414,70 +402,48 @@ def test_ivf_arrow_assign_matches_literal(spark, sf_dir):
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
     cents = similarity.ivf_build_centroids(emb, "c_vec", n_lists=8, n_iters=1)
+    vecs = {r.c_id: r.c_vec for r in emb.collect()}
+    nearest, probes = _np_ivf(vecs, cents, 3)
 
-    lit = {
+    got = {
         r.c_id: r.list_id
-        for r in similarity.with_nearest_list(
-            emb, "c_vec", cents, use_arrow=False
-        ).collect()
+        for r in similarity.with_nearest_list(emb, "c_vec", cents).collect()
     }
-    arw = {
-        r.c_id: r.list_id
-        for r in similarity.with_nearest_list(
-            emb, "c_vec", cents, use_arrow=True
-        ).collect()
-    }
-    assert arw == lit and len(lit) > 0
-
-    lit_p = {
-        (r.c_id, r.list_id)
-        for r in similarity.with_probe_lists(
-            emb, "c_vec", cents, n_probe=3, use_arrow=False
-        ).collect()
-    }
-    arw_p = {
-        (r.c_id, r.list_id)
-        for r in similarity.with_probe_lists(
-            emb, "c_vec", cents, n_probe=3, use_arrow=True
-        ).collect()
-    }
-    assert arw_p == lit_p
+    assert got == nearest and len(got) > 0
+    got_p = {}
+    for r in similarity.with_probe_lists(emb, "c_vec", cents, n_probe=3).collect():
+        got_p.setdefault(r.c_id, set()).add(r.list_id)
+    assert got_p == probes
 
 
-def test_ivf_arrow_null_vector_matches_literal(spark):
-    """Null vectors: literal path propagates NULL list_id (and the
-    explode drops the row on the probe side); arrow path must agree."""
+def test_ivf_nan_vector_ranks_last(spark):
+    """NaN-poisoned vectors: a NaN distance loses the argmin (Spark's
+    NaN-greater-than-everything ordering), so an all-NaN vector takes
+    cell 0 and probes cells in id order — the numpy reference's
+    NaN-last rule."""
     from malstrom_spark.functions import similarity
 
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
-        "c_id long, c_vec array<float>",
-    )
+    nan = float("nan")
+    vecs = {0: [1.0, 0.0], 1: [nan, nan], 2: [0.0, 1.0], 3: [nan, 1.0]}
+    df = spark.createDataFrame(list(vecs.items()), "c_id long, c_vec array<double>")
     cents = [[1.0, 0.0], [0.0, 1.0]]
-    for use_arrow in (False, True):
-        got = {
-            r.c_id: r.list_id
-            for r in similarity.with_nearest_list(
-                df, "c_vec", cents, use_arrow=use_arrow
-            ).collect()
-        }
-        assert got == {0: 0, 1: None, 2: 1}, (use_arrow, got)
-        probed = {
-            (r.c_id, r.list_id)
-            for r in similarity.with_probe_lists(
-                df, "c_vec", cents, n_probe=2, use_arrow=use_arrow
-            ).collect()
-        }
-        assert probed == {(0, 0), (0, 1), (2, 1), (2, 0)}, (use_arrow, probed)
+    nearest, probes = _np_ivf(vecs, cents, 2)
+    got = {
+        r.c_id: r.list_id
+        for r in similarity.with_nearest_list(df, "c_vec", cents).collect()
+    }
+    assert got == nearest == {0: 0, 1: 0, 2: 1, 3: 0}
+    got_p = {}
+    for r in similarity.with_probe_lists(df, "c_vec", cents, n_probe=2).collect():
+        got_p.setdefault(r.c_id, set()).add(r.list_id)
+    assert got_p == probes
 
 
 def test_ivf_large_quantizer_uses_arrow_and_plans_fast(spark):
-    """n_lists=1024 x dim=256 (262k literal nodes — above
-    IVF_LITERAL_MAX_NODES): auto-dispatch must pick the Arrow scorer,
-    whose plan carries ONE udf node regardless of quantizer size, and
-    assignment over a small corpus must complete promptly. The
-    literal path at this size would inline 262k literal nodes into
-    the plan (analysis/codegen blowup — the r5 scale-killer)."""
+    """n_lists=1024 x dim=256: the Arrow scorer's plan carries ONE
+    udf node regardless of quantizer size, and assignment over a
+    small corpus must complete promptly (an inlined literal form would
+    carry 262k literal nodes — the r5 scale-killer)."""
     import time
 
     from malstrom_spark.functions import similarity
@@ -488,7 +454,6 @@ def test_ivf_large_quantizer_uses_arrow_and_plans_fast(spark):
         [1.0 if j == (i % dim) else 0.001 * ((i * 7 + j) % 5) for j in range(dim)]
         for i in range(n_lists)
     ]
-    assert n_lists * dim > similarity.IVF_LITERAL_MAX_NODES
     rows = [(i, [float((i + j) % 13) for j in range(dim)]) for i in range(64)]
     df = spark.createDataFrame(rows, "c_id long, c_vec array<float>")
 
@@ -501,40 +466,6 @@ def test_ivf_large_quantizer_uses_arrow_and_plans_fast(spark):
     assert n == 64
     # generous bound: the point is it finishes in seconds, not minutes
     assert dt < 60, f"arrow assignment took {dt:.1f}s"
-
-
-def test_ivf_arrow_nan_vector_matches_literal(spark):
-    """NaN-poisoned vectors (r6 ADVICE): Spark orders NaN greater than
-    everything, so a NaN distance loses the argmin in the literal
-    path; the arrow scorers mask NaN distances to +inf to match. A
-    vector that is ALL NaN has every distance NaN — both engines then
-    pick cell 0 (first-min of equal keys)."""
-    from malstrom_spark.functions import similarity
-
-    nan = float("nan")
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [nan, nan]), (2, [0.0, 1.0])],
-        "c_id long, c_vec array<double>",
-    )
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    results = {}
-    for use_arrow in (False, True):
-        results[use_arrow] = {
-            r.c_id: r.list_id
-            for r in similarity.with_nearest_list(
-                df, "c_vec", cents, use_arrow=use_arrow
-            ).collect()
-        }
-    assert results[True] == results[False], results
-    probe_results = {}
-    for use_arrow in (False, True):
-        probe_results[use_arrow] = sorted(
-            (r.c_id, r.list_id)
-            for r in similarity.with_probe_lists(
-                df, "c_vec", cents, n_probe=2, use_arrow=use_arrow
-            ).collect()
-        )
-    assert probe_results[True] == probe_results[False], probe_results
 
 
 def test_centroid_broadcast_cached_per_matrix(spark):
@@ -672,39 +603,43 @@ def test_semdedup_validation(spark):
         sim.semdedup_head_centroids(df, "vec_id", "embedding", 5)
 
 
-def test_semdedup_assign_arrow_matches_literal(spark):
-    """The two _assign_cells_int engines (literal codegen vs Arrow
-    broadcast matmul) are value-identical — cluster, dist2, and null
-    propagation. The Arrow path scores the JVM-quantized array, so
-    quantization cannot diverge by construction; this pins the
-    argmin/tie-break/None handling."""
+def test_semdedup_assign_matches_python_reference(spark):
+    """_assign_cells_int (Arrow broadcast int64 matmul) equals a
+    Python integer argmin over the quantized vectors — cluster (ties
+    to the smaller index), exact dist2, and NULL propagation."""
     import numpy as np
     from malstrom_spark.functions import similarity as sim
 
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in np.round(rng.normal(0, 1, 8), 6)])
             for i in range(30)]
-    rows.append((30, None))  # null vector: null cluster/dist2 both paths
-    # an exact-tie row: equidistant from centroids 0 and 1 by symmetry
+    rows.append((30, None))  # null vector: null cluster/dist2
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = sim.semdedup_head_centroids(
         df.where("embedding is not null"), "vec_id", "embedding", 4)
-    lit = {r["vec_id"]: (r["cluster"], r["dist2"]) for r in
-           sim._assign_cells_int(df, "vec_id", "embedding", cents,
-                                 use_arrow=False).collect()}
-    arw = {r["vec_id"]: (r["cluster"], r["dist2"]) for r in
-           sim._assign_cells_int(df, "vec_id", "embedding", cents,
-                                 use_arrow=True).collect()}
-    assert lit == arw
-    assert lit[30] == (None, None)
-    # tie-break: a vector EQUAL to centroid 2's quantized value picks 2
+    got = {r["vec_id"]: (r["cluster"], r["dist2"]) for r in
+           sim._assign_cells_int(df, "vec_id", "embedding", cents).collect()}
+    want = {30: (None, None)}
+    for i, v in rows[:30]:
+        q = [int(x) for x in np.round(np.asarray(v) * sim.QUANT_SCALE)]
+        d = [sum((a - b) ** 2 for a, b in zip(q, c)) for c in cents]
+        cell = min(range(len(cents)), key=lambda j: (d[j], j))
+        want[i] = (cell, d[cell])
+    assert got == want
+    # tie-break: a vector EQUAL to centroid 2's quantized value picks
+    # 2 at dist2 0, and one exactly equidistant from two unit
+    # centroids picks the smaller index
     tie = spark.createDataFrame(
         [(0, [x / sim.QUANT_SCALE for x in cents[2]])],
         "vec_id long, embedding array<double>")
-    for ua in (False, True):
-        r = sim._assign_cells_int(tie, "vec_id", "embedding", cents,
-                                  use_arrow=ua).collect()[0]
-        assert (r["cluster"], r["dist2"]) == (2, 0)
+    r = sim._assign_cells_int(tie, "vec_id", "embedding", cents).collect()[0]
+    assert (r["cluster"], r["dist2"]) == (2, 0)
+    unit = 1 << 20
+    tie_cents = [[0, 0, unit] + [0] * 5, [unit] + [0] * 7, [0, unit] + [0] * 6]
+    tie = spark.createDataFrame(
+        [(0, [0.5, 0.5] + [0.0] * 6)], "vec_id long, embedding array<double>")
+    r = sim._assign_cells_int(tie, "vec_id", "embedding", tie_cents).collect()[0]
+    assert (r["cluster"], r["dist2"]) == (1, 2 * (unit // 2) ** 2)
 
 
 def test_semdedup_exact_collapse_identical_output(spark):
