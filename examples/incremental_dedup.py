@@ -62,8 +62,7 @@ def main(spark, sf_dir=None):
         # near-dup pass at the same parameters (candidates restricted
         # to batch x history)
         pairs = dedup.near_dup_pairs_minhash(
-            docs, "doc_id", threshold=0.5, collapse_exact=False,
-            max_bucket_size=None,
+            docs, "doc_id", threshold=0.5, max_bucket_size=None,
         )
         cross = pairs.filter(
             ((F.col("id_a") % 5 == 0) & (F.col("id_b") % 5 != 0))

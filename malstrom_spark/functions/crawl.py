@@ -81,7 +81,6 @@ def crawl_frontier(
     per_host_budget: int | None = None,
     url_col: str = "url",
     portable: bool = False,
-    skew_safe: bool = False,
     host_budget_overrides: dict[str, int] | None = None,
 ) -> DataFrame:
     """The fetchable frontier from a batch of candidate links.
@@ -101,10 +100,7 @@ def crawl_frontier(
     are allowed (layer fetch-nothing-on-missing policy above).
 
     `portable=True` swaps the budget hash to the md5-prefix form both
-    engines compute (oracle rows); `skew_safe=True` swaps the budget
-    window for the histogram-threshold cap (mega-host frontiers —
-    output pinned identical to the plain form by the cap_per_key
-    contracts).
+    engines compute (oracle rows).
 
     `host_budget_overrides` ({host -> budget}, typically
     delay_host_budgets' output from the hosts' Crawl-delay
@@ -114,18 +110,13 @@ def crawl_frontier(
     url_host's lowercase output. The map rides as a literal
     element_at lookup beside the same rank window (no extra shuffle)
     up to _OVERRIDE_LITERAL_MAX hosts, then as one broadcast join —
-    plan size stays bounded either way. Not combinable with
-    skew_safe (the histogram cap has one global threshold);
-    overridden frontiers use the plain window."""
+    plan size stays bounded either way."""
     if per_host_budget is not None and per_host_budget < 1:
         raise ValueError("per_host_budget must be >= 1 (or None)")
     if host_budget_overrides:
         if per_host_budget is None:
             raise ValueError(
                 "host_budget_overrides requires a default per_host_budget")
-        if skew_safe:
-            raise ValueError(
-                "host_budget_overrides is not combinable with skew_safe")
         if any(b < 0 for b in host_budget_overrides.values()):
             raise ValueError("host budgets must be >= 0")
     norm = url_normalize(F.col(url_col))
@@ -163,14 +154,7 @@ def crawl_frontier(
     ordered = cand.withColumn(
         "__ord", F.pmod(hash_fn(F.col("url")), F.lit(_ORD_BITS))
     )
-    if skew_safe:
-        from .corpus import cap_per_key_skew_safe
-
-        capped = cap_per_key_skew_safe(
-            ordered, ["host"], per_host_budget,
-            order_col="__ord", id_col="url", lo=0, hi=_ORD_BITS,
-        )
-    elif host_budget_overrides:
+    if host_budget_overrides:
         from pyspark.sql import Window
 
         # keys lowercased to match url_host's output (robots_allowed

@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..scale import collapse_exact_groups, ensure_parallelism
+from .. import scale
+from ..scale import ensure_parallelism
 from .text import normalize_text, tokens
 
 # Deterministic MinHash parameters (Mersenne prime scheme). 2^31-1 so
@@ -110,19 +111,17 @@ def _shingles_from_tokens(t: Column, n: int) -> Column:
     )
 
 
-def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: float = 0.05):
+def _collapse_exact(
+    df: DataFrame, id_col: str, text_col: str, min_dup_ratio: float | None = None
+):
     """Exact-duplicate collapse: group byte-identical texts on
-    md5(text) and elect min(id) as the group representative.
-
-    ADAPTIVE: first probes the duplicate mass with one narrow
-    (fingerprint count-distinct) aggregation. When fewer than
-    ``min_dup_ratio`` of the docs are byte-duplicates the collapse
-    machinery costs more than it saves (extra checkpoints + joins with
-    near-zero row reduction), so the probe returns ``(df, None)`` and
-    the caller runs the pipeline uncollapsed — output-identical either
-    way. Measured at sf0.1 (0.16% dups): collapse costs +28 s for
-    nothing; at sf1 with 10x-deep clusters it saves ~120 s — the probe
-    is what makes the choice data-driven, same spirit as AQE.
+    md5(text) and elect min(id) as the group representative, when the
+    scale gate (`scale.collapse_exact_groups`: its input-size floor,
+    then its duplicate-mass probe) says the collapse pays. Otherwise
+    returns ``(df, None)`` and the caller runs the pipeline
+    uncollapsed — output-identical either way. Measured at sf0.1
+    (0.16% dups): collapse costs +28 s for nothing; at sf1 with
+    10x-deep clusters it saves ~120 s.
 
     Returns ``(rep_docs, members)`` where ``rep_docs`` is the input
     restricted to representatives and ``members`` maps every id to its
@@ -133,12 +132,12 @@ def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: fl
     benchmark trick. Cost: one narrow (id, fp) shuffle plus a semi-join
     of the corpus against the (smaller) rep-id set.
 
-    The size floor, the probe and the eagerly checkpointed ``members``
-    table are `scale.collapse_exact_groups`, shared with semdedup.
-    Callers checkpoint their own narrow signature tables the same way.
-    This is the local-mode stand-in for the materialized stage table a
-    100 TB deployment writes between the exact and near-dup passes."""
-    groups = collapse_exact_groups(
+    The eagerly checkpointed ``members`` table comes from the gate,
+    shared with semdedup. Callers checkpoint their own narrow
+    signature tables the same way. This is the local-mode stand-in
+    for the materialized stage table a 100 TB deployment writes
+    between the exact and near-dup passes."""
+    groups = scale.collapse_exact_groups(
         df,
         lambda: df.select(
             F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp")
@@ -470,7 +469,6 @@ def near_dup_pairs_minhash(
     n_bands: int = 8,
     threshold: float = 0.8,
     portable: bool = False,
-    collapse_exact: bool = True,
     max_bucket_size: int | None = 4096,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: hashed shingle sets ->
@@ -480,11 +478,13 @@ def near_dup_pairs_minhash(
     registry runs; at cluster scale this stage is a materialized
     parquet stage table instead). ``portable=True`` uses the
     md5-prefix hash throughout so a DuckDB oracle can recompute the
-    identical signatures, buckets and candidate set.
+    identical signatures, buckets and candidate set. Null-text docs
+    never pair.
 
-    ``collapse_exact`` (default) first collapses byte-identical texts
-    and runs the pipeline on distinct-text representatives only, then
-    expands pairs back — output-identical (candidacy and Jaccard are
+    Byte-identical texts are first collapsed (when the scale gate,
+    `scale.collapse_exact_groups`, says it pays) and the pipeline runs
+    on distinct-text representatives only, then expands pairs back —
+    output-identical (candidacy and Jaccard are
     functions of the text) but verify cost scales with the number of
     DISTINCT near-dup texts instead of quadratically with duplicate
     cluster sizes. At sf1 (50k docs, 10x dup clusters): 133.6 s ->
@@ -510,8 +510,7 @@ def near_dup_pairs_minhash(
     `_bucket_candidate_pairs`). Pass ``max_bucket_size=None`` for the
     exact uncapped pair set."""
     verified, members, hs = _minhash_verified(
-        df, id_col, text_col, n_hashes, n_bands, threshold, portable, collapse_exact,
-        max_bucket_size,
+        df, id_col, text_col, n_hashes, n_bands, threshold, portable, max_bucket_size
     )
     if members is None:
         return verified
@@ -530,19 +529,17 @@ def _minhash_verified(
     n_bands: int,
     threshold: float,
     portable: bool,
-    collapse_exact: bool,
     max_bucket_size: int | None = None,
 ):
     """Shared MinHash-LSH core: returns (verified representative-level
     pairs, members-or-None, hash-set stage table). Consumers either
     expand pairs to members (`near_dup_pairs_minhash`) or contract them
     to cluster labels (`dedup_clusters`) — the signature/candidate/
-    verify stages are identical."""
-    df = ensure_parallelism(df, id_col)
-    if collapse_exact:
-        rep_docs, members = _collapse_exact(df, id_col, text_col)
-    else:
-        rep_docs, members = df, None
+    verify stages are identical. Null-text docs are pre-filtered: they
+    never pair (every null text would hash the same one-shingle set,
+    and the collapse never groups a NULL fingerprint)."""
+    df = ensure_parallelism(df.where(F.col(text_col).isNotNull()), id_col)
+    rep_docs, members = _collapse_exact(df, id_col, text_col)
     hs = shingle_hash_sets(rep_docs, id_col, text_col, portable=portable)
     if members is not None:
         # narrow (id, array<long>) stage table consumed by 4 branches
@@ -558,7 +555,7 @@ def _minhash_verified(
         # shingles per consumer; the probe makes this path eager at
         # construction regardless, so the checkpoint adds no new
         # contract (applies with or without the collapse pre-pass —
-        # collapse_exact=False would otherwise recompute the whole
+        # an uncollapsed run would otherwise recompute the whole
         # pipeline for the probe and again for the join)
         sigs = sigs.localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(
@@ -652,7 +649,6 @@ def simhash_near_dups(
     text_col: str = "text",
     max_hamming: int = 3,
     portable: bool = False,
-    collapse_exact: bool = True,
     max_bucket_size: int | None = 4096,
 ) -> DataFrame:
     """SimHash near-dup pairs: band the hash into 4 chunks (16 bits
@@ -660,10 +656,11 @@ def simhash_near_dups(
     within Hamming<=3 shares at least one exact chunk by pigeonhole),
     bucket-join on chunks, verify with bit_count(xor).
 
-    ``collapse_exact`` (default) runs hashing/bucketing/verify on
-    distinct-text representatives and expands pairs back (identical
-    text => identical SimHash => Hamming 0, always a chunk candidate)
-    — output-identical, cost scales with distinct texts.
+    When the scale gate (`scale.collapse_exact_groups`) collapses
+    byte-identical texts, hashing/bucketing/verify run on distinct-text
+    representatives and pairs expand back (identical text => identical
+    SimHash => Hamming 0, always a chunk candidate) — output-identical,
+    cost scales with distinct texts.
 
     EAGER-CONSTRUCTION CONTRACT: when the collapse pre-pass fires, its
     duplicate-mass probe and stage-table checkpoints execute Spark
@@ -680,7 +677,7 @@ def simhash_near_dups(
     documented at `_bucket_candidate_pairs`); pass ``None`` for the
     exact uncapped pair set."""
     verified, members = _simhash_verified(
-        df, id_col, text_col, max_hamming, portable, collapse_exact, max_bucket_size
+        df, id_col, text_col, max_hamming, portable, max_bucket_size
     )
     if members is None:
         return verified
@@ -696,7 +693,6 @@ def _simhash_verified(
     text_col: str,
     max_hamming: int,
     portable: bool,
-    collapse_exact: bool,
     max_bucket_size: int | None = None,
 ):
     """Shared SimHash core: returns (verified representative-level
@@ -708,10 +704,7 @@ def _simhash_verified(
     # explicit cheap scan filter now that simhash_df folds null to 0
     df = df.where(F.col(text_col).isNotNull())
     df = ensure_parallelism(df, id_col)
-    if collapse_exact:
-        rep_docs, members = _collapse_exact(df, id_col, text_col)
-    else:
-        rep_docs, members = df, None
+    rep_docs, members = _collapse_exact(df, id_col, text_col)
     sh = simhash_df(rep_docs, id_col, text_col, portable=portable)
     if members is not None or max_bucket_size is not None:
         # narrow (id, bigint) stage table feeding both self-join sides
@@ -1033,7 +1026,6 @@ def dedup_clusters(
     threshold: float = 0.8,
     max_hamming: int = 3,
     portable: bool = False,
-    collapse_exact: bool = True,
     max_iters: int = 10,
     max_bucket_size: int | None = 4096,
 ) -> DataFrame:
@@ -1049,8 +1041,9 @@ def dedup_clusters(
     PAIRS from 500k docs (BASELINE.md) — while this entry point never
     materializes an intra-cluster pair at any stage:
 
-    1. exact-collapse (adaptive) groups byte-identical texts and keeps
-       one representative per distinct text;
+    1. exact-collapse groups byte-identical texts and keeps one
+       representative per distinct text, when the scale gate
+       (`scale.collapse_exact_groups`) says it pays;
     2. LSH candidates + verify run on REPRESENTATIVES only, emitting
        rep-level pairs (bounded by distinct-text near-dup structure,
        not cluster sizes);
@@ -1084,17 +1077,16 @@ def dedup_clusters(
     """
     if method == "minhash":
         verified, members, hs = _minhash_verified(
-            df, id_col, text_col, n_hashes, n_bands, threshold, portable, collapse_exact,
-            max_bucket_size,
+            df, id_col, text_col, n_hashes, n_bands, threshold, portable, max_bucket_size
         )
         rep_ids = hs.select(id_col)
         # MinHash-specific: byte-identical docs with EMPTY shingle
-        # sets (null text) score Jaccard 0 uncollapsed — their members
-        # must NOT inherit a shared label (see _expand_pairs).
+        # sets score Jaccard 0 uncollapsed — their members must NOT
+        # inherit a shared label (see _expand_pairs).
         share_reps = hs.where(F.size("sh") > 0).select(F.col(id_col).alias("__rep"))
     elif method == "simhash":
         verified, members = _simhash_verified(
-            df, id_col, text_col, max_hamming, portable, collapse_exact, max_bucket_size
+            df, id_col, text_col, max_hamming, portable, max_bucket_size
         )
         base = df.where(F.col(text_col).isNotNull())
         rep_ids = (
@@ -1568,7 +1560,6 @@ def containment_pairs(
     shingle_n: int = 3,
     portable: bool = False,
     max_bucket_size: int | None = 4096,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC near-dup pairs by shingle-set CONTAINMENT —
     |A ∩ B| / |A| — the quote/aggregator/boilerplate-wrapper signal
@@ -1589,21 +1580,19 @@ def containment_pairs(
     escalation when that tail matters. Verification is exact set
     arithmetic over the hashed shingle sets.
 
-    ``collapse_exact`` (default ON, the near_dup_pairs_minhash
-    discipline): byte-identical texts collapse to one representative
-    before signatures/candidates/verify and the output expands back —
+    Exact-copy collapse (the near_dup_pairs_minhash discipline):
+    byte-identical texts collapse to one representative before
+    signatures/candidates/verify and the output expands back —
     provably identical rows (identical text => identical shingle set
     => candidacy and both containment directions are exactly 1.0, one
-    exact division of equal integers), adaptively skipped when the
-    duplicate mass is negligible (`_collapse_exact` probe). Without
-    it, duplicate-cluster depth makes the verify join quadratic: the
-    round-12 sf100 probe (1000x replicas) SPILLED THE DISK shuffling
-    shingle arrays for intra-cluster candidate pairs before this
-    pre-pass existed."""
-    src = df
-    members = None
-    if collapse_exact:
-        src, members = _collapse_exact(df, id_col, text_col)
+    exact division of equal integers). The scale gate
+    (`scale.collapse_exact_groups`) skips it on small inputs and when
+    the duplicate mass is negligible. Without it, duplicate-cluster
+    depth makes the verify join quadratic: the round-12 sf100 probe
+    (1000x replicas) SPILLED THE DISK shuffling shingle arrays for
+    intra-cluster candidate pairs before this pre-pass existed.
+    Null-text docs never pair (as in `near_dup_pairs_minhash`)."""
+    src, members = _collapse_exact(df.where(F.col(text_col).isNotNull()), id_col, text_col)
     bands = minhash_band_table(
         src, id_col, text_col, n_hashes, n_bands, shingle_n, portable,
         max_bucket_size=None,

@@ -151,8 +151,8 @@ def fuzzy_entity_edges(
     is the wrong input to iterated CC shuffles; this is the same
     rep-level contraction `dedup_clusters` applies to MinHash
     near-dup groups. min_dup_ratio=0 keeps the contraction on for any
-    measured duplicate mass; below `_collapse_exact`'s input-size
-    floor (round-12 session 4) the probe and collapse are skipped and
+    duplicate mass, with no probe job; below the gate's input-size
+    floor (round-12 session 4) the collapse is skipped and
     CC runs on member-level pairs — components identical, and at such
     sizes the quadratic term cannot bite."""
     from .dedup import _collapse_exact
@@ -179,7 +179,6 @@ def fuzzy_self_pairs(
     max_distance: int = 2,
     prefix_len: int | None = None,
     lowercase: bool = True,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """All unordered pairs (id_l < id_r) of rows whose `s_col` values
     are within `max_distance` edits. Output: id_l, id_r, s_l, s_r,
@@ -193,26 +192,23 @@ def fuzzy_self_pairs(
     by that duplication factor); the two name lookups and the
     levenshtein verify run once per DISTINCT pair.
 
-    ``collapse_exact`` (default ON, the dedup-family discipline):
-    rows with IDENTICAL normalized strings collapse to one
-    representative before variant generation and the output expands
-    back — provably identical rows (candidacy, the verify and both
-    string columns are pure functions of the normalized string;
-    identical strings are always within any max_distance >= 0 at
-    dist 0), adaptively skipped when the duplicate mass is negligible
-    (`dedup._collapse_exact` probe). Without it, duplicated keys make
+    Exact-copy collapse (the dedup-family discipline): rows with
+    IDENTICAL normalized strings collapse to one representative before
+    variant generation and the output expands back — provably
+    identical rows (candidacy, the verify and both string columns are
+    pure functions of the normalized string; identical strings are
+    always within any max_distance >= 0 at dist 0). The scale gate
+    (`scale.collapse_exact_groups`) skips it on small inputs and when
+    the duplicate mass is negligible. Without it, duplicated keys make
     the variant join quadratic per copy cluster: a 1000-deep
     identical-name cluster shares ALL ~L²/2 variants, so each variant
     bucket alone yields 500k candidate rows — the round-12 sf100
     probe's entity-resolution wall (replica names are 1000-deep by
     construction, and real corpora duplicate author/site names just
     the same)."""
-    norm = _norm(df, id_col, s_col, lowercase)
-    members = None
-    if collapse_exact:
-        from .dedup import _collapse_exact
+    from .dedup import _collapse_exact
 
-        norm, members = _collapse_exact(norm, "__id", "__s")
+    norm, members = _collapse_exact(_norm(df, id_col, s_col, lowercase), "__id", "__s")
     pairs = _self_pairs_core(norm, max_distance, prefix_len)
     if members is None:
         return pairs
@@ -259,7 +255,6 @@ def fuzzy_join(
     max_distance: int = 2,
     prefix_len: int | None = None,
     lowercase: bool = True,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Two-table linkage: every (left, right) pair within
     `max_distance` edits. Output: <left_id>, <right_id>, s_l, s_r,
@@ -268,15 +263,11 @@ def fuzzy_join(
     identical normalized keys collapse independently, the candidate
     join runs rep x rep, and every (left member, right member)
     combination inherits its rep pair verbatim (pure-function-of-
-    the-strings argument; adaptive per-side probes)."""
+    the-strings argument; the scale gate decides per side)."""
     from .dedup import _collapse_exact
 
-    ln = _norm(left, left_id, left_col, lowercase)
-    rn = _norm(right, right_id, right_col, lowercase)
-    lm = rm = None
-    if collapse_exact:
-        ln, lm = _collapse_exact(ln, "__id", "__s")
-        rn, rm = _collapse_exact(rn, "__id", "__s")
+    ln, lm = _collapse_exact(_norm(left, left_id, left_col, lowercase), "__id", "__s")
+    rn, rm = _collapse_exact(_norm(right, right_id, right_col, lowercase), "__id", "__s")
     lv = _variant_hashes(ln, max_distance, prefix_len)
     rv = _variant_hashes(rn, max_distance, prefix_len)
     cand = (

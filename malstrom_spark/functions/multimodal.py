@@ -2101,7 +2101,6 @@ def audio_match_pairs(
     id_col: str,
     min_matches: int = 8,
     max_fp_freq: int | None = 1024,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Audio near-dup pairs from a fingerprint table: candidates from
     an fp equi-join (never all-pairs — the LSH-bucket discipline),
@@ -2110,12 +2109,11 @@ def audio_match_pairs(
     (id_a, id_b, n_aligned) for pairs whose best offset has >=
     min_matches aligned landmarks.
 
-    ``collapse_exact`` (default ON): clips whose ENTIRE landmark
-    sequence is identical — exact copies, the heaviest dedup target —
-    are collapsed to one representative (min id) BEFORE the stop-fp
-    cap and the self-join, then rejoin the output as star edges
-    (rep, copy, n_aligned = the copy's landmark count, its dt=0
-    alignment). Without this, a clip duplicated more than
+    Clips whose ENTIRE landmark sequence is identical — exact copies,
+    the heaviest dedup target — are always collapsed to one
+    representative (min id) BEFORE the stop-fp cap and the self-join,
+    then rejoin the output as star edges (rep, copy, n_aligned = the
+    copy's landmark count, its dt=0 alignment). Without this, a clip duplicated more than
     max_fp_freq times would push every one of its own hashes over
     the cap and become completely undetectable. With the collapse on,
     output is REP-LEVEL: pairs between non-representative copies of
@@ -2132,55 +2130,52 @@ def audio_match_pairs(
     silence-adjacent peaks) contributes quadratic join fanout and ~no
     discrimination (true copies align on their many RARE hashes).
     The count is one map-side-combinable groupBy; None disables.
-    With collapse_exact off, note the blind spot: a clip with more
-    than max_fp_freq exact copies contributes that many rows to each
-    of its hashes and drops out entirely.
+    It counts representatives only, so a clip with more than
+    max_fp_freq exact copies still matches.
 
     Shape: one id-keyed signature groupBy (collapse), one self-join
     on fp (hash-distributed; skew bounded by the stop-fp cap), one
     (pair, offset) count, one per-pair max — all map-side
     combinable."""
-    stars = None
-    if collapse_exact:
-        # canonical per-clip signature: sorted (t_anchor, fp) list
-        # hashed — exact payload copies produce identical landmark
-        # sequences, so identical signatures; sort_array removes the
-        # collect_list order nondeterminism. List size is bounded by
-        # max_frames * peaks_per_frame * fanout from audio_landmarks.
-        # 128-bit md5 (the semdedup exact-collapse discipline), NOT
-        # xxhash64: collapse edges skip downstream verification, and
-        # a 64-bit birthday collision at ~1e9 clips (~3%) would merge
-        # two genuinely different clips as 'exact copies'
-        sig_bytes = F.to_binary(
-            F.md5(
-                F.to_json(
-                    F.sort_array(F.collect_list(F.struct("t_anchor", "fp")))
-                )
-            ),
-            F.lit("hex"),
-        )
-        sets = fingerprints.groupBy(id_col).agg(
-            sig_bytes.alias("__sig"),
-            F.count(F.lit(1)).alias("__nfp"),
-        )
-        reps = sets.groupBy("__sig").agg(F.min(id_col).alias("__rep"))
-        members = sets.join(reps, "__sig")
-        # rep = min(id) of its copy set, so rep < copy: order holds
-        stars = (
-            members.where(F.col(id_col) != F.col("__rep"))
-            .select(
-                F.col("__rep").alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                F.col("__nfp").cast("long").alias("n_aligned"),
+    # canonical per-clip signature: sorted (t_anchor, fp) list
+    # hashed — exact payload copies produce identical landmark
+    # sequences, so identical signatures; sort_array removes the
+    # collect_list order nondeterminism. List size is bounded by
+    # max_frames * peaks_per_frame * fanout from audio_landmarks.
+    # 128-bit md5 (the semdedup exact-collapse discipline), NOT
+    # xxhash64: collapse edges skip downstream verification, and
+    # a 64-bit birthday collision at ~1e9 clips (~3%) would merge
+    # two genuinely different clips as 'exact copies'
+    sig_bytes = F.to_binary(
+        F.md5(
+            F.to_json(
+                F.sort_array(F.collect_list(F.struct("t_anchor", "fp")))
             )
-            .where(F.col("n_aligned") >= min_matches)
+        ),
+        F.lit("hex"),
+    )
+    sets = fingerprints.groupBy(id_col).agg(
+        sig_bytes.alias("__sig"),
+        F.count(F.lit(1)).alias("__nfp"),
+    )
+    reps = sets.groupBy("__sig").agg(F.min(id_col).alias("__rep"))
+    members = sets.join(reps, "__sig")
+    # rep = min(id) of its copy set, so rep < copy: order holds
+    stars = (
+        members.where(F.col(id_col) != F.col("__rep"))
+        .select(
+            F.col("__rep").alias("id_a"),
+            F.col(id_col).alias("id_b"),
+            F.col("__nfp").cast("long").alias("n_aligned"),
         )
-        fingerprints = fingerprints.join(
-            members.where(F.col(id_col) == F.col("__rep"))
-            .select(id_col),
-            id_col,
-            "left_semi",
-        )
+        .where(F.col("n_aligned") >= min_matches)
+    )
+    fingerprints = fingerprints.join(
+        members.where(F.col(id_col) == F.col("__rep"))
+        .select(id_col),
+        id_col,
+        "left_semi",
+    )
     if max_fp_freq is not None:
         hot = (
             fingerprints.groupBy("fp")
@@ -2208,6 +2203,4 @@ def audio_match_pairs(
         .agg(F.max("n").cast("long").alias("n_aligned"))
         .where(F.col("n_aligned") >= min_matches)
     )
-    if stars is not None:
-        pairs = pairs.union(stars)
-    return pairs
+    return pairs.union(stars)

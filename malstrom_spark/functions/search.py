@@ -182,7 +182,6 @@ def bm25_topk_from_index(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    pushdown_terms: bool = True,
 ) -> DataFrame:
     """BM25 top-k served FROM THE INDEX instead of the raw corpus —
     the production serving path once `inverted_index`/`doc_stats`
@@ -216,14 +215,11 @@ def bm25_topk_from_index(
     # broadcast join (plan-pinned in tests/test_search.py). The
     # collect snapshots `queries` at construction time and launches a
     # job — the queries relation must therefore be DETERMINISTIC
-    # (re-evaluation contract); pass pushdown_terms=False for
-    # non-deterministic query sources or plan-only inspection.
-    pruned = postings
-    if pushdown_terms:
-        terms_local = sorted(
-            {r["term"] for r in qterms.select("term").distinct().collect()}
-        )
-        pruned = postings.where(F.col("term").isin(terms_local))
+    # (re-evaluation contract).
+    terms_local = sorted(
+        {r["term"] for r in qterms.select("term").distinct().collect()}
+    )
+    pruned = postings.where(F.col("term").isin(terms_local))
     matches = (
         pruned.join(F.broadcast(qterms), "term")
         .select(

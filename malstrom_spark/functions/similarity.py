@@ -43,7 +43,7 @@ import pandas as pd  # module-level: pandas_udf type hints ('pd.Series'
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..scale import collapse_exact_groups
+from .. import scale
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1546,7 +1546,6 @@ def semdedup(
     centroids: list[list[int]],
     threshold: float = 0.9,
     max_iters: int = 10,
-    collapse_exact: bool | None = None,
     super_centroids: list[list[int]] | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public): semantic dedup by
@@ -1575,18 +1574,19 @@ def semdedup(
     uses; keeper selection is one window over groups. One vector-
     keyed shuffle (the cluster join), one group window.
 
-    ``collapse_exact`` (default: adaptive probe, the
-    functions/dedup._collapse_exact discipline applied to vectors):
-    byte-identical float vectors always pair at cosine 1 >= threshold,
-    so when the duplicate mass justifies it the within-cluster pair
+    Exact-copy collapse (the functions/dedup._collapse_exact
+    discipline applied to vectors): byte-identical float vectors
+    always pair at cosine 1 >= threshold, so when the scale gate
+    (`scale.collapse_exact_groups`: input-size floor, then
+    duplicate-mass probe) says it pays, the within-cluster pair
     join runs on DISTINCT vectors only and the copies rejoin their
     representative's component via star edges — output provably
     identical (every star edge is a real threshold-passing pair; any
     full-graph edge maps to a rep-rep edge with the same cosine). In
     a dup-heavy corpus — the case semantic dedup exists for — pair
-    work drops with the square of the mean copy count. Skipped
-    automatically when threshold > 1 (no pair is guaranteed then) or
-    the duplicate mass is under 5%; null AND zero-norm vectors are
+    work drops with the square of the mean copy count. Never tried
+    when threshold > 1 (no pair is guaranteed then); null AND
+    zero-norm vectors are
     never collapsed (cosine with a zero vector is NULL -> below any
     threshold, so they pair with nothing in the plain path; merging
     byte-identical zero vectors via star edges would invent groups
@@ -1609,7 +1609,7 @@ def semdedup(
     ).localCheckpoint(eager=True)
 
     members = None
-    if collapse_exact is not False and threshold <= 1.0:
+    if threshold <= 1.0:
         def fingerprints():
             return assigned.where(
                 F.col("__v").isNotNull()
@@ -1627,9 +1627,7 @@ def semdedup(
         # localCheckpoint is a LogicalRDD whose size estimate is not
         # scan-derived, so it lands on the wrong side of a file-size
         # floor; `df`'s lineage is the scan
-        groups = collapse_exact_groups(
-            df, fingerprints, id_col, probe=collapse_exact is None
-        )
+        groups = scale.collapse_exact_groups(df, fingerprints, id_col)
         if groups is not None:
             members = groups[1]
     pair_src = assigned

@@ -3,7 +3,7 @@
 The reference runtime has one scale input, the worker count
 (malstrom-core/src/runtime/threaded/multi.rs:44-120), and no size
 heuristics. Where this package overrides Spark's own planning (the
-parallelism floor, the exact-collapse probe, IVF join salting) it asks
+parallelism floor, the exact-collapse gate, IVF join salting) it asks
 this module: the core count is read here only, and every size floor is
 a constant here.
 """
@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 #: 1.04 MiB). Opaque lineage estimates default to huge, so an unknown
 #: size fails open to the probe.
 COLLAPSE_PROBE_MIN_BYTES = 1 << 20
+
+#: Duplicate share under which the probe skips the collapse: with
+#: fewer duplicates the extra checkpoint and joins cost more than the
+#: rows they remove (sf0.1, 0.16% dups: +28 s for nothing). A floor
+#: of 0 or less skips the probe job and always collapses.
+COLLAPSE_MIN_DUP_RATIO = 0.05
 
 
 def _estimate_scan_partitions(df: DataFrame) -> int | None:
@@ -118,21 +124,24 @@ def collapse_exact_groups(
     source: DataFrame,
     fingerprints: Callable[[], DataFrame],
     id_col: str,
-    min_dup_ratio: float = 0.05,
-    probe: bool = True,
+    min_dup_ratio: float | None = None,
 ) -> tuple[DataFrame, DataFrame] | None:
-    """Group exact duplicates by fingerprint and elect min(id) as each
-    group's representative.
+    """The exact-duplicate collapse gate: group exact duplicates by
+    fingerprint and elect min(id) as each group's representative, or
+    decline when collapsing cannot pay.
 
     ``fingerprints()`` builds a frame of ``id_col`` and ``__fp`` (a
-    byte-exact fingerprint: md5 of the text or of the vector); it is
-    not called when the size floor skips the collapse. With ``probe``
-    the collapse is adaptive: skipped outright when ``source`` (the
-    frame whose lineage is the scan) estimates under
-    `COLLAPSE_PROBE_MIN_BYTES`, else one narrow job counts
-    fingerprints and the collapse is skipped when fewer than
-    ``min_dup_ratio`` of the rows are duplicates. Callers' output is
-    identical either way; only the cost differs.
+    byte-exact fingerprint: md5 of the text or of the vector). The
+    gate decides in two steps, each read from this module at call
+    time. First, when ``source`` (the frame whose lineage is the scan)
+    estimates under `COLLAPSE_PROBE_MIN_BYTES`, the collapse is skipped
+    and ``fingerprints`` is never called. Then one narrow job counts
+    fingerprints, and the collapse is skipped when fewer than
+    ``min_dup_ratio`` of the rows are duplicates (default
+    `COLLAPSE_MIN_DUP_RATIO`; at 0 or less there is no count and the
+    collapse always runs). Callers' output is identical either way;
+    only the cost differs. No caller can force either branch; tests do
+    it by setting the two module constants.
 
     Returns None when skipped, else ``(reps, members)``: ``reps`` maps
     each fingerprint to its representative (``__fp``, ``__rep``), and
@@ -143,12 +152,13 @@ def collapse_exact_groups(
     action race to materialize them and each recomputes the full plan
     (measured 39 s one-shot vs 12.5 s with eager checkpoints at
     sf0.1)."""
-    if probe:
-        size = _plan_size_bytes(source)
-        if size is not None and size < COLLAPSE_PROBE_MIN_BYTES:
-            return None
+    size = _plan_size_bytes(source)
+    if size is not None and size < COLLAPSE_PROBE_MIN_BYTES:
+        return None
+    if min_dup_ratio is None:
+        min_dup_ratio = COLLAPSE_MIN_DUP_RATIO
     fps = fingerprints()
-    if probe:
+    if min_dup_ratio > 0:
         total, distinct = fps.agg(
             F.count(F.lit(1)), F.approx_count_distinct("__fp", 0.02)
         ).first()

@@ -28,14 +28,17 @@ def _ensure_driver_memory() -> None:
     PySpark's default heap is 1g — 32 concurrent tasks OOM on any
     multi-GB shuffle. spark.driver.memory only takes effect at JVM
     launch, so it must ride PYSPARK_SUBMIT_ARGS, not the builder conf.
-    No-op once a JVM is up or when the caller already set the env."""
+    The heap defaults to half the host's physical memory (a cap above
+    the host's RAM bounds nothing); ``SPARK_GRAFT_DRIVER_MEM`` overrides
+    it. No-op once a JVM is up or when the caller already set the env."""
     if "PYSPARK_SUBMIT_ARGS" in os.environ:
         return
     from pyspark import SparkContext
 
     if SparkContext._jvm is not None:  # JVM already launched
         return
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    host_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{host_mib // 2}m")
     os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
 
 

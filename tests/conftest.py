@@ -1,4 +1,5 @@
 import pathlib
+import re
 import sys
 
 import pytest
@@ -86,3 +87,69 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+# rows each `collapse_gate` test produced, keyed by test id without the
+# mode, so the second mode's run compares against the first's
+_GATE_ROWS: dict[tuple[str, str], list] = {}
+
+
+class CollapseGate:
+    """What `scale.collapse_exact_groups` decided while the
+    `collapse_gate` fixture forced it: ``calls`` holds each call's
+    ``members`` table, or None for a skipped collapse."""
+
+    def __init__(self, collapsed: bool, test_key: str):
+        self.collapsed = collapsed
+        self.calls: list = []
+        self._test_key = test_key
+
+    def assert_same_rows(self, rows: list, tag: str = "") -> None:
+        """``rows`` equal what the other mode of this test produced, when
+        that mode has run already in this session (a run that selects a
+        single mode checks only its decision)."""
+        first = _GATE_ROWS.setdefault((self._test_key, tag), rows)
+        assert rows == first, f"collapsed and uncollapsed rows differ ({tag or 'rows'})"
+
+    def assert_decided(self, merges: bool = True) -> None:
+        """The gate was reached and decided as forced. In collapsed mode
+        with ``merges``, at least one call also merged an id into
+        another's group, so the collapsed path really ran on fewer
+        rows; pass ``merges=False`` for inputs without exact
+        duplicates, where the collapsed path runs on singleton groups."""
+        assert self.calls, "the collapse gate was never reached"
+        if not self.collapsed:
+            assert all(m is None for m in self.calls), "collapse ran while forced off"
+            return
+        assert all(m is not None for m in self.calls), "collapse skipped while forced on"
+        merged = [m.where(m[m.columns[0]] != m["__rep"]).count() for m in self.calls]
+        assert any(merged) == merges, f"ids merged per call: {merged}"
+
+
+@pytest.fixture(params=["collapsed", "uncollapsed"])
+def collapse_gate(request, monkeypatch):
+    """Force the exact-duplicate collapse gate one way, through its
+    module constants only. "collapsed": no size floor and no
+    duplicate-ratio floor, so every call collapses without a probe.
+    "uncollapsed": a size floor of 2^63, above the Long.MaxValue
+    estimate of an in-memory frame, so every call skips. The returned
+    `CollapseGate` records each call's decision and compares the rows
+    of the two modes."""
+    from malstrom_spark import scale
+
+    collapsed = request.param == "collapsed"
+    if collapsed:
+        monkeypatch.setattr(scale, "COLLAPSE_PROBE_MIN_BYTES", 0)
+        monkeypatch.setattr(scale, "COLLAPSE_MIN_DUP_RATIO", 0.0)
+    else:
+        monkeypatch.setattr(scale, "COLLAPSE_PROBE_MIN_BYTES", 1 << 63)
+    gate = CollapseGate(collapsed, re.sub(r"\b(un)?collapsed\b", "", request.node.nodeid))
+    real = scale.collapse_exact_groups
+
+    def spy(*args, **kwargs):
+        groups = real(*args, **kwargs)
+        gate.calls.append(None if groups is None else groups[1])
+        return groups
+
+    monkeypatch.setattr(scale, "collapse_exact_groups", spy)
+    return gate

@@ -34,15 +34,13 @@ def test_frontier_semantics(spark):
     }, got
 
 
-def test_frontier_budget_deterministic_and_skew_safe_identical(spark):
+def test_frontier_budget_deterministic(spark):
     links = _links(spark, [f"https://big.example/p{i}" for i in range(200)]
                    + [f"https://small.example/q{i}" for i in range(3)])
     plain = crawl_frontier(links, per_host_budget=20)
     a = sorted(map(tuple, plain.collect()))
     b = sorted(map(tuple, crawl_frontier(links, per_host_budget=20).collect()))
     assert a == b  # rerun-identical (hash order, no rand)
-    skew = crawl_frontier(links, per_host_budget=20, skew_safe=True)
-    assert sorted(map(tuple, skew.collect())) == a
     by_host = {r["host"]: r["n"] for r in
                plain.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert by_host == {"big.example": 20, "small.example": 3}
@@ -137,9 +135,6 @@ def test_frontier_host_budget_overrides(spark):
     assert sum(1 for r in loose if r.host == "h1.example.com") == 3
     with _pytest.raises(ValueError, match="default per_host_budget"):
         crawl_frontier(links, host_budget_overrides={"h": 1})
-    with _pytest.raises(ValueError, match="skew_safe"):
-        crawl_frontier(links, per_host_budget=3, skew_safe=True,
-                       host_budget_overrides={"h": 1})
     with _pytest.raises(ValueError, match=">= 0"):
         crawl_frontier(links, per_host_budget=3,
                        host_budget_overrides={"h": -1})

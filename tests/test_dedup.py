@@ -67,20 +67,21 @@ def test_ngram_jaccard_kernel(docs, spark):
     assert out[(0, 3)] < 0.05
 
 
-def test_collapse_and_uncollapsed_outputs_identical(docs):
-    """The exact-collapse pre-pass (and the adaptive probe that skips
-    it on low-duplicate corpora) must be invisible in the output: both
-    code paths emit the same pairs with the same scores."""
+def test_collapse_and_uncollapsed_outputs_identical(docs, collapse_gate):
+    """The exact-collapse pre-pass must be invisible in the output:
+    with the scale gate forced either way, both pair pipelines emit the
+    same pairs with the same scores."""
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    for kw in ({"n_hashes": 32, "n_bands": 16, "threshold": 0.1},):
-        a = dedup.near_dup_pairs_minhash(docs, "doc_id", collapse_exact=True, **kw)
-        b = dedup.near_dup_pairs_minhash(docs, "doc_id", collapse_exact=False, **kw)
-        assert rows(a) == rows(b)
-    sa = dedup.simhash_near_dups(docs, "doc_id", max_hamming=10, collapse_exact=True)
-    sb = dedup.simhash_near_dups(docs, "doc_id", max_hamming=10, collapse_exact=False)
-    assert rows(sa) == rows(sb)
+    minhash = rows(dedup.near_dup_pairs_minhash(
+        docs, "doc_id", n_hashes=32, n_bands=16, threshold=0.1
+    ))
+    simhash = rows(dedup.simhash_near_dups(docs, "doc_id", max_hamming=10))
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(minhash, "minhash")
+    collapse_gate.assert_same_rows(simhash, "simhash")
+    assert (0, 1, 1.0) in minhash and (0, 1, 0) in simhash  # the exact dup
 
 
 def test_collapse_probe_skips_on_distinct_corpus(spark):
@@ -150,13 +151,14 @@ def test_semdedup_collapse_floor_output_identical(spark, tmp_path, monkeypatch):
     cents = sim.semdedup_head_centroids(df, "vec_id", "embedding", 3)
 
     decisions = []
+    real = scale.collapse_exact_groups
 
     def spy(*args, **kwargs):
-        groups = scale.collapse_exact_groups(*args, **kwargs)
+        groups = real(*args, **kwargs)
         decisions.append(groups is not None)
         return groups
 
-    monkeypatch.setattr(sim, "collapse_exact_groups", spy)
+    monkeypatch.setattr(scale, "collapse_exact_groups", spy)
 
     def run():
         return sorted(
@@ -301,36 +303,34 @@ def dup_heavy_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-@pytest.mark.parametrize("collapse", [True, False])
-def test_dedup_clusters_matches_pair_pipeline_minhash(dup_heavy_docs, collapse):
+def test_dedup_clusters_matches_pair_pipeline_minhash(dup_heavy_docs, collapse_gate):
     """dedup_clusters must equal union-find over the pair pipeline's
-    output (the pair pipeline is the hash-verified semantics), on both
-    the collapsed and uncollapsed paths — including null-text docs
+    output (the pair pipeline is the hash-verified semantics), with the
+    scale gate forced either way — including null-text docs
     (singletons) and byte-identical docs (always clustered)."""
     kw = {"n_hashes": 32, "n_bands": 16, "threshold": 0.5}
     pairs = [
         (r.id_a, r.id_b)
-        for r in dedup.near_dup_pairs_minhash(
-            dup_heavy_docs, "doc_id", collapse_exact=collapse, **kw
-        ).collect()
+        for r in dedup.near_dup_pairs_minhash(dup_heavy_docs, "doc_id", **kw).collect()
     ]
     expected = _uf_labels(range(12), pairs)
     out = dedup.dedup_clusters(
-        dup_heavy_docs, "doc_id", method="minhash", collapse_exact=collapse, **kw
+        dup_heavy_docs, "doc_id", method="minhash", **kw
     ).collect()
+    collapse_gate.assert_decided()
     got = {r.doc_id: r.group_id for r in out}
     assert got == expected
     assert {r.doc_id: r.is_keeper for r in out} == {
         i: (expected[i] == i) for i in range(12)
     }
+    collapse_gate.assert_same_rows(sorted(got.items()))
 
 
-@pytest.mark.parametrize("collapse", [True, False])
-def test_dedup_clusters_matches_pair_pipeline_simhash(dup_heavy_docs, collapse):
+def test_dedup_clusters_matches_pair_pipeline_simhash(dup_heavy_docs, collapse_gate):
     pairs = [
         (r.id_a, r.id_b)
         for r in dedup.simhash_near_dups(
-            dup_heavy_docs, "doc_id", max_hamming=3, collapse_exact=collapse
+            dup_heavy_docs, "doc_id", max_hamming=3
         ).collect()
     ]
     expected = _uf_labels(range(12), pairs)
@@ -338,10 +338,11 @@ def test_dedup_clusters_matches_pair_pipeline_simhash(dup_heavy_docs, collapse):
         r.doc_id: r.group_id
         for r in dedup.dedup_clusters(
             dup_heavy_docs, "doc_id", method="simhash", max_hamming=3,
-            collapse_exact=collapse,
         ).collect()
     }
+    collapse_gate.assert_decided()
     assert got == expected
+    collapse_gate.assert_same_rows(sorted(got.items()))
 
 
 # ---- hot-bucket skew guard (round-4 VERDICT #1) --------------------
@@ -379,8 +380,7 @@ def test_lsh_hot_bucket_cap_bounds_candidates(template_docs):
 def test_simhash_hot_bucket_cap_bounds_candidates(template_docs):
     n = 1200
     capped = dedup.simhash_near_dups(
-        template_docs, "doc_id", max_hamming=60, collapse_exact=False,
-        max_bucket_size=64,
+        template_docs, "doc_id", max_hamming=60, max_bucket_size=64,
     )
     # hamming bound 60/64 accepts every candidate -> output == candidates
     assert capped.count() <= 10 * n
@@ -781,7 +781,7 @@ def test_containment_pairs_detects_embedded_excerpt(spark):
     assert got[(2, 1)].jaccard < got[(2, 1)].containment
 
 
-def test_containment_collapse_equals_uncollapsed(spark):
+def test_containment_collapse_equals_uncollapsed(spark, collapse_gate):
     # byte-identical copies collapse to a representative; the expanded
     # output must equal the uncollapsed pipeline ROW FOR ROW (ordered
     # pairs, exact 1.0 scores for identical non-empty shingle sets)
@@ -800,22 +800,20 @@ def test_containment_collapse_equals_uncollapsed(spark):
         # both — containment 1.0 in the uncollapsed pipeline, and the
         # collapse path must reproduce that, not drop them
         (30, ""), (31, ""),
+        # null-text twins never pair, collapsed or not
+        (40, None), (41, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def run(collapse):
-        return {
-            (r.contained_id, r.container_id): (r.containment, r.jaccard)
-            for r in containment_pairs(
-                docs, "doc_id", threshold=0.9, portable=True,
-                max_bucket_size=None, collapse_exact=collapse,
-            ).collect()
-        }
-
-    # min_dup_ratio: 6/10 of the docs are byte-dups, so the adaptive
-    # probe fires the collapse path for real
-    col, unc = run(True), run(False)
-    assert col == unc and len(col) > 0
+    col = {
+        (r.contained_id, r.container_id): (r.containment, r.jaccard)
+        for r in containment_pairs(
+            docs, "doc_id", threshold=0.9, portable=True, max_bucket_size=None,
+        ).collect()
+    }
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(sorted(col.items()))
+    assert len(col) > 0
     # copies of the long doc contain each other (both directions)
     assert col[(1, 10)] == (1.0, 1.0) and col[(10, 1)] == (1.0, 1.0)
     # every copy inherits the excerpt-containment edge
@@ -824,3 +822,4 @@ def test_containment_collapse_equals_uncollapsed(spark):
     # set, identical both sides) but with nothing else
     assert col[(30, 31)] == (1.0, 1.0) and col[(31, 30)] == (1.0, 1.0)
     assert not any((30 in p or 31 in p) and not {30, 31} >= set(p) for p in col)
+    assert not any(40 in p or 41 in p for p in col)

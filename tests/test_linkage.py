@@ -114,7 +114,7 @@ def test_entity_resolution_composition(spark):
     assert groups == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_fuzzy_self_pairs_collapse_equals_uncollapsed(spark):
+def test_fuzzy_self_pairs_collapse_equals_uncollapsed(spark, collapse_gate):
     # identical-key clusters collapse to a representative; the
     # expanded output must equal the uncollapsed pipeline row for row
     # (id order, string columns following their ids, dist values)
@@ -128,15 +128,12 @@ def test_fuzzy_self_pairs_collapse_equals_uncollapsed(spark):
     ]
     df = spark.createDataFrame(rows, "id long, name string")
 
-    def run(collapse):
-        return sorted(
-            tuple(r) for r in fuzzy_self_pairs(
-                df, "id", "name", max_distance=1, collapse_exact=collapse
-            ).collect()
-        )
-
-    col, unc = run(True), run(False)
-    assert col == unc and len(col) > 0
+    col = sorted(
+        tuple(r) for r in fuzzy_self_pairs(df, "id", "name", max_distance=1).collect()
+    )
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(col)
+    assert len(col) > 0
     got = {(a, b): (sl, sr, d) for a, b, sl, sr, d in col}
     # intra-cluster pairs at dist 0, strings normalized
     assert got[(1, 10)] == ("smith", "smith", 0)
@@ -147,7 +144,7 @@ def test_fuzzy_self_pairs_collapse_equals_uncollapsed(spark):
     assert not any(3 in p for p in got)
 
 
-def test_fuzzy_join_collapse_equals_uncollapsed(spark):
+def test_fuzzy_join_collapse_equals_uncollapsed(spark, collapse_gate):
     from malstrom_spark.functions.linkage import fuzzy_join
 
     left = spark.createDataFrame(
@@ -159,16 +156,13 @@ def test_fuzzy_join_collapse_equals_uncollapsed(spark):
         "rid long, rname string",
     )
 
-    def run(collapse):
-        return sorted(
-            tuple(r) for r in fuzzy_join(
-                left, right, "lid", "rid", "lname", "rname",
-                max_distance=1, collapse_exact=collapse,
-            ).collect()
-        )
-
-    col, unc = run(True), run(False)
-    assert col == unc
+    col = sorted(
+        tuple(r) for r in fuzzy_join(
+            left, right, "lid", "rid", "lname", "rname", max_distance=1,
+        ).collect()
+    )
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(col)
     got = {(a, b) for a, b, *_ in col}
     # every smith-variant left row pairs with every smyth right row
     assert got == {(l, r) for l in (1, 2, 3) for r in (10, 11)}

@@ -840,10 +840,10 @@ def test_audio_landmarks_max_frames_bounds_work():
 def test_audio_match_pairs_collapse_keeps_mass_duplicates(spark):
     """A clip duplicated more than max_fp_freq times used to push all
     of its OWN hashes over the stop-fp cap and vanish from the output
-    (round-11 ADVICE fix). With collapse_exact (default ON) the copy
-    set collapses to one representative before the cap, so the
-    duplicates come back as rep-star edges and the rep still matches
-    other recordings of the same content."""
+    (round-11 ADVICE fix). The copy set always collapses to one
+    representative before the cap, so the duplicates come back as
+    rep-star edges and the rep still matches other recordings of the
+    same content."""
     from malstrom_spark.functions import multimodal as mm
 
     # 30 exact copies of one landmark sequence (ids 0..29) with a
@@ -853,11 +853,6 @@ def test_audio_match_pairs_collapse_keeps_mass_duplicates(spark):
     # plus one near-copy (id 99) sharing the same fps at offset +2
     rows += [(99, t + 2, fp) for t, fp in seq]
     fps = spark.createDataFrame(rows, "doc_id long, t_anchor int, fp long")
-
-    legacy = mm.audio_match_pairs(fps, "doc_id", min_matches=8,
-                                  max_fp_freq=8,
-                                  collapse_exact=False).collect()
-    assert legacy == []  # the documented blind spot
 
     got = {(r.id_a, r.id_b): r.n_aligned
            for r in mm.audio_match_pairs(fps, "doc_id", min_matches=8,

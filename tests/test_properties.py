@@ -388,7 +388,7 @@ def test_incremental_dedup_matches_batch_mode(spark, texts, data):
         ).collect()
     }
     pairs = dedup.near_dup_pairs_minhash(
-        df, "doc_id", threshold=0.5, collapse_exact=False, max_bucket_size=None
+        df, "doc_id", threshold=0.5, max_bucket_size=None
     ).collect()
     want = {}
     for r in pairs:

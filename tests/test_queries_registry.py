@@ -46,3 +46,51 @@ def test_query_runs_nonneg_rows(spark, sf_dir, name):
 def test_entry_smoke(spark):
     df = entry.entry(spark)
     assert df.count() > 0
+
+
+# Every registry row whose build reaches the exact-duplicate collapse
+# gate (`scale.collapse_exact_groups`), found with a spy over
+# full_registry() at sf0.001. The testdata tables sit under the gate's
+# size floor, so the default run never takes the collapse branch; here
+# the `collapse_gate` fixture forces it both ways.
+COLLAPSE_GATE_ROWS = [
+    "customer_entity_groups",
+    "customer_fuzzy_pairs",
+    "dedup_clusters",
+    "dedup_clusters_scale",
+    "dedup_containment",
+    "dedup_minhash_lsh",
+    "dedup_minhash_lsh_scale",
+    "dedup_simhash",
+    "dedup_simhash_scale",
+    "embedding_semdedup",
+    "pipeline_omnibus",
+    "relational_omnibus_b",
+]
+# the rows whose sf0.001 gate input holds exact duplicates; the others
+# run the collapsed path on singleton groups
+COLLAPSE_GATE_MERGING_ROWS = {"dedup_containment"}
+
+
+@pytest.mark.parametrize("name", COLLAPSE_GATE_ROWS)
+def test_collapse_gate_rows_match_oracle_both_ways(spark, sf_dir, collapse_gate, name):
+    """Each listed row reaches the gate, and with the collapse forced
+    on or off it matches its DuckDB oracle exactly (the
+    tools/oracle_check.py comparison); a row without an oracle gives
+    the same rows in both modes."""
+    import duckdb
+
+    from tools.oracle_check import TABLES, normalize
+
+    spec = full_registry()[name]
+    got = spec.fn(spark, sf_dir).toPandas()
+    collapse_gate.assert_decided(merges=name in COLLAPSE_GATE_MERGING_ROWS)
+    if spec.oracle is None:
+        collapse_gate.assert_same_rows(normalize(got))
+        return
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    want = con.sql(spec.oracle).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert normalize(got) == normalize(want)

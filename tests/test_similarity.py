@@ -642,9 +642,9 @@ def test_semdedup_assign_matches_python_reference(spark):
     assert (r["cluster"], r["dist2"]) == (1, 2 * (unit // 2) ** 2)
 
 
-def test_semdedup_exact_collapse_identical_output(spark):
-    """The adaptive exact-copy collapse path is output-identical to
-    the uncollapsed pipeline on a dup-heavy corpus (the discipline's
+def test_semdedup_exact_collapse_identical_output(spark, collapse_gate):
+    """The exact-copy collapse path is output-identical to the
+    uncollapsed pipeline on a dup-heavy corpus (the discipline's
     contract), and null vectors never merge through the collapse."""
     import numpy as np
     from malstrom_spark.functions import similarity as sim
@@ -660,27 +660,20 @@ def test_semdedup_exact_collapse_identical_output(spark):
     cents = sim.semdedup_head_centroids(
         df.where("embedding is not null"), "vec_id", "embedding", 3)
 
-    def run(collapse):
-        return sorted(
-            (r["vec_id"], r["cluster"], r["dist2"], r["group_id"],
-             r["is_keeper"])
-            for r in sim.semdedup(df, "vec_id", "embedding", cents,
-                                  threshold=0.9,
-                                  collapse_exact=collapse).collect()
-        )
-
-    plain = run(False)
-    collapsed = run(True)
-    adaptive = run(None)  # 90% dup mass -> probe turns collapse ON
-    assert plain == collapsed == adaptive
+    out = sorted(
+        (r["vec_id"], r["cluster"], r["dist2"], r["group_id"], r["is_keeper"])
+        for r in sim.semdedup(df, "vec_id", "embedding", cents, threshold=0.9).collect()
+    )
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(out)
     # the two null-vector rows are singleton groups, never merged
-    by_id = {t[0]: t for t in plain}
+    by_id = {t[0]: t for t in out}
     assert by_id[100][3] != by_id[101][3]
     # copies share groups (cosine 1 >= threshold)
     assert by_id[0][3] == by_id[6][3] == by_id[54][3]
 
 
-def test_semdedup_zero_norm_vectors_never_collapse(spark):
+def test_semdedup_zero_norm_vectors_never_collapse(spark, collapse_gate):
     """Byte-identical ZERO vectors must behave the same in the collapse
     and uncollapsed paths: cosine(0, anything) is NULL -> below every
     threshold, so the plain pair join never links them. The collapse
@@ -692,27 +685,21 @@ def test_semdedup_zero_norm_vectors_never_collapse(spark):
     base = [[float(x) for x in np.round(rng.normal(0, 1, 4), 6)]
             for _ in range(3)]
     rows = []
-    for i in range(30):  # heavy dup mass so the adaptive probe fires
+    for i in range(30):  # exact copies: the collapse has ids to merge
         rows.append((i, base[i % 3]))
     zero = [0.0, 0.0, 0.0, 0.0]
     rows += [(200, zero), (201, zero), (202, zero)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = sim.semdedup_head_centroids(df, "vec_id", "embedding", 2)
 
-    def run(collapse):
-        return sorted(
-            (r["vec_id"], r["group_id"], r["is_keeper"])
-            for r in sim.semdedup(df, "vec_id", "embedding", cents,
-                                  threshold=0.9,
-                                  collapse_exact=collapse).collect()
-        )
-
-    plain = run(False)
-    collapsed = run(True)
-    adaptive = run(None)
-    assert plain == collapsed == adaptive
+    out = sorted(
+        (r["vec_id"], r["group_id"], r["is_keeper"])
+        for r in sim.semdedup(df, "vec_id", "embedding", cents, threshold=0.9).collect()
+    )
+    collapse_gate.assert_decided()
+    collapse_gate.assert_same_rows(out)
     # the three zero vectors are pairwise-unlinked singletons
-    by_id = {t[0]: t for t in plain}
+    by_id = {t[0]: t for t in out}
     groups = {by_id[200][1], by_id[201][1], by_id[202][1]}
     assert len(groups) == 3
     # and every singleton is its own keeper

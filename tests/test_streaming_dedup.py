@@ -82,9 +82,7 @@ def test_streaming_near_dup_flags_across_batches(spark, tmp_path):
     )
     batch_pairs = {
         (r.id_a, r.id_b)
-        for r in dedup.simhash_near_dups(
-            all_docs, "doc_id", collapse_exact=False
-        ).collect()
+        for r in dedup.simhash_near_dups(all_docs, "doc_id").collect()
     }
     expect_4 = any(b == 4 for (_, b) in batch_pairs)
     assert got[4][0] == expect_4
