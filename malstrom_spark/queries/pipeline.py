@@ -868,10 +868,12 @@ def similarity_ann_pq(spark, sf_dir):
 )
 def dedup_groups_probe(spark, sf_dir):
     """Near-dup CLUSTERS, not just pairs: connected components over
-    the >= 0.5-Jaccard edge set (functions/dedup.py dedup_groups,
-    iterative min-label propagation); every doc labeled with its
-    cluster's minimum id. Oracle = DuckDB recursive CTE reachability
-    on a bounded probe set (doc_id < 40)."""
+    the >= 0.5-Jaccard edge set (functions/dedup.py dedup_groups);
+    every doc labeled with its cluster's minimum id. The probe set's
+    edge set is far under `scale.CC_DRIVER_MAX_EDGES`, so it is
+    collected and labeled by the driver's union-find before any
+    large-star/small-star round. Oracle = DuckDB recursive CTE
+    reachability on a bounded probe set (doc_id < 40)."""
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     ids = docs.select("doc_id")
     all_pairs = (

@@ -1,3 +1,4 @@
+import contextlib
 import pathlib
 import re
 import sys
@@ -94,14 +95,11 @@ def sf_dir():
 _GATE_ROWS: dict[tuple[str, str], list] = {}
 
 
-class CollapseGate:
-    """What `scale.collapse_exact_groups` decided while the
-    `collapse_gate` fixture forced it: ``calls`` holds each call's
-    ``members`` table, or None for a skipped collapse."""
+class _BothWays:
+    """A test run in one forced mode of a gate; ``test_key`` is the
+    test id without the mode."""
 
-    def __init__(self, collapsed: bool, test_key: str):
-        self.collapsed = collapsed
-        self.calls: list = []
+    def __init__(self, test_key: str):
         self._test_key = test_key
 
     def assert_same_rows(self, rows: list, tag: str = "") -> None:
@@ -109,7 +107,18 @@ class CollapseGate:
         that mode has run already in this session (a run that selects a
         single mode checks only its decision)."""
         first = _GATE_ROWS.setdefault((self._test_key, tag), rows)
-        assert rows == first, f"collapsed and uncollapsed rows differ ({tag or 'rows'})"
+        assert rows == first, f"the two modes' rows differ ({tag or 'rows'})"
+
+
+class CollapseGate(_BothWays):
+    """What `scale.collapse_exact_groups` decided while the
+    `collapse_gate` fixture forced it: ``calls`` holds each call's
+    ``members`` table, or None for a skipped collapse."""
+
+    def __init__(self, collapsed: bool, test_key: str):
+        super().__init__(test_key)
+        self.collapsed = collapsed
+        self.calls: list = []
 
     def assert_decided(self, merges: bool = True) -> None:
         """The gate was reached and decided as forced. In collapsed mode
@@ -153,3 +162,62 @@ def collapse_gate(request, monkeypatch):
 
     monkeypatch.setattr(scale, "collapse_exact_groups", spy)
     return gate
+
+
+class CcFinish(_BothWays):
+    """Which path `dedup_groups` took while `force_cc_finish` forced
+    it: ``finishes`` counts driver finishes, ``rounds`` counts
+    large-star/small-star rounds."""
+
+    def __init__(self, mode: str, test_key: str = ""):
+        super().__init__(test_key)
+        self.mode = mode
+        self.finishes = 0
+        self.rounds = 0
+
+    def assert_path(self) -> None:
+        """Only the forced path ran: in "driver" mode one finish before
+        any round, in "rounds" mode rounds and no finish."""
+        if self.mode == "driver":
+            assert self.finishes and not self.rounds, vars(self)
+        else:
+            assert self.rounds and not self.finishes, vars(self)
+
+
+@contextlib.contextmanager
+def force_cc_finish(mode: str, test_key: str = ""):
+    """Force how connected components finish, through the module
+    constant only. "driver": a bound above any edge count, so every
+    call collects its edges and labels them on the driver before
+    round 1. "rounds": a bound of -1, so every call runs Spark rounds
+    to the fixpoint. Yields a `CcFinish` spying on the path taken.
+    A context manager rather than a fixture, so a Hypothesis test can
+    run both modes per example."""
+    from malstrom_spark import scale
+    from malstrom_spark.functions import dedup
+
+    assert mode in ("driver", "rounds"), mode
+    spy = CcFinish(mode, test_key)
+    real_finish, real_round = dedup._finish_on_driver, dedup._small_star
+
+    def finish(*args, **kwargs):
+        spy.finishes += 1
+        return real_finish(*args, **kwargs)
+
+    def one_round(*args, **kwargs):
+        spy.rounds += 1
+        return real_round(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scale, "CC_DRIVER_MAX_EDGES", 1 << 62 if mode == "driver" else -1)
+        mp.setattr(dedup, "_finish_on_driver", finish)
+        mp.setattr(dedup, "_small_star", one_round)
+        yield spy
+
+
+@pytest.fixture(params=["driver", "rounds"])
+def cc_finish(request):
+    """`force_cc_finish` for one test, in each mode."""
+    test_key = re.sub(r"\b(driver|rounds)\b", "", request.node.nodeid)
+    with force_cc_finish(request.param, test_key) as spy:
+        yield spy

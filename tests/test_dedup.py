@@ -210,10 +210,10 @@ def test_decontaminate_flags_ngram_overlap(spark):
     assert bad_p == bad
 
 
-def test_dedup_groups_transitive_closure(spark):
+def test_dedup_groups_transitive_closure(spark, cc_finish):
     """A-B and B-C near-dup edges must put A, B, C in ONE group labeled
     min(id), even though A-C was never emitted as a pair; isolated
-    docs keep their own id."""
+    docs keep their own id. Both CC finishes."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
@@ -222,13 +222,15 @@ def test_dedup_groups_transitive_closure(spark):
     )
     got = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
     assert got == {0: 0, 3: 0, 5: 0, 1: 1, 2: 1, 4: 4}
+    cc_finish.assert_path()
 
 
-def test_dedup_groups_path_chain(spark):
+def test_dedup_groups_path_chain(spark, cc_finish):
     """A 50-hop duplicate chain (path graph): large-star/small-star
     must converge in O(log n) rounds where min-label propagation needs
-    O(diameter). 8 rounds suffice for alternating; label propagation
-    capped at 5 rounds must fail loudly rather than mislabel."""
+    O(diameter). 8 rounds suffice for alternating (the driver finish
+    needs none); label propagation capped at 5 rounds must fail loudly
+    rather than mislabel."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     n = 50
@@ -241,13 +243,15 @@ def test_dedup_groups_path_chain(spark):
         for r in dedup_groups(pairs, ids, "doc_id", max_iters=8).collect()
     }
     assert got == {i: 0 for i in range(n)} | {n: n}
+    cc_finish.assert_path()
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_groups(pairs, ids, "doc_id", max_iters=5, algorithm="label")
 
 
-def test_dedup_groups_algorithms_agree(spark):
+def test_dedup_groups_algorithms_agree(spark, cc_finish):
     """Both CC algorithms reach the identical fixpoint on a graph with
-    chains, a triangle, reversed/duplicate/self edges and singletons."""
+    chains, a triangle, reversed/duplicate/self edges and singletons,
+    with either CC finish."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
@@ -262,6 +266,7 @@ def test_dedup_groups_algorithms_agree(spark):
     }
     assert alt == lab
     assert alt == {0: 0, 3: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 1: 1, 2: 1, 4: 4, 10: 4, 11: 11}
+    cc_finish.assert_path()
 
 
 def _uf_labels(n_ids, pairs):

@@ -339,13 +339,11 @@ def test_no_rdd_access_in_package():
     assert not bad, f".rdd plan conversion in: {bad}"
 
 
-def test_cc_rounds_release_checkpoint_storage(spark):
-    """_groups_alternating frees the prior round's localCheckpoint
-    blocks as soon as the fixpoint test has run, so executor storage
-    stays O(1) in rounds: after convergence on a multi-round chain, at
-    most 2 checkpointed RDDs (initial canonical edges were already
-    freed; final edge set is live in the returned plan) may hold
-    storage."""
+def _cc_checkpoints_left(spark, mode: str) -> int:
+    """Checkpointed RDDs left holding storage after `dedup_groups`
+    labels one 64-node chain (several alternating rounds) with the CC
+    finish forced to ``mode``."""
+    from conftest import force_cc_finish
     from pyspark.sql import functions as SF
 
     from malstrom_spark.functions.dedup import dedup_groups
@@ -354,15 +352,51 @@ def test_cc_rounds_release_checkpoint_storage(spark):
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
     before = n_stored()
-    n = 64  # one 64-node chain -> several alternating rounds
+    n = 64
     ids = spark.range(n).select(SF.col("id").alias("doc_id"))
     pairs = spark.range(n - 1).select(
         SF.col("id").alias("id_a"), (SF.col("id") + 1).alias("id_b")
     )
-    out = dedup_groups(pairs, ids, "doc_id")
-    assert out.filter(SF.col("group_id") != 0).count() == 0  # one cluster, min id 0
-    leaked = n_stored() - before
+    with force_cc_finish(mode) as cc:
+        out = dedup_groups(pairs, ids, "doc_id")
+        assert out.filter(SF.col("group_id") != 0).count() == 0  # one cluster, min id 0
+    cc.assert_path()
+    return n_stored() - before
+
+
+def test_cc_rounds_release_checkpoint_storage(spark):
+    """_groups_alternating frees the prior round's localCheckpoint
+    blocks as soon as the fixpoint test has run, so executor storage
+    stays O(1) in rounds: after convergence on a multi-round chain, at
+    most 1 checkpointed RDD (the final edge set, live in the returned
+    plan) may hold storage."""
+    leaked = _cc_checkpoints_left(spark, "rounds")
     assert leaked <= 1, f"{leaked} checkpoint RDDs leaked across CC rounds"
+
+
+def test_cc_driver_finish_releases_checkpoint_storage(spark):
+    """The driver finish frees the edges' checkpoint once it has
+    collected them, and its labels are a local frame: no checkpoint
+    RDD is left holding storage."""
+    leaked = _cc_checkpoints_left(spark, "driver")
+    assert leaked == 0, f"{leaked} checkpoint RDDs leaked by the driver finish"
+
+
+def test_entity_groups_job_count(spark, sf_dir):
+    """customer_entity_groups at sf0.01 builds and writes in at most 12
+    Spark jobs: its 2,700 CC edges finish on the driver with one
+    collect instead of ~13 jobs per large-star/small-star round."""
+    import pathlib
+
+    from malstrom_spark.queries import full_registry
+
+    sf001 = str(pathlib.Path(sf_dir).parent / "sf0.01")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    df = full_registry()["customer_entity_groups"].fn(spark, sf001)
+    df.write.format("noop").mode("overwrite").save()
+    jobs = scheduler.numTotalJobs() - before
+    assert jobs <= 12, f"{jobs} Spark jobs"
 
 
 def test_corpus_ops_scale_shapes(spark, sf_dir):

@@ -168,7 +168,10 @@ def test_decontaminate_matches_python_ngram_overlap(spark, corpus, bench):
 def test_dedup_groups_matches_union_find(spark, edge_list):
     """Connected-component labels (large-star/small-star default) vs a
     plain-Python union-find on arbitrary hypothesis graphs — including
-    self-loops, duplicate and reversed edges, and isolated nodes."""
+    self-loops, duplicate and reversed edges, and isolated nodes — with
+    the CC forced to finish on the driver and in Spark rounds."""
+    from conftest import force_cc_finish
+
     from malstrom_spark.functions.dedup import dedup_groups
 
     n = 25
@@ -190,8 +193,11 @@ def test_dedup_groups_matches_union_find(spark, edge_list):
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edge_list] or [(0, 0)], "id_a long, id_b long"
     )
-    got = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
-    assert got == want
+    for mode in ("driver", "rounds"):
+        with force_cc_finish(mode) as cc:
+            got = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
+        assert got == want, mode
+        cc.assert_path()
 
 
 _LINE = st.lists(

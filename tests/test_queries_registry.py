@@ -72,21 +72,17 @@ COLLAPSE_GATE_ROWS = [
 COLLAPSE_GATE_MERGING_ROWS = {"dedup_containment"}
 
 
-@pytest.mark.parametrize("name", COLLAPSE_GATE_ROWS)
-def test_collapse_gate_rows_match_oracle_both_ways(spark, sf_dir, collapse_gate, name):
-    """Each listed row reaches the gate, and with the collapse forced
-    on or off it matches its DuckDB oracle exactly (the
+def _assert_matches_oracle(sf_dir, name, got, gate) -> None:
+    """``got`` matches row ``name``'s DuckDB oracle exactly (the
     tools/oracle_check.py comparison); a row without an oracle gives
-    the same rows in both modes."""
+    the same rows in both of ``gate``'s modes."""
     import duckdb
 
     from tools.oracle_check import TABLES, normalize
 
     spec = full_registry()[name]
-    got = spec.fn(spark, sf_dir).toPandas()
-    collapse_gate.assert_decided(merges=name in COLLAPSE_GATE_MERGING_ROWS)
     if spec.oracle is None:
-        collapse_gate.assert_same_rows(normalize(got))
+        gate.assert_same_rows(normalize(got))
         return
     con = duckdb.connect()
     for t in TABLES:
@@ -94,3 +90,37 @@ def test_collapse_gate_rows_match_oracle_both_ways(spark, sf_dir, collapse_gate,
     want = con.sql(spec.oracle).df()
     assert sorted(got.columns) == sorted(want.columns)
     assert normalize(got) == normalize(want)
+
+
+@pytest.mark.parametrize("name", COLLAPSE_GATE_ROWS)
+def test_collapse_gate_rows_match_oracle_both_ways(spark, sf_dir, collapse_gate, name):
+    """Each listed row reaches the gate, and with the collapse forced
+    on or off it matches its DuckDB oracle."""
+    got = full_registry()[name].fn(spark, sf_dir).toPandas()
+    collapse_gate.assert_decided(merges=name in COLLAPSE_GATE_MERGING_ROWS)
+    _assert_matches_oracle(sf_dir, name, got, collapse_gate)
+
+
+# Every registry row whose build reaches connected components
+# (`dedup.dedup_groups`), found with a spy over full_registry() at
+# sf0.001. Their edge sets sit far under `scale.CC_DRIVER_MAX_EDGES`,
+# so the default run finishes on the driver before any Spark round;
+# here the `cc_finish` fixture forces each finish.
+CC_ROWS = [
+    "customer_entity_groups",
+    "dedup_clusters",
+    "dedup_clusters_scale",
+    "dedup_groups_probe",
+    "embedding_dedup_clusters",
+    "embedding_semdedup",
+    "pipeline_omnibus",
+]
+
+
+@pytest.mark.parametrize("name", CC_ROWS)
+def test_cc_rows_match_oracle_both_ways(spark, sf_dir, cc_finish, name):
+    """Each listed row reaches connected components, and finished on
+    the driver or by Spark rounds it matches its DuckDB oracle."""
+    got = full_registry()[name].fn(spark, sf_dir).toPandas()
+    cc_finish.assert_path()
+    _assert_matches_oracle(sf_dir, name, got, cc_finish)

@@ -16,15 +16,22 @@ Exact-duplicate collapse gate (`scale.collapse_exact_groups`): forced
 both ways by the `collapse_gate` fixture, a gated function returns the
 same rows. The driver heap default (`session._ensure_driver_memory`)
 fits the host.
+
+Connected-components finish (`scale.CC_DRIVER_MAX_EDGES`): the driver
+union-find labels a long path with shuffled ids and a star, and takes
+over from the Spark rounds once contraction brings the edge count under
+the bound.
 """
 
 import io
 import os
+import random
 import shutil
 from contextlib import contextmanager, redirect_stdout
 from itertools import combinations
 
 import pytest
+from conftest import force_cc_finish
 
 from malstrom_spark import scale
 from malstrom_spark.functions import dedup, linkage
@@ -165,3 +172,93 @@ def test_driver_heap_default_fits_the_host(monkeypatch):
     assert mem.endswith("m") and 0 < int(mem[:-1]) << 20 <= host
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert driver_memory() == "3g"
+
+
+def test_empty_texts_pair_at_jaccard_one(spark, collapse_gate):
+    """An empty text hashes one shingle, so two empty-text docs (and a
+    whitespace-only one) are exact near-duplicates in every MinHash
+    consumer, collapsed or not: Jaccard 1.0 pairs, one cluster, and
+    containment 1.0 both ways."""
+    df = spark.createDataFrame(
+        [(0, ""), (1, ""), (2, "   "), (3, "an unrelated document about query engines")],
+        "doc_id long, text string",
+    )
+    twins = [(0, 1), (0, 2), (1, 2)]
+    pairs = sorted(tuple(r) for r in dedup.near_dup_pairs_minhash(df, "doc_id").collect())
+    assert pairs == [(a, b, 1.0) for a, b in twins]
+    groups = {r.doc_id: r.group_id for r in dedup.dedup_clusters(df, "doc_id").collect()}
+    assert groups == {0: 0, 1: 0, 2: 0, 3: 3}
+    contained = sorted(tuple(r) for r in dedup.containment_pairs(df, "doc_id").collect())
+    assert contained == sorted(
+        (x, y, 1.0, 1.0) for a, b in twins for x, y in ((a, b), (b, a))
+    )
+    collapse_gate.assert_decided()
+
+
+def _cc_labels(spark, edges, nodes):
+    ids = spark.createDataFrame([(i,) for i in nodes], "doc_id long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    return {r.doc_id: r.group_id for r in dedup.dedup_groups(pairs, ids, "doc_id").collect()}
+
+
+def _shuffled_ids(n: int, seed: int) -> list[int]:
+    return random.Random(seed).sample(range(10 * n), n)
+
+
+def test_cc_driver_finish_shuffled_path(spark):
+    """A 10^4-node path whose ids are shuffled (no id order along the
+    path) is one component labeled by its minimum id, with no Spark
+    round; ids without an edge keep their own."""
+    path = _shuffled_ids(10_000, seed=7)
+    lonely = [-1, 10**9]
+    with force_cc_finish("driver") as cc:
+        got = _cc_labels(spark, list(zip(path, path[1:])), path + lonely)
+    cc.assert_path()
+    assert got == {i: min(path) for i in path} | {i: i for i in lonely}
+
+
+def test_cc_driver_finish_star(spark):
+    """A star whose hub has the largest id: every leaf and the hub take
+    the smallest leaf's id."""
+    leaves = _shuffled_ids(5_000, seed=11)
+    hub = 10**9
+    with force_cc_finish("driver") as cc:
+        got = _cc_labels(spark, [(hub, leaf) for leaf in leaves], leaves + [hub])
+    cc.assert_path()
+    assert got == {i: min(leaves) for i in leaves + [hub]}
+
+
+def test_cc_hands_off_to_driver_after_one_round(spark):
+    """With the bound between the first and the second round's edge
+    counts, one Spark round runs and the driver finishes the rest. A
+    random graph with five times more edges than nodes contracts in
+    round 1 (a tree would keep its edge count)."""
+    from pyspark.sql import functions as F
+
+    rng = random.Random(3)
+    nodes = _shuffled_ids(300, seed=5)
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(1_500)]
+    canon = (
+        spark.createDataFrame(edges, "id_a long, id_b long")
+        .select(F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    n_edges = canon.count()
+    after_one = dedup._small_star(dedup._large_star_raw(canon)).count()
+    assert 0 < after_one < n_edges
+    with force_cc_finish("rounds") as cc, pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scale, "CC_DRIVER_MAX_EDGES", after_one)
+        got = _cc_labels(spark, edges, nodes)
+    assert (cc.rounds, cc.finishes) == (1, 1)
+    parent = {i: i for i in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    assert got == {i: find(i) for i in nodes}
