@@ -196,13 +196,11 @@ def mine_bitext_ivf(
     With n_probe = number of centroids it degrades gracefully to the
     exact kernel's output (pytest-pinned).
 
-    Each side is assigned ONCE with ranks kept and eagerly
-    checkpointed; the corpus role of each direction is the rank-1
-    slice, the query role the full n_probe set (round 12 — the r11
-    Arrow-twin optimization applied to the Column form: the four
-    separate ivf_assign scans were each an O(n_vectors x n_lists)
-    quantizer pass, and with n_lists scaled to the corpus that term
-    is quadratic — the sf100 probe's wall).
+    Each side is assigned ONCE (one Arrow `ivf_assign` pass) with
+    ranks kept and eagerly checkpointed; the corpus role of each
+    direction is the rank-1 slice, the query role the full n_probe
+    set, so no side pays the O(n_vectors x n_lists) quantizer scan
+    twice.
 
     The flat-assignment limit (BASELINE.md round-12 #3): even a
     SINGLE flat scan is O(n x n_lists), quadratic when n_lists scales

@@ -43,7 +43,14 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _stack, _well_formed, content_keyed_broadcast, quantize_vec
+from .similarity import (
+    _nearest,
+    _probe_lists,
+    _stack,
+    _well_formed,
+    content_keyed_broadcast,
+    quantize_vec,
+)
 
 
 def _codebook_bc(spark, codebooks):
@@ -191,27 +198,22 @@ def pq_encode(
     """Append the PQ code (array<int>, length m): per subspace, the
     index of the nearest codebook entry (squared L2, first-min
     tie-break). A pandas_udf against the broadcast codebook tensor,
-    one batched matmul per subspace — a pure projection, zero
-    shuffle. NULL and malformed vectors (`similarity._well_formed`)
-    encode NULL; a NaN distance ranks last."""
+    one batched `similarity._nearest` per subspace — a pure
+    projection, zero shuffle. NULL and malformed vectors
+    (`similarity._well_formed`) encode NULL; a NaN distance ranks
+    last."""
     m, k, dsub = _check_geometry(dim, codebooks)
     bc = _codebook_bc(df.sparkSession, codebooks)
 
     @F.pandas_udf("array<int>")
     def enc(v: pd.Series) -> pd.Series:
         C, n2 = bc.value  # (m, k, dsub), (m, k)
-        res: list = [None] * len(v)
-        rows, X = _stack(v)
-        if X is not None:
-            Xs = X.reshape(len(X), m, dsub)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for s in range(m):
-                d = -2.0 * (Xs[:, s, :] @ C[s].T) + n2[s][None, :]
-                d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
-                codes[:, s] = np.argmin(d, axis=1)
-            for pos, row in zip(rows, codes):
-                res[pos] = [int(x) for x in row]
-        return pd.Series(res)
+        rows, X = _stack(v, dim)
+        Xs = X.reshape(len(X), m, dsub)
+        codes = np.empty((len(X), m), dtype=np.int64)
+        for s in range(m):
+            codes[:, s] = _nearest(Xs[:, s, :], C[s], n2[s], 1)[0][:, 0]
+        return _probe_lists(len(v), rows, codes)
 
     return df.withColumn(out_col, enc(_well_formed(F.col(vec_col), dim)))
 

@@ -25,11 +25,15 @@ verified pair join, mirroring the MinHash pipeline shape in
 
 LSH buckets are integer-exact: vectors are quantized to integers and
 every bucketing decision is made in int64 arithmetic, so a DuckDB
-oracle reproduces them row for row. Each nearest-centroid kernel
-(`with_nearest_list`, `with_probe_lists`, their hierarchical forms
-and SemDeDup's integer argmin) has one engine: an Arrow pandas_udf
-against a broadcast numpy matrix. Each treats a vector with a NULL
-element or the wrong length like a NULL vector (`_well_formed`).
+oracle reproduces them row for row. Every nearest-centroid assignment
+runs one kernel per geometry: `_nearest` (flat top-n cells) and
+`_nearest_hier` (rank the supers, then the pooled leaves of the
+nearest ones), each inside an Arrow pandas_udf against a broadcast
+numpy matrix. Both take float64 (`with_nearest_list`,
+`with_probe_lists`, their hierarchical forms) or int64 over quantized
+vectors (`ivf_assign`, `ivf_assign_hier`, SemDeDup), where every
+distance is exact. Each treats a vector with a NULL element or the
+wrong length like a NULL vector (`_well_formed`).
 """
 
 from __future__ import annotations
@@ -351,12 +355,28 @@ def lsh_topk_portable(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _quant_dist2(a: Column, b: Column) -> Column:
-    """Exact squared L2 between quantized vectors (bigint)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def _quantized_rows(cents: DataFrame, cent_id: str, cent_vec: str, *extra):
+    """(rows, ids, int64 matrix) of a centroid table sorted by id: one
+    quantizer-sized collect, quantized JVM-side by `quantize_vec` (so
+    engine-identical); each row also carries the `extra` columns."""
+    rows = sorted(
+        cents.select(
+            *extra, F.col(cent_id).alias("_id"), quantize_vec(F.col(cent_vec)).alias("_q")
+        ).collect(),
+        key=lambda r: r._id,
+    )
+    ids = np.asarray([r._id for r in rows], dtype=np.int64)
+    return rows, ids, np.asarray([r._q for r in rows], dtype=np.int64)
+
+
+def _explode_cells(vecs, probes, vec_col, dim, cell_type, rank_col):
+    """`vecs` + one row per probed cell: `probes` is an array<long>
+    pandas_udf over the quantized well-formed vector; its position
+    gives the 1-based `rank_col`."""
+    qv = quantize_vec(_well_formed(F.col(vec_col), dim))
+    extra = [(F.col("_pos") + 1).alias(rank_col)] if rank_col else []
+    return vecs.select("*", F.posexplode(probes(qv)).alias("_pos", "_cell")).select(
+        *vecs.columns, F.col("_cell").cast(cell_type).alias("cell"), *extra
     )
 
 
@@ -372,22 +392,27 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector its `n_probe` nearest centroid cells by
     exact integer L2 over quantized vectors (ties by centroid id).
-    The centroid side is a broadcast table (k rows), so assignment is
-    a pure map over the corpus — the production IVF shape where the
-    quantizer comes from an offline fit. Output: input cols + cell."""
-    qv = quantize_vec(F.col(vec_col))
-    cents = centroids.select(
-        F.col(cent_id).alias("_cid"), quantize_vec(F.col(cent_vec)).alias("_cq")
+    The centroid table (k rows) is collected once and broadcast as an
+    int64 matrix, so assignment is a pure map over the corpus — one
+    Arrow `_nearest` pass, no join, no window, no shuffle — the
+    production IVF shape where the quantizer comes from an offline
+    fit. Output: input cols + cell [+ `rank_col`, 1 = nearest]. A
+    NULL or malformed vector (`_well_formed`) emits no rows; `id_col`
+    is kept for the signature, rows need no key."""
+    _, ids, C = _quantized_rows(centroids, cent_id, cent_vec)
+    bc = content_keyed_broadcast(
+        vecs.sparkSession, f"ivf-int-{C.shape}", np.concatenate([ids, C.ravel()]),
+        lambda _: (ids, C, (C * C).sum(axis=1)),
     )
-    scored = vecs.withColumn("_q", qv).crossJoin(F.broadcast(cents)).withColumn(
-        "_d2", _quant_dist2(F.col("_q"), F.col("_cq"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.asc("_d2"), F.asc("_cid"))
-    extra = [F.col("_rk").alias(rank_col)] if rank_col else []
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_probe)
-        .select(*vecs.columns, F.col("_cid").alias("cell"), *extra)
+
+    @F.pandas_udf("array<long>")
+    def probes(q: pd.Series) -> pd.Series:
+        ids, C, n2 = bc.value
+        rows, Q = _stack(q, C.shape[1], np.int64)
+        return _probe_lists(len(q), rows, _nearest(Q, C, n2, n_probe)[0], ids)
+
+    return _explode_cells(
+        vecs, probes, vec_col, C.shape[1], centroids.schema[cent_id].dataType, rank_col
     )
 
 
@@ -489,6 +514,11 @@ def _ivf_score_assigned(
             F.explode(F.sequence(F.lit(0), F.lit(int(salt_n) - 1))),
         )
         join_on = ["cell", "__salt"]
+    if not broadcast_queries:
+        # corpus-sized sides meet in a cell-keyed shuffle join even when
+        # a checkpointed side's size estimate falls under the broadcast
+        # threshold (an Arrow-assigned side's estimate does at sf1)
+        qb = qb.hint("merge")
     scored = cb.join(qb, join_on).select(
         F.col(q_id),
         F.col(c_id),
@@ -539,11 +569,12 @@ def update_ivf_assignments(
 
     Works with ALL quantizer representations, matching whichever
     built the index (mixing them would corrupt cell membership):
-    a centroid DataFrame assigns via the portable integer-L2
-    `ivf_assign` (cell column ``cell``), a list-of-lists quantizer
-    via `with_nearest_list`, and a `HierQuantizer` via
-    `with_nearest_list_hier` — the float engines behind
-    `ivf_write_assignments` (cell column ``list_id``)."""
+    a centroid DataFrame assigns via the exact-integer `ivf_assign`
+    (cell column ``cell``), a list-of-lists quantizer via
+    `with_nearest_list`, and a `HierQuantizer` via
+    `with_nearest_list_hier` — the float forms behind
+    `ivf_write_assignments` (cell column ``list_id``). All three run
+    the same Arrow nearest-centroid kernels."""
     touched = fresh_vectors.select(c_id).distinct()
     if deleted_ids is not None:
         touched = touched.unionByName(deleted_ids.select(c_id)).distinct()
@@ -743,12 +774,86 @@ def _well_formed(vec: Column, dim: int) -> Column:
     )
 
 
-def _stack(v: pd.Series, dtype=np.float64):
-    """(positions, matrix) of the non-NULL vectors of an Arrow batch."""
+def _stack(v: pd.Series, dim: int, dtype=np.float64):
+    """(positions, rows x `dim` matrix) of the non-NULL vectors of an
+    Arrow batch."""
     rows = np.nonzero(v.notna().to_numpy())[0]
     if not len(rows):
-        return rows, None
+        return rows, np.empty((0, dim), dtype=dtype)
     return rows, np.stack([np.asarray(x, dtype=dtype) for x in v.iloc[rows]])
+
+
+def _nearest(M: np.ndarray, C: np.ndarray, n2: np.ndarray, n: int):
+    """The flat nearest-centroid kernel: each row of `M`'s top-`n`
+    cells of `C` (squared norms `n2`) by (distance, cell index) —
+    `argmin` (first min) when n = 1, else a stable argsort. Distances
+    are -2 M@C^T + ||c||^2: a row's own ||m||^2 is the same for every
+    cell, so it cannot change the order. float64 or int64 alike: a
+    float NaN distance is masked to +inf (Spark's NaN-last ordering),
+    int64 is exact. Returns (cell indices, distances), rows x
+    min(n, k)."""
+    d = -2 * (M @ C.T) + n2[None, :]
+    if d.dtype.kind == "f":
+        d[np.isnan(d)] = np.inf
+    if n == 1:
+        idx = np.argmin(d, axis=1)[:, None]
+    else:
+        idx = np.argsort(d, axis=1, kind="stable")[:, :n]
+    return idx, np.take_along_axis(d, idx, axis=1)
+
+
+def _hier_tables(S: np.ndarray, L: np.ndarray, leaf_super: np.ndarray):
+    """The hierarchy `_nearest_hier` ranks against: (S, ||s||^2, L,
+    ||l||^2, sorted leaf indices per super). A super with no leaves
+    gets a +inf (float) or +2^62 (int64) norm penalty, so the descent
+    never chooses an empty cell and drops a vector."""
+    by_super = [np.nonzero(leaf_super == s)[0] for s in range(len(S))]
+    penalty = np.inf if S.dtype.kind == "f" else np.int64(1) << 62
+    dead = np.where([len(b) == 0 for b in by_super], penalty, 0)
+    return S, (S * S).sum(axis=1) + dead, L, (L * L).sum(axis=1), by_super
+
+
+def _nearest_hier(M: np.ndarray, H: tuple, n_super: int, n: int, sup=None):
+    """The two-level nearest-centroid kernel: rank the supers of `H`
+    (`_hier_tables`) with `_nearest`, pool the leaves of each row's
+    `n_super` nearest — or of its given super-cells `sup` (rows x s) —
+    and take the top-`n` pooled leaves by (distance, leaf index), one
+    `_nearest` per distinct super tuple in the batch. With every super
+    pooled this is `_nearest` over all leaves. Returns (leaf indices,
+    distances), rows x n, index -1 past a row's candidates."""
+    S, Sn2, L, Ln2, by_super = H
+    if sup is None:
+        sup = _nearest(M, S, Sn2, n_super)[0]
+    idx = np.full((len(M), n), -1, dtype=np.int64)
+    d = np.zeros((len(M), n), dtype=Ln2.dtype)
+    tuples, inverse = np.unique(sup, axis=0, return_inverse=True)
+    inverse = np.asarray(inverse).reshape(-1)  # numpy 2.0 axis quirk
+    for t, supers in enumerate(tuples):
+        cand = np.sort(np.concatenate([by_super[s] for s in supers]))
+        if len(cand):
+            sel = inverse == t
+            loc, dist = _nearest(M[sel], L[cand], Ln2[cand], n)
+            idx[sel, : loc.shape[1]] = cand[loc]
+            d[sel, : loc.shape[1]] = dist
+    return idx, d
+
+
+def _first_cells(n_rows: int, rows: np.ndarray, idx: np.ndarray) -> pd.Series:
+    """Int32 Series of each row's nearest cell: NULL for a NULL vector
+    or a row without candidates."""
+    cell = np.full(n_rows, -1, dtype=np.int32)
+    cell[rows] = idx[:, 0]
+    return pd.Series(pd.arrays.IntegerArray(cell, cell < 0))
+
+
+def _probe_lists(n_rows: int, rows: np.ndarray, idx: np.ndarray, ids=None) -> pd.Series:
+    """Series of each row's probed cells in rank order (NULL for a
+    NULL vector), mapped through `ids` when given."""
+    res: list = [None] * n_rows
+    cells = (idx if ids is None else ids[idx]).tolist()
+    for pos, row, w in zip(rows, cells, (idx >= 0).sum(axis=1).tolist()):
+        res[pos] = row[:w]
+    return pd.Series(res)
 
 
 def with_nearest_list(
@@ -776,14 +881,8 @@ def with_nearest_list(
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
         C, n2 = bc.value
-        res: list = [None] * len(v)
-        rows, M = _stack(v)
-        if M is not None:
-            d = -2.0 * (M @ C.T) + n2[None, :]
-            d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
-            for pos, lid in zip(rows, np.argmin(d, axis=1)):  # first-min
-                res[pos] = int(lid)
-        return pd.Series(res, dtype="Int32")
+        rows, M = _stack(v, C.shape[1])
+        return _first_cells(len(v), rows, _nearest(M, C, n2, 1)[0])
 
     return df.withColumn(
         out_col, assign(_well_formed(F.col(vec_col), len(centroids[0])))
@@ -807,15 +906,8 @@ def with_probe_lists(
     @F.pandas_udf("array<int>")
     def probes(v: pd.Series) -> pd.Series:
         C, n2 = bc.value
-        res: list = [None] * len(v)
-        rows, M = _stack(v)
-        if M is not None:
-            d = -2.0 * (M @ C.T) + n2[None, :]
-            d[np.isnan(d)] = np.inf  # Spark NaN-last ordering
-            order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            for pos, row in zip(rows, order):
-                res[pos] = [int(i) for i in row]
-        return pd.Series(res)
+        rows, M = _stack(v, C.shape[1])
+        return _probe_lists(len(v), rows, _nearest(M, C, n2, n_probe)[0])
 
     return df.withColumn(
         out_col,
@@ -970,9 +1062,9 @@ def assign_leaves_to_supers(
     """Attach each leaf centroid to its nearest super centroid (exact
     integer L2 over quantized vectors, ties by super id — the same
     argmin `ivf_assign` uses, so an SQL oracle reproduces the tree
-    exactly). Output: leaf_cents columns + `super_col`. Both tables
-    are quantizer-sized (k rows), so this is a broadcast crossJoin of
-    two tiny relations — negligible next to any corpus pass."""
+    exactly). Output: leaf_cents columns + `super_col`; a leaf with a
+    NULL or malformed vector gets no row. Both tables are
+    quantizer-sized (k rows) — negligible next to any corpus pass."""
     out = ivf_assign(leaf_cents, super_cents, 1, cent_vec, cent_id, cent_id, cent_vec)
     return out.withColumnRenamed("cell", super_col)
 
@@ -1000,8 +1092,11 @@ def ivf_assign_hier(
     unchanged.
 
     `leaf_cents` must carry `super_col` (see `assign_leaves_to_supers`
-    — or any externally-fit hierarchy). Both centroid tables broadcast
-    (quantizer-sized); per-vector work is O(n_super +
+    — or any externally-fit hierarchy). Both centroid tables are
+    collected (quantizer-sized) and broadcast as int64 matrices, and one
+    Arrow `_nearest_hier` pass assigns every vector (no join, window
+    or shuffle); a super without leaves never wins the descent, and a
+    NULL or malformed vector emits no rows. Per-vector work is O(n_super +
     n_probe_super * leaves_per_super) ~ O(2 sqrt(n_lists)) instead of
     the flat O(n_lists) — sub-quadratic when n_lists scales with the
     corpus.
@@ -1014,42 +1109,28 @@ def ivf_assign_hier(
     super-cell boundary may miss a leaf across the boundary — the
     standard two-level recall trade, recovered by raising
     n_probe_super (exactly like n_probe in flat IVF)."""
-    sup = super_cents.select(
-        F.col(cent_id).alias("_sid"), quantize_vec(F.col(cent_vec)).alias("_sq")
+    _, sup_ids, S = _quantized_rows(super_cents, cent_id, cent_vec)
+    leaf, leaf_ids, L = _quantized_rows(
+        leaf_cents, cent_id, cent_vec, F.col(super_col).alias("_s")
     )
-    leaf = leaf_cents.select(
-        F.col(super_col).alias("_lsid"),
-        F.col(cent_id).alias("_lid"),
-        quantize_vec(F.col(cent_vec)).alias("_lq"),
+    # a leaf whose super is not in `super_cents` is never a candidate
+    sup_index = {s: i for i, s in enumerate(sup_ids.tolist())}
+    ls = np.asarray([sup_index.get(r._s, -1) for r in leaf], dtype=np.int64)
+    bc = content_keyed_broadcast(
+        vecs.sparkSession, f"ivf-int-hier-{S.shape}-{L.shape}",
+        np.concatenate([S.ravel(), L.ravel(), leaf_ids, ls]),
+        lambda _: (leaf_ids, _hier_tables(S, L, ls)),
     )
-    # a super with no leaves must never win the descent (the vector
-    # would vanish at the leaf join) — rank only live supers; both
-    # tables are quantizer-sized, so the semi-join is a broadcast
-    sup = sup.join(
-        F.broadcast(leaf.select(F.col("_lsid").alias("_sid")).distinct()),
-        "_sid",
-        "semi",
-    )
-    staged = (
-        vecs.withColumn("_q", quantize_vec(F.col(vec_col)))
-        .crossJoin(F.broadcast(sup))
-        .withColumn("_sd2", _quant_dist2(F.col("_q"), F.col("_sq")))
-    )
-    ws = Window.partitionBy(id_col).orderBy(F.asc("_sd2"), F.asc("_sid"))
-    descended = (
-        staged.withColumn("_srk", F.row_number().over(ws))
-        .filter(F.col("_srk") <= n_probe_super)
-        .drop("_sq", "_sd2", "_srk")
-    )
-    scored = descended.join(
-        F.broadcast(leaf), descended["_sid"] == leaf["_lsid"]
-    ).withColumn("_d2", _quant_dist2(F.col("_q"), F.col("_lq")))
-    wl = Window.partitionBy(id_col).orderBy(F.asc("_d2"), F.asc("_lid"))
-    extra = [F.col("_rk").alias(rank_col)] if rank_col else []
-    return (
-        scored.withColumn("_rk", F.row_number().over(wl))
-        .filter(F.col("_rk") <= n_probe)
-        .select(*vecs.columns, F.col("_lid").alias("cell"), *extra)
+
+    @F.pandas_udf("array<long>")
+    def probes(q: pd.Series) -> pd.Series:
+        leaf_ids, H = bc.value
+        rows, Q = _stack(q, H[2].shape[1], np.int64)
+        idx = _nearest_hier(Q, H, n_probe_super, n_probe)[0]
+        return _probe_lists(len(q), rows, idx, leaf_ids)
+
+    return _explode_cells(
+        vecs, probes, vec_col, L.shape[1], leaf_cents.schema[cent_id].dataType, rank_col
     )
 
 
@@ -1178,47 +1259,19 @@ def ivf_build_hier_centroids(
 
 
 def _hier_bc(spark, hq: HierQuantizer):
-    """Broadcast the hierarchy once per distinct content (the
-    `content_keyed_broadcast` discipline): numpy super/leaf matrices,
-    their squared norms, and the per-super leaf-id index. Supers with
-    no leaves (possible in a hand-built HierQuantizer; the fitted
-    builder drops them) get +inf super distance so the descent can
-    never choose an empty cell and NULL-out a vector."""
+    """Broadcast the hierarchy's float `_hier_tables` once per distinct
+    content (the `content_keyed_broadcast` discipline). Supers with no
+    leaves (possible in a hand-built HierQuantizer;
+    `ivf_build_hier_centroids` drops them) never win the descent."""
 
     S = np.asarray(hq.supers, dtype=np.float64)
     L = np.asarray(hq.leaves, dtype=np.float64)
     ls = np.asarray(hq.leaf_super, dtype=np.int64)
     packed = np.concatenate([S.ravel(), L.ravel(), ls.astype(np.float64)])
-
-    def build(_):
-        by_super = [np.nonzero(ls == s)[0] for s in range(len(S))]
-        sn2 = (S * S).sum(axis=1) + np.where(
-            [len(b) == 0 for b in by_super], np.inf, 0.0
-        )
-        return (S, sn2, L, (L * L).sum(axis=1), by_super)
-
-    return content_keyed_broadcast(spark, f"ivf-hier-{S.shape}-{L.shape}", packed, build)
-
-
-def _leaf_argmin_scatter(M, sp, rows, res, L, Ln2, by_super):
-    """Shared per-super leaf argmin: for batch rows `M` whose chosen
-    super ids are `sp`, scatter each row's nearest-leaf GLOBAL id into
-    `res` at positions `rows` — one BLAS matmul per distinct super in
-    the batch, NaN distances masked to +inf (the flat engines' NaN
-    ordering), ties to the lowest leaf id (idx is sorted). The single
-    distance/tie-break kernel behind both the Lloyd re-assignment and
-    serving-time assignment, so they cannot drift apart."""
-
-    for s in np.unique(sp):
-        idx = by_super[s]
-        if len(idx) == 0:
-            continue
-        sel = sp == s
-        d = -2.0 * (M[sel] @ L[idx].T) + Ln2[idx][None, :]
-        d[np.isnan(d)] = np.inf
-        ids = idx[np.argmin(d, axis=1)]
-        for pos, lid in zip(rows[sel], ids):
-            res[pos] = int(lid)
+    return content_keyed_broadcast(
+        spark, f"ivf-hier-{S.shape}-{L.shape}", packed,
+        lambda _: _hier_tables(S, L, ls),
+    )
 
 
 def _with_leaf_in_super(
@@ -1226,20 +1279,17 @@ def _with_leaf_in_super(
     out_col: str = "leaf_id",
 ) -> DataFrame:
     """Nearest leaf WITHIN an already-chosen super-cell (the Lloyd
-    re-assignment inner step): batched per-super BLAS, one matmul per
-    distinct super id in the batch. A NULL super id or a NULL or
-    malformed vector (`_well_formed`) assigns NULL."""
+    re-assignment inner step): `_nearest_hier` with each row's super
+    given, one matmul per distinct super id in the batch. A NULL super
+    id or a NULL or malformed vector (`_well_formed`) assigns NULL."""
     bc = _hier_bc(df.sparkSession, hq)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series, sup: pd.Series) -> pd.Series:
-        _, _, L, Ln2, by_super = bc.value
-        res: list = [None] * len(v)
-        rows, M = _stack(v.where(sup.notna()))
-        if M is not None:
-            sp = sup.iloc[rows].to_numpy(dtype=np.int64)
-            _leaf_argmin_scatter(M, sp, rows, res, L, Ln2, by_super)
-        return pd.Series(res, dtype="Int32")
+        H = bc.value
+        rows, M = _stack(v.where(sup.notna()), H[2].shape[1])
+        given = sup.iloc[rows].to_numpy(dtype=np.int64)[:, None]
+        return _first_cells(len(v), rows, _nearest_hier(M, H, 1, 1, given)[0])
 
     vec = _well_formed(F.col(vec_col), len(hq.leaves[0]))
     return df.withColumn(out_col, assign(vec, F.col(super_col)))
@@ -1248,9 +1298,9 @@ def _with_leaf_in_super(
 def with_nearest_list_hier(
     df: DataFrame, vec_col: str, hq: HierQuantizer, out_col: str = "list_id"
 ) -> DataFrame:
-    """`with_nearest_list` through the hierarchy: one batched matmul
-    against the supers (argmin), then one per distinct super in the
-    batch against only ITS leaves — O(batch x (n_super +
+    """`with_nearest_list` through the hierarchy (`_nearest_hier`): one
+    batched matmul against the supers (argmin), then one per distinct
+    super in the batch against only ITS leaves — O(batch x (n_super +
     leaves_per_super)) where the flat assigner is O(batch x n_lists).
     Output cell ids are GLOBAL leaf ids, so persisted layouts
     (`ivf_write_assignments`-style partitionBy) and the maintenance
@@ -1261,15 +1311,9 @@ def with_nearest_list_hier(
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
-        S, Sn2, L, Ln2, by_super = bc.value
-        res: list = [None] * len(v)
-        rows, M = _stack(v)
-        if M is not None:
-            ds = -2.0 * (M @ S.T) + Sn2[None, :]
-            ds[np.isnan(ds)] = np.inf
-            sp = np.argmin(ds, axis=1)
-            _leaf_argmin_scatter(M, sp, rows, res, L, Ln2, by_super)
-        return pd.Series(res, dtype="Int32")
+        H = bc.value
+        rows, M = _stack(v, H[2].shape[1])
+        return _first_cells(len(v), rows, _nearest_hier(M, H, 1, 1)[0])
 
     return df.withColumn(
         out_col, assign(_well_formed(F.col(vec_col), len(hq.leaves[0])))
@@ -1284,41 +1328,21 @@ def with_probe_lists_hier(
     n_probe_super: int = 2,
     out_col: str = "list_id",
 ) -> DataFrame:
-    """Query-side hierarchical probing: rank the supers (stable), take
-    the `n_probe_super` nearest, pool THEIR leaves as candidates, emit
-    the `n_probe` nearest candidates by (distance, leaf id) — the
-    exact tie-break `with_probe_lists` uses, so with n_probe_super =
-    n_super the probe set equals the flat probe set over the same
-    leaves (pytest-pinned). Rows are batched by identical super-tuple
-    (np.unique on the ranked prefix), one candidate matmul per
-    distinct tuple per batch. NULL and malformed vectors
-    (`_well_formed`) emit no probe rows."""
+    """Query-side hierarchical probing (`_nearest_hier`): rank the
+    supers (stable), take the `n_probe_super` nearest, pool THEIR
+    leaves as candidates, emit the `n_probe` nearest candidates by
+    (distance, leaf id) — the exact tie-break `with_probe_lists` uses,
+    so with n_probe_super = n_super the probe set equals the flat
+    probe set over the same leaves (pytest-pinned). One candidate
+    matmul per distinct super tuple per batch. NULL and malformed
+    vectors (`_well_formed`) emit no probe rows."""
     bc = _hier_bc(df.sparkSession, hq)
 
     @F.pandas_udf("array<int>")
     def probes(v: pd.Series) -> pd.Series:
-        S, Sn2, L, Ln2, by_super = bc.value
-        k_sup = min(n_probe_super, len(S))
-        res: list = [None] * len(v)
-        rows, M = _stack(v)
-        if M is not None:
-            ds = -2.0 * (M @ S.T) + Sn2[None, :]
-            ds[np.isnan(ds)] = np.inf
-            order = np.argsort(ds, axis=1, kind="stable")[:, :k_sup]
-            tuples, inverse = np.unique(order, axis=0, return_inverse=True)
-            inverse = np.asarray(inverse).reshape(-1)  # numpy 2.0 axis quirk
-            for t in range(len(tuples)):
-                idx = np.concatenate([by_super[s] for s in tuples[t]])
-                if len(idx) == 0:
-                    continue
-                idx = np.sort(idx)  # (d, leaf_id) tie-break via stable sort
-                sel = inverse == t
-                d = -2.0 * (M[sel] @ L[idx].T) + Ln2[idx][None, :]
-                d[np.isnan(d)] = np.inf
-                ranked = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-                for pos, row in zip(rows[sel], ranked):
-                    res[pos] = [int(idx[i]) for i in row]
-        return pd.Series(res)
+        H = bc.value
+        rows, M = _stack(v, H[2].shape[1])
+        return _probe_lists(len(v), rows, _nearest_hier(M, H, n_probe_super, n_probe)[0])
 
     vec = _well_formed(F.col(vec_col), len(hq.leaves[0]))
     return df.withColumn(out_col, F.explode(probes(vec)))
@@ -1397,11 +1421,66 @@ def semdedup_learned_centroids(
     return [[int(round(x * QUANT_SCALE)) for x in c] for c in book]
 
 
-def _with_cells_int(df, id_col, vec_col, dim, assign) -> DataFrame:
-    """(id, __v float vector, cluster, dist2): `assign` is a
-    struct<cluster, dist2> pandas_udf over the JVM-QUANTIZED vector,
-    so quantization is engine-identical by construction. A NULL or
-    malformed vector (`_well_formed`) assigns NULL cluster/dist2."""
+def _assign_cells_int(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[int]],
+    super_centroids: list[list[int]] | None = None,
+) -> DataFrame:
+    """SemDeDup's exact-INTEGER nearest-centroid assignment with zero
+    shuffle: (id, __v float vector, cluster, dist2) where cluster is
+    the argmin of squared L2 between the JVM-QUANTIZED vector and the
+    integer centroids (first-min tie-break = smaller cell index) and
+    dist2 is that minimum. One Arrow pandas_udf against a broadcast
+    int64 matrix runs `_nearest` and adds ||q||^2 back for dist2 —
+    exact int64 ((q-c)^2 <= 2^42 per dim at QUANT_SCALE for
+    unit-range inputs, no overflow at any realistic dim). A NULL or
+    malformed vector (`_well_formed`) assigns NULL cluster/dist2. A
+    literal-expression engine computed the same rows and lost
+    (embedding_semdedup 1.79 s vs 1.73 s at sf0.01, 2.48 s vs 2.21 s
+    at sf0.1); it is deleted.
+
+    `super_centroids` routes through the two-level integer hierarchy
+    (`_nearest_hier` into the nearest super) — SemDeDup's escape from the
+    flat-assignment wall when the cluster count scales with the
+    corpus (the paper's regime: constant mean cluster size),
+    O(n x 2 sqrt(k)) instead of O(n x k). Each leaf attaches to its
+    integer-argmin super, computed driver-side over the two
+    quantizer-sized matrices. With ONE super every leaf is always a
+    candidate and the output equals the flat form exactly
+    (pytest-pinned); with more supers a vector near a super boundary
+    may land in a neighboring cluster — cluster granularity is the
+    approximate part of SemDeDup anyway. A super with no leaves never
+    captures a vector (`_hier_tables`)."""
+    C = np.asarray(centroids, dtype=np.int64)
+    dim, hier = C.shape[1], super_centroids is not None
+    if hier:
+        S = np.asarray(super_centroids, dtype=np.int64)
+        ls = _nearest(C, S, (S * S).sum(axis=1), 1)[0][:, 0]
+        bc = content_keyed_broadcast(
+            df.sparkSession, "semdedup-hier", np.concatenate([S.ravel(), C.ravel(), ls]),
+            lambda _: _hier_tables(S, C, ls),
+        )
+    else:
+        bc = content_keyed_broadcast(
+            df.sparkSession, "semdedup-centroids", C,
+            lambda C: (C, (C * C).sum(axis=1)),
+        )
+
+    @F.pandas_udf("struct<cluster:long,dist2:long>")
+    def assign(qv: pd.Series) -> pd.DataFrame:
+        rows, Q = _stack(qv, dim, np.int64)
+        idx, d = _nearest_hier(Q, bc.value, 1, 1) if hier else _nearest(Q, *bc.value, 1)
+        cell = np.full(len(qv), -1, dtype=np.int64)
+        d2 = np.zeros(len(qv), dtype=np.int64)
+        cell[rows] = idx[:, 0]
+        d2[rows] = d[:, 0] + (Q * Q).sum(axis=1)
+        return pd.DataFrame({
+            "cluster": pd.arrays.IntegerArray(cell, cell < 0),
+            "dist2": pd.arrays.IntegerArray(d2, cell < 0),
+        })
+
     qv = quantize_vec(_well_formed(F.col(vec_col), dim))
     return (
         df.select(F.col(id_col), F.col(vec_col).alias("__v"), qv.alias("__q"))
@@ -1410,108 +1489,6 @@ def _with_cells_int(df, id_col, vec_col, dim, assign) -> DataFrame:
                 F.col("__a.cluster").alias("cluster"),
                 F.col("__a.dist2").alias("dist2"))
     )
-
-
-def _assign_cells_int(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[int]],
-) -> DataFrame:
-    """Exact-INTEGER nearest-centroid assignment with zero shuffle:
-    (id, __v float vector, cluster, dist2) where cluster is the
-    argmin of squared L2 between the QUANTIZED vector and the integer
-    centroids (first-min tie-break = smaller cell index) and dist2 is
-    that minimum. One Arrow pandas_udf against a broadcast int64
-    matrix: ||q||^2 - 2 q.C^T + ||c||^2 == sum((q-c)^2) in exact
-    int64 ((q-c)^2 <= 2^42 per dim at QUANT_SCALE for unit-range
-    inputs — no overflow at any realistic dim). A literal-expression
-    engine computed the same rows and lost (embedding_semdedup 1.79 s
-    vs 1.73 s at sf0.01, 2.48 s vs 2.21 s at sf0.1); it is
-    deleted."""
-    C = np.asarray(centroids, dtype=np.int64)
-    bc = content_keyed_broadcast(
-        df.sparkSession, "semdedup-centroids", C,
-        lambda C: (C, (C * C).sum(axis=1)),
-    )
-
-    @F.pandas_udf("struct<cluster:long,dist2:long>")
-    def assign(qv: pd.Series) -> pd.DataFrame:
-        Cm, cn2 = bc.value
-        cell = pd.array([None] * len(qv), dtype="Int64")
-        d2 = pd.array([None] * len(qv), dtype="Int64")
-        rows, Q = _stack(qv, np.int64)
-        if Q is not None:
-            d = (Q * Q).sum(axis=1)[:, None] - 2 * (Q @ Cm.T) + cn2[None, :]
-            ids = np.argmin(d, axis=1)  # first-min
-            cell[rows] = ids
-            d2[rows] = d[np.arange(len(ids)), ids]
-        return pd.DataFrame({"cluster": cell, "dist2": d2})
-
-    return _with_cells_int(df, id_col, vec_col, C.shape[1], assign)
-
-
-def _assign_cells_int_hier(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[int]],
-    super_centroids: list[list[int]],
-) -> DataFrame:
-    """`_assign_cells_int` through a two-level integer hierarchy —
-    SemDeDup's escape from the flat-assignment wall when the cluster
-    count scales with the corpus (the paper's regime: constant mean
-    cluster size): argmin over ~sqrt(k) SUPER centroids, then argmin
-    over only that super's leaf clusters, O(n x 2 sqrt(k)) instead of
-    O(n x k). Output contract identical ((id, __v, cluster, dist2),
-    cluster = GLOBAL leaf index, dist2 = exact int64 squared L2 to
-    it). Leaf->super attachment is the same integer argmin, computed
-    driver-side over two quantizer-sized matrices. With ONE super
-    every leaf is always a candidate and the output equals
-    `_assign_cells_int` exactly (pytest-pinned); with more supers a
-    vector near a super boundary may land in a neighboring cluster —
-    cluster granularity is the approximate part of SemDeDup anyway,
-    and the dedup semantics downstream are unchanged. A super with no
-    leaves gets a +2^62 distance penalty (exact-int analog of the
-    float engines' +inf mask) so it can never capture a vector."""
-    C = np.asarray(centroids, dtype=np.int64)
-    S = np.asarray(super_centroids, dtype=np.int64)
-    dls = (C * C).sum(1)[:, None] - 2 * (C @ S.T) + (S * S).sum(1)[None, :]
-    ls = np.argmin(dls, axis=1)
-    packed = np.concatenate([S.ravel(), C.ravel(), ls])
-
-    def build(_):
-        by_super = [np.nonzero(ls == s)[0] for s in range(len(S))]
-        sn2 = (S * S).sum(axis=1) + np.where(
-            [len(b) == 0 for b in by_super], np.int64(1) << 62, 0
-        )
-        return (S, sn2, C, (C * C).sum(axis=1), by_super)
-
-    bc = content_keyed_broadcast(df.sparkSession, "semdedup-hier", packed, build)
-
-    @F.pandas_udf("struct<cluster:long,dist2:long>")
-    def assign(qv: pd.Series) -> pd.DataFrame:
-        Sm, sn2, Cm, cn2, by_super = bc.value
-        cell = pd.array([None] * len(qv), dtype="Int64")
-        d2 = pd.array([None] * len(qv), dtype="Int64")
-        rows, Q = _stack(qv, np.int64)
-        if Q is not None:
-            qn2 = (Q * Q).sum(axis=1)
-            dsup = qn2[:, None] - 2 * (Q @ Sm.T) + sn2[None, :]
-            sp = np.argmin(dsup, axis=1)
-            for s in np.unique(sp):
-                idx = by_super[s]
-                if len(idx) == 0:
-                    continue
-                sel = sp == s
-                d = (qn2[sel][:, None] - 2 * (Q[sel] @ Cm[idx].T)
-                     + cn2[idx][None, :])
-                loc = np.argmin(d, axis=1)
-                cell[rows[sel]] = idx[loc]
-                d2[rows[sel]] = d[np.arange(len(loc)), loc]
-        return pd.DataFrame({"cluster": cell, "dist2": d2})
-
-    return _with_cells_int(df, id_col, vec_col, C.shape[1], assign)
 
 
 def semdedup_hier_centroids(
@@ -1526,7 +1503,7 @@ def semdedup_hier_centroids(
     (`ivf_build_hier_centroids`) quantized to the exact-integer
     representation `semdedup` assigns against. Returns (super_ints,
     leaf_ints); the leaf->super attachment is recomputed by integer
-    argmin inside `_assign_cells_int_hier`, so the served tree is
+    argmin inside `_assign_cells_int`, so the served tree is
     self-consistent with the integer geometry."""
     hq = ivf_build_hier_centroids(
         df.select(F.col(vec_col).alias("c_vec")), "c_vec", n_clusters,
@@ -1601,11 +1578,9 @@ def semdedup(
     # sf10 k=800: 633 s -> see BASELINE round-10).
     # `super_centroids` routes through the two-level integer argmin
     # (O(n x 2 sqrt(k))) — the opt-in for corpus-scaled k, where the
-    # flat scan is the quadratic term (see _assign_cells_int_hier).
-    assigned = (
-        _assign_cells_int_hier(df, id_col, vec_col, centroids, super_centroids)
-        if super_centroids is not None
-        else _assign_cells_int(df, id_col, vec_col, centroids)
+    # flat scan is the quadratic term (see _assign_cells_int).
+    assigned = _assign_cells_int(
+        df, id_col, vec_col, centroids, super_centroids
     ).localCheckpoint(eager=True)
 
     members = None

@@ -491,10 +491,11 @@ def ann_ivf_hier_oracle(
 ) -> str:
     """Two-level (hierarchical) IVF rebuilt in SQL: leaves attach to
     their integer-argmin super, every vector ranks the supers then
-    only its probed supers' leaves — the exact candidate-pruning
-    `ivf_assign_hier` performs, windowed argmins with identical
-    (distance, id) tie-breaks. Frozen head-row quantizer (supers =
-    first n_super embeddings, leaves = first n_leaves)."""
+    only its probed supers' leaves — the candidate pruning
+    `ivf_assign_hier` performs in its int64 numpy kernel, here as
+    windowed argmins with the same (distance, id) tie-breaks. Frozen
+    head-row quantizer (supers = first n_super embeddings, leaves =
+    first n_leaves)."""
 
     def d2(a: str, b: str) -> str:
         return (

@@ -11,9 +11,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .. import scale
 from ..functions import bpe as _bpe
 from ..functions import corpus, dedup, multimodal, similarity, text
-from ..scale import ensure_parallelism, ivf_salt
+from ..scale import ensure_parallelism
 from . import REGISTRY, register, table
 from ._oracle_sql import (
     H60 as _H60,
@@ -689,8 +690,8 @@ def doc_fingerprint_sketch(spark, sf_dir):
 def similarity_ann_ivf(spark, sf_dir):
     """IVF approximate NN (functions/similarity.py ivf_topk_portable):
     coarse-quantizer cells + n_probe cell search — the classic ANN
-    index shape, all assignment via a broadcast centroid-table join
-    (nothing collects to the driver). The centroid table here is the
+    index shape; assignment is one Arrow pass against the collected,
+    broadcast centroid table (k rows). The centroid table here is the
     first 8 embeddings (a production IVF reads its quantizer from an
     offline-fit table the same way; `ivf_topk` keeps the in-engine
     k-means fit, pytest-covered), and cell assignment is exact integer
@@ -4400,7 +4401,7 @@ def embedding_bitext_ivf(spark, sf_dir):
     # scoring with an IDENTICAL pair set (see _ivf_score_assigned).
     return mine_bitext_ivf(
         side_a, side_b, centroids, k=_BITEXT_K, n_probe=3, threshold=1.0,
-        salt_n=ivf_salt(spark, 8),
+        salt_n=scale.ivf_salt(spark, 8),
     )
 
 

@@ -164,6 +164,42 @@ def collapse_gate(request, monkeypatch):
     return gate
 
 
+class IvfSalt(_BothWays):
+    """The salt the `ivf_salt` fixture forced: ``seen`` holds the
+    ``salt_n`` of each call to the IVF score tail."""
+
+    def __init__(self, salt: int, test_key: str):
+        super().__init__(test_key)
+        self.salt = salt
+        self.seen: list[int] = []
+
+    def assert_salted(self) -> None:
+        """The score tail ran, and every call used the forced salt."""
+        assert self.seen and set(self.seen) == {self.salt}, self.seen
+
+
+@pytest.fixture(params=["unsalted", "salted"])
+def ivf_salt(request, monkeypatch):
+    """Force `scale.ivf_salt` to 1 ("unsalted") or 3 ("salted"), so the
+    salted cell join runs on any core count; the returned `IvfSalt`
+    spies on the ``salt_n`` that `similarity._ivf_score_assigned`
+    receives."""
+    from malstrom_spark import scale
+    from malstrom_spark.functions import similarity
+
+    salt = 1 if request.param == "unsalted" else 3
+    spy = IvfSalt(salt, re.sub(r"\b(un)?salted\b", "", request.node.nodeid))
+    monkeypatch.setattr(scale, "ivf_salt", lambda spark, n_cells: salt)
+    real = similarity._ivf_score_assigned
+
+    def score(*args, salt_n: int = 1, **kwargs):
+        spy.seen.append(salt_n)
+        return real(*args, salt_n=salt_n, **kwargs)
+
+    monkeypatch.setattr(similarity, "_ivf_score_assigned", score)
+    return spy
+
+
 class CcFinish(_BothWays):
     """Which path `dedup_groups` took while `force_cc_finish` forced
     it: ``finishes`` counts driver finishes, ``rounds`` counts

@@ -189,11 +189,11 @@ _MALFORMED = [
 
 
 def test_malformed_vectors_assign_null(spark):
-    """Every Arrow nearest-centroid kernel treats a vector with a NULL
-    element or a length other than the centroids' like a NULL vector:
-    NULL cell (or cluster/dist2), no probe rows. Arrow hands a NULL
-    element over as NaN, which would take a real cell, and a ragged
-    batch would fail the whole job in np.stack."""
+    """Every nearest-centroid kernel, float or integer, treats a vector
+    with a NULL element or a length other than the centroids' like a
+    NULL vector: NULL cell (or cluster/dist2), no probe or cell rows.
+    Arrow hands a NULL element over as NaN, which would take a real
+    cell, and a ragged batch would fail the whole job in np.stack."""
     df = spark.createDataFrame(_MALFORMED, "c_id long, c_vec array<double>")
     cents = [[1.0, 0.0], [0.0, 1.0]]
     hq = similarity.HierQuantizer(
@@ -223,13 +223,42 @@ def test_malformed_vectors_assign_null(spark):
 
     icents = [[1 << 20, 0], [0, 1 << 20]]
     flat = similarity._assign_cells_int(df, "c_id", "c_vec", icents)
-    hier = similarity._assign_cells_int_hier(
+    hier = similarity._assign_cells_int(
         df, "c_id", "c_vec", icents, [icents[0]]
     )
     for out in (flat, hier):
         got = {r.c_id: (r.cluster, r.dist2) for r in out.collect()}
         assert got == {0: (0, 0), 1: (None, None), 2: (None, None),
                        3: (None, None), 4: (None, None), 5: (1, 0)}
+
+    # the integer IVF assigners: a malformed vector emits no cell rows,
+    # also as a leaf centroid being attached to its super
+    def cent_table(rows):
+        return spark.createDataFrame(rows, "cent_id long, cent_vec array<double>")
+
+    supers = cent_table([(0, [1.0, 0.0]), (1, [0.0, 1.0])])
+    leaves = similarity.assign_leaves_to_supers(
+        cent_table([(10, [1.0, 0.0]), (11, [0.9, 0.1]), (12, [0.0, 1.0]),
+                    (13, [0.1, 0.9])]),
+        supers,
+    )
+    attached = similarity.assign_leaves_to_supers(
+        df.withColumnRenamed("c_id", "cent_id").withColumnRenamed("c_vec", "cent_vec"),
+        supers,
+    )
+    assert {r.cent_id: r.super_id for r in attached.collect()} == {0: 0, 5: 1}
+
+    def assigned(out):
+        return {(r.c_id, r.cell, r.rk) for r in out.collect()}
+
+    assert assigned(
+        similarity.ivf_assign(df, supers, 2, "c_vec", "c_id", rank_col="rk")
+    ) == {(0, 0, 1), (0, 1, 2), (5, 1, 1), (5, 0, 2)}
+    assert assigned(
+        similarity.ivf_assign_hier(
+            df, supers, leaves, 2, "c_vec", "c_id", rank_col="rk"
+        )
+    ) == {(0, 10, 1), (0, 11, 2), (5, 12, 1), (5, 13, 2)}
 
 
 @pytest.mark.slow

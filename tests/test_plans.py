@@ -106,6 +106,33 @@ def test_lsh_near_dups_bucket_each_vector_once(spark, sf_dir):
     assert "ReusedExchange" in plan, plan
 
 
+def test_ivf_assign_is_a_pure_map(spark, sf_dir):
+    """Integer IVF assignment, flat and two-level, is one Arrow pass
+    over the corpus against a broadcast quantizer: the executed plan
+    holds no pair join, no window and no exchange."""
+    from malstrom_spark.functions import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
+
+    def cents(n):
+        return emb.where(F.col("vec_id") < n).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
+        )
+
+    leaves = similarity.assign_leaves_to_supers(cents(9), cents(3))
+    for out in (
+        similarity.ivf_assign(corpus, cents(8), 3, "c_vec", "c_id", rank_col="rk"),
+        similarity.ivf_assign_hier(
+            corpus, cents(3), leaves, 3, "c_vec", "c_id", n_probe_super=2, rank_col="rk"
+        ),
+    ):
+        out.collect()
+        plan = plan_simple(out)
+        for node in ("BroadcastNestedLoopJoin", "CartesianProduct", "Window", "Exchange"):
+            assert node not in plan, plan
+
+
 def test_cosine_topk_broadcasts_queries(spark, sf_dir, reg):
     plan = plan_of(reg["similarity_topk_cosine"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan

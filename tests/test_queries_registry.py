@@ -92,13 +92,53 @@ def _assert_matches_oracle(sf_dir, name, got, gate) -> None:
     assert normalize(got) == normalize(want)
 
 
+@pytest.fixture(scope="session")
+def sf_twice(sf_dir, tmp_path_factory):
+    """sf0.001 replicated twice by tools/make_sf_replica.py: documents,
+    names and vectors are copied under offset ids, so every text, name
+    and vector has an exact twin."""
+    import pathlib
+    import subprocess
+    import sys
+
+    tool = pathlib.Path(__file__).resolve().parent.parent / "tools" / "make_sf_replica.py"
+    out = tmp_path_factory.mktemp("sf_twice")
+    subprocess.run([sys.executable, str(tool), sf_dir, str(out), "2"],
+                   check=True, capture_output=True)
+    return str(out)
+
+
+@pytest.mark.parametrize("data", ["sf0.001", "twice"])
 @pytest.mark.parametrize("name", COLLAPSE_GATE_ROWS)
-def test_collapse_gate_rows_match_oracle_both_ways(spark, sf_dir, collapse_gate, name):
+def test_collapse_gate_rows_match_oracle_both_ways(
+    request, spark, sf_dir, collapse_gate, name, data
+):
     """Each listed row reaches the gate, and with the collapse forced
-    on or off it matches its DuckDB oracle."""
+    on or off it matches its DuckDB oracle. On the 2x replica every
+    row's collapsed path merges twins into multi-member groups."""
+    if data == "twice":
+        data_dir, merges = request.getfixturevalue("sf_twice"), True
+    else:
+        data_dir, merges = sf_dir, name in COLLAPSE_GATE_MERGING_ROWS
+    got = full_registry()[name].fn(spark, data_dir).toPandas()
+    collapse_gate.assert_decided(merges=merges)
+    _assert_matches_oracle(data_dir, name, got, collapse_gate)
+
+
+# Every registry row whose build reaches `scale.ivf_salt` (its one
+# caller). With 8 cells its salt is 1 below 8 cores, so the default run
+# never takes the salted join; here the `ivf_salt` fixture forces the
+# salt to 1 and to 3.
+IVF_SALT_ROWS = ["embedding_bitext_ivf"]
+
+
+@pytest.mark.parametrize("name", IVF_SALT_ROWS)
+def test_ivf_salt_rows_match_oracle_both_ways(spark, sf_dir, ivf_salt, name):
+    """Each listed row reaches the salted IVF score tail, and with the
+    salt forced to 1 or 3 it matches its DuckDB oracle."""
     got = full_registry()[name].fn(spark, sf_dir).toPandas()
-    collapse_gate.assert_decided(merges=name in COLLAPSE_GATE_MERGING_ROWS)
-    _assert_matches_oracle(sf_dir, name, got, collapse_gate)
+    ivf_salt.assert_salted()
+    _assert_matches_oracle(sf_dir, name, got, ivf_salt)
 
 
 # Every registry row whose build reaches connected components

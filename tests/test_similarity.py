@@ -415,6 +415,39 @@ def test_ivf_assign_matches_numpy_reference(spark, sf_dir):
         got_p.setdefault(r.c_id, set()).add(r.list_id)
     assert got_p == probes
 
+    # integer ivf_assign against plain-Python exact L2 over the quantized
+    # vectors, ties by centroid id: ids unsorted and non-contiguous, and
+    # centroid 12 repeats centroid 3's vector, so every vector is
+    # equidistant from the two and must rank 3 first
+    head = {r.c_id: r.c_vec for r in emb.where("c_id < 3").collect()}
+    cent_t = spark.createDataFrame(
+        [(7, head[0]), (3, head[1]), (5, head[2]), (12, head[1])],
+        "cent_id long, cent_vec array<double>",
+    )
+
+    def quantized(df, i, v):
+        return {r[0]: r[1] for r in df.select(i, similarity.quantize_vec(F.col(v))).collect()}
+
+    q, cq = quantized(emb, "c_id", "c_vec"), quantized(cent_t, "cent_id", "cent_vec")
+    ranked = {
+        i: sorted((sum((a - b) ** 2 for a, b in zip(v, c)), cid) for cid, c in cq.items())
+        for i, v in q.items()
+    }
+    for n_probe in (1, 3):
+        want = {
+            (i, cid, rk) for i, d in ranked.items()
+            for rk, (_, cid) in enumerate(d[:n_probe], 1)
+        }
+        got_i = {
+            (r.c_id, r.cell, r.rk)
+            for r in similarity.ivf_assign(
+                emb, cent_t, n_probe, "c_vec", "c_id", rank_col="rk"
+            ).collect()
+        }
+        assert got_i == want
+    # the 3/12 tie decides some vector's rank-1 cell
+    assert any(d[0][1] == 3 for d in ranked.values())
+
 
 def test_ivf_nan_vector_ranks_last(spark):
     """NaN-poisoned vectors: a NaN distance loses the argmin (Spark's
