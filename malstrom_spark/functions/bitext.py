@@ -213,18 +213,18 @@ def mine_bitext_ivf(
     recall for the sub-quadratic scan, exactly like n_probe."""
     from .similarity import _ivf_score_assigned, ivf_assign, ivf_assign_hier
 
-    def _assign(df, vc, ic):
+    def _assign(df, vc):
         if super_centroids is None:
-            return ivf_assign(df, centroids, n_probe, vc, ic, rank_col="__rk")
+            return ivf_assign(df, centroids, n_probe, vc, rank_col="__rk")
         return ivf_assign_hier(
-            df, super_centroids, centroids, n_probe, vc, ic,
+            df, super_centroids, centroids, n_probe, vc,
             n_probe_super=n_probe_super, rank_col="__rk",
         )
 
     a = side_a.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
     b = side_b.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
-    ap = _assign(a, "a_vec", "a_id").localCheckpoint(eager=True)
-    bp = _assign(b, "b_vec", "b_id").localCheckpoint(eager=True)
+    ap = _assign(a, "a_vec").localCheckpoint(eager=True)
+    bp = _assign(b, "b_vec").localCheckpoint(eager=True)
     fwd = _ivf_score_assigned(
         bp.where(F.col("__rk") == 1).select(
             F.col("b_id").alias("c_id"), F.col("b_vec").alias("c_vec"), "cell"

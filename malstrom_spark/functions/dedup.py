@@ -985,7 +985,7 @@ def _groups_alternating(
     )
     n_edges = edges.count()
     for _ in range(max_iters):
-        if n_edges <= scale.CC_DRIVER_MAX_EDGES:
+        if scale.cc_finish_on_driver(n_edges):
             star = _finish_on_driver(edges)
             break
         new_edges = _small_star(_large_star_raw(edges)).localCheckpoint(eager=False)

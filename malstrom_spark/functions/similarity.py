@@ -385,7 +385,6 @@ def ivf_assign(
     centroids: DataFrame,
     n_probe: int,
     vec_col: str,
-    id_col: str,
     cent_id: str = "cent_id",
     cent_vec: str = "cent_vec",
     rank_col: str | None = None,
@@ -397,8 +396,7 @@ def ivf_assign(
     Arrow `_nearest` pass, no join, no window, no shuffle — the
     production IVF shape where the quantizer comes from an offline
     fit. Output: input cols + cell [+ `rank_col`, 1 = nearest]. A
-    NULL or malformed vector (`_well_formed`) emits no rows; `id_col`
-    is kept for the signature, rows need no key."""
+    NULL or malformed vector (`_well_formed`) emits no rows."""
     _, ids, C = _quantized_rows(centroids, cent_id, cent_vec)
     bc = content_keyed_broadcast(
         vecs.sparkSession, f"ivf-int-{C.shape}", np.concatenate([ids, C.ravel()]),
@@ -438,7 +436,7 @@ def ivf_topk_portable(
     # norms projected once per VECTOR, not once per candidate pair —
     # cosine = dot / (norm_q * norm_c) is the same IEEE ops in a
     # cheaper place (bit-identical sims, 3x fewer folds per pair)
-    cb = ivf_assign(corpus, centroids, 1, c_vec, c_id)
+    cb = ivf_assign(corpus, centroids, 1, c_vec)
     return _ivf_score_cells(
         cb, queries, centroids, k, n_probe, q_id, c_id, q_vec, c_vec
     )
@@ -459,7 +457,7 @@ def _ivf_score_cells(
     equi-join against an already-assigned corpus `cb` (columns
     c_id, c_vec, cell) with the queries broadcast, exact cosine,
     window top-k."""
-    qb = ivf_assign(queries, centroids, n_probe, q_vec, q_id)
+    qb = ivf_assign(queries, centroids, n_probe, q_vec)
     return _ivf_score_assigned(
         cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries=True
     )
@@ -581,7 +579,7 @@ def update_ivf_assignments(
     touched = F.broadcast(touched)
     live = fresh_vectors.where(F.col(c_vec).isNotNull()).select(c_id, c_vec)
     if isinstance(centroids, DataFrame):
-        fresh_rows = ivf_assign(live, centroids, 1, c_vec, c_id, cent_id, cent_vec)
+        fresh_rows = ivf_assign(live, centroids, 1, c_vec, cent_id, cent_vec)
     elif isinstance(centroids, HierQuantizer):
         fresh_rows = with_nearest_list_hier(live, c_vec, centroids)
     else:
@@ -1065,7 +1063,7 @@ def assign_leaves_to_supers(
     exactly). Output: leaf_cents columns + `super_col`; a leaf with a
     NULL or malformed vector gets no row. Both tables are
     quantizer-sized (k rows) — negligible next to any corpus pass."""
-    out = ivf_assign(leaf_cents, super_cents, 1, cent_vec, cent_id, cent_id, cent_vec)
+    out = ivf_assign(leaf_cents, super_cents, 1, cent_vec, cent_id, cent_vec)
     return out.withColumnRenamed("cell", super_col)
 
 
@@ -1075,7 +1073,6 @@ def ivf_assign_hier(
     leaf_cents: DataFrame,
     n_probe: int,
     vec_col: str,
-    id_col: str,
     n_probe_super: int = 1,
     cent_id: str = "cent_id",
     cent_vec: str = "cent_vec",
@@ -1154,12 +1151,10 @@ def ivf_topk_hier_portable(
     bucketing end to end, so a DuckDB oracle reproduces the result
     set (registry row `similarity_ann_ivf_hier`)."""
     cb = ivf_assign_hier(
-        corpus, super_cents, leaf_cents, 1, c_vec, c_id,
-        n_probe_super=n_probe_super,
+        corpus, super_cents, leaf_cents, 1, c_vec, n_probe_super=n_probe_super
     )
     qb = ivf_assign_hier(
-        queries, super_cents, leaf_cents, n_probe, q_vec, q_id,
-        n_probe_super=n_probe_super,
+        queries, super_cents, leaf_cents, n_probe, q_vec, n_probe_super=n_probe_super
     )
     return _ivf_score_assigned(
         cb, qb, k, q_id, c_id, q_vec, c_vec, broadcast_queries=True

@@ -731,7 +731,7 @@ def similarity_ann_ivf_updated(spark, sf_dir):
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
     )
-    base = similarity.ivf_assign(corpus, centroids, 1, "c_vec", "c_id")
+    base = similarity.ivf_assign(corpus, centroids, 1, "c_vec")
     src = emb.select(
         F.col("vec_id").alias("s_id"), F.col("embedding").alias("s_vec")
     )

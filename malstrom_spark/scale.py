@@ -7,10 +7,15 @@ parallelism floor, the exact-collapse gate, IVF join salting, the
 edge count under which connected components finish on the driver) it
 asks this module: the core count is read here only, and every size
 floor is a constant here.
+
+Each gate call logs one DEBUG record on this module's logger: the gate,
+its inputs and estimate, and its decision (the record's ``gate`` and
+``decision`` attributes). With DEBUG off the record is never built.
 """
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +53,18 @@ COLLAPSE_MIN_DUP_RATIO = 0.05
 #: just above the largest size measured: 2^20 edges hold 16 MiB of
 #: (u, v) longs on the driver.
 CC_DRIVER_MAX_EDGES = 1 << 20
+
+_log = logging.getLogger(__name__)
+
+
+def _decided(gate: str, decision, **inputs) -> None:
+    """Log one gate decision at DEBUG."""
+    if _log.isEnabledFor(logging.DEBUG):
+        shown = " ".join(f"{k}={v}" for k, v in inputs.items())
+        _log.debug(
+            "%s %s -> %s", gate, shown, decision,
+            extra={"gate": gate, "decision": decision},
+        )
 
 
 def _estimate_scan_partitions(df: DataFrame) -> int | None:
@@ -116,7 +133,13 @@ def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     est = _estimate_scan_partitions(df)
-    if est is None or est >= min(target, int(spark.conf.get("spark.sql.shuffle.partitions"))):
+    floor = None if est is None else min(target, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    keep = est is None or est >= floor
+    _decided(
+        "ensure_parallelism", "keep" if keep else "repartition",
+        scan_partitions=est, floor=floor, target=target, keys=list(key_cols),
+    )
+    if keep:
         return df
     return df.repartition(target, *[F.col(c) for c in key_cols]) if key_cols else df.repartition(target)
 
@@ -166,18 +189,24 @@ def collapse_exact_groups(
     action race to materialize them and each recomputes the full plan
     (measured 39 s one-shot vs 12.5 s with eager checkpoints at
     sf0.1)."""
+    gate = "collapse_exact_groups"
     size = _plan_size_bytes(source)
     if size is not None and size < COLLAPSE_PROBE_MIN_BYTES:
+        _decided(gate, "skip", size_bytes=size, min_bytes=COLLAPSE_PROBE_MIN_BYTES)
         return None
     if min_dup_ratio is None:
         min_dup_ratio = COLLAPSE_MIN_DUP_RATIO
     fps = fingerprints()
+    dup_ratio = None
     if min_dup_ratio > 0:
         total, distinct = fps.agg(
             F.count(F.lit(1)), F.approx_count_distinct("__fp", 0.02)
         ).first()
-        if total == 0 or (total - distinct) / total < min_dup_ratio:
+        dup_ratio = (total - distinct) / total if total else 0.0
+        if dup_ratio < min_dup_ratio:
+            _decided(gate, "skip", size_bytes=size, dup_ratio=dup_ratio, min_dup_ratio=min_dup_ratio)
             return None
+    _decided(gate, "collapse", size_bytes=size, dup_ratio=dup_ratio, min_dup_ratio=min_dup_ratio)
     reps = fps.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
     members = (
         fps.join(reps, "__fp")
@@ -194,4 +223,18 @@ def ivf_salt(spark: SparkSession, n_cells: int) -> int:
     occupancy; salting spreads it over the cores with an identical
     pair set. Once ``n_cells`` reaches twice the core count
     (production quantizers) the factor is 1 and salting vanishes."""
-    return max(1, (2 * spark.sparkContext.defaultParallelism) // n_cells)
+    cores = spark.sparkContext.defaultParallelism
+    salt = max(1, (2 * cores) // n_cells)
+    _decided("ivf_salt", salt, n_cells=n_cells, parallelism=cores)
+    return salt
+
+
+def cc_finish_on_driver(n_edges: int) -> bool:
+    """Whether connected components finish on the driver now: the edge
+    set holds at most `CC_DRIVER_MAX_EDGES` edges (read at call time)."""
+    finish = n_edges <= CC_DRIVER_MAX_EDGES
+    _decided(
+        "cc_finish_on_driver", "driver" if finish else "rounds",
+        n_edges=n_edges, max_edges=CC_DRIVER_MAX_EDGES,
+    )
+    return finish

@@ -56,14 +56,13 @@ def test_hier_assign_all_supers_equals_flat(spark, sf_dir):
     flat = {
         (r.c_id, r.cell, r.rk)
         for r in similarity.ivf_assign(
-            corpus, leaves, 3, "c_vec", "c_id", rank_col="rk"
+            corpus, leaves, 3, "c_vec", rank_col="rk"
         ).collect()
     }
     hier = {
         (r.c_id, r.cell, r.rk)
         for r in similarity.ivf_assign_hier(
-            corpus, supers, leaves, 3, "c_vec", "c_id",
-            n_probe_super=3, rank_col="rk",
+            corpus, supers, leaves, 3, "c_vec", n_probe_super=3, rank_col="rk"
         ).collect()
     }
     assert hier == flat
@@ -252,11 +251,11 @@ def test_malformed_vectors_assign_null(spark):
         return {(r.c_id, r.cell, r.rk) for r in out.collect()}
 
     assert assigned(
-        similarity.ivf_assign(df, supers, 2, "c_vec", "c_id", rank_col="rk")
+        similarity.ivf_assign(df, supers, 2, "c_vec", rank_col="rk")
     ) == {(0, 0, 1), (0, 1, 2), (5, 1, 1), (5, 0, 2)}
     assert assigned(
         similarity.ivf_assign_hier(
-            df, supers, leaves, 2, "c_vec", "c_id", rank_col="rk"
+            df, supers, leaves, 2, "c_vec", rank_col="rk"
         )
     ) == {(0, 10, 1), (0, 11, 2), (5, 12, 1), (5, 13, 2)}
 
@@ -414,7 +413,7 @@ def test_hier_dead_super_never_wins_descent(spark, sf_dir):
     if len(live) == 3:
         leaf_t = leaf_t.where(F.col("super_id") != sorted(live)[0])
     out = similarity.ivf_assign_hier(
-        corpus, supers, leaf_t, 1, "c_vec", "c_id", n_probe_super=1
+        corpus, supers, leaf_t, 1, "c_vec", n_probe_super=1
     )
     assert out.count() == n
 

@@ -122,9 +122,9 @@ def test_ivf_assign_is_a_pure_map(spark, sf_dir):
 
     leaves = similarity.assign_leaves_to_supers(cents(9), cents(3))
     for out in (
-        similarity.ivf_assign(corpus, cents(8), 3, "c_vec", "c_id", rank_col="rk"),
+        similarity.ivf_assign(corpus, cents(8), 3, "c_vec", rank_col="rk"),
         similarity.ivf_assign_hier(
-            corpus, cents(3), leaves, 3, "c_vec", "c_id", n_probe_super=2, rank_col="rk"
+            corpus, cents(3), leaves, 3, "c_vec", n_probe_super=2, rank_col="rk"
         ),
     ):
         out.collect()

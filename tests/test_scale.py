@@ -21,9 +21,13 @@ Connected-components finish (`scale.CC_DRIVER_MAX_EDGES`): the driver
 union-find labels a long path with shuffled ids and a star, and takes
 over from the Spark rounds once contraction brings the edge count under
 the bound.
+
+Every gate logs one DEBUG decision record per call, and nothing when
+DEBUG is off.
 """
 
 import io
+import logging
 import os
 import random
 import shutil
@@ -262,3 +266,36 @@ def test_cc_hands_off_to_driver_after_one_round(spark):
         ra, rb = find(a), find(b)
         parent[max(ra, rb)] = min(ra, rb)
     assert got == {i: find(i) for i in nodes}
+
+
+def test_every_gate_logs_one_decision_at_debug(spark, sf_dir, monkeypatch, caplog):
+    from pyspark.sql import functions as F
+
+    docs = table(spark, sf_dir, "documents")
+    small = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "id long, t string")
+    monkeypatch.setattr(scale, "COLLAPSE_PROBE_MIN_BYTES", 0)
+
+    def every_gate():
+        scale.ensure_parallelism(docs)
+        scale.collapse_exact_groups(
+            small, lambda: small.select("id", F.md5("t").alias("__fp")), "id",
+            min_dup_ratio=0.0,
+        )
+        scale.ivf_salt(spark, 8)
+        scale.cc_finish_on_driver(10)
+
+    with caplog.at_level(logging.INFO, logger=scale.__name__):
+        every_gate()
+    assert not caplog.records
+    with caplog.at_level(logging.DEBUG, logger=scale.__name__):
+        every_gate()
+    got = {r.gate: (r.decision, r.getMessage()) for r in caplog.records}
+    assert len(caplog.records) == len(got) == 4
+    assert got["ensure_parallelism"][0] in ("keep", "repartition")
+    assert "scan_partitions=" in got["ensure_parallelism"][1]
+    assert got["collapse_exact_groups"][0] == "collapse"
+    assert got["ivf_salt"][0] == max(1, 2 * spark.sparkContext.defaultParallelism // 8)
+    bound = scale.CC_DRIVER_MAX_EDGES
+    assert got["cc_finish_on_driver"] == (
+        "driver", f"cc_finish_on_driver n_edges=10 max_edges={bound} -> driver"
+    )

@@ -441,7 +441,7 @@ def test_ivf_assign_matches_numpy_reference(spark, sf_dir):
         got_i = {
             (r.c_id, r.cell, r.rk)
             for r in similarity.ivf_assign(
-                emb, cent_t, n_probe, "c_vec", "c_id", rank_col="rk"
+                emb, cent_t, n_probe, "c_vec", rank_col="rk"
             ).collect()
         }
         assert got_i == want
@@ -761,7 +761,7 @@ def test_update_ivf_assignments_equals_rebuild(spark):
     corpus = base_vecs.select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
-    assignments = sim.ivf_assign(corpus, cents, 1, "c_vec", "c_id")
+    assignments = sim.ivf_assign(corpus, cents, 1, "c_vec")
 
     # re-embed 3 and 7, tombstone 5 (NULL vector), delete 9 outright
     fresh = spark.createDataFrame(
@@ -782,7 +782,7 @@ def test_update_ivf_assignments_equals_rebuild(spark):
         emb(rebuilt_rows).select(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
         ),
-        cents, 1, "c_vec", "c_id",
+        cents, 1, "c_vec",
     )
     as_set = lambda df: {  # noqa: E731
         (r.c_id, tuple(r.c_vec), r.cell) for r in df.collect()
