@@ -121,6 +121,24 @@ def build_session(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        # Checkpoint files (offsets/commits WAL, file-source log, sink
+        # _spark_metadata, RocksDB changelogs and snapshots) go through
+        # the Hadoop FileSystem API. Without libhadoop the default
+        # FileContext manager forks a `readlink` per link-status call
+        # and a `chmod` per create on the local filesystem: ~170-180 shell
+        # commands per micro-batch, most of the state commit. On
+        # file:// the guarantee is the same: FileContext's rename also
+        # checks the destination, then calls rename(2); the .crc
+        # checksums stay. Stores without FileContext (s3a, gs, abfs)
+        # use this class anyway. A checkpoint on HDFS, where
+        # FileContext's non-overwrite rename is atomic on the NameNode,
+        # can pass FileContextBasedCheckpointFileManager back through
+        # extra_conf.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         # A file-stream micro-batch of more than this many files
         # (default 32) makes FileStreamSource.getBatch list them with a

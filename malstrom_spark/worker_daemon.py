@@ -16,6 +16,11 @@ then runs the stock daemon, whose forked workers inherit the trimmed path:
 - every archive that holds no Python module goes;
 - the importer-cache entries under a dropped archive go with it.
 
+It also ignores pandas' "concatenation with empty or all-NA entries"
+``FutureWarning`` raised from ``pyspark.sql.pandas.serializers``: PySpark's
+``applyInPandasWithState`` serializer concatenates all-NA padding frames
+for every output chunk, and each warning went to the executor's stderr.
+
 Imported rather than run, it does nothing.
 """
 
@@ -23,6 +28,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 import zipfile
 from importlib.machinery import PathFinder
 
@@ -59,6 +65,13 @@ if __name__ == "__main__":
     for key in list(sys.path_importer_cache):
         if any(key == a or key.startswith(a + os.sep) for a in dropped):
             del sys.path_importer_cache[key]
+
+    warnings.filterwarnings(
+        "ignore",
+        message=".*concatenation with empty or all-NA entries",
+        category=FutureWarning,
+        module=r"pyspark\.sql\.pandas\.serializers\Z",
+    )
 
     from pyspark.daemon import manager
 

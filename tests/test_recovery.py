@@ -11,15 +11,38 @@ checkpoint: run 1 sees half the input files, terminates; more files
 arrive; run 2 resumes from the checkpoint and processes ONLY the new
 files with restored state. Final per-key totals must equal the batch
 ground truth computed over all input — i.e. every record affected
-state exactly once across the restart.
+state exactly once across the restart. Run 1 writes its checkpoint
+with Spark's default FileContext manager and run 2 resumes it with the
+session's FileSystem manager; both keep the Hadoop .crc checksums.
 """
 
+import pathlib
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from malstrom_spark.streaming.stateful import running_totals_stream
+
+
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def test_session_checkpoints_through_the_filesystem_api(spark, tmp_path):
+    jvm = spark.sparkContext._jvm
+    manager = getattr(jvm, _CHECKPOINTING + "CheckpointFileManager").create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+
+
+def _assert_offsets_checksummed(ckpt):
+    offsets = [p for p in (pathlib.Path(ckpt) / "offsets").iterdir() if p.name.isdigit()]
+    assert offsets
+    for p in offsets:
+        assert (p.parent / f".{p.name}.crc").is_file(), p
 
 
 @pytest.fixture()
@@ -53,7 +76,7 @@ def test_restart_resumes_state_exactly_once(spark, events_batch, tmp_path):
 
     # 8 input files staged; first run sees 4, second run the rest
     events_batch.repartition(8).write.parquet(stage)
-    parts = sorted(p for p in __import__("pathlib").Path(stage).glob("part-*.parquet"))
+    parts = sorted(pathlib.Path(stage).glob("part-*.parquet"))
     assert len(parts) == 8
     (tmp_path / "in").mkdir()
     for p in parts[:4]:
@@ -61,8 +84,16 @@ def test_restart_resumes_state_exactly_once(spark, events_batch, tmp_path):
 
     schema = spark.read.parquet(stage).schema
 
-    q1 = _start_totals_query(spark, in_dir, out_dir, ckpt, schema)
-    q1.awaitTermination()
+    # run 1 under Spark's default manager; `unset` would also drop the
+    # session's value, so the session's own value is set back
+    session_manager = spark.conf.get(_MANAGER_CONF)
+    spark.conf.set(_MANAGER_CONF, _CHECKPOINTING + "FileContextBasedCheckpointFileManager")
+    try:
+        q1 = _start_totals_query(spark, in_dir, out_dir, ckpt, schema)
+        q1.awaitTermination()
+    finally:
+        spark.conf.set(_MANAGER_CONF, session_manager)
+    _assert_offsets_checksummed(ckpt)
 
     rows_run1 = spark.read.parquet(out_dir).count()
     assert rows_run1 > 0
@@ -72,6 +103,7 @@ def test_restart_resumes_state_exactly_once(spark, events_batch, tmp_path):
 
     q2 = _start_totals_query(spark, in_dir, out_dir, ckpt, schema)
     q2.awaitTermination()
+    _assert_offsets_checksummed(ckpt)
 
     # final totals per key = the emission with the highest n_events
     out = spark.read.parquet(out_dir)

@@ -2,11 +2,12 @@
 
 Python workers forked by the session's daemon import pyspark from the
 driver's version, hold no importer over ``pyspark.zip`` or over an
-archive without Python modules, and still import a zip shipped with
-``addPyFile``. The daemon drops a pyspark zip only when a directory
-install of the same version is importable. A session built from a
-process whose working directory is outside the repository, with no
-PYTHONPATH, still starts the daemon.
+archive without Python modules, ignore the pandas "all-NA entries"
+``FutureWarning`` of PySpark's pandas serializers (and no other warning),
+and still import a zip shipped with ``addPyFile``. The daemon drops a
+pyspark zip only when a directory install of the same version is
+importable. A session built from a process whose working directory is
+outside the repository, with no PYTHONPATH, still starts the daemon.
 """
 
 import os
@@ -40,6 +41,27 @@ def test_workers_hold_no_stale_archive_importers(spark):
             names = z.namelist()
         assert any(n.endswith(".py") for n in names), a
         assert "pyspark/__init__.py" not in names, a
+
+
+def test_workers_ignore_the_serializer_all_na_concat_warning(spark):
+    msg = "The behavior of DataFrame concatenation with empty or all-NA entries is deprecated."
+    raised = [
+        (msg, "pyspark.sql.pandas.serializers"),
+        (msg, "pyspark.sql.pandas.types"),
+        ("other", "pyspark.sql.pandas.serializers"),
+    ]
+
+    @F.pandas_udf("array<string>")
+    def shown(s):
+        import warnings
+
+        with warnings.catch_warnings(record=True) as seen:
+            for text, module in raised:
+                warnings.warn_explicit(text, FutureWarning, module, 1, module=module)
+        return s.map(lambda _: [f"{w.filename}: {w.message}" for w in seen])
+
+    got = spark.range(1).select(shown("id")).first()[0]
+    assert got == [f"pyspark.sql.pandas.types: {msg}", "pyspark.sql.pandas.serializers: other"]
 
 
 def test_daemon_drops_jars_and_a_pyspark_zip_of_the_installed_version(tmp_path):
