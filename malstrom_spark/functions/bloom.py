@@ -21,14 +21,16 @@ makes it mergeable (union + bit_or re-group = the OR of the filters,
 exactly how per-shard filters combine on a cluster), persistable as
 parquet, and buildable with ONE aggregation whose partial combine
 ORs map-side (at most n_bits/64 rows per task cross the shuffle,
-regardless of input size). Probing is size-dispatched (`bloom_probe`):
-up to BLOOM_LITERAL_MAX_BITS (2^18 — the MEASURED crossover, see the
+regardless of input size). Probing is size-dispatched (`bloom_probe`)
+by the `scale.bloom_literal_probe` gate: up to
+`scale.BLOOM_LITERAL_MAX_BITS` (2^18 — the MEASURED crossover, see the
 constant) the words densify into one array literal evaluated as k
 `element_at` + bitwiseAND codegen probes per row; above it, the words
 ship once per executor as a broadcast numpy array probed in a single
 Arrow-batched pandas_udf stage — big array literals are heavy per-row
 plan nodes, so the broadcast path is FASTER beyond the crossover, not
-just feasible.
+just feasible. Callers never pick a mechanism; tests force either side
+by setting the constant.
 
 Bit layout: position_i(x) = pmod(xxhash64(x, seed, i), n_bits),
 word_idx = pos div 64, mask = 1 << (pos mod 64). xxhash64 keeps
@@ -41,6 +43,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .. import scale
 
 
 def _check(n_bits: int, n_hashes: int) -> None:
@@ -99,25 +103,11 @@ def bloom_merge(*filters: DataFrame) -> DataFrame:
     return u.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
 
 
-# Above this many bits the densified filter stops being a sane plan
-# literal and probing dispatches to a broadcast-variable numpy array +
-# Arrow-batched pandas_udf instead. Unlike the ANN kernels, whose
-# literal engines lost at every size and are deleted, the literal
-# probe wins below the crossover, so the gate stays. The threshold is
-# MEASURED, not guessed (BASELINE.md round-9): on a 6M-row prune the
-# literal probe costs 1.7-1.9 s at 2^14-2^16 bits but 3.3 s at 2^18
-# and 9.5 s at 2^20 (a large array literal is a heavy per-row plan
-# node), while the broadcast path is flat ~5 s at any size — the
-# crossover sits at ~2^18, and the module's own motivation (billions
-# of grams => ~10^10 bits) lives far on the broadcast side.
-BLOOM_LITERAL_MAX_BITS = 1 << 18
-
-
 def bloom_words_literal(bloom: DataFrame, n_bits: int) -> Column:
     """Densify the sparse filter into ONE array<long> literal for
     probing. Construction-time collect of <= n_bits/64 rows (the
     filter, not the data) — the same small-collect class as the
-    IVF/PQ codebooks. Right for n_bits <= BLOOM_LITERAL_MAX_BITS;
+    IVF/PQ codebooks. Right for n_bits <= scale.BLOOM_LITERAL_MAX_BITS;
     `bloom_probe` dispatches away from it above that."""
     n_words = n_bits // 64
     dense = [0] * n_words
@@ -192,12 +182,11 @@ def bloom_probe(
     n_bits: int,
     n_hashes: int = 7,
     seed: int = 0,
-    literal_max_bits: int = BLOOM_LITERAL_MAX_BITS,
 ) -> Column:
-    """Size-dispatched membership probe: plan-literal codegen probe up
-    to `literal_max_bits`, broadcast-variable pandas_udf probe above
-    it. Both are output-identical; callers never pick a mechanism."""
-    if n_bits <= literal_max_bits:
+    """Size-dispatched membership probe: plan-literal codegen probe
+    when `scale.bloom_literal_probe` says so, broadcast-variable
+    pandas_udf probe otherwise. Both are output-identical."""
+    if scale.bloom_literal_probe(n_bits):
         return bloom_might_contain(
             col, bloom_words_literal(bloom, n_bits), n_bits, n_hashes, seed
         )

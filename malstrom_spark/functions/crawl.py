@@ -30,14 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import scale
 from .dedup import md5_prefix_hash
 from .url import registrable_domain, url_host, url_normalize
 
 _ORD_BITS = 2**31
-
-# Above this many overridden hosts the literal budget map switches to
-# a broadcast join (plan size vs one tiny exchange-free hash join).
-_OVERRIDE_LITERAL_MAX = 1024
 
 
 def delay_host_budgets(
@@ -109,8 +106,9 @@ def crawl_frontier(
     the host from this batch entirely; keys are case-normalized to
     url_host's lowercase output. The map rides as a literal
     element_at lookup beside the same rank window (no extra shuffle)
-    up to _OVERRIDE_LITERAL_MAX hosts, then as one broadcast join —
-    plan size stays bounded either way."""
+    while `scale.crawl_overrides_literal` allows (up to
+    `scale.CRAWL_OVERRIDES_LITERAL_MAX` hosts), then as one broadcast
+    join — plan size stays bounded either way."""
     if per_host_budget is not None and per_host_budget < 1:
         raise ValueError("per_host_budget must be >= 1 (or None)")
     if host_budget_overrides:
@@ -168,7 +166,7 @@ def crawl_frontier(
             overrides[hl] = min(b, overrides.get(hl, b))
         w = Window.partitionBy("host").orderBy(F.col("__ord"), F.col("url"))
         ranked = ordered.withColumn("__rn", F.row_number().over(w))
-        if len(overrides) <= _OVERRIDE_LITERAL_MAX:
+        if scale.crawl_overrides_literal(len(overrides)):
             # literal map + element_at: one flat expression, fine for
             # robots-table-sized maps
             pairs: list = []

@@ -251,12 +251,18 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
 
 
 def minhash_signature(
-    df: DataFrame, id_col: str, text_col: str = "text", n_hashes: int = 32, shingle_n: int = 3
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    n_hashes: int = 32,
+    shingle_n: int = 3,
+    portable: bool = False,
 ) -> DataFrame:
-    """(id, signature: array<bigint>) via hashed shingles -> explode ->
-    one groupBy with n_hashes min-aggregates (one shuffle, map-side
-    partial mins). Permutations = (a*h+b) mod 2^31-1, native exprs."""
-    hs = shingle_hash_sets(df, id_col, text_col, shingle_n)
+    """(id, signature: array<bigint>) over the shingle hash sets
+    (`_signature_from_hash_sets`). Permutations = (a*h+b) mod 2^31-1,
+    native exprs. ``portable=True`` hashes shingles with the 60-bit
+    md5-prefix hash (DuckDB-identical, oracle-checkable)."""
+    hs = shingle_hash_sets(df, id_col, text_col, shingle_n, portable)
     return _signature_from_hash_sets(hs, id_col, n_hashes)
 
 
@@ -813,47 +819,85 @@ def dedup_groups(
     all_ids: DataFrame,
     id_col: str,
     max_iters: int = 10,
-    algorithm: str = "alternating",
 ) -> DataFrame:
     """Connected components over near-dup pairs: every document gets
     the MINIMUM id of its duplicate cluster as `group_id` (the keeper;
     singletons keep their own id).
 
-    Two algorithms, identical output:
+    Large-star/small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14). Each round applies
+    large-star (every node hangs its strictly-larger neighbors off the
+    minimum of its closed neighborhood) then small-star (every node
+    hangs its smaller neighbors and itself off its minimum neighbor);
+    the edge set contracts to min-rooted stars in O(log n) rounds
+    REGARDLESS of cluster diameter — a 50-hop duplicate chain
+    converges in ~5 rounds where min-label propagation needs 50. Each
+    half-round is one self-shuffle of the (shrinking) edge list. Once
+    the canonical edge set holds at most `scale.CC_DRIVER_MAX_EDGES`
+    edges (read at call time, checked before every round), the rounds
+    stop: one ``toArrow()`` collects the edges and a union-find on the
+    driver labels them (`_min_labels`). A small graph finishes before
+    round 1; a large one runs rounds until contraction brings it under
+    the bound. The labels and output schema are the same either way.
 
-    - ``"alternating"`` (default): large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14). Each round applies large-star (every node hangs its
-      strictly-larger neighbors off the minimum of its closed
-      neighborhood) then small-star (every node hangs its smaller
-      neighbors and itself off its minimum neighbor); the edge set
-      contracts to min-rooted stars in O(log n) rounds REGARDLESS of
-      cluster diameter — a 50-hop duplicate chain converges in ~5
-      rounds where label propagation needs 50. Each half-round is one
-      self-shuffle of the (shrinking) edge list; this is the 100 TB
-      default. Once the canonical edge set holds at most
-      `scale.CC_DRIVER_MAX_EDGES` edges (read at call time, checked
-      before every round), the rounds stop: one ``toArrow()``
-      collects the edges and a union-find on the driver labels them
-      (`_min_labels`). A small graph finishes before round 1; a large
-      one runs rounds until contraction brings it under the bound.
-      The labels and output schema are the same either way.
-    - ``"label"``: iterative min-label propagation — each round joins
-      labels across the edge set and takes the min of neighbor labels;
-      O(diameter) rounds. Kept for cross-checking (the property test
-      pins both algorithms to the same fixpoint).
-
-    Both fail loudly on non-convergence within ``max_iters`` rounds
+    Fails loudly on non-convergence within ``max_iters`` rounds
     instead of returning silently-wrong labels.
 
     `pairs`: (id_a, id_b) near-dup edges (from MinHash/SimHash/cosine).
     `all_ids`: one row per document id (so singletons appear).
     """
-    if algorithm == "alternating":
-        return _groups_alternating(pairs, all_ids, id_col, max_iters)
-    if algorithm == "label":
-        return _groups_label_propagation(pairs, all_ids, id_col, max_iters)
-    raise ValueError(f"unknown dedup_groups algorithm: {algorithm!r}")
+    # LAZY localCheckpoint + a count() action: one job materializes
+    # the checkpoint (count computes every partition) AND yields the
+    # edge count the per-round fixpoint test needs (round-12: the
+    # eager-checkpoint-then-isEmpty shape paid 2 jobs + 2 exceptAll
+    # shuffles per round; this shape pays 1 job + 1 join per round).
+    edges = (
+        pairs.select(
+            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=False)  # truncate upstream pipeline lineage
+    )
+    n_edges = edges.count()
+    for _ in range(max_iters):
+        if scale.cc_finish_on_driver(n_edges):
+            star = _finish_on_driver(edges)
+            break
+        new_edges = _small_star(_large_star_raw(edges)).localCheckpoint(eager=False)
+        # Fixpoint test is EXACT (both sides are distinct sets):
+        # |new| == |old| AND new ⊆ old <=> set equality — evaluated as
+        # ONE aggregate per round whose job also materializes the lazy
+        # checkpoint (the left-join's map stage computes every
+        # new_edges partition). A checksum compare would risk a silent
+        # wrong-label convergence; this containment test cannot.
+        n_new, n_matched = new_edges.join(
+            edges.select("u", "v", F.lit(1).alias("__old")), ["u", "v"], "left"
+        ).agg(F.count(F.lit(1)), F.count("__old")).first()
+        converged = n_new == n_edges and n_matched == n_new
+        # new_edges is materialized and the fixpoint test has run: the
+        # prior round's checkpoint blocks are dead — free them now so
+        # executor storage stays O(1) in rounds, not O(rounds).
+        _free_local_checkpoint(edges)
+        n_edges, edges = n_new, new_edges
+        if converged:
+            # At the fixpoint the edge set is a union of min-rooted
+            # stars: every non-root node carries exactly one
+            # (node, component_min) edge.
+            star = edges.select(F.col("u").alias("__node"), F.col("v").alias("__grp"))
+            break
+    else:
+        raise RuntimeError(
+            f"dedup_groups did not converge in {max_iters} rounds; raise max_iters"
+        )
+    return (
+        all_ids.select(F.col(id_col).alias("__node"))
+        .join(star, "__node", "left")
+        .select(
+            F.col("__node").alias(id_col),
+            F.coalesce("__grp", F.col("__node")).alias("group_id"),
+        )
+    )
 
 
 def _large_star_raw(edges: DataFrame) -> DataFrame:
@@ -965,114 +1009,6 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
         }
     )
     return edges.sparkSession.createDataFrame(star)
-
-
-def _groups_alternating(
-    pairs: DataFrame, all_ids: DataFrame, id_col: str, max_iters: int
-) -> DataFrame:
-    # LAZY localCheckpoint + a count() action: one job materializes
-    # the checkpoint (count computes every partition) AND yields the
-    # edge count the per-round fixpoint test needs (round-12: the
-    # eager-checkpoint-then-isEmpty shape paid 2 jobs + 2 exceptAll
-    # shuffles per round; this shape pays 1 job + 1 join per round).
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # truncate upstream pipeline lineage
-    )
-    n_edges = edges.count()
-    for _ in range(max_iters):
-        if scale.cc_finish_on_driver(n_edges):
-            star = _finish_on_driver(edges)
-            break
-        new_edges = _small_star(_large_star_raw(edges)).localCheckpoint(eager=False)
-        # Fixpoint test is EXACT (both sides are distinct sets):
-        # |new| == |old| AND new ⊆ old <=> set equality — evaluated as
-        # ONE aggregate per round whose job also materializes the lazy
-        # checkpoint (the left-join's map stage computes every
-        # new_edges partition). A checksum compare would risk a silent
-        # wrong-label convergence; this containment test cannot.
-        n_new, n_matched = new_edges.join(
-            edges.select("u", "v", F.lit(1).alias("__old")), ["u", "v"], "left"
-        ).agg(F.count(F.lit(1)), F.count("__old")).first()
-        converged = n_new == n_edges and n_matched == n_new
-        # new_edges is materialized and the fixpoint test has run: the
-        # prior round's checkpoint blocks are dead — free them now so
-        # executor storage stays O(1) in rounds, not O(rounds).
-        _free_local_checkpoint(edges)
-        n_edges, edges = n_new, new_edges
-        if converged:
-            # At the fixpoint the edge set is a union of min-rooted
-            # stars: every non-root node carries exactly one
-            # (node, component_min) edge.
-            star = edges.select(F.col("u").alias("__node"), F.col("v").alias("__grp"))
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_groups(alternating) did not converge in {max_iters} rounds; "
-            "raise max_iters"
-        )
-    return (
-        all_ids.select(F.col(id_col).alias("__node"))
-        .join(star, "__node", "left")
-        .select(
-            F.col("__node").alias(id_col),
-            F.coalesce("__grp", F.col("__node")).alias("group_id"),
-        )
-    )
-
-
-def _groups_label_propagation(
-    pairs: DataFrame,
-    all_ids: DataFrame,
-    id_col: str,
-    max_iters: int = 10,
-) -> DataFrame:
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = all_ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("group_id"))
-    for _ in range(max_iters):
-        # min label among each node's neighbors (and itself)
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("group_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("group_id"), F.coalesce(F.col("nbr_min"), F.col("group_id"))
-                ).alias("group_id"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)  # truncate lineage per round
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.group_id") != F.col("o.group_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Loop exhausted max_iters with the last round still changing
-        # labels: a duplicate chain longer than max_iters hops would
-        # silently get a non-minimum group_id. Fail loudly instead.
-        raise RuntimeError(
-            f"dedup_groups(label) did not converge in {max_iters} rounds; "
-            "raise max_iters (clusters deeper than expected)"
-        )
-    return labels.select(F.col("node").alias(id_col), "group_id")
 
 
 def dedup_clusters(
@@ -1198,8 +1134,7 @@ def minhash_band_table(
     with such a bucket still flag (they verify against the
     representative); only dup-of attribution WITHIN the mega-bucket
     is coarsened. None = exact, unbounded."""
-    sig = minhash_signature_portable(df, id_col, text_col, n_hashes, shingle_n) \
-        if portable else minhash_signature(df, id_col, text_col, n_hashes, shingle_n)
+    sig = minhash_signature(df, id_col, text_col, n_hashes, shingle_n, portable)
     banded = band_table(sig, id_col, n_bands, portable)
     if max_bucket_size is None:
         return banded
@@ -1212,15 +1147,6 @@ def minhash_band_table(
     )
     reps = over.select(F.col("__rep").alias(id_col), "band", "bhash")
     return kept.unionByName(reps)
-
-
-def minhash_signature_portable(
-    df: DataFrame, id_col: str, text_col: str = "text", n_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """`minhash_signature` on the md5-prefix 60-bit hash (DuckDB twin)
-    — the oracle-checkable variant used by portable pipelines."""
-    hs = shingle_hash_sets(df, id_col, text_col, shingle_n, portable=True)
-    return _signature_from_hash_sets(hs, id_col, n_hashes)
 
 
 def dedup_against_history(

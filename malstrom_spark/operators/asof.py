@@ -8,25 +8,17 @@ right_ts <= left_ts, ties on right_ts breaking to the LARGEST
 tiebreak; direction='forward' mirrors it (smallest right_ts >=
 left_ts, ties to the SMALLEST tiebreak); direction='nearest' takes
 whichever directional pick is closer in time, exact ties preferring
-backward (pandas merge_asof convention). Every strategy implements
-every direction with identical results (tests/test_asof.py).
+backward (pandas merge_asof convention).
 
-Two physical strategies:
-- 'window': union both sides tagged with a side marker, ONE shuffle
-  on key, then `last(right_payload, ignorenulls)` over the
-  (ts, side, tiebreak)-ordered window. No row expansion, no Python —
-  everything whole-stage codegen. The scale default for fact-to-fact:
-  cost is a single sort-shuffle of |L|+|R| rows regardless of how
-  many right rows precede each left row. (Measured at sf1, 1M events
-  x 1.5M orders: 46 s for the expanding join strategy -> ~2 s here.)
-- 'join': equi-join on key + ts filter + struct-max aggregation.
-  Right side broadcast. Best when right rows per key are few
-  (dimension snapshots). NOTE: on a large non-broadcast right side
-  this left join expands each left row by every earlier right row
-  for its key — a scale hazard; only offered with broadcast_right.
-
-Default selection (strategy=None): 'join' when broadcast_right=True
-(dimension-snapshot shape), else 'window'.
+One physical plan: union both sides tagged with a side marker, ONE
+shuffle on key, then `last(right_payload, ignorenulls)` over the
+(ts, side, tiebreak)-ordered window. No row expansion, no Python —
+everything whole-stage codegen; the cost is a single sort-shuffle of
+|L|+|R| rows regardless of how many right rows precede each left row.
+An equi-join + ts-filter + struct-max plan would expand each left row
+by every earlier right row of its key: at sf1 (1M events x 1.5M
+orders) it took 46 s against ~2 s here, and it also lost on dimension
+snapshots (few right rows per key) with the right side broadcast.
 """
 
 from __future__ import annotations
@@ -45,41 +37,25 @@ def as_of_join(
     right_ts: str,
     right_cols: Sequence[str],
     tiebreak: str | None = None,
-    strategy: str | None = None,
-    broadcast_right: bool = False,
     direction: str = "backward",
 ) -> DataFrame:
     """direction: 'backward' (default — greatest right_ts <= left_ts;
     ties on right_ts break by LARGEST tiebreak), 'forward' (smallest
     right_ts >= left_ts; ties break by SMALLEST tiebreak — the
-    mirror-image pick every strategy can express identically), or
-    'nearest' (whichever of the two is closer in time; exact ties
-    prefer backward, the pandas merge_asof convention)."""
+    mirror-image pick), or 'nearest' (whichever of the two is closer
+    in time; exact ties prefer backward, the pandas merge_asof
+    convention)."""
     keys = [key] if isinstance(key, str) else list(key)
     if direction == "nearest":
-        return _asof_nearest(
-            left, right, keys, left_ts, right_ts, list(right_cols), tiebreak,
-            strategy, broadcast_right,
-        )
+        return _asof_nearest(left, right, keys, left_ts, right_ts, list(right_cols), tiebreak)
     if direction not in ("backward", "forward"):
         raise ValueError(f"unknown direction {direction!r}")
-    if strategy is None:
-        strategy = "join" if broadcast_right else "window"
-    if strategy == "window":
-        return _asof_via_union_window(
-            left, right, keys, left_ts, right_ts, list(right_cols), tiebreak, direction
-        )
-    if strategy == "join":
-        return _asof_via_join(
-            left, right, keys, left_ts, right_ts, list(right_cols), tiebreak,
-            broadcast_right, direction,
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return _asof_via_union_window(
+        left, right, keys, left_ts, right_ts, list(right_cols), tiebreak, direction
+    )
 
 
-def _asof_nearest(
-    left, right, keys, left_ts, right_ts, right_cols, tiebreak, strategy, broadcast_right
-):
+def _asof_nearest(left, right, keys, left_ts, right_ts, right_cols, tiebreak):
     """Both directional picks, then the closer one per left row. Two
     passes over the same shuffle layout; |Δt| compares in epoch
     micros for temporal types (date/timestamp/ntz all cast cleanly to
@@ -110,14 +86,8 @@ def _asof_nearest(
     r2 = right.select(*proj)
     rts2 = ren[right_ts]
     tb2 = (ren[tiebreak] if tiebreak in ren and tiebreak not in keys else tiebreak) if tiebreak else None
-    back = as_of_join(
-        l, r2, keys, left_ts, rts2, list(ren.values()), tb2,
-        strategy, broadcast_right, "backward",
-    )
-    fwd = as_of_join(
-        l, r2, keys, left_ts, rts2, list(ren.values()), tb2,
-        strategy, broadcast_right, "forward",
-    )
+    back = as_of_join(l, r2, keys, left_ts, rts2, list(ren.values()), tb2, "backward")
+    fwd = as_of_join(l, r2, keys, left_ts, rts2, list(ren.values()), tb2, "forward")
     b = back.select(lid, *[F.col(ren[c]).alias(f"__b_{c}") for c in fetch])
     f = fwd.select(lid, *[F.col(ren[c]).alias(f"__f_{c}") for c in fetch])
     l_ts_expr, _ = _common_ts(l, right, left_ts, right_ts)
@@ -217,32 +187,3 @@ def _asof_via_union_window(
         *[F.col(f"__best.{f.name}").alias(f.name) for f in payload_fields],
     )
 
-
-def _asof_via_join(
-    left, right, keys, left_ts, right_ts, right_cols, tiebreak, broadcast_right,
-    direction="backward",
-):
-    lid = "__asof_lid"
-    l = left.withColumn(lid, F.monotonically_increasing_id())
-    r = right.select(*keys, right_ts, *[c for c in right_cols if c not in keys and c != right_ts])
-    if broadcast_right:
-        r = F.broadcast(r)
-    ts_cond = (
-        r[right_ts] <= l[left_ts] if direction == "backward" else r[right_ts] >= l[left_ts]
-    )
-    cond = [l[k] == r[k] for k in keys] + [ts_cond]
-    joined = l.join(r, cond, "left")
-    # backward: max (right_ts, tiebreak, ...) struct -> latest ts, ties
-    # to the LARGEST tiebreak; forward: min struct -> earliest ts, ties
-    # to the SMALLEST tiebreak (the pick both orderings agree on)
-    struct_cols = [r[right_ts].alias("__ts")]
-    if tiebreak:
-        struct_cols.append(r[tiebreak].alias("__tb"))
-    struct_cols += [r[c].alias(c) for c in right_cols]
-    agg = F.max if direction == "backward" else F.min
-    pick = agg(F.struct(*struct_cols)).alias("__best")
-    out = joined.groupBy(l[lid]).agg(
-        *[F.first(l[c]).alias(c) for c in left.columns], pick
-    )
-    proj = [F.col(c) for c in left.columns] + [F.col(f"__best.{c}").alias(c) for c in right_cols]
-    return out.select(*proj)

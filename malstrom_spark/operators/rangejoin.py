@@ -7,21 +7,22 @@ operator set, but required for event/window alignment — sessionizing
 events against promo windows, attributing points to campaigns,
 joining measurements to maintenance intervals.
 
-Three physical strategies:
+The inputs pick one of two plans; the caller never names one:
 
-- 'join': equi-join on the keys with the range predicates attached to
-  the join condition. Catalyst plans a SortMergeJoin (or broadcast
-  hash join) on the keys and evaluates the range as a join filter —
-  the right default whenever real equi-keys exist, because the
-  shuffle spreads work across key hash space and the range filter is
-  codegen'd. NOT offered for the unkeyed case unless the right side
-  is broadcast: an unkeyed theta-join plans a BroadcastNestedLoop /
-  Cartesian — the classic 100 TB scale-killer.
+- without ``bin_width``: equi-join on the keys with the range
+  predicates attached to the join condition. Catalyst plans a
+  SortMergeJoin (or broadcast hash join) on the keys and evaluates the
+  range as a join filter — right whenever real equi-keys exist,
+  because the shuffle spreads work across key hash space and the range
+  filter is codegen'd. An unkeyed call needs ``broadcast_right=True``:
+  the caller states the contract that the interval side is small,
+  because an unkeyed theta-join plans a BroadcastNestedLoop — the
+  classic 100 TB scale-killer when the right side is not.
 
-- 'bin': the scale path when keys are absent or too few to spread
-  load. Time is cut into fixed-width bins; each left point lands in
-  exactly one bin, each right interval EXPLODES to the bins it
-  overlaps, and the join becomes a pure equi-join on
+- with ``bin_width``: the scale path when keys are absent or too few
+  to spread load. Time is cut into fixed-width bins; each left point
+  lands in exactly one bin, each right interval EXPLODES to the bins
+  it overlaps, and the join becomes a pure equi-join on
   (keys..., bin) followed by the exact range filter. Replication
   factor is ceil(span / bin_width) + 1 per right row, so pick
   bin_width near the typical interval span: for promo windows of ~7
@@ -32,15 +33,6 @@ Three physical strategies:
   explicit operator so the plan shape is inspectable and testable
   (tests/test_rangejoin.py asserts no BroadcastNestedLoop /
   CartesianProduct in the bin plan).
-
-- 'broadcast': right side broadcast, range predicate evaluated in a
-  BroadcastNestedLoopJoin. Only correct choice when the interval set
-  is genuinely small (dimension-sized); offered explicitly so the
-  caller states that contract.
-
-Default selection (strategy=None): 'join' when keys are given,
-'broadcast' when broadcast_right=True, else 'bin' (which then
-requires bin_width).
 """
 
 from __future__ import annotations
@@ -60,7 +52,6 @@ def range_join(
     right_start: str,
     right_end: str,
     keys: Sequence[str] | None = None,
-    strategy: str | None = None,
     bin_width: str | int | float | None = None,
     broadcast_right: bool = False,
     end_inclusive: bool = False,
@@ -70,41 +61,26 @@ def range_join(
     left_point / right_start / right_end are timestamp (or numeric)
     columns; keys are equi-join columns present on BOTH sides (the
     right side's key columns are dropped from the output, Spark
-    `join(on=...)` style). bin_width drives the 'bin' strategy: an
+    `join(on=...)` style). bin_width selects the bin join: an
     interval string (e.g. '7 days', '500 milliseconds' — fixed-width
     units only, micros-exact) for temporal columns, a plain number
     for numeric ones. end_inclusive picks [start, end] vs the default
     [start, end).
     """
     keys = list(keys) if keys else []
-    if strategy is None:
-        strategy = "join" if keys else ("broadcast" if broadcast_right else "bin")
-    point_in = _point_predicate(left_point, right_start, right_end, end_inclusive)
-
-    if strategy == "join":
-        if not keys and not broadcast_right:
-            raise ValueError(
-                "unkeyed range_join with strategy='join' would plan a "
-                "BroadcastNestedLoop/Cartesian join; use strategy='bin' "
-                "with a bin_width, or broadcast_right=True for a small "
-                "interval side"
-            )
-        r = F.broadcast(right) if broadcast_right else right
-        cond = _key_cond(left, r, keys, point_in)
-        return _project(left.join(r, cond, "inner"), left, r, keys)
-
-    if strategy == "broadcast":
-        r = F.broadcast(right)
-        cond = _key_cond(left, r, keys, point_in)
-        return _project(left.join(r, cond, "inner"), left, r, keys)
-
-    if strategy == "bin":
-        if bin_width is None:
-            raise ValueError("strategy='bin' requires bin_width (e.g. '7 days')")
+    if bin_width is not None:
         return _bin_join(
             left, right, left_point, right_start, right_end, keys, bin_width, end_inclusive
         )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    if not keys and not broadcast_right:
+        raise ValueError(
+            "unkeyed range_join would plan a BroadcastNestedLoop/Cartesian "
+            "join; pass a bin_width (e.g. '7 days'), or broadcast_right=True "
+            "for a small interval side"
+        )
+    r = F.broadcast(right) if broadcast_right else right
+    point_in = _point_predicate(left_point, right_start, right_end, end_inclusive)
+    return _project(left.join(r, _key_cond(left, r, keys, point_in), "inner"), left, r, keys)
 
 
 def _point_predicate(left_point, right_start, right_end, end_inclusive):

@@ -320,12 +320,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
         if key is not None:
             _PARQUET_SCHEMA_MEMO[key] = df.schema
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
+    return events_ts(df) if name == "events" else df
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # ns-epoch long -> microsecond LTZ timestamp (truncation,
-            # same as DuckDB's ns->us narrowing)
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """`df` with an `events.ts` read as a long (ns since the epoch,
+    under `nanosAsLong`) cast to a microsecond LTZ timestamp: a
+    truncation, the same as DuckDB's ns->us narrowing. A `ts` that is
+    already a timestamp passes through."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    if isinstance(df.schema["ts"].dataType, LongType):
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

@@ -578,11 +578,11 @@ def event_props_json(spark, sf_dir):
     """,
 )
 def events_asof_latest_order(spark, sf_dir):
-    """As-of join operator (operators/asof.py, 'window' strategy): for
-    each event, the most recent order of that user at event time.
-    Fact-to-fact shape -> union+window: one sort-shuffle of |L|+|R|
-    rows, zero row expansion, fully codegen (46 s -> ~2 s at sf1 vs
-    the broadcast-join strategy)."""
+    """As-of join operator (operators/asof.py): for each event, the
+    most recent order of that user at event time. Fact-to-fact shape:
+    one sort-shuffle of |L|+|R| rows, zero row expansion, fully
+    codegen (46 s -> ~2 s at sf1 against an equi-join + struct-max
+    plan, which expands each event by every earlier order)."""
     ev = table(spark, sf_dir, "events")
     orders = table(spark, sf_dir, "orders")
     out = asof.as_of_join(
@@ -595,7 +595,6 @@ def events_asof_latest_order(spark, sf_dir):
         right_ts="o_orderdate",
         right_cols=["o_orderkey", "o_orderdate"],
         tiebreak="o_orderkey",
-        strategy="window",
     )
     return out.filter(F.col("o_orderkey").isNotNull()).select(
         "event_id",
@@ -721,10 +720,10 @@ def events_purchase_window_join(spark, sf_dir):
     """Range-join operator (operators/rangejoin.py): attribution —
     each purchase defines a per-user lookback window
     [purchase_ts - 4h, purchase_ts); count / sum every event of that
-    user inside the window. Keyed shape -> 'join' strategy:
-    SortMergeJoin on the user key with the range predicate as a
-    codegen'd join filter; the unkeyed scale path ('bin') is
-    equality-pinned against this one in tests/test_rangejoin.py."""
+    user inside the window. Keyed, no bin_width -> SortMergeJoin on
+    the user key with the range predicate as a codegen'd join filter;
+    the bin join is equality-pinned against this one in
+    tests/test_rangejoin.py."""
     from ..operators.rangejoin import range_join
 
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
@@ -740,7 +739,7 @@ def events_purchase_window_join(spark, sf_dir):
     )
     pairs = range_join(
         ev, windows, left_point="ts", right_start="win_start", right_end="win_end",
-        keys=["user_id"], strategy="join",
+        keys=["user_id"],
     )
     return pairs.groupBy("purchase_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1136,8 +1135,8 @@ def error_next_purchase_asof(spark, sf_dir):
     """FORWARD as-of join (operators/asof.py direction='forward'):
     for each error event, the same user's next purchase at-or-after
     it — ties on the purchase timestamp break to the SMALLEST id,
-    the forward mirror of backward's largest. Union+window strategy:
-    one sort-shuffle over both sides, descending scan. Unmatched
+    the forward mirror of backward's largest. One sort-shuffle over
+    both sides, descending scan. Unmatched
     errors keep null columns (left-join semantics)."""
     ev = table(spark, sf_dir, "events")
     err = ev.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
@@ -1146,8 +1145,7 @@ def error_next_purchase_asof(spark, sf_dir):
     )
     out = asof.as_of_join(
         err, pur, key="user_id", left_ts="ts", right_ts="pts",
-        right_cols=["pid", "pts"], tiebreak="pid",
-        strategy="window", direction="forward",
+        right_cols=["pid", "pts"], tiebreak="pid", direction="forward",
     )
     return out.select(
         "event_id",

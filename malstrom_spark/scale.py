@@ -4,9 +4,11 @@ The reference runtime has one scale input, the worker count
 (malstrom-core/src/runtime/threaded/multi.rs:44-120), and no size
 heuristics. Where this package overrides Spark's own planning (the
 parallelism floor, the exact-collapse gate, IVF join salting, the
-edge count under which connected components finish on the driver) it
-asks this module: the core count is read here only, and every size
-floor is a constant here.
+edge count under which connected components finish on the driver,
+the Bloom filter size under which it probes as a plan literal, the
+host count under which crawl budgets ride as a literal map) it asks
+this module: the core count is read here only, and every size floor
+is a constant here.
 
 Each gate call logs one DEBUG record on this module's logger: the gate,
 its inputs and estimate, and its decision (the record's ``gate`` and
@@ -53,6 +55,25 @@ COLLAPSE_MIN_DUP_RATIO = 0.05
 #: just above the largest size measured: 2^20 edges hold 16 MiB of
 #: (u, v) longs on the driver.
 CC_DRIVER_MAX_EDGES = 1 << 20
+
+#: Filter size (bits) at or under which a Bloom probe densifies the
+#: filter into one array literal evaluated as k `element_at` +
+#: bitwiseAND codegen probes per row; above it the dense words ship
+#: once per executor as a broadcast numpy array probed in one
+#: Arrow-batched pandas_udf stage. The literal probe wins below the
+#: crossover, so the gate stays. MEASURED (BASELINE.md round 9): on a
+#: 6M-row prune the literal probe costs 1.7-1.9 s at 2^14-2^16 bits
+#: but 3.3 s at 2^18 and 9.5 s at 2^20 (a large array literal is a
+#: heavy per-row plan node), while the broadcast path is flat ~5 s at
+#: any size — the crossover sits at ~2^18, and billion-gram blocklists
+#: (~10^10 bits) live far on the broadcast side.
+BLOOM_LITERAL_MAX_BITS = 1 << 18
+
+#: Overridden-host count at or under which crawl budget overrides ride
+#: as one literal map + `element_at` beside the rank window; above it
+#: they broadcast-join as a (host, budget) table, so a map of tens of
+#: thousands of hosts does not bloat analysis and codegen.
+CRAWL_OVERRIDES_LITERAL_MAX = 1024
 
 _log = logging.getLogger(__name__)
 
@@ -238,3 +259,27 @@ def cc_finish_on_driver(n_edges: int) -> bool:
         n_edges=n_edges, max_edges=CC_DRIVER_MAX_EDGES,
     )
     return finish
+
+
+def bloom_literal_probe(n_bits: int) -> bool:
+    """Whether a Bloom filter of ``n_bits`` probes as a plan literal:
+    it holds at most `BLOOM_LITERAL_MAX_BITS` bits (read at call time);
+    else it probes through a broadcast variable."""
+    literal = n_bits <= BLOOM_LITERAL_MAX_BITS
+    _decided(
+        "bloom_literal_probe", "literal" if literal else "broadcast",
+        n_bits=n_bits, max_bits=BLOOM_LITERAL_MAX_BITS,
+    )
+    return literal
+
+
+def crawl_overrides_literal(n_hosts: int) -> bool:
+    """Whether ``n_hosts`` crawl budget overrides ride as a literal
+    map: at most `CRAWL_OVERRIDES_LITERAL_MAX` hosts (read at call
+    time); else they broadcast-join as a table."""
+    literal = n_hosts <= CRAWL_OVERRIDES_LITERAL_MAX
+    _decided(
+        "crawl_overrides_literal", "literal" if literal else "broadcast",
+        n_hosts=n_hosts, max_hosts=CRAWL_OVERRIDES_LITERAL_MAX,
+    )
+    return literal

@@ -249,8 +249,9 @@ class Stream:
     ) -> "Stream":
         """Interval containment join (operators/rangejoin.py): this
         stream's rows land in `other`'s [start, end) intervals; keyed
-        on this stream's keys when set (SMJ), else pass strategy/
-        bin_width through kw."""
+        on this stream's keys when set (SMJ). A bin_width in kw runs
+        the bin join, keyed or not; an unkeyed stream without one
+        needs broadcast_right=True."""
         from .operators.rangejoin import range_join
 
         keys = kw.pop("keys", list(self.key_cols) or None)

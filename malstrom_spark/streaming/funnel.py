@@ -72,7 +72,7 @@ def _advance_chain(t: list, pdf, k: int, within_us: int | None) -> list:
     for i in range(k):
         if t[i] is not None:
             continue  # chain times only fill forward
-        mask = pdf[f"f{i}"].fillna(False).to_numpy(dtype=bool)
+        mask = pdf[f"f{i}"].to_numpy(dtype=bool, na_value=False)
         if i > 0:
             if t[i - 1] is None:
                 break  # no prefix -> later steps can't fill either

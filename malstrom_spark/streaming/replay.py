@@ -25,7 +25,7 @@ def replay_table(
 ) -> DataFrame:
     """Streaming DataFrame replaying a driver test table. Schema comes
     from a batch peek (file streams need explicit schemas)."""
-    from ..queries import _ensure_conf
+    from ..queries import _ensure_conf, events_ts
 
     _ensure_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
@@ -40,13 +40,7 @@ def replay_table(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     sdf = reader.load(str(stage))
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
-
-        if isinstance(sdf.schema["ts"].dataType, LongType):
-            sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return sdf
+    return events_ts(sdf) if name == "events" else sdf
 
 
 def replay_table_multibatch(

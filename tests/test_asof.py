@@ -1,7 +1,9 @@
-"""As-of join: both physical strategies must agree with a hand-
-computed golden result (backward, per-key, tie -> larger tiebreak)."""
+"""As-of join: the union+window plan must match hand-computed golden
+results in every direction (backward: per-key, tie -> larger
+tiebreak)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from malstrom_spark.operators.asof import as_of_join
 
@@ -22,19 +24,10 @@ def sides(spark):
 GOLDEN = {1: 101, 2: 102, 3: 103, 4: None}
 
 
-def test_asof_join_strategy(sides):
-    left, right = sides
-    out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", strategy="join"
-    )
-    got = {r.lid: r.rid for r in out.collect()}
-    assert got == GOLDEN
-
-
 def test_asof_window_strategy(sides):
     left, right = sides
     out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", strategy="window"
+        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid"
     )
     got = {r.lid: r.rid for r in out.collect()}
     assert got == GOLDEN
@@ -48,15 +41,15 @@ def test_asof_window_tiebreak(spark):
         [("a", 10, 7), ("a", 10, 9), ("a", 10, 8)], "key string, rts long, rid long"
     )
     out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", strategy="window"
+        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid"
     )
     assert out.collect()[0].rid == 9
 
 
 def test_asof_window_mixed_ts_types(spark):
     """date right_ts against timestamp left_ts promotes to timestamp
-    (inclusive <= at midnight), matching the join strategy's implicit
-    coercion."""
+    (inclusive <= at midnight), the coercion an equi-join's `<=` would
+    apply implicitly."""
     left = spark.createDataFrame(
         [("a", "2024-01-02 00:00:00", 1), ("a", "2024-01-01 23:59:59", 2)],
         "key string, lts string, lid long",
@@ -65,15 +58,14 @@ def test_asof_window_mixed_ts_types(spark):
         [("a", "2024-01-01", 100), ("a", "2024-01-02", 101)],
         "key string, rts string, rid long",
     ).selectExpr("key", "cast(rts as date) rts", "rid")
-    out = as_of_join(left, right, "key", "lts", "rts", ["rid"], strategy="window")
+    out = as_of_join(left, right, "key", "lts", "rts", ["rid"])
     got = {r.lid: r.rid for r in out.collect()}
     assert got == {1: 101, 2: 100}
 
 
 def test_asof_default_strategy_plans(sides):
-    """Default strategy must be the union+window shape (one shuffle,
-    no row-expanding left join, no Python) unless the right side is
-    broadcast."""
+    """The plan is the union+window shape (one shuffle, no
+    row-expanding left join, no Python)."""
     left, right = sides
     plan_default = as_of_join(
         left, right, "key", "lts", "rts", ["rid"]
@@ -81,17 +73,6 @@ def test_asof_default_strategy_plans(sides):
     assert "Window" in plan_default
     assert "FlatMapCoGroupsInPandas" not in plan_default
     assert "BroadcastHashJoin" not in plan_default and "SortMergeJoin" not in plan_default
-    plan_bcast = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", broadcast_right=True
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan_bcast or "BroadcastNestedLoopJoin" in plan_bcast
-    assert "FlatMapCoGroupsInPandas" not in plan_bcast
-
-
-def test_asof_unknown_strategy_rejected(sides):
-    left, right = sides
-    with pytest.raises(ValueError, match="unknown strategy"):
-        as_of_join(left, right, "key", "lts", "rts", ["rid"], strategy="pandas")
 
 
 # ------------------------------------------------- directions (r4)
@@ -104,40 +85,45 @@ GOLDEN_FWD = {1: 101, 2: None, 3: 103, 4: None}
 GOLDEN_NEAR = {1: 101, 2: 102, 3: 103, 4: None}
 
 
-@pytest.mark.parametrize("strategy", ["join", "window"])
-def test_asof_forward_all_strategies(sides, strategy):
+def _right_as(right, shape):
+    """'join': the right side arrives broadcast-hinted, the small
+    dimension shape an equi-join engine would be picked for; 'window':
+    the plain input. The union+window plan must give the same golden
+    result on both."""
+    return F.broadcast(right) if shape == "join" else right
+
+
+@pytest.mark.parametrize("shape", ["join", "window"])
+def test_asof_forward_all_strategies(sides, shape):
     left, right = sides
     out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid",
-        strategy=strategy, direction="forward",
+        left, _right_as(right, shape), "key", "lts", "rts", ["rid"], tiebreak="rid",
+        direction="forward",
     )
     assert {r.lid: r.rid for r in out.collect()} == GOLDEN_FWD
 
 
-@pytest.mark.parametrize("strategy", ["join", "window"])
-def test_asof_nearest(sides, strategy):
+@pytest.mark.parametrize("shape", ["join", "window"])
+def test_asof_nearest(sides, shape):
     left, right = sides
     out = as_of_join(
-        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid",
-        strategy=strategy, direction="nearest",
+        left, _right_as(right, shape), "key", "lts", "rts", ["rid"], tiebreak="rid",
+        direction="nearest",
     )
     assert {r.lid: r.rid for r in out.collect()} == GOLDEN_NEAR
 
 
 def test_asof_forward_tiebreak(spark):
     """Equal right_ts ties resolve to the SMALLEST tiebreak going
-    forward — the mirror of backward's largest — identically on every
-    strategy."""
+    forward — the mirror of backward's largest."""
     left = spark.createDataFrame([("a", 10, 1)], "key string, lts long, lid long")
     right = spark.createDataFrame(
         [("a", 12, 200), ("a", 12, 201)], "key string, rts long, rid long"
     )
-    for strategy in ("join", "window"):
-        out = as_of_join(
-            left, right, "key", "lts", "rts", ["rid"], tiebreak="rid",
-            strategy=strategy, direction="forward",
-        )
-        assert out.collect()[0].rid == 200, strategy
+    out = as_of_join(
+        left, right, "key", "lts", "rts", ["rid"], tiebreak="rid", direction="forward"
+    )
+    assert out.collect()[0].rid == 200
 
 
 def test_asof_nearest_tie_prefers_backward(spark):
@@ -147,7 +133,7 @@ def test_asof_nearest_tie_prefers_backward(spark):
     )
     out = as_of_join(
         left, right, "key", "lts", "rts", ["rid"], tiebreak="rid",
-        direction="nearest", strategy="window",
+        direction="nearest",
     )
     assert out.collect()[0].rid == 300
 
@@ -161,7 +147,7 @@ def test_nearest_same_named_ts(spark):
     )
     out = as_of_join(
         left, right, "key", "ts", "ts", ["rid"], tiebreak="rid",
-        direction="nearest", strategy="window",
+        direction="nearest",
     )
     assert out.collect()[0].rid == 300  # |10-8| < |13-10|
 

@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from malstrom_spark import scale
 from malstrom_spark.functions import bloom
 from malstrom_spark.functions.dedup import contaminated_ids
 
@@ -127,7 +128,7 @@ def test_bloom_filtered_join_prunes_at_scan(spark):
     assert join_pos != -1 and filt_pos != -1 and filt_pos > join_pos
 
 
-def test_broadcast_probe_identical_to_literal_probe(spark):
+def test_broadcast_probe_identical_to_literal_probe(spark, monkeypatch):
     """The size-dispatched probe must be output-identical on both
     sides of the threshold (round 9: the broadcast path closes the
     'literal probe vs billions-of-grams motivation' gap)."""
@@ -143,11 +144,13 @@ def test_broadcast_probe_identical_to_literal_probe(spark):
     assert sorted(r["v"] for r in lit_hits.collect()) == \
         sorted(r["v"] for r in bc_hits.collect())
 
-    # dispatcher picks each side by threshold and stays identical
-    low = vals.where(bloom.bloom_probe(F.col("v"), filt, n_bits, k,
-                                       literal_max_bits=n_bits))
-    high = vals.where(bloom.bloom_probe(F.col("v"), filt, n_bits, k,
-                                        literal_max_bits=n_bits - 64))
+    # the scale gate picks each side by its constant and stays identical
+    monkeypatch.setattr(scale, "BLOOM_LITERAL_MAX_BITS", n_bits)
+    low = vals.where(bloom.bloom_probe(F.col("v"), filt, n_bits, k))
+    assert "ArrowEvalPython" not in low._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(scale, "BLOOM_LITERAL_MAX_BITS", n_bits - 64)
+    high = vals.where(bloom.bloom_probe(F.col("v"), filt, n_bits, k))
+    assert "ArrowEvalPython" in high._jdf.queryExecution().executedPlan().toString()
     assert sorted(r["v"] for r in low.collect()) == \
         sorted(r["v"] for r in high.collect()) == \
         sorted(r["v"] for r in lit_hits.collect())
@@ -162,7 +165,7 @@ def test_broadcast_probe_null_input_probes_false(spark):
     assert [r["id"] for r in got.collect()] == [1]
 
 
-def test_broadcast_probe_plan_has_no_giant_literal(spark):
+def test_broadcast_probe_plan_has_no_giant_literal(spark, monkeypatch):
     """Above the threshold the plan must carry NO densified array
     literal — the words ride as a broadcast variable, the plan stays
     O(1) regardless of n_bits."""
@@ -170,8 +173,8 @@ def test_broadcast_probe_plan_has_no_giant_literal(spark):
     members = spark.range(10).select(F.col("id").alias("v"))
     n_bits = 1 << 12  # 64 words — tiny, but forced over the threshold
     filt = bloom.bloom_build(members, "v", n_bits, 5)
-    probed = vals.where(bloom.bloom_probe(
-        F.col("v"), filt, n_bits, 5, literal_max_bits=64))
+    monkeypatch.setattr(scale, "BLOOM_LITERAL_MAX_BITS", 64)
+    probed = vals.where(bloom.bloom_probe(F.col("v"), filt, n_bits, 5))
     plan = probed._jdf.queryExecution().analyzed().toString()
     assert plan.count(",") < 64, "densified literal leaked into the plan"
     assert "ArrowEvalPython" in probed._jdf.queryExecution() \

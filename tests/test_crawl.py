@@ -140,9 +140,9 @@ def test_frontier_host_budget_overrides(spark):
                        host_budget_overrides={"h": -1})
 
 
-def test_frontier_override_case_normalized_and_broadcast_identical(spark):
+def test_frontier_override_case_normalized_and_broadcast_identical(spark, monkeypatch):
+    from malstrom_spark import scale
     from malstrom_spark.functions.crawl import crawl_frontier
-    import malstrom_spark.functions.crawl as crawl_mod
 
     links = spark.createDataFrame(
         [(f"https://h{h}.example.com/p{i}",)
@@ -165,18 +165,14 @@ def test_frontier_override_case_normalized_and_broadcast_identical(spark):
         host_budget_overrides={"h1.example.com": 4, "H1.EXAMPLE.COM": 1},
     ).collect()
     assert sum(1 for r in tight if r.host == "h1.example.com") == 1
-    # broadcast-join path (forced via the literal threshold) is
+    # broadcast-join path (forced via the scale constant) is
     # output-identical to the literal map path
     literal = sorted((r.url for r in got))
-    old = crawl_mod._OVERRIDE_LITERAL_MAX
-    try:
-        crawl_mod._OVERRIDE_LITERAL_MAX = 0
-        bc = crawl_frontier(
-            links, per_host_budget=5,
-            host_budget_overrides={"H1.Example.COM": 2},
-        ).collect()
-    finally:
-        crawl_mod._OVERRIDE_LITERAL_MAX = old
+    monkeypatch.setattr(scale, "CRAWL_OVERRIDES_LITERAL_MAX", 0)
+    bc = crawl_frontier(
+        links, per_host_budget=5,
+        host_budget_overrides={"H1.Example.COM": 2},
+    ).collect()
     assert sorted(r.url for r in bc) == literal
     assert {r.host for r in bc} == {r.host for r in got}
 

@@ -228,9 +228,7 @@ def test_dedup_groups_transitive_closure(spark, cc_finish):
 def test_dedup_groups_path_chain(spark, cc_finish):
     """A 50-hop duplicate chain (path graph): large-star/small-star
     must converge in O(log n) rounds where min-label propagation needs
-    O(diameter). 8 rounds suffice for alternating (the driver finish
-    needs none); label propagation capped at 5 rounds must fail loudly
-    rather than mislabel."""
+    O(diameter). 8 rounds suffice (the driver finish needs none)."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     n = 50
@@ -244,14 +242,31 @@ def test_dedup_groups_path_chain(spark, cc_finish):
     }
     assert got == {i: 0 for i in range(n)} | {n: n}
     cc_finish.assert_path()
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_groups(pairs, ids, "doc_id", max_iters=5, algorithm="label")
+
+
+def test_dedup_groups_non_convergence_raises(spark):
+    """Too few rounds for the chain must fail loudly rather than return
+    non-minimum labels: with the driver finish off, 2 rounds do not
+    contract a 50-hop chain."""
+    from malstrom_spark.functions.dedup import dedup_groups
+
+    from conftest import force_cc_finish
+
+    n = 50
+    ids = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    with force_cc_finish("rounds") as spy:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_groups(pairs, ids, "doc_id", max_iters=2)
+    assert spy.rounds == 2 and not spy.finishes
 
 
 def test_dedup_groups_algorithms_agree(spark, cc_finish):
-    """Both CC algorithms reach the identical fixpoint on a graph with
-    chains, a triangle, reversed/duplicate/self edges and singletons,
-    with either CC finish."""
+    """The min-id labels on a graph with chains, a triangle,
+    reversed/duplicate/self edges and singletons, with either CC
+    finish."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
@@ -259,13 +274,8 @@ def test_dedup_groups_algorithms_agree(spark, cc_finish):
         [(0, 3), (3, 5), (5, 0), (7, 6), (8, 7), (9, 9), (2, 1), (2, 1), (10, 4)],
         "id_a long, id_b long",
     )
-    alt = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
-    lab = {
-        r.doc_id: r.group_id
-        for r in dedup_groups(pairs, ids, "doc_id", algorithm="label").collect()
-    }
-    assert alt == lab
-    assert alt == {0: 0, 3: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 1: 1, 2: 1, 4: 4, 10: 4, 11: 11}
+    got = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
+    assert got == {0: 0, 3: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 1: 1, 2: 1, 4: 4, 10: 4, 11: 11}
     cc_finish.assert_path()
 
 

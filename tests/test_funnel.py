@@ -356,3 +356,21 @@ def test_stream_builder_composite_key_funnel(spark):
     got = {(r.tn, r.u): (r.t_a, r.t_b) for r in out.collect()}
     assert got[(1, 1)] == (_ts("2024-01-01 00:00:00"), None)
     assert got[(2, 1)] == (None, None)
+
+
+def test_advance_chain_object_step_column_warns_nothing():
+    """A step column of object dtype holding None (how Arrow hands a
+    nullable boolean to pandas) reads None as False without a pandas
+    downcasting FutureWarning, which the streaming funnel would
+    otherwise print on every call."""
+    import warnings
+
+    import pandas as pd
+
+    from malstrom_spark.streaming.funnel import _advance_chain
+
+    pdf = pd.DataFrame({"e_us": [10, 20], "f0": pd.Series([True, None], dtype=object)})
+    assert pdf["f0"].dtype == object
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _advance_chain([None], pdf, 1, None) == [10]

@@ -392,7 +392,7 @@ def _cc_checkpoints_left(spark, mode: str) -> int:
 
 
 def test_cc_rounds_release_checkpoint_storage(spark):
-    """_groups_alternating frees the prior round's localCheckpoint
+    """dedup_groups frees the prior round's localCheckpoint
     blocks as soon as the fixpoint test has run, so executor storage
     stays O(1) in rounds: after convergence on a multi-round chain, at
     most 1 checkpointed RDD (the final edge set, live in the returned

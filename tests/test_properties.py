@@ -166,7 +166,7 @@ def test_decontaminate_matches_python_ngram_overlap(spark, corpus, bench):
     )
 )
 def test_dedup_groups_matches_union_find(spark, edge_list):
-    """Connected-component labels (large-star/small-star default) vs a
+    """Connected-component labels (large-star/small-star) vs a
     plain-Python union-find on arbitrary hypothesis graphs — including
     self-loops, duplicate and reversed edges, and isolated nodes — with
     the CC forced to finish on the driver and in Spark rounds."""

@@ -1,7 +1,8 @@
 """Range (interval) join + hypertable rollup (round 4).
 
-Strategy-equality pins: 'join', 'bin' and 'broadcast' must produce
-identical pair sets; plan shape pins: the bin strategy must plan an
+Plan-equality pins: the keyed join, the bin join and the broadcast
+join must produce identical pair sets; plan shape pins: the bin join
+must plan an
 equi-join (no BroadcastNestedLoop / CartesianProduct) even with NO
 equi-keys, and the hypertable rollup's coarser grains must reuse the
 finest grain's aggregate exchange instead of rescanning raw data.
@@ -60,48 +61,38 @@ EXPECTED = [(1, 10), (2, 11), (3, 20), (3, 21)]
 
 
 def test_keyed_join_strategy(points, intervals):
-    out = range_join(points, intervals, "ts", "start", "end", keys=["k"], strategy="join")
+    out = range_join(points, intervals, "ts", "start", "end", keys=["k"])
     assert _pairs(out) == EXPECTED
     # half-open: point exactly at end excluded; empty window matches nothing
     out_incl = range_join(
-        points, intervals, "ts", "start", "end", keys=["k"], strategy="join",
-        end_inclusive=True,
+        points, intervals, "ts", "start", "end", keys=["k"], end_inclusive=True
     )
     assert (5, 30) in _pairs(out_incl)
 
 
 def test_bin_strategy_matches_join(points, intervals):
     for width in ("1 day", "3 days", "90 minutes"):
-        out = range_join(
-            points, intervals, "ts", "start", "end", keys=["k"],
-            strategy="bin", bin_width=width,
-        )
+        out = range_join(points, intervals, "ts", "start", "end", keys=["k"], bin_width=width)
         assert _pairs(out) == EXPECTED, width
 
 
 def test_unkeyed_bin_matches_broadcast(points, intervals):
-    bc = range_join(points, intervals.drop("k"), "ts", "start", "end", strategy="broadcast")
-    bn = range_join(
-        points, intervals.drop("k"), "ts", "start", "end",
-        strategy="bin", bin_width="2 days",
-    )
+    bc = range_join(points, intervals.drop("k"), "ts", "start", "end", broadcast_right=True)
+    bn = range_join(points, intervals.drop("k"), "ts", "start", "end", bin_width="2 days")
     assert _pairs(bn) == _pairs(bc)
 
 
 def test_unkeyed_join_refused(points, intervals):
-    with pytest.raises(ValueError, match="bin"):
-        range_join(points, intervals.drop("k"), "ts", "start", "end", strategy="join")
-    with pytest.raises(ValueError, match="bin_width"):
-        range_join(points, intervals.drop("k"), "ts", "start", "end", strategy="bin")
+    """Unkeyed, with neither bin_width nor broadcast_right: refused,
+    naming both ways out, rather than planning a nested-loop join."""
+    with pytest.raises(ValueError, match="bin_width.*broadcast_right"):
+        range_join(points, intervals.drop("k"), "ts", "start", "end")
 
 
 def test_unkeyed_bin_plan_is_equi_join(points, intervals):
-    """The whole point of the bin strategy: no nested-loop even with
-    zero equi-keys — the synthetic bin column carries the join."""
-    out = range_join(
-        points, intervals.drop("k"), "ts", "start", "end",
-        strategy="bin", bin_width="2 days",
-    )
+    """The whole point of the bin join: no nested-loop even with zero
+    equi-keys — the synthetic bin column carries the join."""
+    out = range_join(points, intervals.drop("k"), "ts", "start", "end", bin_width="2 days")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -175,7 +166,7 @@ _POINT = st.integers(min_value=0, max_value=500)
 )
 def test_bin_equals_reference_on_random_data(spark, pts, wins, width):
     """For ANY point/interval layout and ANY bin width, the bin
-    strategy must produce exactly the pairs a nested-loop (broadcast)
+    join must produce exactly the pairs a nested-loop (broadcast)
     join produces — including empty, touching and contained
     intervals."""
     import datetime as dt
@@ -195,22 +186,22 @@ def test_bin_equals_reference_on_random_data(spark, pts, wins, width):
         for wi, (s, d) in enumerate(wins)
         if s <= p < s + d
     )
-    got = range_join(left, right, "ts", "s", "e", strategy="bin", bin_width=width)
+    got = range_join(left, right, "ts", "s", "e", bin_width=width)
     assert sorted((r.pid, r.wid) for r in got.collect()) == expect
 
 
 def test_numeric_bin_join(spark):
     """The docstring promises numeric point/interval columns; the bin
-    strategy must honor it (numeric bin_width, no unix_timestamp)."""
+    join must honor it (numeric bin_width, no unix_timestamp)."""
     pts = spark.createDataFrame([(1, 5.0), (2, 42.5), (3, -3.0)], "pid int, x double")
     wins = spark.createDataFrame(
         [(10, 0.0, 10.0), (11, 40.0, 45.0), (12, -10.0, 0.0)],
         "wid int, s double, e double",
     )
-    out = range_join(pts, wins, "x", "s", "e", strategy="bin", bin_width=7.0)
+    out = range_join(pts, wins, "x", "s", "e", bin_width=7.0)
     assert sorted((r.pid, r.wid) for r in out.collect()) == [(1, 10), (2, 11), (3, 12)]
     with pytest.raises(ValueError, match="numeric bin_width"):
-        range_join(pts, wins, "x", "s", "e", strategy="bin", bin_width="7 days")
+        range_join(pts, wins, "x", "s", "e", bin_width="7 days")
 
 
 def test_subsecond_bin_width(spark):
@@ -223,10 +214,10 @@ def test_subsecond_bin_width(spark):
         [(10, ms(0), ms(500)), (11, ms(600), ms(1000))],
         "wid int, s timestamp, e timestamp",
     )
-    out = range_join(pts, wins, "ts", "s", "e", strategy="bin", bin_width="250 milliseconds")
+    out = range_join(pts, wins, "ts", "s", "e", bin_width="250 milliseconds")
     assert sorted((r.pid, r.wid) for r in out.collect()) == [(1, 10), (2, 11)]
     with pytest.raises(ValueError, match="calendar unit"):
-        range_join(pts, wins, "ts", "s", "e", strategy="bin", bin_width="1 month")
+        range_join(pts, wins, "ts", "s", "e", bin_width="1 month")
 
 
 def test_rollup_grain_validation(spark):

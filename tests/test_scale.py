@@ -283,6 +283,8 @@ def test_every_gate_logs_one_decision_at_debug(spark, sf_dir, monkeypatch, caplo
         )
         scale.ivf_salt(spark, 8)
         scale.cc_finish_on_driver(10)
+        scale.bloom_literal_probe(1 << 10)
+        scale.crawl_overrides_literal(scale.CRAWL_OVERRIDES_LITERAL_MAX + 1)
 
     with caplog.at_level(logging.INFO, logger=scale.__name__):
         every_gate()
@@ -290,7 +292,7 @@ def test_every_gate_logs_one_decision_at_debug(spark, sf_dir, monkeypatch, caplo
     with caplog.at_level(logging.DEBUG, logger=scale.__name__):
         every_gate()
     got = {r.gate: (r.decision, r.getMessage()) for r in caplog.records}
-    assert len(caplog.records) == len(got) == 4
+    assert len(caplog.records) == len(got) == 6
     assert got["ensure_parallelism"][0] in ("keep", "repartition")
     assert "scan_partitions=" in got["ensure_parallelism"][1]
     assert got["collapse_exact_groups"][0] == "collapse"
@@ -298,4 +300,13 @@ def test_every_gate_logs_one_decision_at_debug(spark, sf_dir, monkeypatch, caplo
     bound = scale.CC_DRIVER_MAX_EDGES
     assert got["cc_finish_on_driver"] == (
         "driver", f"cc_finish_on_driver n_edges=10 max_edges={bound} -> driver"
+    )
+    assert got["bloom_literal_probe"] == (
+        "literal",
+        f"bloom_literal_probe n_bits=1024 max_bits={scale.BLOOM_LITERAL_MAX_BITS} -> literal",
+    )
+    hosts = scale.CRAWL_OVERRIDES_LITERAL_MAX
+    assert got["crawl_overrides_literal"] == (
+        "broadcast",
+        f"crawl_overrides_literal n_hosts={hosts + 1} max_hosts={hosts} -> broadcast",
     )

@@ -49,7 +49,7 @@ def test_as_of_join_via_stream(spark):
     )
     out = (
         Stream.from_df(left, key_cols=("key",))
-        .as_of_join(Stream.from_df(right), "ts", "rts", ["px"], broadcast_right=True)
+        .as_of_join(Stream.from_df(right), "ts", "rts", ["px"])
         .collect()
     )
     got = {(r.key, r.ts.second): r.px for r in out}
