@@ -80,9 +80,6 @@ HEADLINE = [
     # for 500k at sf10, BASELINE.md) — the sf10 probe table is its
     # evidence; timing it at toy scale would only add noise.
     "similarity_ann_lsh",
-    # Arrow/BLAS brute-force scorer twin: the scale path for the
-    # dominant sf1 cost (HOF cosine 3.3 s vs 0.4 s, BASELINE.md)
-    "similarity_topk_cosine_arrow",
     # flagship composition (exact-dedup -> quality gate -> 13-gram
     # decontamination -> sequence packing), production xxhash twin of
     # the oracle-verified training_data_pipeline

@@ -260,7 +260,7 @@ def bitext_edges_pandas(
     """(fwd, bwd) directed kNN edge sets for bitext mining, scored by
     an Arrow/numpy kernel whose sims are BIT-IDENTICAL to the
     `similarity.dot` fold — not merely rank-identical like
-    `cosine_topk_pandas`: products are elementwise IEEE doubles and
+    `similarity.cosine_topk`: products are elementwise IEEE doubles and
     the reduction is a strict left-to-right axpy fold, so every sim —
     and hence every floor-quantized micro-sim downstream — is
     reproducible (the row's DuckDB oracle pins it). BLAS matmul would
@@ -271,7 +271,7 @@ def bitext_edges_pandas(
     One pass over B's partitions scores BOTH directions: each
     partition holds complete rows of the pair matrix, so per-y top-k
     (bwd) is exact locally, and per-x candidates reduce to k per
-    partition before one global window merge (the cosine_topk_pandas
+    partition before one global window merge (the `cosine_topk`
     merge shape). Side A is collected and broadcast (the exact-kernel
     contract; corpus-x-corpus sides belong on `mine_bitext_ivf`); the
     broadcast is destroyed once the edge set is checkpointed, so no

@@ -4,11 +4,10 @@ North-star operator set (absent from the reference, SURVEY §2.8).
 Three search shapes:
 
 - `cosine_topk`: exact brute force — broadcast the (small) query set
-  against the corpus, dot/norm as native array expressions
-  (zip_with + aggregate, JVM-side), per-query top-k via window.
+  as a numpy matrix and score each Arrow batch of the corpus with one
+  BLAS matmul, per-query top-k via a local cut and a window merge.
   Scale: O(|Q| * |corpus|) but embarrassingly parallel; right answer
-  for |Q| small (retrieval eval, dedup probes). `cosine_topk_pandas`
-  scores the same pairs with one numpy matmul per Arrow batch.
+  for |Q| small (retrieval eval, dedup probes).
 - `lsh_topk_portable`: approximate — random-hyperplane LSH buckets
   the corpus once (signature = sign bits over fixed Rademacher
   hyperplanes) and probes only matching buckets. Scale path for
@@ -82,53 +81,18 @@ def cosine_topk(
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector.
+    """Exact top-k cosine neighbors per query vector: (q_id, c_id, sim,
+    rank). The query set is small by contract and is broadcast as one
+    numpy matrix; each corpus partition streams through mapInPandas as
+    Arrow batches, scores a (batch × dim) @ (dim × n_queries) BLAS
+    matmul, and emits its LOCAL top-k per query; the global top-k is a
+    tiny (partitions × queries × k) window merge. The corpus never
+    shuffles, and Python sees Arrow batches, never rows.
 
-    Output: (q_id, c_id, sim, rank). Query side is broadcast — the
-    corpus never shuffles; each partition scores its slice and the
-    window top-k reduces map-side before the final per-query merge.
-    """
-    joined = corpus.crossJoin(F.broadcast(queries))
-    scored = joined.select(
-        F.col(q_id),
-        F.col(c_id),
-        cosine(F.col(q_vec), F.col(c_vec)).alias("sim"),
-    )
-    # zero-norm vectors make cosine NULL (try_divide; NaN on the numpy
-    # path): drop them (undefined similarity) so both scorer paths
-    # agree on degenerate input — Spark's desc sort would rank
-    # NULL/NaN first, numpy's lexsort last
-    scored = scored.filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def cosine_topk_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "c_vec",
-) -> DataFrame:
-    """`cosine_topk` with an Arrow-vectorized numpy scorer — the
-    throughput path for brute-force scoring at scale: each corpus
-    partition streams through mapInPandas as Arrow batches, scores a
-    (batch × dim) @ (dim × n_queries) BLAS matmul against the
-    broadcast query matrix, and emits its LOCAL top-k per query; the
-    global top-k is a tiny (partitions × queries × k) window merge.
-    Corpus never shuffles, Python sees Arrow batches (never rows).
-
-    Float sums differ from the sequential HOF fold in summation order
-    only (~1e-12 relative); tests pin rank-equality on the testdata.
-    Ties on sim break by ascending c_id, matching `cosine_topk`.
-    Degenerate inputs match `cosine_topk` too: zero-norm vectors are
-    dropped (NaN sim — undefined similarity) and an empty query set
-    returns an empty result instead of a (dim, 0) matmul error."""
+    Ties on sim break by ascending c_id. Zero-norm, NULL, NULL-element
+    and wrong-length vectors are dropped (undefined similarity), and an
+    empty query set returns an empty result instead of a (dim, 0)
+    matmul error."""
     import pandas as pd
 
     # id columns keep their input types (not hardcoded long), so the
@@ -137,28 +101,30 @@ def cosine_topk_pandas(
     c_id_t = corpus.schema[c_id].dataType.simpleString()
     out_schema = f"{q_id} {q_id_t}, {c_id} {c_id_t}, sim double"
 
-    q_rows = queries.select(q_id, q_vec).collect()  # query side: small by contract
+    # query side: small by contract; a NULL query vector matches nothing
+    q_rows = [r for r in queries.select(q_id, q_vec).collect() if r[1] is not None]
     spark = corpus.sparkSession
     if not q_rows:
         return spark.createDataFrame([], out_schema + ", rank int")
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    dim = q_mat.shape[1]
     q_norm = np.linalg.norm(q_mat, axis=1)
     bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
 
     def score(batches):
         ids_b, mat_b, nrm_b = bq.value
         for pdf in batches:
-            if pdf.empty:
+            rows, c_mat = _stack(pdf[c_vec], dim)
+            if not len(rows):
                 continue
-            cids = pdf[c_id].to_numpy()
-            c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[c_vec]])
+            cids = pdf[c_id].to_numpy()[rows]
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (c_mat @ mat_b.T) / (
                     np.linalg.norm(c_mat, axis=1)[:, None] * nrm_b[None, :]
                 )
-            # zero-norm rows/queries -> NaN sim: exclude, like the HOF
-            # path's isnan filter (-inf sorts last and is filtered out)
+            # zero-norm rows/queries -> NaN sim: excluded (-inf sorts
+            # last and is filtered out)
             sims = np.where(np.isnan(sims), -np.inf, sims)
             out_q, out_c, out_s = [], [], []
             top = min(k, len(cids))
@@ -173,7 +139,11 @@ def cosine_topk_pandas(
                 out_s.extend(col[order])
             yield pd.DataFrame({q_id: out_q, c_id: out_c, "sim": out_s})
 
-    local = corpus.select(c_id, c_vec).mapInPandas(score, schema=out_schema)
+    # a NULL, NULL-element or wrong-length corpus vector has no cosine
+    # with the queries: it arrives NULL and is skipped
+    local = corpus.select(
+        c_id, _well_formed(F.col(c_vec), dim).alias(c_vec)
+    ).mapInPandas(score, schema=out_schema)
     w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))
     return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 

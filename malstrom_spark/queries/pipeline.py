@@ -356,8 +356,9 @@ def doc_pair_jaccard(spark, sf_dir):
 )
 def similarity_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-k (functions/similarity.py cosine_topk):
-    broadcast query set, native zip_with/aggregate dot products, window
-    top-k. sim rounded to 6dp for engine portability of the float sum."""
+    broadcast query matrix, one BLAS matmul per Arrow batch of the
+    corpus, window top-k. sim rounded to 6dp for engine portability of
+    the float sum."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -1280,29 +1281,6 @@ def training_data_pipeline_scale(spark, sf_dir):
         clean.select("doc_id", "token_count"), "doc_id", "token_count",
         seq_len=2048, n_shards=8, portable=False,
     )
-
-
-@register("similarity_topk_cosine_arrow", oracle=None)
-def similarity_topk_cosine_arrow(spark, sf_dir):
-    """Arrow/BLAS twin of `similarity_topk_cosine` (functions/
-    similarity.py cosine_topk_pandas): per-batch matmul + local top-k.
-    Rank-identical to the HOF fold (pytest-pinned); float sums differ
-    ~1e-12 in association order, so the md5 hash gate keeps the HOF
-    row and this twin is the benched scale path — 8× faster at sf1
-    (0.41 vs 3.26 s, flat in corpus size up to 20k vectors)."""
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    out = similarity.cosine_topk_pandas(queries, corpus, k=6)
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    out = (
-        out.filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
-    return out.select("q_id", "c_id", F.round("sim", 6).alias("sim"), "rank")
 
 
 @register(

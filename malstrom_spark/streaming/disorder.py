@@ -1,14 +1,15 @@
-"""Watermark-finalized buffered fold — the out-of-order hardening
-layer for the streaming funnel/SCD2 twins (round-5 item #1).
+"""Watermark-finalized buffered fold: `stateful_map_ordered_stream`,
+the one out-of-order keyed fold of the package. The disorder modes of
+`funnel_stream` and `scd2_stream` call it with their fold.
 
-The default twins (streaming/funnel.py, streaming/scd.py) fold events
-in ARRIVAL order and are exact only when event time never regresses
-across microbatches. The reference's pattern for true out-of-order
-streams is to buffer within the disorder horizon and finalize on the
-watermark (`generate_epochs` closures emit epochs, `on_epoch` fires
-when the frontier passes — operators/time/generate_epochs.rs:39-127,
-stateful_op.rs:154-157). This module is that pattern on Spark's
-stateful machinery:
+Arrival-order folds (`stateful_map_stream`, the default mode of the
+funnel and SCD2 operators) are exact only when event time never
+regresses across microbatches. The reference's pattern for true
+out-of-order streams is to buffer within the disorder horizon and
+finalize on the watermark (`generate_epochs` closures emit epochs,
+`on_epoch` fires when the frontier passes —
+operators/time/generate_epochs.rs:39-127, stateful_op.rs:154-157).
+This module is that pattern on Spark's stateful machinery:
 
 - per key, incoming events are BUFFERED in state (parallel arrays,
   one per event column);
@@ -16,7 +17,7 @@ stateful machinery:
   event-time timer, or directly in `on_data` when W already moved —
   every buffered event with ts < W is RIPE: folded, in event-time
   order, through the operator's fold function, which updates the
-  inner state (funnel chain / SCD2 open interval) and emits;
+  user state (funnel chain / SCD2 open interval) and emits;
 - events that arrive with ts < W are LATE beyond the horizon and are
   deterministically dropped (the engine may or may not pre-filter
   them; the operator does not depend on it). Users who need the
@@ -187,44 +188,6 @@ def make_disorder_handlers(
     return on_data, on_timer
 
 
-def disorder_fold_stream(
-    sdf: DataFrame,
-    key_cols: Sequence[str],
-    ts_us_col: str,
-    buf_cols: Sequence[tuple[str, str]],
-    sort_cols: Sequence[str],
-    inner_fields: Sequence[tuple[str, str]],
-    fold: Callable,
-    out_schema,
-) -> DataFrame:
-    """Generic watermark-finalized keyed fold.
-
-    sdf          already watermarked; projected to key_cols + buf_cols.
-    buf_cols     (name, spark_type) event columns to buffer; must
-                 include (ts_us_col, 'bigint') event-time micros.
-    sort_cols    buffer columns ordering the fold within a ripe batch
-                 (ts first; add a tiebreak for deterministic ties).
-    inner_fields (name, spark_type) of the operator's inner state.
-    fold         fold(key, ripe_pdf_sorted, inner_tuple_or_None)
-                 -> (list[pd.DataFrame], new_inner_tuple) — called only
-                 when ripe events exist; sees them in event-time order.
-    """
-    from .stateful_op import stateful_op_stream
-
-    buf_names = [n for n, _ in buf_cols]
-    state_schema = ", ".join(
-        [f"{n} {t}" for n, t in inner_fields]
-        + [f"__b_{n} array<{t}>" for n, t in buf_cols]
-    )
-    on_data, on_timer = make_disorder_handlers(
-        ts_us_col, buf_names, list(sort_cols), len(inner_fields), fold,
-        buf_types=dict(buf_cols),
-    )
-    return stateful_op_stream(
-        sdf, list(key_cols), on_data, on_timer, out_schema, state_schema
-    )
-
-
 def stateful_map_ordered_stream(
     sdf: DataFrame,
     key_cols: Sequence[str],
@@ -240,8 +203,8 @@ def stateful_map_ordered_stream(
     the reference's event-time programming model (a `stateful_op`
     buffering records and folding them when the epoch closes;
     examples/event_time.rs:107-152 builds its monthly account balance
-    exactly this way). The funnel/SCD2 disorder modes are specialized
-    instances; this is the user-facing escape hatch for custom logic.
+    exactly this way). The disorder modes of `funnel_stream` and
+    `scd2_stream` are calls of it.
 
     `fn(key: tuple, pdf, state_tuple | None) -> (list[pd.DataFrame],
     new_state_tuple)` — pdf holds the key's newly-FINALIZED records
@@ -249,12 +212,19 @@ def stateful_map_ordered_stream(
     time (+ `tiebreak` for deterministic ties), with `ts_col`
     reconstructed as datetime64; called only when the watermark passes
     records, so consecutive calls never hand it out-of-order work.
-    Records later than `disorder_horizon` behind the watermark are
-    dropped deterministically. `state_schema` is a DDL string; state
-    with every field None is indistinguishable from "no state yet" —
-    keep at least one non-null field in any live state."""
+    Records later than `disorder_horizon` behind the watermark, and
+    records with a null `ts_col`, are dropped deterministically.
+    `state_schema` is a DDL string; state with every field None is
+    indistinguishable from "no state yet" — keep at least one non-null
+    field in any live state.
+
+    The key's state store row is `state_schema`'s fields followed by
+    one `__b_<col>` array per buffered column (`__e_us`, the event
+    micros, then every data column)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
+
+    from .stateful_op import stateful_op_stream
 
     key_cols = list(key_cols)
     wm = sdf.withWatermark(ts_col, disorder_horizon)
@@ -271,10 +241,11 @@ def stateful_map_ordered_stream(
     buf_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
     buf_cols = [("__e_us", "bigint")] + [(c, buf_types[c]) for c in data_cols]
     sort_cols = ["__e_us"] + ([tiebreak] if tiebreak else [])
-    inner_fields = [
-        (f.name, f.dataType.simpleString())
-        for f in StructType.fromDDL(state_schema).fields
-    ]
+    inner_fields = StructType.fromDDL(state_schema).fields
+    state_ddl = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in inner_fields]
+        + [f"`__b_{n}` array<{t}>" for n, t in buf_cols]
+    )
 
     def fold(key, ripe, inner):
         import pandas as pd
@@ -283,7 +254,10 @@ def stateful_map_ordered_stream(
         pdf[ts_col] = pd.to_datetime(pdf[ts_col], unit="us")
         return fn(key, pdf, inner)
 
-    return disorder_fold_stream(
-        proj, key_cols, "__e_us", buf_cols, sort_cols, inner_fields,
-        fold, output_schema,
+    on_data, on_timer = make_disorder_handlers(
+        "__e_us", [n for n, _ in buf_cols], sort_cols, len(inner_fields), fold,
+        buf_types=dict(buf_cols),
+    )
+    return stateful_op_stream(
+        proj, key_cols, on_data, on_timer, output_schema, state_ddl
     )

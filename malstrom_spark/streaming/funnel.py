@@ -1,7 +1,9 @@
 """Streaming funnel — the stateful-streaming twin of
-operators/funnel.py, built on the same applyInPandasWithState wrapper
-as stateful_map (streaming/stateful.py; reference `StatefulLogic`
-contract, operators/stateful_map.rs:60-110).
+operators/funnel.py. One fold (`funnel_stream`'s `fold`) runs on
+`stateful_map_stream` (streaming/stateful.py; reference
+`StatefulLogic` contract, operators/stateful_map.rs:60-110) in the
+default mode, and on `stateful_map_ordered_stream`
+(streaming/disorder.py) when a disorder horizon is given.
 
 State per user = the K chain timestamps (epoch micros, null = prefix
 not yet completed). Each microbatch applies the same min()-chaining
@@ -19,9 +21,9 @@ contract the reference's stateful_map user logic lives under
 (closures see arrival order; stateful_map.rs:74-77). With the bounded
 availableNow replay (one batch) the output equals the batch operator
 exactly. For true out-of-order streams pass ``disorder_horizon``: the
-watermark-finalized mode (streaming/disorder.py, round 5) buffers
-events within the horizon in state and folds them in event-time order
-when the watermark passes — exact under ANY microbatch arrival order,
+watermark-finalized mode buffers events within the horizon in state
+and hands them to the same fold in event-time order when the
+watermark passes — exact under ANY microbatch arrival order,
 the reference's generate_epochs/on_epoch pattern
 (operators/time/generate_epochs.rs:39-127, stateful_op.rs:154-157).
 """
@@ -32,7 +34,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 
 _UNIT_US = {
@@ -65,9 +67,9 @@ def _interval_micros(sdf: DataFrame, within: str) -> int:
 
 
 def _advance_chain(t: list, pdf, k: int, within_us: int | None) -> list:
-    """The vectorized min-chaining kernel, shared by the fill-forward
-    and disorder-horizon modes: advance chain state `t` (k epoch-micros
-    or None) over one batch of events (columns e_us, f0..f{k-1})."""
+    """The vectorized min-chaining kernel of the funnel fold: advance
+    chain state `t` (k epoch-micros or None) over one batch of events
+    (columns e_us, f0..f{k-1})."""
     e = pdf["e_us"].to_numpy(dtype="int64")
     for i in range(k):
         if t[i] is not None:
@@ -97,7 +99,7 @@ def funnel_stream(
     that touched the user. steps/within as in funnel_times.
 
     ``disorder_horizon`` (an interval, e.g. '10 minutes') switches to
-    the watermark-finalized mode (streaming/disorder.py): events
+    the watermark-finalized mode (`stateful_map_ordered_stream`): events
     buffer per user in state and fold into the chain only once the
     watermark passes them, so a late-but-in-horizon event lands in its
     correct chain position and the result matches the batch operator
@@ -106,14 +108,15 @@ def funnel_stream(
     fill-forward contract: exact while event time never regresses
     across microbatches.
 
-    Watermark scope note: Catalyst pushes the step filter below the
-    watermark node (the plan you want at scale — non-step events never
-    shuffle), so the watermark advances on STEP-MATCHING events only.
+    Watermark scope note: the watermark is set on the step-matching
+    events (the plan you want at scale — non-step events never
+    shuffle), so it advances on STEP-MATCHING events only.
     If non-step traffic must drive time forward (idle funnels closing
     on unrelated activity), widen a step predicate into a heartbeat or
     pre-aggregate a time signal upstream."""
     import pandas as pd
 
+    from .disorder import stateful_map_ordered_stream
     from .stateful import require_utc_session, stateful_map_stream
 
     names = [n for n, _ in steps]
@@ -128,60 +131,35 @@ def funnel_stream(
     k = len(steps)
     within_us = None if within is None else _interval_micros(sdf, within)
 
-    if disorder_horizon is not None:
-        sdf = sdf.withWatermark(ts, disorder_horizon)
     any_step = None
     for _, p in steps:
         any_step = p if any_step is None else (any_step | p)
-    # null event times can't order in a chain; both twins drop them.
-    # Disorder mode keeps the watermarked ts attribute alongside the
-    # micros twin: the event-time-timeout check requires it to reach
-    # the stateful operator.
+    # null event times can't order in a chain; both modes drop them
     ev = sdf.filter(any_step & F.col(ts).isNotNull()).select(
         F.col(user).alias("u"),
-        F.unix_micros(F.col(ts)).alias("e_us"),
+        F.col(ts).alias("ts"),
         *[p.cast("boolean").alias(f"f{i}") for i, (_, p) in enumerate(steps)],
-        *([F.col(ts).alias("__wm_ts")] if disorder_horizon is not None else []),
     )
-
     out_schema = StructType(
         [StructField("u", ev.schema["u"].dataType)]
         + [StructField(f"t_{n}", TimestampType()) for n in names]
     )
+    state_ddl = ", ".join(f"t{i} bigint" for i in range(k))
 
-    def emit_row(key, t):
+    def fold(key, pdf, state):
+        t = list(state) if state is not None else [None] * k
+        e_us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
+        t = _advance_chain(t, pdf.assign(e_us=e_us), k, within_us)
         row = {"u": key[0]}
         for i, n in enumerate(names):
-            row[f"t_{n}"] = (
-                pd.Timestamp(t[i], unit="us") if t[i] is not None else pd.NaT
-            )
-        return pd.DataFrame([row])
+            row[f"t_{n}"] = pd.NaT if t[i] is None else pd.Timestamp(t[i], unit="us")
+        return [pd.DataFrame([row])], tuple(t)
 
     if disorder_horizon is not None:
-        from .disorder import disorder_fold_stream
-
-        def fold(key, ripe, inner):
-            t = list(inner) if inner is not None else [None] * k
-            t = _advance_chain(t, ripe, k, within_us)
-            return [emit_row(key, t)], tuple(t)
-
-        return disorder_fold_stream(
-            ev,
-            ["u"],
-            "e_us",
-            [("e_us", "bigint")] + [(f"f{i}", "boolean") for i in range(k)],
-            ["e_us"],
-            [(f"t{i}", "bigint") for i in range(k)],
-            fold,
-            out_schema,
+        return stateful_map_ordered_stream(
+            ev, ["u"], "ts", fold, out_schema, state_ddl, disorder_horizon
         )
-
-    state_schema = StructType([StructField(f"t{i}", LongType()) for i in range(k)])
-
-    def fn(key, pdfs, state):
-        t = list(state) if state is not None else [None] * k
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        t = _advance_chain(t, pdf, k, within_us)
-        return [emit_row(key, t)], tuple(t)
-
-    return stateful_map_stream(ev, ["u"], fn, out_schema, state_schema)
+    return stateful_map_stream(
+        ev, ["u"], lambda key, pdfs, state: fold(key, pd.concat(list(pdfs)), state),
+        out_schema, state_ddl,
+    )

@@ -17,12 +17,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def replay_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def replay_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Streaming DataFrame replaying a driver test table. Schema comes
     from a batch peek (file streams need explicit schemas)."""
     from ..queries import _ensure_conf, events_ts
@@ -36,10 +31,7 @@ def replay_table(
     if not link.exists():
         link.symlink_to(path)
     schema = spark.read.parquet(path).schema
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    sdf = reader.load(str(stage))
+    sdf = spark.readStream.format("parquet").schema(schema).load(str(stage))
     return events_ts(sdf) if name == "events" else sdf
 
 

@@ -1,23 +1,25 @@
 """Streaming SCD2 — the stateful-streaming twin of
-operators/scd.py, on the same applyInPandasWithState wrapper as
-stateful_map (streaming/stateful.py; reference `StatefulLogic`
-contract, operators/stateful_map.rs:60-110).
+operators/scd.py. One fold runs on `stateful_map_stream`
+(streaming/stateful.py; reference `StatefulLogic` contract,
+operators/stateful_map.rs:60-110) in the default mode, and on
+`stateful_map_ordered_stream` (streaming/disorder.py) when a disorder
+horizon is given.
 
 State per key = the OPEN interval: the tracked attribute values and
-their valid_from. Each microbatch sorts its events per key, detects
-change points vectorized (null-safe shift-compare, no Python row
-loop), EMITS every interval the batch closes (valid_to set,
-is_current False) plus the key's current open interval (valid_to
-null, is_current True), and stores the open interval back to state —
-CDC-style incremental history.
+their valid_from (a timestamp), in both modes. The fold takes a key's
+events in event-time order, detects change points vectorized
+(null-safe shift-compare, no Python row loop), EMITS every interval
+the batch closes (valid_to set, is_current False) plus the key's
+current open interval (valid_to null, is_current True), and stores
+the open interval back to state — CDC-style incremental history.
 
 Cross-microbatch contract: append mode cannot retract, so an open
 row emitted in batch N is superseded (not deleted) when batch N+1
 closes it; downstream consumers keep the LATEST row per
 (key, valid_from) — with the bounded availableNow replay (one batch)
 the emitted set equals the batch operator exactly (parity test).
-Exactness needs event time to not regress across microbatches, the
-same arrival-order contract as streaming/funnel.py.
+In the default mode exactness needs event time to not regress across
+microbatches, the same arrival-order contract as streaming/funnel.py.
 """
 
 from __future__ import annotations
@@ -89,7 +91,7 @@ def scd2_stream(
     intervals close, plus the open interval per touched key.
 
     ``disorder_horizon`` (an interval) switches to the
-    watermark-finalized mode (streaming/disorder.py): events buffer
+    watermark-finalized mode (`stateful_map_ordered_stream`): events buffer
     per key in state and enter the history only once the watermark
     passes them, in event-time order — so a late-but-in-horizon event
     opens/closes its intervals in the right chain position and the
@@ -100,16 +102,15 @@ def scd2_stream(
     microbatches."""
     import pandas as pd
 
+    from .disorder import _buf_coercer, stateful_map_ordered_stream
     from .stateful import require_utc_session, stateful_map_stream
 
     attrs = list(attrs)
     if not attrs:
         raise ValueError("attrs must be non-empty: SCD2 tracks at least one attribute")
     require_utc_session(sdf, "scd2_stream")
-    if disorder_horizon is not None:
-        sdf = sdf.withWatermark(ts, disorder_horizon)
     cols = [key, ts] + attrs + ([tiebreak] if tiebreak else [])
-    ev = sdf.select(*cols)
+    ev = sdf.select(*dict.fromkeys(cols))  # the tiebreak may be a tracked attr
 
     out_schema = StructType(
         [ev.schema[key]]
@@ -121,70 +122,35 @@ def scd2_stream(
         ]
     )
 
-    from .disorder import _buf_coercer
-
     # state-packing coercers per attr: exact int/None round-trips for
     # Arrow's float-widened nullable ints (see _fold_scd2 docstring)
     attr_coerce = {
         a: _buf_coercer(ev.schema[a].dataType.simpleString()) for a in attrs
     }
-
-    if disorder_horizon is not None:
-        from pyspark.sql import functions as F
-
-        from .disorder import disorder_fold_stream
-
-        attr_types = {a: ev.schema[a].dataType.simpleString() for a in attrs}
-        buf_cols = [("__e_us", "bigint")] + [(a, attr_types[a]) for a in attrs]
-        sort_cols = ["__e_us"]
-        if tiebreak:
-            buf_cols.append(("__tb", ev.schema[tiebreak].dataType.simpleString()))
-            sort_cols.append("__tb")
-        # the watermarked ts attribute rides along: the event-time-
-        # timeout check requires it to reach the stateful operator
-        proj = ev.filter(F.col(ts).isNotNull()).select(
-            F.col(key),
-            F.unix_micros(F.col(ts)).alias("__e_us"),
-            *attrs,
-            *([F.col(tiebreak).alias("__tb")] if tiebreak else []),
-            F.col(ts).alias("__wm_ts"),
-        )
-        # inner state = the open interval; __from as epoch micros so
-        # the buffered arrays and the inner state share one time unit
-        inner_fields = [(f"__a_{i}", attr_types[a]) for i, a in enumerate(attrs)]
-        inner_fields.append(("__from_us", "bigint"))
-
-        def fold(k, ripe, inner):
-            seq = ripe[attrs].copy()
-            seq["__from"] = pd.to_datetime(ripe["__e_us"], unit="us")
-            open_state = None
-            if inner is not None:
-                open_state = tuple(inner[:-1]) + (
-                    pd.Timestamp(inner[-1], unit="us"),
-                )
-            outs, new_state = _fold_scd2(
-                k, seq, attrs, key, open_state, coerce=attr_coerce
-            )
-            packed = tuple(new_state[:-1]) + (int(new_state[-1].value // 1000),)
-            return outs, packed
-
-        return disorder_fold_stream(
-            proj, [key], "__e_us", buf_cols, sort_cols, inner_fields, fold, out_schema
-        )
-
-    # state = the open interval: attr values + valid_from
-    state_schema = StructType(
-        [ev.schema[a] for a in attrs] + [StructField("__from", TimestampType())]
+    # state = the open interval: attr values + valid_from, in both modes
+    state_ddl = ", ".join(
+        [f"`{a}` {ev.schema[a].dataType.simpleString()}" for a in attrs]
+        + ["__from timestamp"]
     )
 
-    def fn(k, pdfs, state):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        sort_keys = [ts] + ([tiebreak] if tiebreak else [])
-        pdf = pdf.sort_values(sort_keys, kind="mergesort", ignore_index=True)
+    def fold(k, pdf, state):
         seq = pdf[attrs + [ts]].rename(columns={ts: "__from"})
         return _fold_scd2(k, seq, attrs, key, state, coerce=attr_coerce)
 
-    return stateful_map_stream(ev, [key], fn, out_schema, state_schema)
+    if disorder_horizon is not None:
+        return stateful_map_ordered_stream(
+            ev, [key], ts, fold, out_schema, state_ddl, disorder_horizon, tiebreak
+        )
+    order = [ts] + ([tiebreak] if tiebreak else [])
+    return stateful_map_stream(
+        ev,
+        [key],
+        lambda k, pdfs, state: fold(
+            k, pd.concat(list(pdfs)).sort_values(order, kind="mergesort"), state
+        ),
+        out_schema,
+        state_ddl,
+    )
 
 
 def consolidate_scd2(
@@ -202,8 +168,6 @@ def consolidate_scd2(
     revised): max(valid_to) per (key, attrs, valid_from) ignores the
     null open-version and recovers the latest row; is_current is
     re-derived from the surviving valid_to."""
-    from pyspark.sql import functions as F
-
     return (
         emitted.groupBy(F.col(key), *[F.col(a) for a in attrs], F.col("valid_from"))
         .agg(F.max("valid_to").alias("valid_to"))

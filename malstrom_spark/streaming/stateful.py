@@ -192,26 +192,34 @@ def ttl_map_event_stream(
     watermark by ttl_ms are evicted when the watermark passes
     (epoch-driven expiry like batch-oriented TTL eviction on epoch
     arrival). Same user contract: fn(key, pdfs, state) -> (rows_out,
-    new_state). Requires withWatermark upstream."""
+    new_state). Requires withWatermark upstream: the event time is the
+    watermarked column, and a late in-watermark record never moves a
+    key's last-seen time, so never its eviction, backwards."""
+    import pandas as pd
+
+    ts_col = next(
+        (f.name for f in sdf.schema.fields if "spark.watermarkDelayMs" in f.metadata),
+        None,
+    )
+    if ts_col is None:
+        raise ValueError("ttl_map_event_stream needs a watermarked input")
 
     def on_data(key, pdfs, state, _timers):
-        inner = state[0] if state else None
-        last_ts_ms = 0
-        batches = []
-        for pdf in pdfs:
-            batches.append(pdf)
-            ts_cols = [c for c in pdf.columns if str(pdf[c].dtype).startswith("datetime64")]
-            if ts_cols:
-                m = pdf[ts_cols[0]].max()
-                last_ts_ms = max(last_ts_ms, int(m.value // 1_000_000))
+        inner, last_ms = state if state else (None, 0)
+        batches = list(pdfs)
+        for pdf in batches:
+            m = pdf[ts_col].max()
+            if not pd.isna(m):
+                last_ms = max(last_ms, int(m.value // 1_000_000))
         outs, new_inner = fn(key, iter(batches), inner)
         if new_inner is None:
             return outs, None, []
-        return outs, (new_inner,), [last_ts_ms + ttl_ms]
+        return outs, (new_inner, last_ms), [last_ms + ttl_ms]
 
     def on_timer(key, fired_at_ms, state):
         return [], None, []  # expiry: drop the key's state silently
 
     return stateful_op_stream(
-        sdf, key_cols, on_data, on_timer, output_schema, f"inner struct<{state_schema}>"
+        sdf, key_cols, on_data, on_timer, output_schema,
+        f"inner struct<{state_schema}>, last_ms bigint",
     )

@@ -134,8 +134,12 @@ def test_ivf_assign_is_a_pure_map(spark, sf_dir):
 
 
 def test_cosine_topk_broadcasts_queries(spark, sf_dir, reg):
+    """The query matrix rides a broadcast variable into one
+    mapInPandas scorer: the corpus is never joined, let alone
+    cross-multiplied, against the queries."""
     plan = plan_of(reg["similarity_topk_cosine"].fn(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    assert "MapInPandas" in plan
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 
 def test_no_tokenizer_inlined_into_filters(spark, sf_dir, reg):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -193,6 +194,38 @@ def test_streaming_scd2_nullable_int_attr_default_mode(spark):
         ((None, m(2)), m(4)),
         ((5, m(4)), None),
     ]
+
+
+@pytest.mark.parametrize("horizon", [None, "10 minutes"])
+def test_streaming_scd2_tiebreak_may_be_a_tracked_attr(spark, horizon):
+    """Both modes accept a tiebreak that is also a tracked attribute;
+    same-ts events then order by it."""
+    from malstrom_spark.streaming.scd import scd2_stream
+    from malstrom_spark.testing import OperatorTester
+
+    base = dt.datetime(2024, 3, 1, 12, 0, 0)
+    m = lambda k: base + dt.timedelta(minutes=k)  # noqa: E731
+    t = OperatorTester(
+        spark,
+        "user_id long, ts timestamp, rev long",
+        op=lambda sdf: scd2_stream(
+            sdf, key="user_id", ts="ts", attrs=["rev"], tiebreak="rev",
+            disorder_horizon=horizon,
+        ),
+    )
+    try:
+        t.send([(1, m(0), 2), (1, m(0), 1), (1, m(3), 3)])
+        t.send([(99, m(600), 0)])  # moves the watermark past every event
+        rows = [r for b in t.step() for r in b]
+    finally:
+        t.stop()
+    latest = {}
+    for r in rows:
+        k = (r.user_id, r.rev, r.valid_from)
+        if k not in latest or (latest[k] is None and r.valid_to is not None):
+            latest[k] = r.valid_to
+    got = sorted((rev, vf, vt) for (u, rev, vf), vt in latest.items() if u == 1)
+    assert got == [(1, m(0), m(0)), (2, m(0), m(3)), (3, m(3), None)]
 
 
 def test_scd2_lookup_point_in_time(spark):
